@@ -613,7 +613,6 @@ def dedup_canonical_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = prop
         if changed == 0:
             break
-    edges.unpersist()
     return labels.filter(F.col("node") != F.col("label")).select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("label").cast("bigint").alias("canonical_id"),

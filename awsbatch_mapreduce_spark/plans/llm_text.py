@@ -5,13 +5,8 @@ analysis (token stats, quality scoring, language-ID, fingerprinting) —
 first-class engine capabilities for 100 TB training-data curation
 (BASELINE.json north star), built purely from JVM-side built-ins
 (split/transform/aggregate/md5) so the hot path never crosses into
-Python.
-
-Cross-engine determinism trick: MinHash normally needs integer hash
-functions, but ``md5`` hex strings compare lexicographically exactly as
-their numeric value (fixed-width lowercase hex in both engines), so
-``min(substr(md5(shingle || seed), 1, 16))`` is a valid minhash that
-DuckDB reproduces bit-for-bit — no engine-specific ``hash()`` needed.
+Python.  The MinHash-LSH format (shingle -> signature -> band key ->
+verify) lives in ``operators/minhash.py``.
 """
 
 from __future__ import annotations
@@ -22,62 +17,21 @@ from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.functions.rounding import dround
 
+from awsbatch_mapreduce_spark.operators.minhash import (
+    _BANDS_SQL,
+    _SH_SQL,
+    _VERIFY_SQL,
+    _cand_sql,
+    _sig_sql,
+    band_keys,
+    candidate_pairs,
+    shared_shingles,
+    shingles,
+    signatures,
+)
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
-
-_N_HASHES = 8  # minhash signature length
-_N_BANDS = 4  # LSH bands (rows-per-band = 2)
-
-# Shared SQL fragment: distinct 3-token shingles per doc (DuckDB dialect).
-_SH_SQL = """
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT DISTINCT doc_id, unnest(CASE WHEN len(t) >= 3
-             THEN list_transform(generate_series(1, len(t)-2),
-                                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-             ELSE [] END) AS shingle
-      FROM toks)
-"""
-
-
-def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct 3-token shingles per doc of the ``documents`` fixture
-    (Spark side of ``_SH_SQL``) — the corpus-shaped wrapper of
-    ``_shingles_of``."""
-    return _shingles_of(load_table(spark, sf_dir, "documents"))
-
-
-def _shingles_of(docs: DataFrame) -> DataFrame:
-    """Distinct 3-token shingles of any (doc_id, text) frame — split
-    out in round 18 so the streaming LSH admission can shingle a
-    micro-batch (``streaming/lsh.py``) with the exact arithmetic every
-    batch consumer uses.
-
-    The token array is materialized in its own projection first —
-    inlining ``split(text, ' ')`` into the transform lambda makes
-    Catalyst re-evaluate the split per element (O(tokens^2) per doc;
-    measured 4x slower at sf0.1).
-    """
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    return (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    """
-                    CASE WHEN size(t) >= 3
-                    THEN transform(sequence(1, size(t) - 2),
-                         i -> concat_ws(' ', element_at(t, i),
-                                             element_at(t, i + 1),
-                                             element_at(t, i + 2)))
-                    ELSE array() END
-                    """
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
 
 
 @query(
@@ -106,25 +60,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LSH_ORACLE = f"""
     WITH {_SH_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-    sig AS (
-      SELECT doc_id,
-        {", ".join(f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk FROM sig" for b in range(_N_BANDS))}),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-    inter AS (SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-              FROM cand c
-              JOIN sh a ON a.doc_id = c.id_a
-              JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-              GROUP BY 1, 2)
+    {_sig_sql()},
+    {_BANDS_SQL},
+    {_cand_sql()},
+    {_VERIFY_SQL}
     SELECT id_a, id_b,
            FLOOR((n_common * 1.0 / (sa.n + sb.n - n_common)) * 10000.0 + 0.5) / 10000.0 AS jaccard
     FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
+    JOIN sig sa ON sa.doc_id = id_a
+    JOIN sig sb ON sb.doc_id = id_b
 """
 
 
@@ -147,40 +91,16 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-compute-many-consumers property while making every rep pay
     # the tokenize — one measurement semantics for the whole ladder,
     # re-baselined in BASELINE.md.
-    sh = _shingles(spark, sf_dir).localCheckpoint()
-    # shingle count folded into the signature aggregate: one groupBy
-    # yields both the minhash AND each doc's set size, so no separate
-    # sizes frame and no post-verify size joins (~40% faster at sf0.1).
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}"))), 1, 16)
-        ).alias(f"h{i}")
-        for i in range(_N_HASHES)
-    ]
-    # sig is NOT checkpointed (measured 0.25 s slower with it): its two
-    # consumers are the band self-join's sides, and re-running one
-    # groupBy over the MATERIALIZED sh blocks costs less than a second
-    # materialization barrier
-    sig = sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n"))
-    # one pass over sig: band keys as an exploded array column (the
-    # union-of-selects form recomputes the signature aggregation per band)
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"), F.lit(f"/{b}"))
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
-    # Every join below runs data-scaled x data-scaled (bands, candidate
-    # set, shingle frame): never_broadcast pins them to sort-merge so an
-    # AQE size misestimate can't upgrade one to a driver-built broadcast
-    # — the exact OOM the sf1 rehearsal hit (SCALING.md round 6).
-    bands = sig.select("doc_id", "n", F.explode(band_keys).alias("bk"))
-    a = bands.alias("a")
-    b = never_broadcast(bands.alias("b"))
+    sh = shingles(load_table(spark, sf_dir, "documents")).localCheckpoint()
+    # the signature aggregate also yields each doc's set size n, so no
+    # separate sizes frame and no post-verify size joins (~40% faster
+    # at sf0.1).  sig is NOT checkpointed (measured 0.25 s slower with
+    # it): its two consumers are the band self-join's sides, and
+    # re-running one groupBy over the MATERIALIZED sh blocks costs less
+    # than a second materialization barrier
+    bands = band_keys(signatures(sh))
     cand = (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        candidate_pairs(bands)
         .select(
             F.col("a.doc_id").alias("id_a"),
             F.col("b.doc_id").alias("id_b"),
@@ -189,18 +109,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sha = never_broadcast(sh.alias("sa"))
-    shb = never_broadcast(sh.alias("sb"))
-    inter = (
-        cand.join(sha, F.col("sa.doc_id") == F.col("id_a"))
-        .join(
-            shb,
-            (F.col("sb.doc_id") == F.col("id_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = shared_shingles(cand, sh)
     return inter.select(
         "id_a",
         "id_b",
@@ -237,7 +146,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why :func:`dedup_minhash_lsh` is the scale path; this is the
     exact baseline it's validated against.
     """
-    sh = _shingles(spark, sf_dir).localCheckpoint()
+    sh = shingles(load_table(spark, sf_dir, "documents")).localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = never_broadcast(sh.alias("b"))

@@ -534,28 +534,11 @@ _N_GATE_BATCHES = 4
 # (B rejected, C never compared to the unadmitted B) — the semantics a
 # live ingest gate actually has, which is why the oracle unrolls the
 # sequence instead of reusing the closure oracle.
-from awsbatch_mapreduce_spark.plans.llm_text import (  # noqa: E402
-    _N_BANDS,
-    _N_HASHES,
+from awsbatch_mapreduce_spark.operators.minhash import (  # noqa: E402
+    _BANDS_SQL,
     _SH_SQL,
-)
-
-_GATE_SIG = (
-    "sig AS (\n      SELECT doc_id,\n        "
-    + ", ".join(
-        f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}"
-        for i in range(_N_HASHES)
-    )
-    + "\n      FROM sh GROUP BY doc_id)"
-)
-_GATE_BANDS = (
-    "bands AS (\n      "
-    + " UNION ALL ".join(
-        f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk"
-        " FROM sig"
-        for b in range(_N_BANDS)
-    )
-    + ")"
+    _sig_sql,
+    band_index_rows,
 )
 
 
@@ -583,8 +566,8 @@ _GATE_ORACLE_PREFIX = (
                  MIN(doc_id) + (MAX(doc_id) - MIN(doc_id)) * 2 // 4 AS q2,
                  MIN(doc_id) + (MAX(doc_id) - MIN(doc_id)) * 3 // 4 AS q3
           FROM documents),
-    {_GATE_SIG},
-    {_GATE_BANDS},
+    {_sig_sql()},
+    {_BANDS_SQL},
     tagged AS (
       SELECT d.doc_id,
              CASE WHEN d.doc_id <= e.q1 THEN 1
@@ -662,7 +645,6 @@ def lsh_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _scratch_tag,
         _table_names,
     )
-    from awsbatch_mapreduce_spark.plans.wave8 import band_keys_of
     from awsbatch_mapreduce_spark.streaming.lsh import create_band_index
 
     docs = load_table(spark, sf_dir, "documents")
@@ -682,7 +664,7 @@ def lsh_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
     create_band_index(spark, base, tbl)
 
-    bands = band_keys_of(docs).localCheckpoint()
+    bands = band_index_rows(docs).localCheckpoint()
     verdicts = [
         _gate_one_batch(spark, tbl, docs, bands, edges[k - 1], edges[k], k)
         for k in range(1, _N_GATE_BATCHES + 1)
@@ -690,7 +672,6 @@ def lsh_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = verdicts[0]
     for v in verdicts[1:]:
         out = out.unionByName(v)
-    bands.unpersist()
     return out.select("doc_id", "batch_k", "n_seen_nbrs", "is_admitted")
 
 
@@ -773,7 +754,6 @@ def lsh_gate_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         _scratch_tag,
         _table_names,
     )
-    from awsbatch_mapreduce_spark.plans.wave8 import band_keys_of
     from awsbatch_mapreduce_spark.streaming.lsh import (
         create_band_index,
         remove_docs_from_band_index,
@@ -795,7 +775,7 @@ def lsh_gate_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
     create_band_index(spark, base, tbl)
 
-    bands = band_keys_of(docs).localCheckpoint()
+    bands = band_index_rows(docs).localCheckpoint()
     verdicts = [
         _gate_one_batch(spark, tbl, docs, bands, edges[k - 1], edges[k], k)
         for k in range(1, _N_GATE_BATCHES)  # batches 1-3
@@ -816,7 +796,6 @@ def lsh_gate_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = verdicts[0]
     for v in verdicts[1:]:
         out = out.unionByName(v)
-    bands.unpersist()
     return out.select("doc_id", "batch_k", "n_seen_nbrs", "is_admitted")
 
 

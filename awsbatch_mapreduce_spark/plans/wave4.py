@@ -40,6 +40,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.operators.minhash import (
+    _BANDS_SQL,
+    _SH_SQL,
+    _cand_sql,
+    _sig_sql,
+    band_keys,
+    candidate_pairs,
+    shingles,
+    signatures,
+)
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -293,9 +303,7 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     can inspect THIS frame's plan: the query itself checkpoints it, so
     the LeftAnti executes at build time and is invisible in the
     downstream query plan."""
-    from awsbatch_mapreduce_spark.plans.llm_text import _shingles
-
-    sh_all = _shingles(spark, sf_dir)
+    sh_all = shingles(load_table(spark, sf_dir, "documents"))
     heavy = (
         sh_all.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -309,32 +317,14 @@ _LSH_EVAL_MAX_DF = 64  # heavy-shingle cut: df above this carries no
 # near-dup signal (boilerplate) and quadratically blows up the truth join
 
 
-def _lsh_eval_oracle() -> str:
-    from awsbatch_mapreduce_spark.plans.llm_text import (
-        _N_BANDS,
-        _N_HASHES,
-        _SH_SQL,
-    )
-
-    sig_cols = ", ".join(
-        f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}"
-        for i in range(_N_HASHES)
-    )
-    band_sel = " UNION ALL ".join(
-        f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk FROM sig"
-        for b in range(_N_BANDS)
-    )
-    return f"""
+_LSH_EVAL_ORACLE = f"""
     WITH {_SH_SQL},
     keep AS (SELECT shingle FROM sh GROUP BY shingle
              HAVING COUNT(*) <= {_LSH_EVAL_MAX_DF}),
     shc AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shc GROUP BY 1),
-    sig AS (SELECT doc_id, {sig_cols} FROM shc GROUP BY doc_id),
-    bands AS ({band_sel}),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.bk = b.bk AND a.doc_id < b.doc_id),
+    {_sig_sql("shc")},
+    {_BANDS_SQL},
+    {_cand_sql()},
     pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                      COUNT(*) AS n_common
               FROM shc a JOIN shc b
@@ -344,8 +334,8 @@ def _lsh_eval_oracle() -> str:
                   CAST(p.n_common * 10000
                        // (sa.n + sb.n - p.n_common) AS BIGINT) AS j_bp
            FROM pairs p
-           JOIN sizes sa ON sa.doc_id = p.id_a
-           JOIN sizes sb ON sb.doc_id = p.id_b),
+           JOIN sig sa ON sa.doc_id = p.id_a
+           JOIN sig sb ON sb.doc_id = p.id_b),
     pjc AS (SELECT pj.*, (c.id_a IS NOT NULL) AS is_cand
             FROM pj LEFT JOIN cand c
               ON c.id_a = pj.id_a AND c.id_b = pj.id_b),
@@ -373,7 +363,7 @@ def _lsh_eval_oracle() -> str:
 """
 
 
-@query("minhash_lsh_eval", oracle=_lsh_eval_oracle(), wave=4)
+@query("minhash_lsh_eval", oracle=_LSH_EVAL_ORACLE, wave=4)
 def minhash_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline QA for the MinHash-LSH dedup path: precision and
     recall of the band-collision candidate set against exact Jaccard
@@ -396,42 +386,16 @@ def minhash_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sample), while the production dedup path stays banded.  All
     ratios are exact integer ppm.
     """
-    from awsbatch_mapreduce_spark.plans.llm_text import _N_BANDS, _N_HASHES
-
     # one tokenize + heavy-cut pass for every consumer; eager in-region
     # checkpoint (round-19 ladder migration — no cross-rep cache reuse)
     sh = _capped_shingles(spark, sf_dir).localCheckpoint()
-    aggs = [
-        F.min(
-            F.substring(
-                F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}"))), 1, 16
-            )
-        ).alias(f"h{i}")
-        for i in range(_N_HASHES)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n"))
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat(
-                    F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"), F.lit(f"/{b}")
-                )
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
+    sig = signatures(sh)
     # bands/shingles/sizes are O(corpus): pin all candidate/truth/size
     # joins to sort-merge (broadcast hygiene — see plans/hints.py); the
     # taus and n_cand crossJoins below stay broadcast, they are bounded
     # (4-row literal / 1-row aggregate) by construction.
-    bands = sig.select("doc_id", F.explode(band_keys).alias("bk"))
-    a, b = bands.alias("a"), never_broadcast(bands.alias("b"))
     cand = (
-        a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        candidate_pairs(band_keys(sig))
         .select(
             F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )

@@ -36,14 +36,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.functions.rounding import dround
+from awsbatch_mapreduce_spark.operators.minhash import (
+    _BANDS_SQL,
+    _N_HASHES,
+    _SH_SQL,
+    _VERIFY_SQL,
+    _cand_sql,
+    _sig_sql,
+    band_keys,
+    candidate_pairs,
+    shared_shingles,
+    shingles,
+    signatures,
+)
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.llm_text import (
-    _N_BANDS,
-    _N_HASHES,
     _NGRAM_PAIRS_ORACLE,
     _QUALITY_ORACLE,
-    _SH_SQL,
-    _shingles,
     with_quality,
 )
 from awsbatch_mapreduce_spark.plans.registry import QUERIES, query
@@ -62,12 +71,8 @@ from awsbatch_mapreduce_spark.sources.tables import load_table
 
 _BAND_HIST_ORACLE = f"""
     WITH {_SH_SQL},
-    sig AS (
-      SELECT doc_id,
-        {", ".join(f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk FROM sig" for b in range(_N_BANDS))}),
+    {_sig_sql()},
+    {_BANDS_SQL},
     loads AS (SELECT bk, COUNT(*) AS s FROM bands GROUP BY bk)
     SELECT CAST(s AS BIGINT) AS bucket_size,
            CAST(COUNT(*) AS BIGINT) AS n_buckets,
@@ -94,24 +99,9 @@ def lsh_band_load_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     health probe that says whether banding parameters still hold
     before anyone pays for the candidate join.
     """
-    sh = _shingles(spark, sf_dir)
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}"))), 1, 16)
-        ).alias(f"h{i}")
-        for i in range(_N_HASHES)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"), F.lit(f"/{b}"))
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
+    sh = shingles(load_table(spark, sf_dir, "documents"))
     loads = (
-        sig.select(F.explode(band_keys).alias("bk"))
+        band_keys(signatures(sh))
         .groupBy("bk")
         .agg(F.count(F.lit(1)).alias("s"))
     )
@@ -503,20 +493,10 @@ def emb_band_load_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CALIBRATION_ORACLE = f"""
     WITH {_SH_SQL},
-    sig AS (
-      SELECT doc_id,
-        {", ".join(f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}" for i in range(_N_HASHES))},
-        COUNT(*) AS n
-      FROM sh GROUP BY doc_id),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk FROM sig" for b in range(_N_BANDS))}),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-    inter AS (SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-              FROM cand c
-              JOIN sh a ON a.doc_id = c.id_a
-              JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-              GROUP BY 1, 2),
+    {_sig_sql()},
+    {_BANDS_SQL},
+    {_cand_sql()},
+    {_VERIFY_SQL},
     scored AS (
       SELECT c.id_a, c.id_b,
              ({" + ".join(f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(_N_HASHES))}) AS n_sig_matches,
@@ -553,48 +533,16 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set (sort-merge, data-scaled both sides) — output is 7
     rows regardless of corpus size.
     """
-    sh = _shingles(spark, sf_dir).localCheckpoint()
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}"))), 1, 16)
-        ).alias(f"h{i}")
-        for i in range(_N_HASHES)
-    ]
+    sh = shingles(load_table(spark, sf_dir, "documents")).localCheckpoint()
     # no sig checkpoint: re-agg over the materialized sh is cheaper
     # than a second materialization barrier (round-19 measurement)
-    sig = sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n"))
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"), F.lit(f"/{b}"))
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_keys).alias("bk"))
-    a = bands.alias("a")
-    b = never_broadcast(bands.alias("b"))
+    sig = signatures(sh)
     cand = (
-        a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        candidate_pairs(band_keys(sig))
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    sha = never_broadcast(sh.alias("sa"))
-    shb = never_broadcast(sh.alias("sb"))
-    inter = (
-        cand.join(sha, F.col("sa.doc_id") == F.col("id_a"))
-        .join(
-            shb,
-            (F.col("sb.doc_id") == F.col("id_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = shared_shingles(cand, sh)
     siga = never_broadcast(
         sig.select(
             F.col("doc_id").alias("id_a"),

@@ -26,14 +26,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.operators.minhash import (
+    _BANDS_SQL,
+    _SH_SQL,
+    _VERIFY_SQL,
+    _cand_sql,
+    _sig_sql,
+    band_index_rows,
+    band_keys,
+    candidate_pairs,
+    shared_shingles,
+    shingles,
+    signatures,
+)
 from awsbatch_mapreduce_spark.operators.skew import two_phase_topk
 from awsbatch_mapreduce_spark.plans.events import SESSIONIZATION_ORACLE
-from awsbatch_mapreduce_spark.plans.llm_text import (
-    _N_BANDS,
-    _N_HASHES,
-    _SH_SQL,
-    _shingles,
-)
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.relational import WINDOW_TOPK_ORACLE
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -168,33 +175,20 @@ def sessionization_time_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BUCKET_CAP = 48
-# _N_HASHES/_N_BANDS are imported from plans.llm_text (ADVICE r7:
-# local re-declaration could silently desynchronize the capped and
-# incremental variants from the pipeline they share)
 
 _LSH_CAPPED_ORACLE = f"""
     WITH {_SH_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-    sig AS (
-      SELECT doc_id,
-        {", ".join(f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk FROM sig" for b in range(_N_BANDS))}),
+    {_sig_sql()},
+    {_BANDS_SQL},
     ok AS (SELECT bk FROM bands GROUP BY bk HAVING COUNT(*) <= {_BUCKET_CAP}),
     capped AS (SELECT bands.doc_id, bands.bk FROM bands JOIN ok USING (bk)),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM capped a JOIN capped b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-    inter AS (SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-              FROM cand c
-              JOIN sh a ON a.doc_id = c.id_a
-              JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-              GROUP BY 1, 2)
+    {_cand_sql("capped")},
+    {_VERIFY_SQL}
     SELECT id_a, id_b,
            FLOOR((n_common * 1.0 / (sa.n + sb.n - n_common)) * 10000.0 + 0.5) / 10000.0 AS jaccard
     FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
+    JOIN sig sa ON sa.doc_id = id_a
+    JOIN sig sb ON sb.doc_id = id_b
 """
 
 
@@ -218,28 +212,10 @@ def dedup_minhash_lsh_bucket_capped(
     frame and is itself pinned.
     """
     from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-    from awsbatch_mapreduce_spark.plans.llm_text import _shingles as _sh
     from awsbatch_mapreduce_spark.functions.rounding import dround
 
-    sh = _sh(spark, sf_dir).localCheckpoint()
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}"))), 1, 16)
-        ).alias(f"h{i}")
-        for i in range(_N_HASHES)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs, F.count(F.lit(1)).alias("n"))
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"), F.lit(f"/{b}"))
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
-    bands = sig.select(
-        "doc_id", "n", F.explode(band_keys).alias("bk")
-    ).localCheckpoint()
+    sh = shingles(load_table(spark, sf_dir, "documents")).localCheckpoint()
+    bands = band_keys(signatures(sh)).localCheckpoint()
     ok = never_broadcast(
         bands.groupBy("bk")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
@@ -247,14 +223,8 @@ def dedup_minhash_lsh_bucket_capped(
         .select("bk")
     )
     capped = bands.join(ok, "bk", "semi")
-    a = capped.alias("a")
-    b = never_broadcast(capped.alias("b"))
     cand = (
-        a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        candidate_pairs(capped)
         .select(
             F.col("a.doc_id").alias("id_a"),
             F.col("b.doc_id").alias("id_b"),
@@ -263,18 +233,7 @@ def dedup_minhash_lsh_bucket_capped(
         )
         .distinct()
     )
-    sha = never_broadcast(sh.alias("sa"))
-    shb = never_broadcast(sh.alias("sb"))
-    inter = (
-        cand.join(sha, F.col("sa.doc_id") == F.col("id_a"))
-        .join(
-            shb,
-            (F.col("sb.doc_id") == F.col("id_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    inter = shared_shingles(cand, sh)
     return inter.select(
         "id_a",
         "id_b",
@@ -318,11 +277,11 @@ def shingle_df_cap_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df*(df-1)/2), and the shingles/postings the cap discards.
 
     Scale shape: one shingle explode (shared builder with the dedup
-    ladder, ``llm_text._shingles``), one shingle-keyed rollup with
+    ladder, ``operators.minhash.shingles``), one shingle-keyed rollup with
     map-side partials, a 5-way literal explode, a 5-group aggregate —
     no joins; strictly cheaper than the LSH eval it tunes.
     """
-    sh = _shingles(spark, sf_dir)
+    sh = shingles(load_table(spark, sf_dir, "documents"))
     df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     caps = F.explode(F.array(*[F.lit(c) for c in _SHINGLE_CAPS])).alias("cap")
     curve = df.select("df", caps)
@@ -504,57 +463,11 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental LSH novelty probe ---------------------------------------
 
 
-def band_keys_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, bk) — one row per LSH band key per document, the
-    exploded form of the minhash signature used across the whole dedup
-    ladder (identical constants, so every consumer — full-corpus LSH,
-    the bucket-capped valve, the incremental probe, and the wave-9
-    persisted index — shares one band space).  Un-persisted: callers
-    decide (persist for multi-branch plans, write for the persisted
-    index)."""
-    from awsbatch_mapreduce_spark.sources.tables import load_table
-
-    return band_keys_of(load_table(spark, sf_dir, "documents"))
-
-
-def band_keys_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, bk) band keys of any (doc_id, text) frame — the
-    batch-shaped half of ``band_keys_frame`` (round 18: the streaming
-    LSH admission signatures each micro-batch with the exact constants
-    of the whole dedup ladder, so the persisted band index stays one
-    band space across batch and stream writers)."""
-    from awsbatch_mapreduce_spark.plans.llm_text import _shingles_of
-
-    sh = _shingles_of(docs)
-    aggs = [
-        F.min(
-            F.substring(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}"))), 1, 16)
-        ).alias(f"h{i}")
-        for i in range(_N_HASHES)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat(
-                    F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"), F.lit(f"/{b}")
-                )
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_keys).alias("bk"))
-
-
 _INCR_LSH_ORACLE = f"""
     WITH {_SH_SQL},
     b AS (SELECT (MIN(doc_id) + MAX(doc_id)) // 2 AS mid FROM documents),
-    sig AS (
-      SELECT doc_id,
-        {", ".join(f"min(substr(md5(shingle || '#{i}'), 1, 16)) AS h{i}" for i in range(_N_HASHES))}
-      FROM sh GROUP BY doc_id),
-    bands AS (
-      {" UNION ALL ".join(f"SELECT doc_id, md5(h{2 * b} || h{2 * b + 1} || '/{b}') AS bk FROM sig" for b in range(_N_BANDS))}),
+    {_sig_sql()},
+    {_BANDS_SQL},
     hits AS (
       SELECT DISTINCT n.doc_id, s.doc_id AS seen_id
       FROM bands n JOIN bands s ON n.bk = s.bk CROSS JOIN b
@@ -593,13 +506,12 @@ def incremental_lsh_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 
-    # persist: both the seen and new band branches consume this frame;
-    # without it the shingle->signature pipeline (scan + explode +
-    # distinct + groupBy) plans TWICE — the static plan showed 0
-    # ReusedExchange across the branches (alias-divergent subtrees)
-    bands = band_keys_frame(spark, sf_dir).localCheckpoint()
-
     docs = load_table(spark, sf_dir, "documents")
+    # eager localCheckpoint: both the seen and new band branches consume
+    # this frame; without it the shingle->signature pipeline (scan +
+    # explode + distinct + groupBy) plans TWICE — the static plan showed
+    # 0 ReusedExchange across the branches (alias-divergent subtrees)
+    bands = band_index_rows(docs).localCheckpoint()
     mid = docs.agg(
         ((F.min("doc_id") + F.max("doc_id")) / F.lit(2))
         .cast("bigint")

@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import (
     _kmeans_cte,
@@ -46,10 +47,7 @@ from awsbatch_mapreduce_spark.plans.iterative import (
     label_centroid_init,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave8 import (
-    _INCR_LSH_ORACLE,
-    band_keys_frame,
-)
+from awsbatch_mapreduce_spark.plans.wave8 import _INCR_LSH_ORACLE
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # --- SemDeDup: cluster-then-exact-cosine prune ---------------------------
@@ -468,7 +466,7 @@ def lsh_band_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
-    bands = band_keys_frame(spark, sf_dir).localCheckpoint()
+    bands = band_index_rows(docs).localCheckpoint()
     writer_opts = dict(n_buckets=16)
     (
         bands.filter(F.col("doc_id") <= F.lit(q1))

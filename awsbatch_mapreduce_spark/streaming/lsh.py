@@ -1,14 +1,14 @@
 """Streaming NEAR-DUP admission for TEXT (round 18, VERDICT r17
-missing #2 / ask #3): the banded MinHash index (`plans/llm_text.py`
-constants, `plans/wave9.py` persisted layout) composed with the
+missing #2 / ask #3): the banded MinHash index (`operators/minhash.py`
+format, `plans/wave9.py` persisted layout) composed with the
 exactly-once admission machinery (`streaming/codebook.py` markers +
 sibling-swap repairs).
 
 Per micro-batch of (doc_id, text) documents:
 
 1. SIGNATURE: shingle -> minhash -> band keys, the exact arithmetic of
-   the whole dedup ladder (``plans.wave8.band_keys_of`` — one band
-   space across batch and stream writers).
+   the whole dedup ladder (``operators.minhash.band_index_rows`` — one
+   band space across batch and stream writers).
 2. PROBE: the batch's bands join the PERSISTED band index (bucketed on
    ``bk`` — the growing seen side reads with NO exchange; only the
    day's bands shuffle, the ``lsh_band_index_lifecycle`` physical
@@ -50,8 +50,8 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-from awsbatch_mapreduce_spark.plans.wave8 import band_keys_of
 from awsbatch_mapreduce_spark.streaming.codebook import (
     _complete_pending_swap,
     _read_marker,
@@ -206,7 +206,7 @@ def foreach_batch_lsh_admit(
         # signature once; two consumers (probe + admit append) — pin
         # the frame so the admit appends EXACTLY the bands the probe
         # scored (and never recomputes the shingle pass)
-        bands_new = band_keys_of(
+        bands_new = band_index_rows(
             batch_df.select("doc_id", "text")
         ).localCheckpoint()
         verdicts = probe_band_index(spark, bands_new, band_tbl)

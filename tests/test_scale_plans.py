@@ -613,6 +613,27 @@ def test_lsh_eval_truth_join_is_df_capped(spark):
     assert re.search(r"df#\d+L? > 64", plan), plan[:1500]
 
 
+def test_dedup_ladder_reps_share_no_cache(spark):
+    """No timed rep may reuse work cached by an earlier rep.  A lazy
+    ``persist`` of the ladder's shingle frame let the bench's untimed
+    warm-up leave a cached frame that Spark's CacheManager re-matched in
+    every later run of the identical plan; the eager in-builder
+    ``localCheckpoint`` keeps one compute per run without that.  Built
+    and run twice, neither query may leave a cache entry or read an
+    ``InMemoryRelation``."""
+    # the session is shared: queries built by earlier tests (kmeans_fit's
+    # persisted final assignment) may have left entries of their own
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name in ("dedup_minhash_lsh", "minhash_lsh_eval"):
+        for _ in range(2):
+            df = QUERIES[name].builder(spark, SF_DIR)
+            df.collect()
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" not in plan, (name, plan[:1500])
+    assert cache.numCachedEntries() == 0
+
+
 def test_prefix_filter_shuffles_digests_not_tokens(spark):
     """VERDICT r4 #3 (digests-not-bodies): every exchange in the
     prefix-filter dedup plan must partition on doc ids or the 16-char

@@ -20,6 +20,7 @@ The claims under test:
 from __future__ import annotations
 
 import os
+import re
 import time as _time
 
 import pyarrow.compute as pc
@@ -27,7 +28,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.plans.wave8 import band_keys_of
+from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
 from awsbatch_mapreduce_spark.plans.wave17 import lsh_admission_gate
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.lsh import (
@@ -94,6 +95,32 @@ def _fresh_index(spark, name):
     tbl = f"lsh_stream_idx_{name}"
     create_band_index(spark, base, tbl)
     return tbl
+
+
+def test_stream_gate_imports_no_query_module():
+    """The streaming runtime takes the MinHash-LSH format from
+    ``operators.minhash``, not from a query module: importing a query
+    module for a shared helper couples the stream to a query's plan
+    decisions."""
+    import ast
+
+    import awsbatch_mapreduce_spark.streaming.lsh as lsh
+
+    with open(lsh.__file__) as fh:
+        tree = ast.parse(fh.read())
+    imported = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported += [alias.name for alias in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.append(node.module)
+            imported += [f"{node.module}.{alias.name}" for alias in node.names]
+    query_modules = [
+        m
+        for m in imported
+        if re.match(r"awsbatch_mapreduce_spark\.plans\.(wave\d+|llm_text)\b", m)
+    ]
+    assert not query_modules, query_modules
 
 
 def test_stream_gate_equals_batch_twin(spark, doc_chunks, tmp_path):
@@ -197,14 +224,14 @@ def test_purge_restores_pre_batch_index(spark, doc_chunks, tmp_path):
     b1 = docs.filter(
         (F.col("doc_id") > edges[1]) & (F.col("doc_id") <= edges[2])
     )
-    bands0 = band_keys_of(b0.select("doc_id", "text"))
+    bands0 = band_index_rows(b0.select("doc_id", "text"))
     (
         bands0.write.bucketBy(16, "bk").sortBy("bk")
         .mode("append").saveAsTable(tbl)
     )
     before = _rows(spark.table(tbl))
     # partial append of batch 1 (odd doc_ids only — a mid-commit crash)
-    bands1 = band_keys_of(b1.select("doc_id", "text"))
+    bands1 = band_index_rows(b1.select("doc_id", "text"))
     partial = bands1.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 1)
     (
         partial.write.bucketBy(16, "bk").sortBy("bk")
@@ -239,7 +266,7 @@ def test_takedown_verb_removes_bands_idempotently(spark, tmp_path):
     b0 = docs.filter(
         (F.col("doc_id") > edges[0]) & (F.col("doc_id") <= edges[1])
     )
-    bands0 = band_keys_of(b0.select("doc_id", "text"))
+    bands0 = band_index_rows(b0.select("doc_id", "text"))
     (
         bands0.write.bucketBy(16, "bk").sortBy("bk")
         .mode("append").saveAsTable(tbl)

@@ -131,10 +131,10 @@ def test_emb_band_load_accounts_for_every_vector(spark):
 def test_lsh_band_load_accounts_for_every_signed_doc(spark):
     """Each doc with >= 1 shingle emits exactly 4 band keys, so
     sum(bucket_size * n_buckets) == 4 * |docs with shingles|."""
-    from awsbatch_mapreduce_spark.plans.llm_text import _shingles
+    from awsbatch_mapreduce_spark.operators.minhash import shingles
+    from awsbatch_mapreduce_spark.sources.tables import load_table
 
-    n_signed = (
-        _shingles(spark, SF_DIR).select("doc_id").distinct().count()
-    )
+    docs = load_table(spark, SF_DIR, "documents")
+    n_signed = shingles(docs).select("doc_id").distinct().count()
     rows = _rows(spark, "lsh_band_load_histogram")
     assert sum(r["bucket_size"] * r["n_buckets"] for r in rows) == 4 * n_signed

@@ -155,9 +155,10 @@ def test_lifecycle_probe_has_no_seen_side_shingle_recompute(spark):
 
 
 def _plan_of_bands(spark):
-    from awsbatch_mapreduce_spark.plans.wave8 import band_keys_frame
+    from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
+    from awsbatch_mapreduce_spark.sources.tables import load_table
 
-    return _plan(band_keys_frame(spark, SF_DIR))
+    return _plan(band_index_rows(load_table(spark, SF_DIR, "documents")))
 
 
 def test_lifecycle_idempotent_on_one_session(spark):
