@@ -21,7 +21,7 @@ import shutil
 import struct
 import subprocess
 import zlib
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -38,6 +38,8 @@ _FIRE = [
     (255, 220, 60),
     (255, 255, 255),
 ]
+# one 256-byte ``bytes.translate`` table per RGB channel: level -> value
+_FIRE_CHANNELS = [bytes(c[ch] for c in _FIRE).ljust(256, b"\0") for ch in range(3)]
 
 
 def eq_hist_shade(counts: Sequence[int], n_levels: int = len(_FIRE)) -> list[int]:
@@ -87,6 +89,25 @@ def write_png(path: str | Path, width: int, height: int, rgb_rows: bytes) -> Non
     Path(path).write_bytes(png)
 
 
+def render_cells_png(
+    cells: Iterable[tuple[int, int, int]], path: str | Path, width: int, height: int
+) -> None:
+    """Shade sparse ``(px, py, count)`` cells (off-grid ones dropped)
+    into a ``width x height`` PNG, black background per
+    ``export_image(.., background='black')`` at ``main.py:80-85``.
+    Linear in cells + grid: one row-major densify, then one
+    ``bytes.translate`` of the levels per RGB channel."""
+    flat = [0] * (width * height)
+    for px, py, c in cells:
+        if 0 <= px < width and 0 <= py < height:
+            flat[py * width + px] = c
+    levels = bytes(eq_hist_shade(flat))
+    rgb = bytearray(width * height * 3)
+    for ch, table in enumerate(_FIRE_CHANNELS):
+        rgb[ch::3] = levels.translate(table)
+    write_png(path, width, height, bytes(rgb))
+
+
 def render_grid_png(
     binned: DataFrame,
     path: str | Path,
@@ -96,25 +117,12 @@ def render_grid_png(
     y_col: str = "py",
     count_col: str = "cnt",
 ) -> None:
-    """Collect a (sparse) binned grid and export a shaded PNG.
-
-    The ONLY driver materialization in the pipeline, and it is bounded:
-    ``width*height`` cells regardless of input scale (1400x1000 in the
-    reference).  Black background per ``export_image(..,
-    background='black')`` at ``main.py:80-85``.
-    """
-    cells = {
-        (r[x_col], r[y_col]): r[count_col]
-        for r in binned.select(x_col, y_col, count_col).collect()
-    }
-    flat = [
-        cells.get((x, y), 0) for y in range(height) for x in range(width)
-    ]
-    levels = eq_hist_shade(flat)
-    rgb = bytearray(width * height * 3)
-    for i, lev in enumerate(levels):
-        rgb[3 * i : 3 * i + 3] = bytes(_FIRE[lev])
-    write_png(path, width, height, bytes(rgb))
+    """Collect a (sparse) binned grid and export a shaded PNG.  The
+    collect is bounded: ``width*height`` cells regardless of input
+    scale (1400x1000 in the reference)."""
+    render_cells_png(
+        binned.select(x_col, y_col, count_col).collect(), path, width, height
+    )
 
 
 def stitch_video(

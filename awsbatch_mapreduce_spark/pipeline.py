@@ -15,16 +15,22 @@ driver-side render loop over the (tiny) collected grids.  This is the
 cross-month histogram the reference could never compute (its months
 only ever met as video frames, SURVEY.md §4 "partial+final
 aggregation").
+
+The reduce is linear in collected rows + grid cells: the grid arrives
+as one Arrow table, one pass buckets its rows by month, then each frame
+is densified into a flat row-major list and shaded with byte operations
+(``render.render_cells_png``).
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.operators.render import render_grid_png, stitch_video
+from awsbatch_mapreduce_spark.operators.render import render_cells_png, stitch_video
 from awsbatch_mapreduce_spark.plans.reference_parity import (
     _BBOX,
     _GRID_H,
@@ -74,16 +80,17 @@ def run_reference_pipeline(
         .groupBy("year_month", "px", "py")
         .count()
     )
-    # one action; per-month grids are grid-bounded, never input-bounded
-    rows = binned.collect()
-    months = sorted({r.year_month for r in rows})
-    if max_months is not None:
-        months = months[:max_months]
+    # one action (an Arrow transfer of the grid-bounded rows), then one
+    # pass buckets them by month: the reduce is linear in rows + cells
+    by_month: dict[str, list[tuple[int, int, int]]] = defaultdict(list)
+    grid = binned.toArrow()
+    for mon, px, py, c in zip(*(col.to_pylist() for col in grid.columns)):
+        by_month[mon].append((px, py, c))
+    months = sorted(by_month)[:max_months]
     frame_paths: list[Path] = []
     for i, mon in enumerate(months):
-        grid = [(r.px, r.py, r["count"]) for r in rows if r.year_month == mon]
         frame = out / f"output-iteration-{i:03d}.png"
-        _render_rows(grid, frame, width, height)
+        render_cells_png(by_month[mon], frame, width, height)
         frame_paths.append(frame)
     manifest = {
         "months": months,
@@ -96,20 +103,3 @@ def run_reference_pipeline(
     except NotImplementedError:
         manifest["video"] = str((out / "output.mp4").with_suffix(".frames.txt"))
     return manifest
-
-
-def _render_rows(
-    grid: list[tuple[int, int, int]], path: Path, width: int, height: int
-) -> None:
-    """Render a sparse (px, py, count) list without re-entering Spark
-    (``render_grid_png`` collects a DataFrame; here the rows are
-    already collected once for all months)."""
-    from awsbatch_mapreduce_spark.operators.render import _FIRE, eq_hist_shade, write_png
-
-    cells = {(px, py): c for px, py, c in grid}
-    flat = [cells.get((xx, yy), 0) for yy in range(height) for xx in range(width)]
-    levels = eq_hist_shade(flat)
-    rgb = bytearray(width * height * 3)
-    for i, lev in enumerate(levels):
-        rgb[3 * i : 3 * i + 3] = bytes(_FIRE[lev])
-    write_png(path, width, height, bytes(rgb))

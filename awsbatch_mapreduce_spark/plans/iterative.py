@@ -299,7 +299,11 @@ def _assign_literal(
     sorted by cell ascending: ``array_position`` returns the first
     minimum, which is then the lowest cell — the struct-min tie-break.
     No exchange, no broadcast build: the n x k distance work happens
-    in the row's own task and only the argmin row survives."""
+    in the row's own task and only the argmin row survives.
+
+    Precondition: ``q`` has unique ``vec_id``s.  The output is one row
+    per INPUT row; the crossJoin form's ``groupBy(vec_id)`` collapsed
+    duplicate ids, this form does not."""
     if not cells:
         # empty codebook (empty corpus): the crossJoin form produced an
         # empty frame; keep that contract
@@ -365,7 +369,8 @@ def assign_to_cells_collected(q: DataFrame, codebook: DataFrame) -> DataFrame:
     one broadcast-build job per probe.  The collect happens at plan-
     build time (one k0-row job — the codebook was always driver/
     executor-resident by contract; the never-broadcast pins cover the
-    data-scaled sides, not this frame)."""
+    data-scaled sides, not this frame).  Precondition: ``q`` has unique
+    ``vec_id``s (see :func:`_assign_literal`)."""
     cells, cents = _collect_codebook(codebook)
     return _assign_literal(q, cells, cents, codebook.schema["cell"].dataType)
 
@@ -484,6 +489,20 @@ def _kmeans_oracle(n_iter: int = 5) -> str:
     )
 
 
+def label_init_fit(emb: DataFrame) -> DataFrame:
+    """The 5-iteration Lloyd fit from the per-label init that
+    ``kmeans_embeddings`` and the SemDeDup pipeline share.  The final
+    assignment ``kmeans_fit`` persists is read once into an eager
+    ``localCheckpoint`` and released, so no CacheManager entry outlives
+    the build for a later rep of the same plan to re-match."""
+    assigned, _ = kmeans_fit(
+        emb.select("vec_id", "embedding"), label_centroid_init(emb), n_iter=5
+    )
+    final = assigned.localCheckpoint()
+    assigned.unpersist()
+    return final
+
+
 @query("kmeans_embeddings", oracle=_kmeans_oracle(5))
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5 Lloyd iterations, k=10, init = per-label centroids
@@ -491,10 +510,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     inertia — exact-match against the unrolled-CTE oracle because
     every iteration's arithmetic is integer-quantized (module
     docstring)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, _ = kmeans_fit(
-        emb.select("vec_id", "embedding"), label_centroid_init(emb), n_iter=5
-    )
+    assigned = label_init_fit(load_table(spark, sf_dir, "embeddings"))
     return assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_members"),
         (

@@ -43,8 +43,7 @@ from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import (
     _kmeans_cte,
-    kmeans_fit,
-    label_centroid_init,
+    label_init_fit,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave8 import _INCR_LSH_ORACLE
@@ -223,10 +222,7 @@ def _semdedup_sim(
     CELLS enter the pair pipeline, so the quadratic-ish pair pass is
     priced on the sample while the (linear, already-measured) cluster
     step still sees the full corpus."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, _ = kmeans_fit(
-        emb.select("vec_id", "embedding"), label_centroid_init(emb), n_iter=5
-    )
+    assigned = label_init_fit(load_table(spark, sf_dir, "embeddings"))
     if cell_rate is not None:
         from awsbatch_mapreduce_spark.plans.sampling import md5_bucket
 

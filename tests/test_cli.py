@@ -63,6 +63,32 @@ def test_cli_pipeline_end_to_end(spark, capsys, tmp_path):
     assert listing.exists() and "output-iteration-000.png" in listing.read_text()
 
 
+def test_pipeline_runs_one_spark_action(spark, tmp_path):
+    """The whole map->reduce is one Spark action, however many months it
+    renders.  Tagged with a job group, a run counts three jobs: the
+    lineitem schema read at load, then the single grid transfer's
+    shuffle map stage and its result stage (adaptive execution submits
+    them as two jobs).  A per-month collect would add jobs with every
+    month."""
+    from awsbatch_mapreduce_spark.pipeline import run_reference_pipeline
+    from tests.conftest import SF_DIR_ORACLE
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for months in (1, 3):
+        group = f"pipeline-one-action-{months}"
+        sc.setJobGroup(group, group)
+        try:
+            run_reference_pipeline(
+                spark, SF_DIR_ORACLE, tmp_path / str(months), max_months=months
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sorted(tracker.getJobIdsForGroup(group))
+        assert len(jobs) == 3, (months, jobs)
+
+
 def test_cli_curate_end_to_end(tmp_path, capsys):
     """The composed curation build: monotone funnel counts, hive-layout
     export that prunes on read, and a manifest that reproduces run-over-

@@ -40,3 +40,44 @@ def test_kmeans_query_shape(spark):
     rows = df.collect()
     assert sum(r.n_members for r in rows) == 500
     assert all(r.inertia >= 0 for r in rows)
+
+
+def test_assign_literal_callers_pass_unique_vec_ids(spark, monkeypatch):
+    """``_assign_literal`` emits one row per input row, so its callers
+    must pass frames keyed by ``vec_id`` (the crossJoin form it replaced
+    collapsed duplicates).  Records the input frame of every call made
+    by the queries that reach it, and checks each caller is covered and
+    each frame's ids are unique."""
+    import sys
+
+    from awsbatch_mapreduce_spark.plans import iterative
+    from tests.conftest import SF_DIR
+
+    inputs: dict = {}
+    orig = iterative._assign_literal
+
+    def recording(q, *args, **kwargs):
+        site = sys._getframe(1).f_code.co_name, sys._getframe(2).f_code.co_name
+        inputs.setdefault(site, {})[id(q)] = q
+        return orig(q, *args, **kwargs)
+
+    monkeypatch.setattr(iterative, "_assign_literal", recording)
+    for name in (
+        "kmeans_embeddings",
+        "semdedup_codebook_novelty",
+        "semdedup_codebook_capacity",
+        "semdedup_codebook_refit",
+    ):
+        QUERIES[name].builder(spark, SF_DIR).collect()
+    assert set(inputs) == {
+        ("kmeans_fit", "label_init_fit"),
+        ("kmeans_fit", "semdedup_codebook_novelty"),
+        ("kmeans_fit", "_persist_two_level"),
+        ("assign_to_cells_collected", "semdedup_codebook_novelty"),
+        ("assign_to_cells_collected", "_assign_fine"),
+        ("assign_to_cells_collected", "_admit_batch"),
+    }, sorted(inputs)
+    for site, frames in inputs.items():
+        for q in frames.values():
+            dup = q.groupBy("vec_id").count().filter("count > 1").limit(1).collect()
+            assert not dup, (site, dup)

@@ -15,7 +15,9 @@ from pathlib import Path
 import pytest
 
 from awsbatch_mapreduce_spark.operators.render import (
+    _FIRE,
     eq_hist_shade,
+    render_cells_png,
     render_grid_png,
     stitch_video,
     write_png,
@@ -80,6 +82,79 @@ def test_render_grid_png_from_query(spark, tmp_path):
     assert (w, h) == (140, 100)
     # shaded output must not be all-black (data exists in bbox)
     assert any(b != 0 for b in raw)
+
+
+def _per_cell_render(grid, path: Path, width: int, height: int) -> None:
+    """The per-cell densify and RGB loops the byte-operation render path
+    replaced, kept as its byte-for-byte reference."""
+    cells = {(px, py): c for px, py, c in grid}
+    flat = [cells.get((xx, yy), 0) for yy in range(height) for xx in range(width)]
+    levels = eq_hist_shade(flat)
+    rgb = bytearray(width * height * 3)
+    for i, lev in enumerate(levels):
+        rgb[3 * i : 3 * i + 3] = bytes(_FIRE[lev])
+    write_png(path, width, height, bytes(rgb))
+
+
+_W, _H = 7, 5
+
+
+@pytest.mark.parametrize(
+    "grid",
+    [
+        [],
+        [(3, 2, 9)],
+        [(0, 0, 4), (1, 0, 4), (2, 3, 4), (6, 4, 1), (5, 1, 1)],
+        [(_W - 1, _H - 1, 2)],
+        [(0, 0, 1), (_W, 0, 5), (0, _H, 5), (-1, 2, 5)],
+        [(x, y, (x * 7 + y * 3) % 11) for y in range(_H) for x in range(_W)],
+    ],
+    ids=["empty", "one_cell", "tied_counts", "last_cell", "off_grid", "dense"],
+)
+def test_render_cells_matches_per_cell_reference(tmp_path, grid):
+    render_cells_png(grid, tmp_path / "new.png", _W, _H)
+    _per_cell_render(grid, tmp_path / "ref.png", _W, _H)
+    assert (tmp_path / "new.png").read_bytes() == (tmp_path / "ref.png").read_bytes()
+
+
+def test_pipeline_frames_match_per_cell_reference(spark, tmp_path):
+    """The pipeline's first 3 months at sf0.01, byte for byte against
+    the per-cell reference renderer over a DuckDB recount of the same
+    per-month bins: pins the month bucketing and the render path."""
+    from awsbatch_mapreduce_spark.pipeline import run_reference_pipeline
+    from awsbatch_mapreduce_spark.plans.reference_parity import (
+        _BBOX,
+        _GRID_H,
+        _GRID_W,
+        _X_EXPR,
+        _Y_EXPR,
+    )
+    from tests.conftest import SF_DIR_ORACLE
+    from tests.oracle_utils import duckdb_con
+
+    xmin, xmax, ymin, ymax = (_BBOX[k] for k in ("xmin", "xmax", "ymin", "ymax"))
+    xstep, ystep = (xmax - xmin) / _GRID_W, (ymax - ymin) / _GRID_H
+    rows = duckdb_con(SF_DIR_ORACLE).execute(f"""
+        SELECT strftime(date_trunc('month', l_shipdate), '%Y-%m') AS m,
+               CAST(least(floor(({_X_EXPR} - {xmin!r}) / {xstep!r}), {_GRID_W - 1}) AS INT),
+               CAST(least(floor(({_Y_EXPR} - {ymin!r}) / {ystep!r}), {_GRID_H - 1}) AS INT),
+               COUNT(*)
+        FROM lineitem
+        WHERE {_X_EXPR} >= {xmin!r} AND {_X_EXPR} <= {xmax!r}
+          AND {_Y_EXPR} >= {ymin!r} AND {_Y_EXPR} <= {ymax!r}
+        GROUP BY ALL
+    """).fetchall()
+    grids: dict[str, list] = {}
+    for m, px, py, c in rows:
+        grids.setdefault(m, []).append((px, py, c))
+    months = sorted(grids)[:3]
+
+    manifest = run_reference_pipeline(spark, SF_DIR_ORACLE, tmp_path / "out", max_months=3)
+    assert manifest["months"] == months
+    for m, frame in zip(months, manifest["frames"]):
+        ref = tmp_path / f"ref-{m}.png"
+        _per_cell_render(grids[m], ref, _GRID_W, _GRID_H)
+        assert Path(frame).read_bytes() == ref.read_bytes(), m
 
 
 def test_binaryfile_source_reads_frames(spark, tmp_path):

@@ -618,14 +618,19 @@ def test_dedup_ladder_reps_share_no_cache(spark):
     ``persist`` of the ladder's shingle frame let the bench's untimed
     warm-up leave a cached frame that Spark's CacheManager re-matched in
     every later run of the identical plan; the eager in-builder
-    ``localCheckpoint`` keeps one compute per run without that.  Built
-    and run twice, neither query may leave a cache entry or read an
-    ``InMemoryRelation``."""
-    # the session is shared: queries built by earlier tests (kmeans_fit's
-    # persisted final assignment) may have left entries of their own
-    spark.catalog.clearCache()
+    ``localCheckpoint`` keeps one compute per run without that.  The
+    k-means fit's persisted final assignment follows the same rule in
+    ``kmeans_embeddings`` and the SemDeDup queries.  Built and run
+    twice, no query may leave a cache entry or read an
+    ``InMemoryRelation`` — and the shared session holds none from
+    earlier tests either."""
     cache = spark._jsparkSession.sharedState().cacheManager()
-    for name in ("dedup_minhash_lsh", "minhash_lsh_eval"):
+    for name in (
+        "dedup_minhash_lsh",
+        "minhash_lsh_eval",
+        "kmeans_embeddings",
+        "semdedup_cluster_prune",
+    ):
         for _ in range(2):
             df = QUERIES[name].builder(spark, SF_DIR)
             df.collect()
