@@ -116,43 +116,6 @@ def label_centroid_init(emb: DataFrame) -> DataFrame:
     )
 
 
-def assign_to_cells(q: DataFrame, centroids: DataFrame) -> DataFrame:
-    """One Lloyd ASSIGN step: quantized corpus (vec_id, vq) against a
-    broadcast codebook (cell, centroid) -> (vec_id, vq, cell, d_fp) by
-    integer-quantized argmin with the (d_fp, cell) tie-break.  Shared
-    by ``kmeans_fit``'s iteration loop and the wave-10/11 persisted-
-    codebook probes so the assignment arithmetic has exactly one home
-    (the oracle twins: the ``d{i}``/``a{i}`` CTEs and wave 10's ``an``).
-
-    The argmin is a struct-min AGGREGATE, not a row_number window
-    (round-11 ladder finding): min(struct(d_fp, cell)) is the same
-    (d_fp, cell)-lexicographic first row, but the groupBy's partial
-    aggregation collapses the n x k candidate blow-up MAP-SIDE — only
-    one row per vec_id (carrying its constant vq) ever crosses the
-    exchange, where the window plan shuffled every candidate row with
-    its 64-int vq array attached (measured: the wave-11 fine-assign at
-    the 100x rehearsal stalled on a ~30 GB candidate exchange; the
-    aggregate form shuffles ~1/k of that)."""
-    best = F.min(F.struct(F.col("d_fp"), F.col("cell"))).alias("b")
-    return (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            "vq",
-            "cell",
-            _sq_dist_fp(F.col("vq"), F.col("centroid")).alias("d_fp"),
-        )
-        .groupBy("vec_id")
-        .agg(F.first("vq").alias("vq"), best)
-        .select(
-            "vec_id",
-            "vq",
-            F.col("b.cell").alias("cell"),
-            F.col("b.d_fp").alias("d_fp"),
-        )
-    )
-
-
 def kmeans_fit(
     corpus: DataFrame,
     k_init: DataFrame,
@@ -292,14 +255,17 @@ def _assign_literal(
     q: DataFrame, cells: list, cents: list, cell_type
 ) -> DataFrame:
     """One Lloyd ASSIGN step against a DRIVER-LITERAL codebook:
-    (vec_id, vq) -> (vec_id, vq, cell, d_fp) by the same integer-
-    quantized (d_fp, cell) argmin as :func:`assign_to_cells`, computed
-    per row with higher-order functions over the literal instead of a
-    broadcast crossJoin + aggregate.  ``cells``/``cents`` MUST be
-    sorted by cell ascending: ``array_position`` returns the first
-    minimum, which is then the lowest cell — the struct-min tie-break.
-    No exchange, no broadcast build: the n x k distance work happens
-    in the row's own task and only the argmin row survives.
+    quantized corpus (vec_id, vq) -> (vec_id, vq, cell, d_fp), where
+    ``d_fp`` is the ``_sq_dist_fp`` integer squared distance to the
+    nearest centroid and ties go to the lowest cell — the
+    (d_fp, cell)-lexicographic argmin the oracle twins compute (the
+    ``d{i}``/``a{i}`` CTEs of ``_kmeans_cte`` and wave 10's ``an``).
+    Computed per row with higher-order functions over the literal
+    instead of a broadcast crossJoin + aggregate.  ``cells``/``cents``
+    MUST be sorted by cell ascending: ``array_position`` returns the
+    first minimum, which is then the lowest cell.  No exchange, no
+    broadcast build: the n x k distance work happens in the row's own
+    task and only the argmin row survives.
 
     Precondition: ``q`` has unique ``vec_id``s.  The output is one row
     per INPUT row; the crossJoin form's ``groupBy(vec_id)`` collapsed
@@ -360,13 +326,14 @@ def _collect_codebook(codebook: DataFrame) -> tuple[list, list]:
 
 
 def assign_to_cells_collected(q: DataFrame, codebook: DataFrame) -> DataFrame:
-    """:func:`assign_to_cells` with the BOUNDED codebook collected to
-    the driver and applied as a literal expression (round 19, guide
-    §2.4): same (vec_id, vq, cell, d_fp) output, same integer argmin
-    and (d_fp, cell) tie-break, but the batch side crosses NO exchange
-    — the old broadcast crossJoin + groupBy(vec_id) form shuffled one
-    row per batch vector just to collapse its own k candidates, plus
-    one broadcast-build job per probe.  The collect happens at plan-
+    """Assign a quantized batch (vec_id, vq) to a BOUNDED (cell,
+    centroid) codebook: the codebook is collected to the driver and
+    applied as a literal expression (round 19) — the
+    (vec_id, vq, cell, d_fp) integer argmin of :func:`_assign_literal`,
+    with the batch side crossing NO exchange (the pre-r19 broadcast
+    crossJoin + groupBy(vec_id) form shuffled one row per batch vector
+    just to collapse its own k candidates, plus one broadcast-build job
+    per probe).  The collect happens at plan-
     build time (one k0-row job — the codebook was always driver/
     executor-resident by contract; the never-broadcast pins cover the
     data-scaled sides, not this frame).  Precondition: ``q`` has unique

@@ -63,6 +63,11 @@ from awsbatch_mapreduce_spark.plans.wave9 import (
     _semdedup_sim,
     retention_curve_frame,
 )
+from awsbatch_mapreduce_spark.scratch import (
+    _scratch_dir,
+    _scratch_tag,
+    _table_names,
+)
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # --- cell-sampled eps-retention curve ------------------------------------
@@ -219,12 +224,6 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the corpus; k is fixed here by the shared-oracle contract
     (same documented trade as wave 9's shard cap).
     """
-    from awsbatch_mapreduce_spark.plans.wave5 import (
-        _scratch_dir,
-        _scratch_tag,
-        _table_names,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive

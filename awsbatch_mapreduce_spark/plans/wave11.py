@@ -60,19 +60,20 @@ the LLM-pipeline operator family the build brief makes first-class.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.index.generation import fresh_layout
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import (
     _kmeans_cte,
     _quantize,
     _sq_dist_fp,
     _VSCALE,
-    assign_to_cells,
     assign_to_cells_collected,
     kmeans_fit,
     label_centroid_init,
@@ -268,32 +269,6 @@ def _sub_centroids(members: DataFrame) -> DataFrame:
     )
 
 
-def _index_tables(spark, sf_dir, kind) -> tuple[str, str, str, str]:
-    """Scratch base + the three per-(kind, fixture) table names, with
-    the stale-generation sweep of prior tags (one mutable generation
-    per fixture, as every persisted-index query in the repo keeps)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import (
-        _scratch_dir,
-        _scratch_tag,
-        _table_names,
-    )
-
-    tag = _scratch_tag(sf_dir)
-    base = _scratch_dir(f"awsbatch_semdedup_{kind}_idx", sf_dir)
-    coarse_tbl = f"semdedup_{kind}_coarse_{tag}"
-    fine_tbl = f"semdedup_{kind}_fine_{tag}"
-    mem_tbl = f"semdedup_{kind}_members_{tag}"
-    prefixes = tuple(
-        f"semdedup_{kind}_{part}_" for part in ("coarse", "fine", "members")
-    )
-    for t in _table_names(spark):
-        if t.startswith(prefixes) and not t.endswith(tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-    for t in (coarse_tbl, fine_tbl, mem_tbl):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    return base, coarse_tbl, fine_tbl, mem_tbl
-
-
 def _build_probe(spark, sf_dir, kind, init_fn) -> DataFrame:
     """Shared build+probe of a capacity-split two-level codebook:
     ``kind`` prefixes the three persisted tables (``cap``/``ada``),
@@ -304,16 +279,14 @@ def _build_probe(spark, sf_dir, kind, init_fn) -> DataFrame:
     b = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, kind)
-    seen = emb.filter(F.col("vec_id") <= F.lit(mid))
-    _persist_two_level(
-        spark, seen, init_fn, base, coarse_tbl, fine_tbl, mem_tbl
+    lay = build_generation(
+        spark, sf_dir, kind, emb.filter(F.col("vec_id") <= F.lit(mid)),
+        init_fn=init_fn,
     )
-
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _probe_batch(spark, new, coarse_tbl, fine_tbl, mem_tbl)
+    return _probe_batch(spark, new, lay.coarse, lay.fine, lay.members)
 
 
 def _persist_two_level(
@@ -370,6 +343,11 @@ def _persist_two_level(
     # different tables, so the catalog commits are independent).  Job
     # ordering never mattered here: the generation only becomes
     # readable at cutover, which verifies all tables exist.
+    # Executor-loss caveat: the checkpoint lives in executor block
+    # storage with no lineage back to the fit, so the fine-book and
+    # members writes below cannot recompute a partition lost with its
+    # executor — the build fails and must be re-run (the generation is
+    # not current until cutover, so nothing reads the partial tables).
     with ThreadPoolExecutor(max_workers=1) as pool:
         coarse_f = pool.submit(_write_coarse)
         members_frame = members_plan.localCheckpoint()
@@ -400,10 +378,37 @@ def _persist_two_level(
     assigned.unpersist()
 
 
+def build_generation(
+    spark, sf_dir, kind, seen, init_fn=None, cap: int = _CAP,
+    with_pq: bool = False,
+):
+    """Fit and persist generation ``kind`` over ``seen`` (raw (vec_id,
+    embedding) rows): a fresh layout (``index.generation.fresh_layout``
+    drops the kind's previous tables), the two-level BUILD
+    (``_persist_two_level``), and with ``with_pq`` the codes + PQ
+    codebook (``wave14._persist_pq_codes``).  ``init_fn`` defaults to
+    the adaptive mod-hash init at ``cap``.  Returns the layout; making
+    the generation current is the caller's explicit
+    ``cutover_generation``."""
+    if init_fn is None:
+        init_fn = functools.partial(_mod_centroid_init, cap=cap)
+    lay = fresh_layout(spark, sf_dir, kind)
+    _persist_two_level(
+        spark, seen, init_fn, lay.base, lay.coarse, lay.fine, lay.members,
+        cap=cap,
+    )
+    if with_pq:
+        from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
+
+        _persist_pq_codes(spark, lay.members, lay.base, lay.codes, lay.pqcb)
+    return lay
+
+
 def _assign_fine(spark, new, coarse_tbl, fine_tbl) -> DataFrame:
     """The probe's ASSIGNMENT half: coarse assign (broadcast k0-row
     codebook — bounded) then fine argmin as a struct-min AGGREGATE (the
-    assign_to_cells discipline, found at this query's own 100x ladder):
+    argmin-as-aggregate discipline, found at this query's own 100x
+    ladder):
     the |batch| x subs-per-cell candidate rows collapse map-side in the
     same stage as the sort-merge join that produced them — a row_number
     window here exchanged every candidate WITH its 64-int vq array

@@ -64,14 +64,12 @@ from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
-    _index_tables,
     _K0_SQL,
-    _mod_centroid_init,
-    _persist_two_level,
     _probe_batch,
     _SEEN_SRC,
     _SPLIT_CTES,
     _sub_centroids,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -251,11 +249,10 @@ def semdedup_codebook_adaptive_append(
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
     q3 = (mid + b.hi) // 2  # oracle: (mid + MAX) // 2
 
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, "app")
-    seen = emb.filter(F.col("vec_id") <= F.lit(mid))
-    _persist_two_level(
-        spark, seen, _mod_centroid_init, base, coarse_tbl, fine_tbl, mem_tbl
+    lay = build_generation(
+        spark, sf_dir, "app", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    coarse_tbl, fine_tbl, mem_tbl = lay.coarse, lay.fine, lay.members
 
     # APPEND: the shared admission step (also the per-micro-batch body
     # of the streaming admission operator, streaming/codebook.py).
@@ -306,7 +303,7 @@ def _admit_batch(
     quality-triggered refit escalates it, so admission must rank-chunk
     at the cap the index was fitted with to preserve the <= cap bound
     (callers read it back from the generation pointer's ``cap=N``
-    token, `wave13.read_generation_cap`).
+    token, `index.generation.read_pointer`).
     """
     assigned_batch = assign_to_cells_collected(batch, spark.table(coarse_tbl))
     w_chunk = Window.partitionBy("cell").orderBy(F.asc("d_fp"), F.asc("vec_id"))

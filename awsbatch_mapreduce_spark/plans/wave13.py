@@ -64,11 +64,16 @@ generation is immutable during the refit).
 
 from __future__ import annotations
 
-import contextlib as _contextlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_layout,
+    generation_layout,
+    live_view,
+    read_pointer,
+)
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import (
     _kmeans_cte,
@@ -80,7 +85,6 @@ from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
-    _index_tables,
     _K0_SQL,
     _MID_BOUNDARY,
     _mod_centroid_init,
@@ -89,6 +93,7 @@ from awsbatch_mapreduce_spark.plans.wave11 import (
     _probe_ctes,
     _SEEN_SRC,
     _SPLIT_CTES,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -190,15 +195,8 @@ def semdedup_codebook_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     q3 = (mid + b.hi) // 2  # oracle: (mid + MAX) // 2
 
     # 1. BUILD over the seen half (pre-refit generation, kind "rfa").
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, sf_dir, "rfa")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    gen_a = build_generation(
+        spark, sf_dir, "rfa", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
 
     # 2. Three APPEND generations over the (mid, q3] terciles — the "N
@@ -212,17 +210,20 @@ def semdedup_codebook_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = emb.filter(
             (F.col("vec_id") > F.lit(lo_b)) & (F.col("vec_id") <= F.lit(hi_b))
         ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-        _admit_batch(spark, batch, coarse_a, fine_a, mem_a)
+        _admit_batch(spark, batch, gen_a.coarse, gen_a.fine, gen_a.members)
 
     # 3. REFIT from the grown members table into a new generation.
-    base_r, coarse_r, fine_r, mem_r = _index_tables(spark, sf_dir, "rft")
-    refit_from_members(spark, mem_a, base_r, coarse_r, fine_r, mem_r)
+    gen_r = fresh_layout(spark, sf_dir, "rft")
+    refit_from_members(
+        spark, gen_a.members, gen_r.base, gen_r.coarse, gen_r.fine,
+        gen_r.members,
+    )
 
     # 4. PROBE today's batch against the refitted index.
     probe = emb.filter(F.col("vec_id") > F.lit(q3)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _probe_batch(spark, probe, coarse_r, fine_r, mem_r)
+    return _probe_batch(spark, probe, gen_r.coarse, gen_r.fine, gen_r.members)
 
 
 # ---------------------------------------------------------------------------
@@ -500,20 +501,13 @@ def semdedup_codebook_multiprobe(
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, "mp2")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
+    lay = build_generation(
+        spark, sf_dir, "mp2", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _multiprobe_batch(spark, new, coarse_tbl, fine_tbl, mem_tbl)
+    return _multiprobe_batch(spark, new, lay.coarse, lay.fine, lay.members)
 
 
 semdedup_codebook_multiprobe.__doc__ = (
@@ -686,11 +680,9 @@ def semdedup_codebook_recall_eval(
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, "rce")
     seen = emb.filter(F.col("vec_id") <= F.lit(mid))
-    _persist_two_level(
-        spark, seen, _mod_centroid_init, base, coarse_tbl, fine_tbl, mem_tbl
-    )
+    lay = build_generation(spark, sf_dir, "rce", seen)
+    coarse_tbl, fine_tbl, mem_tbl = lay.coarse, lay.fine, lay.members
     panel = emb.filter(
         (F.col("vec_id") > F.lit(mid))
         & (F.col("vec_id") <= F.lit(mid + _PANEL))
@@ -767,315 +759,10 @@ semdedup_codebook_recall_eval.__doc__ = (
 
 
 # ---------------------------------------------------------------------------
-# GENERATION CUTOVER + VACUUM: the operational tail of the refit.
-# `refit_from_members` writes a NEW generation (distinct kind tag) and
-# leaves the source generation untouched — that immutability is what
-# makes the refit crash-safe, but it also means every refit doubles the
-# index footprint until something (a) atomically repoints readers at
-# the new generation and (b) reclaims the superseded one.  At 100 TB
-# the members table IS the corpus-scale artifact, so an unreclaimed
-# generation is a corpus-sized storage leak per weekly refit.  The
-# pointer uses the same atomic-rename marker discipline as the
-# streaming admission's intent/watermark pair (`streaming/codebook.py`):
-# readers resolve the pointer at probe start, so a probe sees the old
-# generation or the new one, never a mix, and a crash between refit
-# and cutover leaves the pointer on the still-intact old generation.
-# Reference parity: the reference swaps its whole output prefix per run
-# (`Implementation.cs:45-47` re-uploads jobData.json) rather than
-# patching in place — the pointer is that swap applied to the index.
+# GUARDED REFIT + POINTER PROBE: the operational tail of the refit, over
+# the generation storage and lifecycle verbs of `index/generation.py`
+# (pointer, cutover, vacuum, tombstones).
 # ---------------------------------------------------------------------------
-
-
-def _generation_names(sf_dir: str, kind: str) -> tuple[str, str, str]:
-    """The three table names of a generation — the pure-name half of
-    ``wave11._index_tables`` (which also sweeps and drops: wrong for a
-    reader that must not mutate)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_tag
-
-    tag = _scratch_tag(sf_dir)
-    return tuple(
-        f"semdedup_{kind}_{part}_{tag}"
-        for part in ("coarse", "fine", "members")
-    )
-
-
-def _pq_generation_names(sf_dir: str, kind: str) -> tuple[str, str]:
-    """The two PQ table names of a generation — codes (per-member PQ
-    codes, bucketed exactly like the members table) and the bounded
-    per-subspace PQ codebook.  Round 16 (VERDICT r15 #1): the PQ
-    artifacts are generation-scoped, owned by the same fit/refit/
-    cutover/vacuum machinery as coarse/fine/members."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_tag
-
-    tag = _scratch_tag(sf_dir)
-    return tuple(
-        f"semdedup_{kind}_{part}_{tag}" for part in ("codes", "pqcb")
-    )
-
-
-def read_generation_pointer(pointer_path: str) -> str | None:
-    """The kind tag of the current index generation, or None if no
-    cutover has happened yet."""
-    return read_generation_meta(pointer_path)[0]
-
-
-def read_generation_state(
-    pointer_path: str,
-) -> tuple[str | None, int | None, frozenset[str]]:
-    """ONE snapshot read of the pointer file -> (kind, n_fit, flags).
-    The pointer is a single atomically-renamed file precisely so that
-    every property of the current generation is consistent with every
-    other; a reader that opens the file once per property (ADVICE r16:
-    ``probe_current_generation(adc=True)`` read it twice) can pair one
-    generation's kind with another's flags when a cutover lands between
-    the opens — a spurious refusal or a missing-codes-table error.  All
-    the single-property readers below derive from this one snapshot.
-
-    Line format: line 1 = kind, line 2 = n_fit (may be empty; pointers
-    written before round 15 have no second line), line 3 =
-    space-separated flag tokens (``pq``, ``cap=N``, ``nprobe=N``;
-    pointers written before round 16 have no flag line)."""
-    try:
-        with open(pointer_path) as fh:
-            lines = fh.read().splitlines()
-    except OSError:
-        return None, None, frozenset()
-    kind = lines[0].strip() if lines else ""
-    if not kind:
-        return None, None, frozenset()
-    try:
-        n_fit = int(lines[1].strip())
-    except (IndexError, ValueError):
-        n_fit = None
-    flags = frozenset(lines[2].split()) if len(lines) >= 3 else frozenset()
-    return kind, n_fit, flags
-
-
-def read_generation_meta(pointer_path: str) -> tuple[str | None, int | None]:
-    """(kind, n_fit) of the current generation — ``n_fit`` is the
-    members count at fit/cutover time (the denominator of the
-    ``refit_due`` cadence rule), carried as the pointer file's second
-    line so it rides the SAME atomic rename as the kind (round 15: a
-    separate n_fit marker would reopen the crash window between the
-    swap and the marker write).  Pointers written before round 15 have
-    no second line — n_fit comes back None and callers fall back to a
-    live count."""
-    kind, n_fit, _ = read_generation_state(pointer_path)
-    return kind, n_fit
-
-
-def read_generation_flags(pointer_path: str) -> frozenset[str]:
-    """Capability flags of the current generation (pointer line 3,
-    space-separated tokens) — riding the same atomic rename as the
-    kind and n_fit.  ``pq`` means the generation carries codes +
-    PQ-codebook tables, so ``probe_current_generation(adc=True)`` may
-    serve from it; ``cap=N`` records the generation's fine-cell
-    capacity (``read_generation_cap`` parses it); ``nprobe=N`` the
-    serving probe width (``read_generation_nprobe``).  Pointers written
-    before round 16 have no flag line — an empty set comes back."""
-    return read_generation_state(pointer_path)[2]
-
-
-def _int_flag(flags: frozenset[str], prefix: str, default: int) -> int:
-    """Parse a ``name=N`` token out of one flag snapshot (so callers
-    that already hold a snapshot never re-open the pointer)."""
-    for tok in flags:
-        if tok.startswith(prefix):
-            try:
-                return int(tok[len(prefix):])
-            except ValueError:
-                pass
-    return default
-
-
-def read_generation_cap(pointer_path: str) -> int:
-    """The current generation's fine-cell capacity, from the pointer's
-    ``cap=N`` flag token (round 16: the quality-triggered refit
-    escalates cap, so the generation's cap is state the admission path
-    must read back — its rank-chunking preserves the <= cap bound only
-    if it chunks at the SAME cap the generation was fitted with).
-    Pointers without the token (pre-escalation generations) return the
-    registered fixture default."""
-    from awsbatch_mapreduce_spark.plans.wave11 import _CAP
-
-    return _int_flag(read_generation_flags(pointer_path), "cap=", _CAP)
-
-
-def read_generation_nprobe(pointer_path: str) -> int:
-    """The current generation's SERVING probe width, from the pointer's
-    ``nprobe=N`` flag token (round 17, VERDICT r16 #1): the recall
-    actuator's step must reach what production actually serves, so the
-    knob rides the pointer's atomic rename exactly like ``cap=N`` —
-    ``probe_current_generation`` (full-vector AND ADC) and the
-    streaming pointer readers honor it, and ``set_generation_nprobe``
-    is the actuator's write side.  Pointers without the token serve
-    single-probe (nprobe=1), the pre-round-17 behavior."""
-    return _int_flag(read_generation_flags(pointer_path), "nprobe=", 1)
-
-
-@_contextlib.contextmanager
-def _pointer_write_lock(pointer_path: str):
-    """Serialize pointer read-modify-write cycles (VERDICT r17 wrong
-    #3): the rename is atomic but the RMW around it is not — two
-    concurrent writers can lose an update (both read the same snapshot,
-    last rename wins, the other's token vanishes) or collide on the
-    fixed ``pointer_path + ".tmp"`` sibling (one ``os.replace`` steals
-    the other's tmp file -> FileNotFoundError).  Today the supervisor
-    is the single writer, but that contract was implicit; an exclusive
-    ``flock`` on a ``.lock`` sibling makes it enforced instead of
-    assumed, at the cost of one syscall per mutation (pointer writes
-    are O(refits + actuator steps) per run — never hot).  Readers stay
-    lock-free: they only ever open the complete, atomically-renamed
-    pointer file."""
-    import fcntl
-    import os as _os
-
-    lock_path = f"{pointer_path}.lock"
-    _os.makedirs(_os.path.dirname(lock_path) or ".", exist_ok=True)
-    fd = _os.open(lock_path, _os.O_CREAT | _os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        _os.close(fd)
-
-
-def set_generation_nprobe(pointer_path: str, nprobe: int) -> None:
-    """The recall actuator's WRITE side (round 17, VERDICT r16 #1):
-    record ``nprobe=N`` on the current generation's pointer — same
-    single-file atomic rename as every other pointer mutation, with the
-    kind, n_fit, and every other flag token carried over from one
-    snapshot read.  Takes effect on the NEXT pointer resolution: the
-    next ``probe_current_generation`` call, the next micro-batch of a
-    pointer-following stream (they re-resolve per batch), the next
-    QA snapshot — no stream restart, no refit.  The knob is serving
-    metadata, not index structure, which is why stepping it is the
-    CHEAP recall lever (probe cost ~x nprobe, zero extra exchange,
-    measured by the wave-14 sweep) and why it must never require the
-    refit machinery."""
-    import os as _os
-
-    if nprobe < 1:
-        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-    with _pointer_write_lock(pointer_path):
-        kind, n_fit, flags = read_generation_state(pointer_path)
-        if kind is None:
-            raise RuntimeError(
-                f"no current generation under {pointer_path!r}: nothing"
-                " to set nprobe on — fit and cut over first"
-            )
-        kept = sorted(t for t in flags if not t.startswith("nprobe="))
-        lines = [kind, "" if n_fit is None else str(n_fit),
-                 " ".join(kept + [f"nprobe={nprobe}"])]
-        tmp = f"{pointer_path}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(lines))
-        _os.replace(tmp, pointer_path)
-
-
-def cutover_generation(
-    spark,
-    sf_dir: str,
-    pointer_path: str,
-    kind: str,
-    n_fit: int | None = None,
-    with_pq: bool = False,
-    cap: int | None = None,
-    nprobe: int | None = None,
-) -> str | None:
-    """Atomically repoint readers at generation ``kind``: verify all
-    tables of the target generation exist (a half-written generation
-    must never become current), then rename-swap the pointer file.
-    Returns the previous kind (None on first cutover).  The old
-    generation's tables are left intact — reclaim is a separate,
-    explicitly-ordered step (``vacuum_generation``), so a crash between
-    cutover and vacuum costs storage, never correctness.  ``n_fit``
-    (the generation's fit-time members count) is recorded in the same
-    atomic write when given — the ``refit_due`` denominator the
-    streaming supervisor reads back at stream start.  ``with_pq``
-    (round 16) additionally verifies the generation's codes + PQ
-    codebook tables and records the ``pq`` capability flag on the
-    pointer's third line (same atomic rename) — the signal
-    ``probe_current_generation(adc=True)`` reads before serving ADC.
-    ``cap`` records the generation's fine-cell capacity as a ``cap=N``
-    token on the same line — the quality-triggered refit escalates it,
-    and the admission path must rank-chunk at the generation's own cap
-    to preserve the <= cap bound (``read_generation_cap``).
-    ``nprobe`` (round 17) records the SERVING probe width as an
-    ``nprobe=N`` token — the knob the recall actuator steps
-    (``set_generation_nprobe``) and every pointer-resolving probe
-    honors (``read_generation_nprobe``)."""
-    import os as _os
-
-    required = list(_generation_names(sf_dir, kind))
-    if with_pq:
-        required += list(_pq_generation_names(sf_dir, kind))
-    missing = [t for t in required if not spark.catalog.tableExists(t)]
-    if missing:
-        raise RuntimeError(
-            f"cutover to generation {kind!r} refused: tables {missing}"
-            " do not exist (refit incomplete or not run)"
-        )
-    with _pointer_write_lock(pointer_path):
-        prev = read_generation_pointer(pointer_path)
-        tmp = f"{pointer_path}.tmp"
-        lines = [kind]
-        flags = (
-            (["pq"] if with_pq else [])
-            + ([f"cap={cap}"] if cap is not None else [])
-            + ([f"nprobe={nprobe}"] if nprobe is not None else [])
-        )
-        if n_fit is not None or flags:
-            lines.append("" if n_fit is None else str(n_fit))
-        if flags:
-            lines.append(" ".join(flags))
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(lines))
-        _os.replace(tmp, pointer_path)
-    return prev
-
-
-def vacuum_generation(spark, sf_dir: str, pointer_path: str, kind: str) -> int:
-    """Reclaim a superseded generation: drop its three tables and
-    delete their external data dir.  REFUSES to vacuum the generation
-    the pointer currently names — the only state this function may
-    destroy is one no reader can resolve anymore.  Returns the number
-    of tables dropped (0 if the generation was already gone, making
-    vacuum idempotent for a crash-replay of the reclaim step)."""
-    import shutil
-
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
-    current = read_generation_pointer(pointer_path)
-    if kind == current:
-        raise RuntimeError(
-            f"vacuum of generation {kind!r} refused: it is the CURRENT"
-            f" generation under {pointer_path!r} — cut over first"
-        )
-    dropped = 0
-    # codes + pqcb vacuumed WITH the generation (round 16, VERDICT r15
-    # #1): dropped unconditionally — a generation without a PQ path
-    # simply has neither table and the loop no-ops over them.  The
-    # tombstone table (round 18) dies with its generation the same way
-    # (its data lives under the generation's scratch base, so the
-    # rmtree below reclaims the files).
-    from awsbatch_mapreduce_spark.plans.wave17 import _tombstone_name
-
-    tables = (
-        _generation_names(sf_dir, kind)
-        + _pq_generation_names(sf_dir, kind)
-        + (_tombstone_name(sf_dir, kind),)
-    )
-    for t in tables:
-        if spark.catalog.tableExists(t):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            dropped += 1
-    shutil.rmtree(
-        _scratch_dir(f"awsbatch_semdedup_{kind}_idx", sf_dir),
-        ignore_errors=True,
-    )
-    return dropped
 
 
 def refit_and_cutover(
@@ -1112,8 +799,8 @@ def refit_and_cutover(
     old one holds unrefitted admissions — quiescing is still the
     contract; the guard is a best-effort backstop, not a license to
     admit concurrently.  On refusal the new generation is left on disk
-    for inspection — re-run after quiescing; `_index_tables` sweeps it
-    on the retry.  Returns the previous generation's kind tag (the
+    for inspection — re-run after quiescing; ``fresh_layout`` sweeps
+    it on the retry.  Returns the previous generation's kind tag (the
     argument to a subsequent ``vacuum_generation``).
 
     ``with_pq`` (round 16, VERDICT r15 #1): True rebuilds the codes +
@@ -1124,7 +811,7 @@ def refit_and_cutover(
     refits keep whatever capability surface the generation had.
 
     ``cap`` (round 16): the new generation's fine-cell capacity — None
-    inherits the current generation's (``read_generation_cap``); the
+    inherits the current generation's (the pointer's ``cap``); the
     quality-triggered refit passes an ESCALATED cap, the growth-
     triggered one inherits.  The cap rides the pointer as a ``cap=N``
     token so admissions into the new generation rank-chunk at the cap
@@ -1138,13 +825,14 @@ def refit_and_cutover(
     steps were papering over (body comment)."""
     # one pointer snapshot: kind/n_fit/flags must be mutually consistent
     # (the same single-read discipline as probe_current_generation)
-    current, cur_n_fit, cur_flags = read_generation_state(pointer_path)
+    cur = read_pointer(pointer_path)
+    current = cur.kind
     if current is None:
         raise RuntimeError(
             f"no current generation under {pointer_path!r}: nothing to"
             " refit from — fit and cut over a first generation directly"
         )
-    cur_cap = _int_flag(cur_flags, "cap=", _CAP)
+    cur_cap = cur.cap if cur.cap is not None else _CAP
     # the serving nprobe is INHERITED by default (round 17): a routine
     # refit changes index structure, not the actuator-owned serving
     # knob — a generation swap must never silently reset production
@@ -1155,13 +843,14 @@ def refit_and_cutover(
     # the stopgap width would pay max-nprobe x probe cost forever on
     # an index that no longer needs it (the next snapshot re-converges
     # the knob from base if the new geometry still falls short).
-    old_nprobe = _int_flag(cur_flags, "nprobe=", 0) or None
+    old_nprobe = cur.nprobe or None
     new_nprobe = nprobe if nprobe is not None else old_nprobe
     if with_pq is None:
-        with_pq = "pq" in cur_flags
+        with_pq = cur.pq
     if cap is None:
         cap = cur_cap
-    _, _, src_mem = _generation_names(sf_dir, current)
+    src = generation_layout(sf_dir, current)
+    src_mem = src.members
     # refresh BEFORE the snapshot: streamed admissions commit through
     # the micro-batch's cloned session, so this session's cached file
     # listing can predate them — an unrefreshed refit would silently
@@ -1176,37 +865,30 @@ def refit_and_cutover(
     # guard below: a delete landing mid-refit would be cleared WITHOUT
     # being excluded (silent resurrection), so it refuses the cutover
     # exactly like a concurrent admission.
-    from awsbatch_mapreduce_spark.plans.wave17 import _tombstone_name
-
-    tombs_tbl = _tombstone_name(sf_dir, current)
+    tombs_tbl = src.tombs
     has_tombs = spark.catalog.tableExists(tombs_tbl)
     n_tombs_snapshot = (
         spark.table(tombs_tbl).count() if has_tombs else 0
     )
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(
-        spark, sf_dir, new_kind
-    )
+    new = fresh_layout(spark, sf_dir, new_kind)
     refit_from_members(
-        spark, src_mem, base, coarse_tbl, fine_tbl, mem_tbl, cap=cap,
-        tombs_tbl=tombs_tbl if has_tombs else None,
+        spark, src_mem, new.base, new.coarse, new.fine, new.members,
+        cap=cap, tombs_tbl=tombs_tbl if has_tombs else None,
     )
     # the NEW generation's fit-time size is the SURVIVOR count (what
     # it actually fitted) — the refit_due denominator must price the
     # fitted set, not the pre-deletion source
     n_fit_new = (
-        spark.table(mem_tbl).count() if has_tombs else n_snapshot
+        spark.table(new.members).count() if has_tombs else n_snapshot
     )
     if with_pq:
         # codes + PQ codebook are per-generation artifacts: rebuilt
         # from the NEW generation's members table (the codes build is
         # members-only by construction — the refit self-containment
         # property extends to the PQ path), before any pointer motion
-        from awsbatch_mapreduce_spark.plans.wave14 import _pq_tables
-
-        codes_tbl, pqcb_tbl = _pq_tables(spark, sf_dir, new_kind)
         from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 
-        _persist_pq_codes(spark, mem_tbl, base, codes_tbl, pqcb_tbl)
+        _persist_pq_codes(spark, new.members, new.base, new.codes, new.pqcb)
 
     def _recount() -> tuple[int, int]:
         spark.catalog.refreshTable(src_mem)
@@ -1247,8 +929,8 @@ def refit_and_cutover(
         # The rollback restores the OLD generation's own nprobe, not
         # the override meant for the generation that never went live.
         cutover_generation(
-            spark, sf_dir, pointer_path, current, n_fit=cur_n_fit,
-            with_pq="pq" in cur_flags, cap=cur_cap, nprobe=old_nprobe,
+            spark, sf_dir, pointer_path, current, n_fit=cur.n_fit,
+            with_pq=cur.pq, cap=cur_cap, nprobe=old_nprobe,
         )
         _refuse(n_after, n_t_after)
     return current
@@ -1281,26 +963,23 @@ def probe_current_generation(
     # nprobe must come from the same atomic file read, or a cutover
     # landing between two opens pairs one generation's kind with
     # another's flags
-    kind, _, flags = read_generation_state(pointer_path)
+    rec = read_pointer(pointer_path)
+    kind = rec.kind
     if kind is None:
         raise RuntimeError(
             f"no current generation under {pointer_path!r}: run a fit"
             " and cut over before probing"
         )
-    nprobe = _int_flag(flags, "nprobe=", 1)
-    coarse_tbl, fine_tbl, mem_tbl = _generation_names(sf_dir, kind)
+    nprobe = rec.serving_nprobe
+    lay = generation_layout(sf_dir, kind)
+    coarse_tbl, fine_tbl = lay.coarse, lay.fine
     # DELETION reaches every serving path (round 18, VERDICT r17 #2):
     # when the generation carries tombstones, the probes read the LIVE
     # members (and codes) view — members minus the tombstone set, a
     # broadcast anti-join bounded by deletion volume that preserves
     # the big side's bucket distribution (zero new exchange)
-    from awsbatch_mapreduce_spark.plans.wave17 import (
-        live_codes_name,
-        live_members_name,
-    )
-
-    mem_tbl = live_members_name(
-        spark, sf_dir, kind, mem_tbl, pointer_path=pointer_path
+    mem_tbl = live_view(
+        spark, lay.members, lay.tombs, pointer_path=pointer_path
     )
     if not adc:
         if nprobe == 1:
@@ -1308,7 +987,7 @@ def probe_current_generation(
         return _multiprobe_batch(
             spark, new, coarse_tbl, fine_tbl, mem_tbl, nprobe=nprobe
         )
-    if "pq" not in flags:
+    if not rec.pq:
         raise RuntimeError(
             f"ADC probe refused: generation {kind!r} under"
             f" {pointer_path!r} carries no 'pq' flag — fit or refit it"
@@ -1316,11 +995,10 @@ def probe_current_generation(
         )
     from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_probe
 
-    codes_tbl, pqcb_tbl = _pq_generation_names(sf_dir, kind)
-    codes_tbl = live_codes_name(
-        spark, sf_dir, kind, codes_tbl, pointer_path=pointer_path
+    codes_tbl = live_view(
+        spark, lay.codes, lay.tombs, pointer_path=pointer_path
     )
     return _pq_rerank_probe(
-        spark, new, coarse_tbl, fine_tbl, mem_tbl, codes_tbl, pqcb_tbl,
+        spark, new, coarse_tbl, fine_tbl, mem_tbl, codes_tbl, lay.pqcb,
         nprobe=nprobe,
     )

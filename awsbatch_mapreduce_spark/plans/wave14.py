@@ -53,30 +53,31 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_pointer,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _assign_fine,
-    _index_tables,
     _K0_SQL,
     _k0_sql,
     _MID_BOUNDARY,
-    _mod_centroid_init,
-    _persist_two_level,
     _probe_batch,
     _SEEN_SRC,
     _SPLIT_CTES,
     _split_ctes,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
 from awsbatch_mapreduce_spark.plans.wave13 import (
     _multiprobe_batch,
     _REFIT_ORACLE,
-    cutover_generation,
     probe_current_generation,
     refit_and_cutover,
-    vacuum_generation,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -281,18 +282,9 @@ def _recall_sweep(
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, kind)
     seen = emb.filter(F.col("vec_id") <= F.lit(mid))
-    _persist_two_level(
-        spark,
-        seen,
-        lambda s: _mod_centroid_init(s, cap=cap),
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
-        cap=cap,
-    )
+    lay = build_generation(spark, sf_dir, kind, seen, cap=cap)
+    coarse_tbl, fine_tbl, mem_tbl = lay.coarse, lay.fine, lay.members
     panel = _md5_panel(emb, mid)
     stats = None
     for np_ in _SWEEP_NPROBES:
@@ -514,27 +506,6 @@ def _vq4(col):
     quantized components, so the codes build never re-reads the raw
     corpus (the refit-from-members self-containment property)."""
     return F.floor(col / F.lit(100.0) + F.lit(0.5)).cast("bigint")
-
-
-def _pq_tables(spark, sf_dir: str, kind: str) -> tuple[str, str]:
-    """The generation's two PQ table names, with the same stale-tag
-    sweep + drop discipline as ``wave11._index_tables`` (one mutable
-    generation per fixture) — the build-side half; pure-name readers
-    use ``wave13._pq_generation_names``."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_tag, _table_names
-    from awsbatch_mapreduce_spark.plans.wave13 import _pq_generation_names
-
-    tag = _scratch_tag(sf_dir)
-    names = _pq_generation_names(sf_dir, kind)
-    prefixes = tuple(
-        f"semdedup_{kind}_{part}_" for part in ("codes", "pqcb")
-    )
-    for t in _table_names(spark):
-        if t.startswith(prefixes) and not t.endswith(tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-    for t in names:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    return names
 
 
 def _encode_codes(members_like: DataFrame, pcb: DataFrame) -> DataFrame:
@@ -807,24 +778,15 @@ def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, "pqm")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
+    lay = build_generation(
+        spark, sf_dir, "pqm", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes_tbl, pqcb_tbl = _pq_tables(spark, sf_dir, "pqm")
-    _persist_pq_codes(spark, mem_tbl, base, codes_tbl, pqcb_tbl)
-
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
     return _pq_rerank_probe(
-        spark, new, coarse_tbl, fine_tbl, mem_tbl, codes_tbl, pqcb_tbl
+        spark, new, lay.coarse, lay.fine, lay.members, lay.codes, lay.pqcb
     )
 
 
@@ -854,10 +816,7 @@ def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     reclaimed without touching what the reader sees.
 
     Idempotent per run: the pointer file and both generations are
-    rebuilt from scratch (the pointer is removed first so the vacuum
-    refusal rule cannot trip on a stale pointer from a prior run)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
+    rebuilt from scratch (``fresh_pointer``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
@@ -865,21 +824,10 @@ def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
     q3 = (mid + b.hi) // 2  # oracle: (mid + MAX) // 2
 
-    ptr_dir = _scratch_dir("awsbatch_semdedup_ptrlc", sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
+    pointer = fresh_pointer(sf_dir, "awsbatch_semdedup_ptrlc")
     # generation A: fit the seen half, make it current
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, sf_dir, "pla")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    gen_a = build_generation(
+        spark, sf_dir, "pla", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
     cutover_generation(spark, sf_dir, pointer, "pla")
 
@@ -887,7 +835,7 @@ def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(spark, batch, coarse_a, fine_a, mem_a)
+    _admit_batch(spark, batch, gen_a.coarse, gen_a.fine, gen_a.members)
 
     # the weekly reset, via the guarded operational sequence
     old = refit_and_cutover(spark, sf_dir, pointer, "plb")

@@ -57,37 +57,32 @@ exactly such a derived artifact, rebuilt with its generation.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_pointer,
+    read_pointer,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
-    _index_tables,
-    _mod_centroid_init,
-    _persist_two_level,
     _probe_ctes,
     _split_ctes,
     _SPLIT_CTES,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
 from awsbatch_mapreduce_spark.plans.wave13 import (
     _GROWN_SRC,
     _K0_GROWN_SQL,
-    cutover_generation,
     probe_current_generation,
-    read_generation_cap,
     refit_and_cutover,
-    vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave14 import (
-    _persist_pq_codes,
-    _pq_rerank_ctes,
-    _pq_tables,
-)
+from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_ctes
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # From-scratch adaptive fit over the grown corpus (the wave-13 refit
@@ -129,10 +124,7 @@ def codebook_pointer_lifecycle_adc(
     lands an ADC reader on exactly what one clean build would serve.
 
     Idempotent per run: the pointer file and both generations are
-    rebuilt from scratch (the pointer is removed first so the vacuum
-    refusal rule cannot trip on a stale pointer from a prior run)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
+    rebuilt from scratch (``fresh_pointer``)."""
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
@@ -140,25 +132,13 @@ def codebook_pointer_lifecycle_adc(
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
     q3 = (mid + b.hi) // 2  # oracle: (mid + MAX) // 2
 
-    ptr_dir = _scratch_dir("awsbatch_semdedup_ptradc", sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
+    pointer = fresh_pointer(sf_dir, "awsbatch_semdedup_ptradc")
     # generation A: fit the seen half + its PQ artifacts, make it
     # current with the pq capability flag
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, sf_dir, "qla")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    gen_a = build_generation(
+        spark, sf_dir, "qla", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes_a, pqcb_a = _pq_tables(spark, sf_dir, "qla")
-    _persist_pq_codes(spark, mem_a, base_a, codes_a, pqcb_a)
     cutover_generation(spark, sf_dir, pointer, "qla", with_pq=True)
 
     # yesterday's batch admitted into the CURRENT generation — codes
@@ -168,8 +148,8 @@ def codebook_pointer_lifecycle_adc(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
     _admit_batch(
-        spark, batch, coarse_a, fine_a, mem_a,
-        codes_tbl=codes_a, pqcb_tbl=pqcb_a,
+        spark, batch, gen_a.coarse, gen_a.fine, gen_a.members,
+        codes_tbl=gen_a.codes, pqcb_tbl=gen_a.pqcb,
     )
 
     # the weekly reset: the pq flag is INHERITED — generation B gets
@@ -257,8 +237,6 @@ def codebook_quality_refit_lifecycle(
 
     Idempotent per run: pointer + both generations rebuilt from
     scratch."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
@@ -266,21 +244,10 @@ def codebook_quality_refit_lifecycle(
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
     q3 = (mid + b.hi) // 2  # oracle: (mid + MAX) // 2
 
-    ptr_dir = _scratch_dir("awsbatch_semdedup_ptrqr", sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
+    pointer = fresh_pointer(sf_dir, "awsbatch_semdedup_ptrqr")
     # generation A at the base cap, recorded on the pointer
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, sf_dir, "qra")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    gen_a = build_generation(
+        spark, sf_dir, "qra", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
     cutover_generation(spark, sf_dir, pointer, "qra", cap=_CAP)
 
@@ -289,8 +256,8 @@ def codebook_quality_refit_lifecycle(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
     _admit_batch(
-        spark, batch, coarse_a, fine_a, mem_a,
-        cap=read_generation_cap(pointer),
+        spark, batch, gen_a.coarse, gen_a.fine, gen_a.members,
+        cap=read_pointer(pointer).cap,
     )
 
     # the quality escalation: refit at the larger cap, pointer carries

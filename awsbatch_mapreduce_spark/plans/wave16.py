@@ -59,43 +59,40 @@ same persisted layout.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_pointer,
+    read_pointer,
+    set_generation_nprobe,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
-    _index_tables,
     _K0_SQL,
     _MID_BOUNDARY,
-    _mod_centroid_init,
-    _persist_two_level,
     _SEEN_SRC,
     _split_ctes,
     _SPLIT_CTES,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
 from awsbatch_mapreduce_spark.plans.wave13 import (
     _GROWN_SRC,
     _MULTIPROBE_ORACLE,
-    cutover_generation,
     probe_current_generation,
-    read_generation_cap,
     refit_and_cutover,
-    set_generation_nprobe,
-    vacuum_generation,
 )
 from awsbatch_mapreduce_spark.plans.wave14 import (
-    _persist_pq_codes,
     _pq_rerank_ctes,
     _PQ_K,
     _PQ_RERANK,
     _PQ_SUB,
-    _pq_tables,
 )
 from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP, _k0_grown_sql
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -141,28 +138,15 @@ def codebook_pointer_nprobe_serving(
     hash-match.)
 
     Idempotent per run: pointer + generation rebuilt from scratch."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    ptr_dir = _scratch_dir("awsbatch_semdedup_ptrnps", sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, "nps")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
+    pointer = fresh_pointer(sf_dir, "awsbatch_semdedup_ptrnps")
+    build_generation(
+        spark, sf_dir, "nps", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
     cutover_generation(spark, sf_dir, pointer, "nps")
 
@@ -340,31 +324,17 @@ def codebook_pointer_adc_multiprobe(
     reader serves real multiprobe recall.
 
     Idempotent per run: pointer + generation rebuilt from scratch."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    ptr_dir = _scratch_dir("awsbatch_semdedup_ptrnpq", sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, "npq")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
+    pointer = fresh_pointer(sf_dir, "awsbatch_semdedup_ptrnpq")
+    build_generation(
+        spark, sf_dir, "npq", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes_tbl, pqcb_tbl = _pq_tables(spark, sf_dir, "npq")
-    _persist_pq_codes(spark, mem_tbl, base, codes_tbl, pqcb_tbl)
     cutover_generation(
         spark, sf_dir, pointer, "npq", with_pq=True, nprobe=_SERVE_NPROBE
     )
@@ -435,8 +405,6 @@ def codebook_adc_escalated_refit(
 
     Idempotent per run: pointer + both generations rebuilt from
     scratch."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
@@ -444,24 +412,12 @@ def codebook_adc_escalated_refit(
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
     q3 = (mid + b.hi) // 2  # oracle: (mid + MAX) // 2
 
-    ptr_dir = _scratch_dir("awsbatch_semdedup_ptresc", sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
+    pointer = fresh_pointer(sf_dir, "awsbatch_semdedup_ptresc")
     # generation A at the base cap, PQ-flagged
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, sf_dir, "era")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    gen_a = build_generation(
+        spark, sf_dir, "era", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes_a, pqcb_a = _pq_tables(spark, sf_dir, "era")
-    _persist_pq_codes(spark, mem_a, base_a, codes_a, pqcb_a)
     cutover_generation(
         spark, sf_dir, pointer, "era", with_pq=True, cap=_CAP
     )
@@ -471,9 +427,9 @@ def codebook_adc_escalated_refit(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
     _admit_batch(
-        spark, batch, coarse_a, fine_a, mem_a,
-        codes_tbl=codes_a, pqcb_tbl=pqcb_a,
-        cap=read_generation_cap(pointer),
+        spark, batch, gen_a.coarse, gen_a.fine, gen_a.members,
+        codes_tbl=gen_a.codes, pqcb_tbl=gen_a.pqcb,
+        cap=read_pointer(pointer).cap,
     )
 
     # the quality escalation ON the pq generation: flag inherited,

@@ -59,37 +59,39 @@ members-minus-tombstones, per the VERDICT's ask):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_pointer,
+    tombstone_members,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
-    _index_tables,
     _k0_sql,
     _K0_SQL,
-    _mod_centroid_init,
-    _persist_two_level,
     _probe_ctes,
     _SEEN_SRC,
-    _split_ctes,
     _SPLIT_CTES,
     _MID_BOUNDARY,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.plans.wave13 import (
-    _generation_names,
-    _pointer_write_lock,
-    cutover_generation,
     probe_current_generation,
-    read_generation_pointer,
     refit_and_cutover,
 )
 from awsbatch_mapreduce_spark.plans.wave16 import (
     _pq_multiprobe_ctes,
     _SERVE_NPROBE,
+)
+from awsbatch_mapreduce_spark.scratch import (
+    _scratch_dir,
+    _scratch_tag,
+    _table_names,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -98,178 +100,6 @@ from awsbatch_mapreduce_spark.sources.tables import load_table
 # (the hash must change vs the no-tombstone program) while every fine
 # cell keeps survivors (the "other members still match" half).
 _TOMB_MOD = 5
-
-
-# ---------------------------------------------------------------------------
-# Tombstone infrastructure
-# ---------------------------------------------------------------------------
-
-
-def _tombstone_name(sf_dir: str, kind: str) -> str:
-    """The tombstone table name of a generation — the fourth member of
-    the ``wave13._generation_names`` family.  One tombstone set per
-    generation: it records deletions against THIS generation's member
-    set and dies with the generation at vacuum (a refit excludes the
-    tombstoned members, so the NEW generation starts with no tombstone
-    table — the 'clear' is structural, not a separate mutation that
-    could crash half-done)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_tag
-
-    return f"semdedup_{kind}_tombs_{_scratch_tag(sf_dir)}"
-
-
-def _tombstone_location(sf_dir: str, kind: str) -> str:
-    """On-disk path of a generation's tombstone table — under the SAME
-    scratch base as the generation's other tables, so
-    ``vacuum_generation``'s rmtree reclaims it with them."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
-    return os.path.join(
-        _scratch_dir(f"awsbatch_semdedup_{kind}_idx", sf_dir),
-        _tombstone_name(sf_dir, kind),
-    )
-
-
-def tombstone_members(
-    spark: SparkSession, sf_dir: str, pointer_path: str, ids: DataFrame
-) -> int:
-    """Record deletion requests against the CURRENT generation: union
-    ``ids`` (a ``seen_id`` column) into its tombstone table.  Returns
-    the total tombstone count after the write.
-
-    Exactly-once by IDEMPOTENCE: the table is a SET (distinct union),
-    so replaying a delete changes nothing — byte-identical table, same
-    return.  Crash-safe by the sibling-swap protocol: the merged set is
-    fully written to a ``__repair`` sibling before two renames swap it
-    live (``streaming.codebook._swap_rewrite``); a crash between the
-    renames is completed by ``_complete_pending_swap`` at the next
-    entry — the same complete-or-refuse discipline as every other
-    index mutation ([[spark-empty-scan-on-missing-root]]: a missing
-    table root reads as EMPTY, so an un-repaired half-swap would
-    silently resurrect every deleted member).
-
-    Serialized against pointer writes via the pointer's own write lock:
-    a cutover landing mid-delete could otherwise retarget the verb at a
-    vacuumed generation."""
-    from awsbatch_mapreduce_spark.streaming.codebook import (
-        _complete_pending_swap,
-        _swap_rewrite,
-    )
-
-    with _pointer_write_lock(pointer_path):
-        kind = read_generation_pointer(pointer_path)
-        if kind is None:
-            raise RuntimeError(
-                f"no current generation under {pointer_path!r}: nothing"
-                " to delete from — fit and cut over first"
-            )
-        tombs_tbl = _tombstone_name(sf_dir, kind)
-        new_ids = ids.select(
-            F.col("seen_id").cast("bigint").alias("seen_id")
-        ).distinct()
-        if not spark.catalog.tableExists(tombs_tbl):
-            loc = _tombstone_location(sf_dir, kind)
-            os.makedirs(os.path.dirname(loc), exist_ok=True)
-            (
-                new_ids.write.option("path", loc)
-                .mode("overwrite")
-                .saveAsTable(tombs_tbl)
-            )
-        else:
-            _complete_pending_swap(spark, tombs_tbl)
-            merged = (
-                spark.table(tombs_tbl)
-                .unionByName(new_ids)
-                .distinct()
-                .localCheckpoint()
-            )
-            _swap_rewrite(spark, tombs_tbl, merged, None)
-        return spark.table(tombs_tbl).count()
-
-
-def _live_view(
-    spark,
-    tbl: str,
-    tombs_tbl: str | None,
-    suffix: str,
-    pointer_path: str | None = None,
-) -> str:
-    """Register (and return the name of) a temp view of ``tbl`` minus
-    tombstoned ``seen_id`` rows; ``tbl`` itself when no tombstones
-    exist.  The anti-join broadcasts the tombstone side — bounded by
-    deletion volume, small by nature — so the big side KEEPS its
-    bucket distribution (broadcast joins preserve the streamed child's
-    partitioning): the probes' (cell, sub) bucket joins still run with
-    zero exchange on the members/codes side.
-
-    Swap-safety (round-18 follow-on): a ``tombstone_members`` sibling
-    swap leaves the table root MISSING for an instant, and Spark reads
-    a missing root as an EMPTY scan — a probe built in that window
-    would silently serve WITHOUT the deletions (the r15 trap class).
-    When ``pointer_path`` is given, the tombstone read happens under
-    the pointer write lock (serialized against the verb), completes a
-    crash-pending swap first, and is PINNED eagerly
-    (``localCheckpoint`` of the bounded set) — so the view's deletion
-    set is a consistent snapshot immune to swaps that land after plan
-    build.  Without a pointer the behavior degrades to the plain read
-    (single-writer callers that own their lifecycle)."""
-    if tombs_tbl is None or not spark.catalog.tableExists(tombs_tbl):
-        return tbl
-
-    def _tomb_frame():
-        spark.catalog.refreshTable(tombs_tbl)
-        # eager pin of the bounded deletion set: the anti-join side is
-        # block-storage-backed from here, immune to later swaps
-        return spark.table(tombs_tbl).localCheckpoint()
-
-    if pointer_path is not None:
-        from awsbatch_mapreduce_spark.streaming.codebook import (
-            _complete_pending_swap,
-        )
-
-        with _pointer_write_lock(pointer_path):
-            _complete_pending_swap(spark, tombs_tbl)
-            tombs = _tomb_frame()
-    else:
-        tombs = _tomb_frame()
-    live = spark.table(tbl).join(
-        F.broadcast(tombs), "seen_id", "left_anti"
-    )
-    name = f"{tbl}__{suffix}"
-    live.createOrReplaceTempView(name)
-    return name
-
-
-def live_members_name(
-    spark, sf_dir: str, kind: str, mem_tbl: str,
-    pointer_path: str | None = None,
-) -> str:
-    """The members relation every SERVING path must read: the live
-    view (members minus the generation's tombstones) when tombstones
-    exist, the table itself otherwise.  Lazy-imported by
-    ``wave13.probe_current_generation`` and the streaming admission's
-    novelty probe so deletion reaches production the moment the
-    tombstone write commits.  ``pointer_path`` arms the swap-safe
-    snapshot read (see ``_live_view``)."""
-    return _live_view(
-        spark, mem_tbl, _tombstone_name(sf_dir, kind), "live",
-        pointer_path=pointer_path,
-    )
-
-
-def live_codes_name(
-    spark, sf_dir: str, kind: str, codes_tbl: str,
-    pointer_path: str | None = None,
-) -> str:
-    """The ADC path's codes relation minus tombstones: a deleted
-    member must not occupy a top-rerank candidate slot (it would be
-    dropped at the exact verify anyway, but its slot would shadow a
-    live candidate — the output must equal an index that never held
-    the deleted member)."""
-    return _live_view(
-        spark, codes_tbl, _tombstone_name(sf_dir, kind), "live",
-        pointer_path=pointer_path,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -336,41 +166,19 @@ def _fit_cutover_tombstone(
     setup (codes are fit-time artifacts; deletion must mask them at
     serve time, not rebuild them).  Returns (pointer_path, quantized
     probe batch)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
-
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
         F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
     ).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
 
-    ptr_dir = _scratch_dir(scratch, sf_dir)
-    pointer = os.path.join(ptr_dir, "CURRENT_GENERATION")
-    if os.path.exists(pointer):
-        os.remove(pointer)  # fresh lifecycle per run
-
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, kind)
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
+    pointer = fresh_pointer(sf_dir, scratch)
+    # the fresh layout also drops a stale tombstone table from a prior
+    # run of this query, which would otherwise double-delete
+    lay = build_generation(
+        spark, sf_dir, kind, emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=with_pq,
     )
-    if with_pq:
-        from awsbatch_mapreduce_spark.plans.wave14 import (
-            _persist_pq_codes,
-            _pq_tables,
-        )
-
-        codes_tbl, pqcb_tbl = _pq_tables(spark, sf_dir, kind)
-        _persist_pq_codes(spark, mem_tbl, base, codes_tbl, pqcb_tbl)
-    # a stale tombstone table from a prior run of this query would
-    # double-delete: the fixture contract is one mutable generation
-    # per (kind, fixture), so sweep it with the generation rebuild
-    spark.sql(f"DROP TABLE IF EXISTS {_tombstone_name(sf_dir, kind)}")
     cutover_generation(
         spark, sf_dir, pointer, kind, with_pq=with_pq,
         nprobe=_SERVE_NPROBE if with_pq else None,
@@ -378,7 +186,7 @@ def _fit_cutover_tombstone(
 
     # the deletion request: every {mod}th member id, via the verb
     doomed = (
-        spark.table(mem_tbl)
+        spark.table(lay.members)
         .filter(F.pmod(F.col("seen_id"), F.lit(_TOMB_MOD)) == 0)
         .select("seen_id")
     )
@@ -433,13 +241,11 @@ def codebook_tombstone_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Idempotent per run; the superseded generation is vacuumed (with
     its tombstone table) inside ``refit_and_cutover``'s caller
     contract — here explicitly, exercising the reclaim path."""
-    from awsbatch_mapreduce_spark.plans.wave13 import vacuum_generation
-
     pointer, new = _fit_cutover_tombstone(
         spark, sf_dir, "tmr", "awsbatch_semdedup_tmr_ptr"
     )
     # refit into a fresh generation: excludes tombstones, clears them
-    # (refit_and_cutover's own _index_tables sweeps the stale target)
+    # (refit_and_cutover's own fresh_layout sweeps the stale target)
     prev = refit_and_cutover(spark, sf_dir, pointer, "tmrr")
     vacuum_generation(spark, sf_dir, pointer, prev)
     return probe_current_generation(spark, sf_dir, pointer, new)
@@ -640,11 +446,6 @@ def lsh_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Idempotent per run: the gate table is dropped and rebuilt, scratch
     under the per-fixture dir, stale tags swept."""
-    from awsbatch_mapreduce_spark.plans.wave5 import (
-        _scratch_dir,
-        _scratch_tag,
-        _table_names,
-    )
     from awsbatch_mapreduce_spark.streaming.lsh import create_band_index
 
     docs = load_table(spark, sf_dir, "documents")
@@ -749,11 +550,6 @@ def lsh_gate_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; broadcast side = the bounded removal request).
 
     Idempotent per run: own table + scratch, stale tags swept."""
-    from awsbatch_mapreduce_spark.plans.wave5 import (
-        _scratch_dir,
-        _scratch_tag,
-        _table_names,
-    )
     from awsbatch_mapreduce_spark.streaming.lsh import (
         create_band_index,
         remove_docs_from_band_index,

@@ -11,7 +11,6 @@ loop, and ``tests/test_compact.py`` pins the file-skipping itself
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +22,11 @@ from awsbatch_mapreduce_spark.plans.hints import (
     never_broadcast_hash,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
+from awsbatch_mapreduce_spark.scratch import (
+    _scratch_dir,
+    _scratch_tag,
+    _table_names,
+)
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 _ZORDER_ORACLE = """
@@ -38,67 +42,6 @@ _ZORDER_ORACLE = """
     FROM lineitem, b
     WHERE l_orderkey <= b.ok_hi AND l_partkey <= b.pk_hi
 """
-
-
-def _scratch_tag(sf_dir: str) -> str:
-    """Scratch-path tag for a fixture dir: basename plus a short hash
-    of the ABSOLUTE path, so two fixture roots that share a basename
-    (e.g. ``/a/sf0.01`` vs ``/b/sf0.01``) can never collide on one
-    mutable /tmp dir (ADVICE r4)."""
-    import hashlib
-
-    abs_dir = os.path.abspath(sf_dir.rstrip("/") or "/")
-    base = (os.path.basename(abs_dir) or "sf").replace(".", "_")
-    digest = hashlib.md5(abs_dir.encode("utf-8")).hexdigest()[:8]
-    return f"{base}_{digest}"
-
-
-def _table_names(spark) -> list[str]:
-    """Current-database table names via ``SHOW TABLES`` (a driver-side
-    catalog command — zero Spark jobs).  ``spark.catalog.listTables()``
-    builds and iterates a Dataset, costing ~10 driver round-trip jobs
-    per call (measured 0.93 s vs 0.10 s, round 19); the stale-generation
-    sweeps only need the names, so every sweep site uses this instead
-    (guide §7.3: driver-side choreography is the lifecycle queries'
-    dominant cost)."""
-    return [r.tableName for r in spark.sql("SHOW TABLES").collect()]
-
-
-_SCRATCH_SWEEP_AGE_SEC = 3600
-
-
-def _scratch_dir(prefix: str, sf_dir: str) -> str:
-    """Deterministic per-fixture scratch path (overwritten on every
-    run — idempotent, never under the fixture dir itself).  Sweeps
-    stale sibling generations under the same prefix so repeated rounds
-    leave at most a handful of scratch generations per fixture
-    (VERDICT r4 #4).  The sweep is AGE-GATED (ADVICE r5): a sibling tag
-    younger than an hour may belong to a concurrently running
-    bench/rehearsal/driver process on a different fixture — "the driver
-    runs serially" only holds within one process — so only generations
-    old enough to be provably abandoned are removed.  The live tag
-    itself is only ever replaced atomically downstream.
-    """
-    import shutil
-    import time as _time
-
-    root = tempfile.gettempdir()
-    name = f"{prefix}_{_scratch_tag(sf_dir)}"
-    now = _time.time()
-    try:
-        for entry in os.listdir(root):
-            if not entry.startswith(f"{prefix}_") or entry == name:
-                continue
-            path = os.path.join(root, entry)
-            try:
-                age = now - os.path.getmtime(path)
-            except OSError:
-                continue
-            if age > _SCRATCH_SWEEP_AGE_SEC:
-                shutil.rmtree(path, ignore_errors=True)
-    except OSError:
-        pass
-    return os.path.join(root, name)
 
 
 def zorder_scratch_dir(sf_dir: str) -> str:

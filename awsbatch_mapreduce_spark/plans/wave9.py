@@ -47,6 +47,11 @@ from awsbatch_mapreduce_spark.plans.iterative import (
 )
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave8 import _INCR_LSH_ORACLE
+from awsbatch_mapreduce_spark.scratch import (
+    _scratch_dir,
+    _scratch_tag,
+    _table_names,
+)
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # --- SemDeDup: cluster-then-exact-cosine prune ---------------------------
@@ -443,12 +448,6 @@ def lsh_band_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``never_broadcast``); collision volume is bounded by the same band
     capacity argument as ``dedup_minhash_lsh_bucket_capped``.
     """
-    from awsbatch_mapreduce_spark.plans.wave5 import (
-        _scratch_dir,
-        _scratch_tag,
-        _table_names,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     b = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive

@@ -81,6 +81,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    _complete_pending_swap,
+    _swap_rewrite,
+    live_view,
+    read_pointer,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _quantize
 from awsbatch_mapreduce_spark.plans.wave11 import _probe_batch
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
@@ -303,99 +309,6 @@ def _batch_admitted_count(spark, new: DataFrame, mem_tbl: str) -> int:
     )
 
 
-def _table_location(spark, tbl: str) -> str:
-    loc = (
-        spark.sql(f"DESC EXTENDED {tbl}")
-        .filter(F.col("col_name") == "Location")
-        .first()["data_type"]
-    )
-    return loc.removeprefix("file:")
-
-
-def _complete_pending_swap(spark, tbl: str) -> None:
-    """Finish (or loudly refuse past) a ``_swap_rewrite`` that crashed
-    between its two renames.  ADVICE r15: Spark's InMemoryFileIndex
-    tolerates a missing root path and returns an EMPTY scan for a
-    catalog table, so the mid-swap window is not self-announcing — a
-    replay that reads the members table as empty would misclassify
-    "nothing landed", rewrite the fine book to empty, and silently
-    truncate the index.  The window is, however, always COMPLETABLE:
-    the sibling ``__repair`` dir was fully written (its saveAsTable
-    committed) before the first rename ran, so if the live location is
-    missing and ``__repair`` exists, the second rename is simply
-    re-issued.  A missing location with NO repair sibling is real
-    corruption — raise rather than let an empty scan masquerade as an
-    empty table.  Idempotent; called before every read-dependent
-    repair decision and at ``_swap_rewrite`` entry (so a pending swap
-    is never swept as a stale leftover)."""
-    import shutil
-
-    location = _table_location(spark, tbl)
-    if os.path.isdir(location):
-        return
-    repair_loc, old_loc = f"{location}__repair", f"{location}__old"
-    if not os.path.isdir(repair_loc):
-        raise RuntimeError(
-            f"table {tbl!r} location {location!r} is missing and no"
-            " __repair sibling exists to complete the swap — refusing"
-            " to read what Spark would surface as an empty table"
-        )
-    os.rename(repair_loc, location)
-    shutil.rmtree(old_loc, ignore_errors=True)
-    spark.catalog.refreshTable(tbl)
-
-
-def _swap_rewrite(
-    spark,
-    tbl: str,
-    kept: DataFrame,
-    bucket_cols: list[str] | None,
-    sort_cols: tuple[str, ...] = ("cell", "sub"),
-    n_buckets: int = 8,
-) -> None:
-    """Crash-safe rewrite of a bucketed external table with the kept
-    rows: write them to a SIBLING directory, then swap directories with
-    two renames (ADVICE r14 — a bare ``mode('overwrite')`` deletes the
-    live files before the rewrite commits, so a crash mid-overwrite
-    loses the whole table and the next replay silently proceeds against
-    the truncated remainder).  Crash positions here: before the first
-    rename the live table is untouched (the replay simply redoes the
-    repair); between the two renames the table's location is MISSING —
-    and because Spark reads a missing location as an EMPTY table rather
-    than an error (ADVICE r15), every repair entry point first runs
-    ``_complete_pending_swap``, which re-issues the second rename from
-    the fully-written ``__repair`` sibling; after the second rename the
-    repair is complete and the stale ``__old`` dir is swept on the next
-    entry."""
-    import shutil
-
-    _complete_pending_swap(spark, tbl)
-    location = _table_location(spark, tbl)
-    repair_loc, old_loc = f"{location}__repair", f"{location}__old"
-    # sweep leftovers of a previously crashed/completed repair
-    shutil.rmtree(repair_loc, ignore_errors=True)
-    shutil.rmtree(old_loc, ignore_errors=True)
-    tmp_tbl = f"{tbl}__rp"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-    # ``bucket_cols=None`` rewrites an UNBUCKETED table (round 18: the
-    # tombstone set and the LSH band index reuse this protocol);
-    # ``sort_cols`` parameterizes the bucketed layout's sort key (the
-    # codebook tables sort on (cell, sub), the band index on bk)
-    writer = kept.write
-    if bucket_cols:
-        writer = writer.bucketBy(n_buckets, *bucket_cols).sortBy(*sort_cols)
-    (
-        writer.option("path", repair_loc)
-        .mode("overwrite")
-        .saveAsTable(tmp_tbl)
-    )
-    spark.sql(f"DROP TABLE {tmp_tbl}")  # external: files stay in place
-    os.rename(location, old_loc)
-    os.rename(repair_loc, location)  # same bucket spec, same file layout
-    shutil.rmtree(old_loc, ignore_errors=True)
-    spark.catalog.refreshTable(tbl)
-
-
 def _drop_orphan_fine(spark, fine_tbl: str, mem_tbl: str) -> None:
     """Repair a crash between the fine and members appends: drop fine
     rows whose (cell, sub) has no member rows.  Build and admission
@@ -563,11 +476,7 @@ def foreach_batch_codebook_admit_probe(
         # micro-batch)
         np_ = 1
         if pointer_path is not None:
-            from awsbatch_mapreduce_spark.plans.wave13 import (
-                read_generation_nprobe,
-            )
-
-            np_ = read_generation_nprobe(pointer_path)
+            np_ = read_pointer(pointer_path).serving_nprobe
         # the NOVELTY PROBE serves the live member set (round 18):
         # tombstoned members must stop matching at the admission
         # surface too.  The ADMISSION below keeps the raw mem_tbl —
@@ -575,11 +484,8 @@ def foreach_batch_codebook_admit_probe(
         # members still occupy their slots until the next refit.
         probe_mem = mem_tbl
         if tombs_tbl is not None:
-            from awsbatch_mapreduce_spark.plans.wave17 import _live_view
-
-            probe_mem = _live_view(
-                spark, mem_tbl, tombs_tbl, "live",
-                pointer_path=pointer_path,
+            probe_mem = live_view(
+                spark, mem_tbl, tombs_tbl, pointer_path=pointer_path
             )
         if np_ == 1:
             res = _probe_batch(spark, new, coarse_tbl, fine_tbl, probe_mem)

@@ -50,12 +50,14 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    _complete_pending_swap,
+    _swap_rewrite,
+)
 from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
 from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.streaming.codebook import (
-    _complete_pending_swap,
     _read_marker,
-    _swap_rewrite,
     _write_marker,
     _write_probe_partition,
 )
@@ -137,9 +139,9 @@ def remove_docs_from_band_index(
     spark, band_tbl: str, ids: DataFrame
 ) -> int:
     """TAKEDOWN verb for the text band index (round 18 — the deletion
-    symmetry of ``wave17.tombstone_members``): drop every band row of
-    ``ids``' docs, so removed documents stop gating future admissions
-    the moment the swap commits.  Returns the number of band rows
+    symmetry of ``index.generation.tombstone_members``): drop every
+    band row of ``ids``' docs, so removed documents stop gating future
+    admissions the moment the swap commits.  Returns the number of band rows
     removed; idempotent (a replayed removal finds zero rows and
     no-ops).  Crash-safe: the kept set is fully written to a
     ``__repair`` sibling before the two renames; a crash between them

@@ -20,7 +20,7 @@ Design — quiesce by construction, not by interruption:
    generation's tables, plus a cadence check AFTER the batch fully
    commits: ``refit_due(n_now, n_fit)`` with ``n_fit`` read from the
    generation pointer (it rides the pointer's atomic rename —
-   ``wave13.read_generation_meta``).  When due, the function writes a
+   ``index.generation.read_pointer``).  When due, the function writes a
    ``_REFIT_DUE`` marker and raises — terminating the stream at a
    batch boundary with everything committed.  Nothing can admit while
    the stream is down, so the refit_and_cutover quiesce contract holds
@@ -68,6 +68,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    _complete_pending_swap,
+    cutover_generation,
+    generation_layout,
+    live_view,
+    read_pointer,
+    recover_generations,
+    set_generation_nprobe,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.streaming.codebook import (
     _read_marker,
     foreach_batch_codebook_admit_probe,
@@ -253,8 +263,8 @@ def admit_probe_with_cadence(
     over the LIVE set).  When tombstones exceed ``max_deleted_fraction
     * n_now`` the closure signals a refit, which compacts: the new fit
     EXCLUDES the tombstoned members and the new generation starts with
-    no tombstone table (the clear is structural —
-    ``wave17._tombstone_name``).  Cost: one count of the
+    no tombstone table (the clear is structural — the tombs table
+    belongs to its generation's layout).  Cost: one count of the
     bounded-by-deletion-volume tombstone table per micro-batch, only
     while the knob is armed and the table exists; deletions land
     out-of-band from the stream, so no incremental counter can track
@@ -283,22 +293,14 @@ def admit_probe_with_cadence(
         when a pointer is bound (what production serves), else the
         closure's ``recall_nprobe`` (the QA-only round-16 behavior).
         A bound pointer with NO token serves single-probe — every
-        serving path (``read_generation_nprobe``, the pointer probes,
-        the admission probe) defaults to 1 there, so the QA snapshot
+        serving path (``PointerRecord.serving_nprobe``, the pointer
+        probes, the admission probe) defaults to 1 there, so the QA snapshot
         must measure 1 too (ADVICE r17: falling back to a configured
         ``recall_nprobe`` > 1 would measure a width production does
         not serve, clear the floor on it, and never write the token —
         re-opening the QA-vs-serving gap)."""
         if pointer_path is not None:
-            from awsbatch_mapreduce_spark.plans.wave13 import (
-                _int_flag,
-                read_generation_flags,
-            )
-
-            tok = _int_flag(
-                read_generation_flags(pointer_path), "nprobe=", 0
-            )
-            return tok if tok else 1
+            return read_pointer(pointer_path).serving_nprobe
         return recall_nprobe
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
@@ -335,13 +337,8 @@ def admit_probe_with_cadence(
             # deleted members is not a number anyone serves
             snap_mem = mem_tbl
             if tombs_tbl is not None:
-                from awsbatch_mapreduce_spark.plans.wave17 import (
-                    _live_view,
-                )
-
-                snap_mem = _live_view(
-                    spark, mem_tbl, tombs_tbl, "live",
-                    pointer_path=pointer_path,
+                snap_mem = live_view(
+                    spark, mem_tbl, tombs_tbl, pointer_path=pointer_path
                 )
             snap = _recall_snapshot(
                 spark, new, coarse_tbl, fine_tbl, snap_mem,
@@ -372,10 +369,6 @@ def admit_probe_with_cadence(
                 # every serving probe resolves it from the next batch /
                 # call on — the loop's output reaches production, not
                 # just the next QA snapshot
-                from awsbatch_mapreduce_spark.plans.wave13 import (
-                    set_generation_nprobe,
-                )
-
                 set_generation_nprobe(
                     pointer_path, snap["recommended_nprobe"]
                 )
@@ -486,48 +479,6 @@ def _next_kind(gen_prefix: str, current: str) -> str:
     return f"{gen_prefix}0001"
 
 
-def recover_generations(
-    spark, sf_dir: str, pointer_path: str, gen_prefix: str
-) -> list[str]:
-    """Startup sweep: vacuum every supervisor-prefixed generation the
-    pointer does NOT name.  Covers both crash positions outside the
-    admission protocol — a half-built generation from a crash mid-refit
-    and a superseded one from a crash between cutover and vacuum.
-    The sweep keys on ALL generation table-name patterns
-    (coarse/fine/members/codes/pqcb — ADVICE r15: a members-only key
-    missed generations whose crash landed before the members write),
-    so any surviving shard of a non-current generation marks its kind
-    for vacuum.  ``vacuum_generation`` refuses the current generation
-    by contract, so the sweep can never eat the live index.  Returns
-    the vacuumed kinds."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_tag
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        read_generation_pointer,
-        vacuum_generation,
-    )
-
-    current = read_generation_pointer(pointer_path)
-    tag = _scratch_tag(sf_dir)
-    suffixes = tuple(
-        f"_{part}_{tag}"
-        for part in ("coarse", "fine", "members", "codes", "pqcb")
-    )
-    kinds = set()
-    for t in spark.catalog.listTables():
-        if not t.name.startswith("semdedup_"):
-            continue
-        for suffix in suffixes:
-            if t.name.endswith(suffix):
-                kind = t.name[len("semdedup_"):-len(suffix)]
-                if kind.startswith(gen_prefix) and kind != current:
-                    kinds.add(kind)
-                break
-    return [
-        k for k in sorted(kinds)
-        if vacuum_generation(spark, sf_dir, pointer_path, k) > 0
-    ]
-
-
 def bootstrap_generation(
     spark, sf_dir: str, pointer_path: str, seed, gen_prefix: str,
     with_pq: bool = False, cap: int | None = None,
@@ -540,31 +491,15 @@ def bootstrap_generation(
     inherits it).  ``cap`` sets the fine-cell capacity (default the
     registered fixture cap) and is recorded on the pointer so
     admissions and quality escalations read it back."""
-    from awsbatch_mapreduce_spark.plans.wave11 import (
-        _CAP,
-        _index_tables,
-        _mod_centroid_init,
-        _persist_two_level,
-    )
-    from awsbatch_mapreduce_spark.plans.wave13 import cutover_generation
+    from awsbatch_mapreduce_spark.plans.wave11 import _CAP, build_generation
 
     if cap is None:
         cap = _CAP
     kind = f"{gen_prefix}0000"
-    base, coarse_tbl, fine_tbl, mem_tbl = _index_tables(spark, sf_dir, kind)
-    _persist_two_level(
-        spark, seed, lambda s: _mod_centroid_init(s, cap=cap),
-        base, coarse_tbl, fine_tbl, mem_tbl, cap=cap,
+    lay = build_generation(
+        spark, sf_dir, kind, seed, cap=cap, with_pq=with_pq
     )
-    if with_pq:
-        from awsbatch_mapreduce_spark.plans.wave14 import (
-            _persist_pq_codes,
-            _pq_tables,
-        )
-
-        codes_tbl, pqcb_tbl = _pq_tables(spark, sf_dir, kind)
-        _persist_pq_codes(spark, mem_tbl, base, codes_tbl, pqcb_tbl)
-    n_fit = spark.table(mem_tbl).count()
+    n_fit = spark.table(lay.members).count()
     cutover_generation(
         spark, sf_dir, pointer_path, kind, n_fit=n_fit, with_pq=with_pq,
         cap=cap,
@@ -638,17 +573,14 @@ def run_supervised_admission(
     the new generation carries no tombstone table.  The refit entry
     records ``n_tombs`` and its ``n_fit_after`` is the pointer's
     post-refit read-back (the live count actually fitted), not the raw
-    counter."""
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        _int_flag,
-        read_generation_cap,
-        read_generation_flags,
-        read_generation_meta,
-        refit_and_cutover,
-        vacuum_generation,
-        _generation_names,
-        _pq_generation_names,
-    )
+    counter.
+
+    The pointer is read ONCE per cycle (the single-snapshot discipline
+    of ``read_pointer``): kind, n_fit, pq, cap and nprobe of the
+    incarnation all come from one record, and the post-refit read that
+    fills the refit entry is the next cycle's record."""
+    from awsbatch_mapreduce_spark.plans.wave11 import _CAP
+    from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 
     report: dict = {"segments": [], "refits": [], "recovered": []}
     report["recovered"] = recover_generations(
@@ -665,15 +597,17 @@ def run_supervised_admission(
     refits = 0
     cur_nprobe = recall_nprobe
     snap_path = os.path.join(out_dir, "_RECALL_SNAPSHOTS.jsonl")
+    rec = read_pointer(pointer_path)
     while True:
-        kind, n_fit = read_generation_meta(pointer_path)
+        kind, n_fit = rec.kind, rec.n_fit
         if kind is None:
             raise RuntimeError(
                 f"no current generation under {pointer_path!r}: run"
                 " bootstrap_generation (or an explicit fit + cutover)"
                 " before supervising admission"
             )
-        _, _, mem_tbl = _generation_names(sf_dir, kind)
+        lay = generation_layout(sf_dir, kind)
+        cur_cap = rec.cap if rec.cap is not None else _CAP
         if n_fit is None:
             # pre-round-15 pointer with no recorded fit-time size.  The
             # live count is NOT conservative (ADVICE r15): it resets the
@@ -683,22 +617,13 @@ def run_supervised_admission(
             # deferral is accepted ONCE — the baseline is re-established
             # here and written back into the pointer (same atomic
             # rename), so it cannot silently repeat next incarnation.
-            from awsbatch_mapreduce_spark.plans.wave13 import (
-                cutover_generation,
-            )
-            from awsbatch_mapreduce_spark.streaming.codebook import (
-                _complete_pending_swap,
-            )
-
             # ADVICE r16: this count runs BEFORE any repair batch, so a
             # prior crash inside a members _swap_rewrite would read the
             # missing table root as an EMPTY scan and permanently write
             # n_fit=0 into the pointer — complete-or-refuse first, the
             # same entry discipline as the repair paths
-            _complete_pending_swap(spark, mem_tbl)
-            n_fit = spark.table(mem_tbl).count()
-            base_flags = read_generation_flags(pointer_path)
-            base_np = _int_flag(base_flags, "nprobe=", 0)
+            _complete_pending_swap(spark, lay.members)
+            n_fit = spark.table(lay.members).count()
             cutover_generation(
                 spark, sf_dir, pointer_path, kind, n_fit=n_fit,
                 # preserve capability flags: a pq-flagged pointer with
@@ -709,30 +634,26 @@ def run_supervised_admission(
                 # set_generation_nprobe after a manual fit+cutover must
                 # survive this rewrite — a pointer rewrite never
                 # silently resets production recall (the r17 invariant)
-                with_pq="pq" in base_flags,
-                cap=read_generation_cap(pointer_path),
-                nprobe=base_np or None,
+                with_pq=rec.pq,
+                cap=cur_cap,
+                nprobe=rec.nprobe or None,
             )
         # a PQ-carrying generation admits WITH codes, so the ADC path
         # keeps serving a complete candidate set between refits; the
         # automatic refit below inherits the flag (refit_and_cutover's
         # with_pq=None default) and rebuilds codes per new generation
         codes_tbl = pqcb_tbl = None
-        gen_flags = read_generation_flags(pointer_path)
-        if "pq" in gen_flags:
-            codes_tbl, pqcb_tbl = _pq_generation_names(sf_dir, kind)
-        from awsbatch_mapreduce_spark.plans.wave11 import _CAP as _cap_default
-
-        cur_cap = _int_flag(gen_flags, "cap=", _cap_default)
+        if rec.pq:
+            codes_tbl, pqcb_tbl = lay.codes, lay.pqcb
         # the pointer's serving nprobe wins over the loop's local value
         # (round 17): the actuator writes its steps onto the pointer, so
         # after a restart — or a step applied mid-incarnation — the QA
         # probe measures exactly what production serves
-        cur_nprobe = _int_flag(gen_flags, "nprobe=", 0) or cur_nprobe
-        from awsbatch_mapreduce_spark.plans.wave17 import _tombstone_name
-
+        cur_nprobe = rec.nprobe or cur_nprobe
         fn = admit_probe_with_cadence(
-            *_generation_names(sf_dir, kind),
+            lay.coarse,
+            lay.fine,
+            lay.members,
             out_dir,
             n_fit,
             tolerated_inflation,
@@ -752,7 +673,7 @@ def run_supervised_admission(
             # probe + QA snapshot the moment they commit (round 18);
             # the segment-boundary refit excludes and clears them
             # (wave13.refit_and_cutover)
-            tombs_tbl=_tombstone_name(sf_dir, kind),
+            tombs_tbl=lay.tombs,
             # ...and when armed, enough of them TRIGGERS that refit
             # (round 18 follow-on: the compaction trigger)
             max_deleted_fraction=max_deleted_fraction,
@@ -848,16 +769,14 @@ def run_supervised_admission(
                 vacuum_generation(spark, sf_dir, pointer_path, old)
                 if reset_nprobe is not None:
                     cur_nprobe = reset_nprobe
+                rec = read_pointer(pointer_path)  # the next cycle's read
                 entry = {
                     "old": old,
                     "new": new_kind,
                     "reason": reason,
                     "cap_before": cur_cap,
-                    "cap_after": read_generation_cap(pointer_path),
-                    "nprobe_after": _int_flag(
-                        read_generation_flags(pointer_path),
-                        "nprobe=", 0,
-                    ) or cur_nprobe,
+                    "cap_after": rec.cap if rec.cap is not None else _CAP,
+                    "nprobe_after": rec.nprobe or cur_nprobe,
                     "refit_sec": refit_sec,
                     "n_fit_before": n_fit,
                     "n_fit_after": due_info["n_now"],
@@ -870,9 +789,7 @@ def run_supervised_admission(
                     # honest n_fit_after is the pointer's post-refit
                     # read-back — the live count refit_and_cutover
                     # actually fitted and recorded
-                    entry["n_fit_after"] = read_generation_meta(
-                        pointer_path
-                    )[1]
+                    entry["n_fit_after"] = rec.n_fit
                     entry["n_tombs"] = due_info.get("n_tombs")
                 report["refits"].append(entry)
                 refits += 1

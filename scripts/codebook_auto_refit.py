@@ -132,12 +132,13 @@ def main() -> None:
     )
     n_tombstoned = 0
     if DELETE_MOD > 0:
-        from awsbatch_mapreduce_spark.plans.wave13 import _generation_names
-        from awsbatch_mapreduce_spark.plans.wave17 import tombstone_members
+        from awsbatch_mapreduce_spark.index.generation import (
+            generation_layout,
+            tombstone_members,
+        )
 
-        _, _, mem0 = _generation_names(SF_DIR, kind0)
         doomed = (
-            spark.table(mem0)
+            spark.table(generation_layout(SF_DIR, kind0).members)
             .filter(F.pmod(F.col("seen_id"), F.lit(DELETE_MOD)) == 0)
             .select("seen_id")
         )
@@ -207,7 +208,10 @@ def main() -> None:
                 ),
             }
         )
-    from awsbatch_mapreduce_spark.plans.wave13 import read_generation_nprobe
+    from awsbatch_mapreduce_spark.index.generation import (
+        generation_layout,
+        read_pointer,
+    )
 
     summary = {
         "phase": "summary",
@@ -215,22 +219,15 @@ def main() -> None:
         "recovered": report["recovered"],
         "segment_marginals": marginals,
         "n_snapshots": len(report.get("recall", [])),
-        "serving_nprobe": read_generation_nprobe(pointer),
+        "serving_nprobe": read_pointer(pointer).serving_nprobe,
     }
     if DELETE_MOD > 0 and report["refits"]:
         # the takedown contract at load: after >= 1 automatic refit the
         # final generation must hold ZERO tombstoned bootstrap members
         # and carry no tombstone table (cleared structurally)
-        from awsbatch_mapreduce_spark.plans.wave13 import (
-            _generation_names,
-            read_generation_pointer,
-        )
-        from awsbatch_mapreduce_spark.plans.wave17 import _tombstone_name
-
-        kind_f = read_generation_pointer(pointer)
-        _, _, mem_f = _generation_names(SF_DIR, kind_f)
+        final = generation_layout(SF_DIR, read_pointer(pointer).kind)
         leaked = (
-            spark.table(mem_f)
+            spark.table(final.members)
             .filter(F.col("seen_id") < F.lit(10**9))  # bootstrap ids only
             .filter(F.pmod(F.col("seen_id"), F.lit(DELETE_MOD)) == 0)
             .count()
@@ -238,7 +235,7 @@ def main() -> None:
         summary["n_tombstoned"] = n_tombstoned
         summary["tombstoned_in_final_generation"] = leaked
         summary["tombstone_table_final"] = spark.catalog.tableExists(
-            _tombstone_name(SF_DIR, kind_f)
+            final.tombs
         )
     print(json.dumps(summary), flush=True)
 
@@ -248,7 +245,6 @@ def main() -> None:
         from awsbatch_mapreduce_spark.plans.iterative import _quantize
         from awsbatch_mapreduce_spark.plans.wave13 import (
             probe_current_generation,
-            read_generation_flags,
         )
 
         probe = (
@@ -262,7 +258,7 @@ def main() -> None:
             json.dumps(
                 {
                     "phase": "adc_probe_after_cycles",
-                    "flags": sorted(read_generation_flags(pointer)),
+                    "pointer": read_pointer(pointer)._asdict(),
                     "probe_rows": res.count(),
                     "n_dup_verdicts": n_dup,
                 }

@@ -144,11 +144,8 @@ def _index_stats(spark, coarse, fine, mem) -> dict:
 
 
 def main() -> None:
-    from awsbatch_mapreduce_spark.plans.wave11 import (
-        _index_tables,
-        _mod_centroid_init,
-        _persist_two_level,
-    )
+    from awsbatch_mapreduce_spark.index.generation import fresh_layout
+    from awsbatch_mapreduce_spark.plans.wave11 import build_generation
     from awsbatch_mapreduce_spark.plans.wave13 import refit_from_members
     from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -160,16 +157,10 @@ def main() -> None:
     mid = (b.lo + b.hi) // 2
 
     # phase 1: GROW a fresh index through many small admissions
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, SF_DIR, "rsta")
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    gen_a = build_generation(
+        spark, SF_DIR, "rsta", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    coarse_a, fine_a, mem_a = gen_a.coarse, gen_a.fine, gen_a.members
     s0 = _index_stats(spark, coarse_a, fine_a, mem_a)
     grow = _stream_phase(
         spark, dim, (coarse_a, fine_a, mem_a), GROW_SECS, "grow"
@@ -208,9 +199,10 @@ def main() -> None:
     )
 
     # phase 3: REFIT from the grown members + report the collapse
-    base_r, coarse_r, fine_r, mem_r = _index_tables(spark, SF_DIR, "rstr")
+    gen_r = fresh_layout(spark, SF_DIR, "rstr")
+    coarse_r, fine_r, mem_r = gen_r.coarse, gen_r.fine, gen_r.members
     t0 = time.perf_counter()
-    refit_from_members(spark, mem_a, base_r, coarse_r, fine_r, mem_r)
+    refit_from_members(spark, mem_a, gen_r.base, coarse_r, fine_r, mem_r)
     refit_sec = round(time.perf_counter() - t0, 1)
     s3 = _index_stats(spark, coarse_r, fine_r, mem_r)
     print(

@@ -74,11 +74,7 @@ def _synthetic_embeddings(spark, rows_per_sec: int, dim: int):
 
 
 def main() -> None:
-    from awsbatch_mapreduce_spark.plans.wave11 import (
-        _index_tables,
-        _mod_centroid_init,
-        _persist_two_level,
-    )
+    from awsbatch_mapreduce_spark.plans.wave11 import build_generation
     from awsbatch_mapreduce_spark.sources.tables import load_table
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_admit_probe,
@@ -94,16 +90,10 @@ def main() -> None:
     results = []
     for rate in RATES:
         # fresh index per rate point so growth curves are comparable
-        base, coarse, fine, mem = _index_tables(spark, SF_DIR, "thru")
-        _persist_two_level(
-            spark,
-            emb.filter(F.col("vec_id") <= F.lit(mid)),
-            _mod_centroid_init,
-            base,
-            coarse,
-            fine,
-            mem,
+        lay = build_generation(
+            spark, SF_DIR, "thru", emb.filter(F.col("vec_id") <= F.lit(mid))
         )
+        coarse, fine, mem = lay.coarse, lay.fine, lay.members
         n_seen0 = spark.table(mem).count()
         tmp = os.environ.get("TMPDIR", "/tmp")
         out = os.path.join(tmp, f"codebook_tp_out_{rate}_{os.getpid()}")

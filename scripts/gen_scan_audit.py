@@ -36,7 +36,7 @@ sys.path.insert(
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _OUT = os.path.join(_ROOT, "SCAN_AUDIT.json")
 
-# per-fixture scratch tags (``wave5._scratch_tag``: basename + md5[:8])
+# per-fixture scratch tags (``scratch._scratch_tag``: basename + md5[:8])
 # normalize to a stable name so the audit is fixture-path-independent
 _TAG = re.compile(r"_sf[0-9_]+_[0-9a-f]{8}$")
 

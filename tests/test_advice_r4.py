@@ -118,7 +118,7 @@ def test_scratch_tag_distinguishes_same_basename_roots(tmp_path):
     """Two fixture roots sharing a basename must map to different
     scratch dirs — the old basename-only tag collided them onto one
     mutable /tmp path (ADVICE r4)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_tag
+    from awsbatch_mapreduce_spark.scratch import _scratch_tag
 
     a = tmp_path / "a" / "sf0.01"
     b = tmp_path / "b" / "sf0.01"
@@ -141,19 +141,19 @@ def test_scratch_dir_sweeps_stale_generations_age_gated(
     removed.  Reruns on the same fixture stay stable."""
     import time
 
-    from awsbatch_mapreduce_spark.plans import wave5
+    from awsbatch_mapreduce_spark import scratch
 
     monkeypatch.setattr(
-        wave5.tempfile, "gettempdir", lambda: str(tmp_path)
+        scratch.tempfile, "gettempdir", lambda: str(tmp_path)
     )
     a = tmp_path / "fa" / "sf0.01"
     b = tmp_path / "fb" / "sf0.01"
     a.mkdir(parents=True)
     b.mkdir(parents=True)
-    da = wave5._scratch_dir("awsbatch_zorder", str(a))
+    da = scratch._scratch_dir("awsbatch_zorder", str(a))
     os.makedirs(da)
     # fresh sibling: must NOT be swept by another fixture's call
-    db = wave5._scratch_dir("awsbatch_zorder", str(b))
+    db = scratch._scratch_dir("awsbatch_zorder", str(b))
     os.makedirs(db)
     gens = sorted(
         e for e in os.listdir(tmp_path) if e.startswith("awsbatch_zorder_")
@@ -162,9 +162,9 @@ def test_scratch_dir_sweeps_stale_generations_age_gated(
         [os.path.basename(da), os.path.basename(db)]
     ), "fresh sibling generation was swept (concurrent-process hazard)"
     # backdate da past the gate: now it's provably abandoned and goes
-    old = time.time() - wave5._SCRATCH_SWEEP_AGE_SEC - 60
+    old = time.time() - scratch._SCRATCH_SWEEP_AGE_SEC - 60
     os.utime(da, (old, old))
-    assert wave5._scratch_dir("awsbatch_zorder", str(b)) == db
+    assert scratch._scratch_dir("awsbatch_zorder", str(b)) == db
     gens = [e for e in os.listdir(tmp_path) if e.startswith("awsbatch_zorder_")]
     assert gens == [os.path.basename(db)]
     assert os.path.isdir(db)

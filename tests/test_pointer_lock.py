@@ -13,9 +13,9 @@ No Spark needed: the pointer surface is pure file ops.
 
 import threading
 
-from awsbatch_mapreduce_spark.plans.wave13 import (
+from awsbatch_mapreduce_spark.index.generation import (
     _pointer_write_lock,
-    read_generation_state,
+    read_pointer,
     set_generation_nprobe,
 )
 
@@ -43,10 +43,10 @@ def test_concurrent_nprobe_writers_never_collide_or_lose_tokens(tmp_path):
     def reader():
         try:
             for _ in range(N_ITERS * 2):
-                kind, n_fit, flags = read_generation_state(pointer)
+                rec = read_pointer(pointer)
                 # atomic rename: a reader must NEVER see a partial state
-                assert kind == "gen_a" and n_fit == 100
-                assert "pq" in flags and "cap=16" in flags
+                assert rec.kind == "gen_a" and rec.n_fit == 100
+                assert rec.pq and rec.cap == 16
         except Exception as exc:  # noqa: BLE001
             errors.append(exc)
 
@@ -60,10 +60,12 @@ def test_concurrent_nprobe_writers_never_collide_or_lose_tokens(tmp_path):
         t.join()
 
     assert errors == [], errors
-    kind, n_fit, flags = read_generation_state(pointer)
-    assert kind == "gen_a" and n_fit == 100
+    rec = read_pointer(pointer)
+    assert rec.kind == "gen_a" and rec.n_fit == 100
     # every non-nprobe token survived; exactly one nprobe token remains
-    assert "pq" in flags and "cap=16" in flags
+    assert rec.pq and rec.cap == 16
+    with open(pointer) as fh:
+        flags = fh.read().splitlines()[2].split()
     nprobe_tokens = [t for t in flags if t.startswith("nprobe=")]
     assert len(nprobe_tokens) == 1
     assert nprobe_tokens[0] in {f"nprobe={i + 1}" for i in range(N_THREADS)}

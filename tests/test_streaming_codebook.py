@@ -24,14 +24,20 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    _table_location,
+    cutover_generation,
+    fresh_layout,
+    generation_layout,
+)
 from awsbatch_mapreduce_spark.plans import QUERIES
 from awsbatch_mapreduce_spark.plans.iterative import _quantize
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _index_tables,
     _mod_centroid_init,
     _persist_two_level,
     _probe_batch,
 )
+from awsbatch_mapreduce_spark.scratch import _scratch_dir
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.codebook import (
     _read_marker,
@@ -51,7 +57,7 @@ def _bounds(spark):
 
 def _build_index(spark, kind: str):
     emb, mid, q3 = _bounds(spark)
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, kind)
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, kind)[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -361,19 +367,18 @@ def test_repair_swap_sweeps_stale_dirs_and_preserves_layout(
     admissions read it normally)."""
     import awsbatch_mapreduce_spark.plans.wave12 as w12
     from awsbatch_mapreduce_spark.plans.wave11 import _CAP
-    from awsbatch_mapreduce_spark.streaming.codebook import (
-        _drop_orphan_fine,
-        _table_location,
-    )
+    from awsbatch_mapreduce_spark.streaming.codebook import _drop_orphan_fine
 
     emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm11")
     batch0, batch1 = _two_batches(emb, mid, q3)
     q0 = batch0.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
     # orphan some fine rows for real: append the fine half only
-    from awsbatch_mapreduce_spark.plans.iterative import assign_to_cells
+    from awsbatch_mapreduce_spark.plans.iterative import (
+        assign_to_cells_collected,
+    )
     from pyspark.sql.window import Window as W
 
-    assigned = assign_to_cells(q0, spark.table(coarse))
+    assigned = assign_to_cells_collected(q0, spark.table(coarse))
     wk = W.partitionBy("cell").orderBy(F.asc("d_fp"), F.asc("vec_id"))
     app = assigned.withColumn("rn", F.row_number().over(wk)).select(
         F.col("vec_id").alias("seen_id"),
@@ -424,7 +429,7 @@ def test_repair_crash_mid_swap_completes_on_replay(
     read-dependent decision, then repair and re-admit as usual —
     landing byte-identical to a never-crashed twin."""
     import awsbatch_mapreduce_spark.plans.wave12 as w12
-    import awsbatch_mapreduce_spark.streaming.codebook as sc
+    import awsbatch_mapreduce_spark.index.generation as gen
 
     emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm12")
     out = str(tmp_path / "admit_out")
@@ -456,12 +461,12 @@ def test_repair_crash_mid_swap_completes_on_replay(
         if dst.endswith("__old"):
             raise RuntimeError("injected crash between the swap renames")
 
-    monkeypatch.setattr(sc.os, "rename", rename_then_crash)
+    monkeypatch.setattr(gen.os, "rename", rename_then_crash)
     with pytest.raises(RuntimeError, match="between the swap renames"):
         fn(batch1, 1)
-    monkeypatch.setattr(sc.os, "rename", real_rename)
+    monkeypatch.setattr(gen.os, "rename", real_rename)
 
-    loc = sc._table_location(spark, mem)
+    loc = gen._table_location(spark, mem)
     assert not os.path.isdir(loc)  # mid-swap: the live location is gone
     assert os.path.isdir(f"{loc}__repair")
     # the hazard itself, pinned: Spark surfaces the missing root as an
@@ -515,16 +520,12 @@ def test_admit_with_codes_crash_between_codes_and_members(
     re-admit — landing members, fine, AND codes byte-identical to a
     never-crashed twin."""
     import awsbatch_mapreduce_spark.plans.wave12 as w12
-    from awsbatch_mapreduce_spark.plans.wave14 import (
-        _persist_pq_codes,
-        _pq_tables,
-    )
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
+    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 
     def build_pq(kind):
         emb, mid, q3, coarse, fine, mem = _build_index(spark, kind)
         base = _scratch_dir(f"awsbatch_semdedup_{kind}_idx", SF_DIR)
-        codes, pqcb = _pq_tables(spark, SF_DIR, kind)
+        codes, pqcb = generation_layout(SF_DIR, kind).tables[3:5]
         _persist_pq_codes(spark, mem, base, codes, pqcb)
         return emb, mid, q3, coarse, fine, mem, codes, pqcb
 
@@ -680,10 +681,10 @@ def test_streaming_admissions_then_refit_cutover(spark, tmp_path):
     )
     # weekly reset: refit a fresh generation from the streaming-grown
     # members table alone
-    base_r, coarse_r, fine_r, mem_r = _index_tables(spark, SF_DIR, "strm8r")
+    base_r, coarse_r, fine_r, mem_r = fresh_layout(spark, SF_DIR, "strm8r")[:4]
     refit_from_members(spark, mem, base_r, coarse_r, fine_r, mem_r)
     # from-scratch twin over the same admitted corpus
-    base_s, coarse_s, fine_s, mem_s = _index_tables(spark, SF_DIR, "strm8s")
+    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "strm8s")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(q7)),
@@ -710,20 +711,17 @@ def test_stream_adc_probe_equals_batch_adc_probe(
     given a static PQ generation), and the reader REFUSES an unflagged
     generation at the batch boundary instead of silently falling back
     to the full-vector join."""
-    from awsbatch_mapreduce_spark.plans.wave13 import cutover_generation
     from awsbatch_mapreduce_spark.plans.wave14 import (
         _persist_pq_codes,
         _pq_rerank_probe,
-        _pq_tables,
     )
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_probe_current,
     )
 
     emb, mid, q3, coarse, fine, mem = _build_index(spark, "sadc")
     base = _scratch_dir("awsbatch_semdedup_sadc_idx", SF_DIR)
-    codes, pqcb = _pq_tables(spark, SF_DIR, "sadc")
+    codes, pqcb = generation_layout(SF_DIR, "sadc").tables[3:5]
     _persist_pq_codes(spark, mem, base, codes, pqcb)
     pointer = str(tmp_path / "ptr")
 
@@ -765,14 +763,13 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
     replayed batch re-resolves the pointer, so its rewritten partition
     reflects the current generation (the documented at-least-once
     contract)."""
-    from awsbatch_mapreduce_spark.plans.wave13 import cutover_generation
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_probe_current,
     )
 
     emb, mid, q3, coarse_a, fine_a, mem_a = _build_index(spark, "pca")
     # generation B: an independent fit over the grown corpus (<= q3)
-    base_b, coarse_b, fine_b, mem_b = _index_tables(spark, SF_DIR, "pcb")
+    base_b, coarse_b, fine_b, mem_b = fresh_layout(spark, SF_DIR, "pcb")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(q3)),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
 from awsbatch_mapreduce_spark.plans.wave17 import lsh_admission_gate
+from awsbatch_mapreduce_spark.scratch import _scratch_dir
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.lsh import (
     _purge_batch_bands,
@@ -89,7 +90,6 @@ def _rows(df, drop=()):
 
 
 def _fresh_index(spark, name):
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
 
     base = _scratch_dir(f"awsbatch_lsh_stream_{name}", SF_DIR)
     tbl = f"lsh_stream_idx_{name}"

@@ -28,19 +28,22 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_layout,
+    generation_layout,
+    live_view,
+    read_pointer,
+    set_generation_nprobe,
+    tombstone_members,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _quantize
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _index_tables,
     _mod_centroid_init,
     _persist_two_level,
     _probe_batch,
 )
-from awsbatch_mapreduce_spark.plans.wave13 import (
-    _generation_names,
-    probe_current_generation,
-    read_generation_meta,
-    read_generation_pointer,
-)
+from awsbatch_mapreduce_spark.plans.wave13 import probe_current_generation
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.supervisor import (
     _next_kind,
@@ -109,14 +112,46 @@ def test_next_kind_and_pointer_meta_roundtrip(tmp_path):
     p = str(tmp_path / "ptr")
     with open(p, "w") as fh:
         fh.write("legacy_kind")
-    assert read_generation_meta(p) == ("legacy_kind", None)
-    assert read_generation_pointer(p) == "legacy_kind"
-    assert read_generation_meta(str(tmp_path / "missing")) == (None, None)
+    assert read_pointer(p)[:2] == ("legacy_kind", None)
+    assert read_pointer(p).kind == "legacy_kind"
+    assert read_pointer(str(tmp_path / "missing"))[:2] == (None, None)
 
 
 def test_supervisor_requires_bootstrap(spark, four_chunks, tmp_path):
     with pytest.raises(RuntimeError, match="no current generation"):
         _run(spark, four_chunks, tmp_path, str(tmp_path / "ptr"))
+
+
+def test_supervisor_reads_pointer_once_per_cycle(
+    spark, four_chunks, tmp_path, monkeypatch
+):
+    """One pointer snapshot per stream incarnation (the single-read
+    discipline of ``read_pointer``): kind, n_fit and the capability
+    tokens of a cycle come from one record, and the read after each
+    refit is the next cycle's record."""
+    import awsbatch_mapreduce_spark.streaming.supervisor as sup
+
+    emb, lo, hi = _bounds(spark)
+    mid = (lo + hi) // 2
+    pointer = str(tmp_path / "ptr")
+    bootstrap_generation(
+        spark,
+        SF_DIR,
+        pointer,
+        emb.filter(F.col("vec_id") <= F.lit(mid)),
+        "svrp",
+    )
+    reads = []
+    real_read = sup.read_pointer
+
+    def counting_read(path):
+        reads.append(path)
+        return real_read(path)
+
+    monkeypatch.setattr(sup, "read_pointer", counting_read)
+    report = _run(spark, four_chunks, tmp_path, pointer, gen_prefix="svrp")
+    assert len(report["refits"]) >= 1, report["refits"]
+    assert len(reads) == len(report["segments"]) == 1 + len(report["refits"])
 
 
 def test_supervised_admission_auto_refits_and_matches_clean_fit(
@@ -140,7 +175,7 @@ def test_supervised_admission_auto_refits_and_matches_clean_fit(
         emb.filter(F.col("vec_id") <= F.lit(mid)),
         "sva",
     )
-    assert read_generation_meta(pointer) == (
+    assert read_pointer(pointer)[:2] == (
         "sva0000",
         emb.filter(F.col("vec_id") <= F.lit(mid)).count(),
     )
@@ -161,15 +196,15 @@ def test_supervised_admission_auto_refits_and_matches_clean_fit(
         assert 0 <= s["vec_recall_bp"] <= 10000, s
         assert 0 <= s["pair_recall_bp"] <= 10000, s
     assert any(s["n_truth_vecs"] > 0 for s in snaps), snaps
-    kind, n_fit = read_generation_meta(pointer)
+    kind, n_fit = read_pointer(pointer)[:2]
     assert kind == report["refits"][-1]["new"]
     assert n_fit == report["refits"][-1]["n_fit_after"]
     # every superseded generation reclaimed
     for r in report["refits"]:
-        _, _, old_mem = _generation_names(SF_DIR, r["old"])
+        old_mem = generation_layout(SF_DIR, r["old"]).members
         assert not spark.catalog.tableExists(old_mem), r["old"]
     # the full corpus was admitted across the cycles
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
+    mem_tbl = generation_layout(SF_DIR, kind).members
     assert spark.table(mem_tbl).count() == emb.count()
 
     # equivalence with one clean fit over everything admitted
@@ -182,7 +217,7 @@ def test_supervised_admission_auto_refits_and_matches_clean_fit(
             probe_current_generation(spark, SF_DIR, pointer, probe).collect(),
         )
     )
-    base_s, coarse_s, fine_s, mem_s = _index_tables(spark, SF_DIR, "svs")
+    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "svs")[:4]
     _persist_two_level(
         spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
     )
@@ -251,11 +286,11 @@ def test_supervisor_clears_stale_refit_marker(spark, tmp_path):
     )
     assert report["refits"] == []
     assert not os.path.exists(_marker_path(str(out)))
-    assert read_generation_pointer(pointer) == "svm0000"
+    assert read_pointer(pointer).kind == "svm0000"
     # the batch itself was admitted normally (refresh: the admission
     # committed through the micro-batch's cloned session, so this
     # session's cached file listing predates it)
-    _, _, mem0 = _generation_names(SF_DIR, "svm0000")
+    mem0 = generation_layout(SF_DIR, "svm0000").members
     spark.catalog.refreshTable(mem0)
     n_seen = emb.filter(F.col("vec_id") <= F.lit(mid)).count()
     assert spark.table(mem0).count() == n_seen + 20
@@ -271,14 +306,9 @@ def test_supervised_admission_pq_keeps_adc_serving(
     vacuumed — and the final ADC probe through the pointer is
     frame-identical to one clean fit + encode over everything
     admitted."""
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        _pq_generation_names,
-        read_generation_flags,
-    )
     from awsbatch_mapreduce_spark.plans.wave14 import (
         _persist_pq_codes,
         _pq_rerank_probe,
-        _pq_tables,
     )
 
     emb, lo, hi = _bounds(spark)
@@ -292,7 +322,7 @@ def test_supervised_admission_pq_keeps_adc_serving(
         "svq",
         with_pq=True,
     )
-    assert "pq" in read_generation_flags(pointer)
+    assert read_pointer(pointer).pq
 
     report = _run(spark, four_chunks, tmp_path, pointer, gen_prefix="svq")
     assert len(report["refits"]) >= 2, report["refits"]
@@ -300,17 +330,17 @@ def test_supervised_admission_pq_keeps_adc_serving(
     # the flag survived every automatic cutover; the current
     # generation's codes cover EVERY member (fit-time and admitted:
     # one row per member per subspace), superseded codes are gone
-    kind, _ = read_generation_meta(pointer)
-    assert "pq" in read_generation_flags(pointer)
-    codes_tbl, pqcb_tbl = _pq_generation_names(SF_DIR, kind)
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
+    kind = read_pointer(pointer).kind
+    assert read_pointer(pointer).pq
+    codes_tbl, pqcb_tbl = generation_layout(SF_DIR, kind).tables[3:5]
+    mem_tbl = generation_layout(SF_DIR, kind).members
     n_members = spark.table(mem_tbl).count()
     assert n_members == emb.count()
     n_subspaces = spark.table(pqcb_tbl).select("sm").distinct().count()
     assert n_subspaces > 0
     assert spark.table(codes_tbl).count() == n_members * n_subspaces
     for r in report["refits"]:
-        old_codes, old_pqcb = _pq_generation_names(SF_DIR, r["old"])
+        old_codes, old_pqcb = generation_layout(SF_DIR, r["old"]).tables[3:5]
         assert not spark.catalog.tableExists(old_codes), r["old"]
         assert not spark.catalog.tableExists(old_pqcb), r["old"]
 
@@ -326,11 +356,11 @@ def test_supervised_admission_pq_keeps_adc_serving(
             ).collect(),
         )
     )
-    base_s, coarse_s, fine_s, mem_s = _index_tables(spark, SF_DIR, "svz")
+    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "svz")[:4]
     _persist_two_level(
         spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
     )
-    codes_s, pqcb_s = _pq_tables(spark, SF_DIR, "svz")
+    codes_s, pqcb_s = generation_layout(SF_DIR, "svz").tables[3:5]
     _persist_pq_codes(spark, mem_s, base_s, codes_s, pqcb_s)
     want = sorted(
         map(
@@ -378,7 +408,7 @@ def test_cadence_counter_matches_counted_twin(spark, tmp_path, monkeypatch):
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     q3 = (mid + hi) // 2
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, "svcnt")
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "svcnt")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -433,21 +463,13 @@ def test_legacy_pointer_baseline_rewrite_preserves_pq_flag(
     losing the flag would stop codes appends and refuse ADC readers on
     a generation that HAS codes."""
     import pyarrow.parquet as _pq
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        cutover_generation,
-        read_generation_flags,
-    )
-    from awsbatch_mapreduce_spark.plans.wave14 import (
-        _persist_pq_codes,
-        _pq_tables,
-    )
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
+    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path / "ptr")
     kind = "svpf0000"
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, kind)
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, kind)[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -457,16 +479,15 @@ def test_legacy_pointer_baseline_rewrite_preserves_pq_flag(
         fine,
         mem,
     )
-    codes, pqcb = _pq_tables(spark, SF_DIR, kind)
+    codes, pqcb = generation_layout(SF_DIR, kind).tables[3:5]
     _persist_pq_codes(spark, mem, base, codes, pqcb)
     cutover_generation(spark, SF_DIR, pointer, kind, with_pq=True)  # no n_fit
-    assert read_generation_meta(pointer) == (kind, None)
+    assert read_pointer(pointer)[:2] == (kind, None)
     # ...and a serving width set by the actuator after that manual
     # cutover must ALSO survive the rewrite (ADVICE r17 medium: the
     # baseline rewrite preserved pq/cap but silently reset nprobe to
     # 1 — a pointer rewrite must never silently reset production
     # recall)
-    from awsbatch_mapreduce_spark.plans.wave13 import set_generation_nprobe
 
     set_generation_nprobe(pointer, 3)
 
@@ -495,12 +516,12 @@ def test_legacy_pointer_baseline_rewrite_preserves_pq_flag(
     )
     assert report["refits"] == []
     # baseline recorded AND the pq capability survived the rewrite
-    kind_after, n_fit_after = read_generation_meta(pointer)
+    kind_after, n_fit_after = read_pointer(pointer)[:2]
     assert kind_after == kind and n_fit_after is not None
-    flags_after = read_generation_flags(pointer)
-    assert "pq" in flags_after
+    rec_after = read_pointer(pointer)
+    assert rec_after.pq
     # the serving width survived too (ADVICE r17 medium)
-    assert "nprobe=3" in flags_after
+    assert rec_after.nprobe == 3
     # the admitted batch's codes landed (admission ran codes-bound)
     spark.catalog.refreshTable(codes)
     n_subspaces = spark.table(pqcb).select("sm").distinct().count()
@@ -570,7 +591,6 @@ def test_quality_breach_escalates_cap(spark, four_chunks, tmp_path):
     exhaustive) or the cap bound is hit.  The <= cap bound holds in
     the final generation at ITS OWN cap — admissions rank-chunk at the
     pointer's recorded capacity."""
-    from awsbatch_mapreduce_spark.plans.wave13 import read_generation_cap
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -582,7 +602,7 @@ def test_quality_breach_escalates_cap(spark, four_chunks, tmp_path):
         emb.filter(F.col("vec_id") <= F.lit(mid)),
         "svqc",
     )
-    assert read_generation_cap(pointer) == 16
+    assert read_pointer(pointer).cap == 16
     report = run_supervised_admission(
         spark,
         _source(spark, four_chunks),
@@ -604,7 +624,7 @@ def test_quality_breach_escalates_cap(spark, four_chunks, tmp_path):
     caps = [refits[0]["cap_before"]] + [r["cap_after"] for r in refits]
     assert caps[0] == 16
     assert all(b < a <= 512 for b, a in zip(caps, caps[1:])), caps
-    assert read_generation_cap(pointer) == caps[-1]
+    assert read_pointer(pointer).cap == caps[-1]
     # escalation stopped for a reason: either the last snapshot cleared
     # the floor (exhaustive probe at the escalated cap) or cap maxed
     snaps = report.get("recall", [])
@@ -616,8 +636,8 @@ def test_quality_breach_escalates_cap(spark, four_chunks, tmp_path):
     ), snaps
     assert not last.get("cap_escalation_signalled", False), snaps
     # the <= cap bound holds in the final generation AT ITS OWN cap
-    kind, _ = read_generation_meta(pointer)
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
+    kind = read_pointer(pointer).kind
+    mem_tbl = generation_layout(SF_DIR, kind).members
     spark.catalog.refreshTable(mem_tbl)
     mx = (
         spark.table(mem_tbl)
@@ -666,17 +686,17 @@ def test_supervisor_recovers_from_crash_during_refit(
     with pytest.raises(RuntimeError, match="injected crash mid refit"):
         _run(spark, four_chunks, tmp_path, pointer, gen_prefix="svc")
     # pointer untouched by the crash; admitted rows are in the OLD gen
-    assert read_generation_pointer(pointer) == "svc0000"
-    _, _, mem0 = _generation_names(SF_DIR, "svc0000")
+    assert read_pointer(pointer).kind == "svc0000"
+    mem0 = generation_layout(SF_DIR, "svc0000").members
     n_after_crash = spark.table(mem0).count()
     assert n_after_crash > emb.filter(F.col("vec_id") <= F.lit(mid)).count()
 
     # recovery run (monkeypatch still active: later refits succeed)
     report = _run(spark, four_chunks, tmp_path, pointer, gen_prefix="svc")
     assert len(report["refits"]) >= 2
-    kind, _ = read_generation_meta(pointer)
+    kind = read_pointer(pointer).kind
     assert kind == report["refits"][-1]["new"]
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
+    mem_tbl = generation_layout(SF_DIR, kind).members
     assert spark.table(mem_tbl).count() == emb.count()
 
     # equivalence with the never-crashed clean fit
@@ -689,7 +709,7 @@ def test_supervisor_recovers_from_crash_during_refit(
             probe_current_generation(spark, SF_DIR, pointer, probe).collect(),
         )
     )
-    base_s, coarse_s, fine_s, mem_s = _index_tables(spark, SF_DIR, "svt")
+    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "svt")[:4]
     _persist_two_level(
         spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
     )
@@ -706,10 +726,7 @@ def test_actuator_step_reaches_serving_probe(spark, four_chunks, tmp_path):
     returns the driver-proven rank-k multiprobe output at the stepped
     width (frame-identical to ``_multiprobe_batch``), not the
     single-probe rows the pre-round-17 readers were stuck on."""
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        _multiprobe_batch,
-        read_generation_nprobe,
-    )
+    from awsbatch_mapreduce_spark.plans.wave13 import _multiprobe_batch
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -721,7 +738,7 @@ def test_actuator_step_reaches_serving_probe(spark, four_chunks, tmp_path):
         emb.filter(F.col("vec_id") <= F.lit(mid)),
         "svsp",
     )
-    assert read_generation_nprobe(pointer) == 1  # pre-step serving
+    assert read_pointer(pointer).serving_nprobe == 1  # pre-step serving
     report = _run(
         spark,
         four_chunks,
@@ -735,11 +752,11 @@ def test_actuator_step_reaches_serving_probe(spark, four_chunks, tmp_path):
     )
     snaps = report.get("recall", [])
     assert any(s.get("nprobe_applied") for s in snaps), snaps
-    served = read_generation_nprobe(pointer)
+    served = read_pointer(pointer).serving_nprobe
     assert served >= 2  # the step is ON the pointer
     # the serving probe now RUNS the rank-k program
-    kind, _ = read_generation_meta(pointer)
-    coarse, fine, mem = _generation_names(SF_DIR, kind)
+    kind = read_pointer(pointer).kind
+    coarse, fine, mem = generation_layout(SF_DIR, kind).tables[:3]
     probe = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
@@ -773,7 +790,6 @@ def test_periodic_resnapshot_actuates_without_refit(
     stream segment, each running at the width the previous one applied
     to the pointer, with ZERO refits having occurred (growth trigger
     off, cap escalation disarmed)."""
-    from awsbatch_mapreduce_spark.plans.wave13 import read_generation_nprobe
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -811,7 +827,7 @@ def test_periodic_resnapshot_actuates_without_refit(
     for s in snaps:
         assert s["nprobe"] == expect, snaps
         expect = s["recommended_nprobe"]
-    assert read_generation_nprobe(pointer) == expect
+    assert read_pointer(pointer).serving_nprobe == expect
     assert expect > 1  # at least one live step, no refit anywhere
 
 
@@ -821,11 +837,6 @@ def test_quality_breach_escalates_cap_with_pq(spark, four_chunks, tmp_path):
     inherit the ``pq`` flag, rebuild the codes at each new cell
     geometry, and the ADC reader keeps serving through the pointer
     after every escalation."""
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        _pq_generation_names,
-        read_generation_cap,
-        read_generation_flags,
-    )
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -859,11 +870,11 @@ def test_quality_breach_escalates_cap_with_pq(spark, four_chunks, tmp_path):
     caps = [refits[0]["cap_before"]] + [r["cap_after"] for r in refits]
     assert all(b < a <= 512 for b, a in zip(caps, caps[1:])), caps
     # the pq capability survived every escalated refit
-    assert "pq" in read_generation_flags(pointer)
-    assert read_generation_cap(pointer) == caps[-1]
-    kind, _ = read_generation_meta(pointer)
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
-    codes_tbl, _ = _pq_generation_names(SF_DIR, kind)
+    assert read_pointer(pointer).pq
+    assert read_pointer(pointer).cap == caps[-1]
+    kind = read_pointer(pointer).kind
+    mem_tbl = generation_layout(SF_DIR, kind).members
+    codes_tbl, _ = generation_layout(SF_DIR, kind).tables[3:5]
     # codes rebuilt COMPLETE at the escalated geometry: 1:1 with the
     # final generation's members on (seen_id, cell, sub).  Refresh
     # first: the admissions committed through the micro-batch's cloned
@@ -890,14 +901,13 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
     current knobs, never step nprobe (no pointer write) and never
     signal a cap-escalation refit on vec_recall_bp=0."""
     import awsbatch_mapreduce_spark.streaming.supervisor as sup
-    from awsbatch_mapreduce_spark.plans.wave13 import read_generation_nprobe
     from awsbatch_mapreduce_spark.streaming.supervisor import (
         admit_probe_with_cadence,
     )
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, "svzt")
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "svzt")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -950,7 +960,7 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
     assert snap["recommended_nprobe"] == 1  # knob held
     assert not snap.get("cap_escalation_signalled", False)
     assert not snap.get("nprobe_applied", False)
-    assert read_generation_nprobe(pointer) == 1  # no pointer write
+    assert read_pointer(pointer).serving_nprobe == 1  # no pointer write
 
 
 def test_cap_escalation_resets_nprobe_arm(spark, four_chunks, tmp_path):
@@ -962,10 +972,6 @@ def test_cap_escalation_resets_nprobe_arm(spark, four_chunks, tmp_path):
     re-snapshot every batch) the loop alternates: step 1 -> 2, exhaust,
     escalate cap + reset to 1, re-step — every recall refit records
     nprobe_after == base and the pointer ends at the base width."""
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        read_generation_cap,
-        read_generation_nprobe,
-    )
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -998,8 +1004,8 @@ def test_cap_escalation_resets_nprobe_arm(spark, four_chunks, tmp_path):
     assert all(r["reason"] == "recall" for r in refits), refits
     # every quality refit reset the serving width to the base
     assert all(r["nprobe_after"] == 1 for r in refits), refits
-    assert read_generation_nprobe(pointer) == 1
-    assert read_generation_cap(pointer) > 16  # and the cap escalated
+    assert read_pointer(pointer).serving_nprobe == 1
+    assert read_pointer(pointer).cap > 16  # and the cap escalated
     # the snapshots show the alternation: each ran either at base (a
     # fresh/reset generation) or at the one step above it, never stuck
     snaps = report.get("recall", [])
@@ -1025,10 +1031,6 @@ def test_deletion_fraction_triggers_compacting_refit(
     only trigger in play is the one under test; after the compaction
     the tombstone table is gone, so later batches admit without
     re-signalling."""
-    from awsbatch_mapreduce_spark.plans.wave17 import (
-        _tombstone_name,
-        tombstone_members,
-    )
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -1065,14 +1067,14 @@ def test_deletion_fraction_triggers_compacting_refit(
     rows0 = pq.read_table(os.path.join(four_chunks, "chunk-0.parquet")).num_rows
     assert refits[0]["n_fit_before"] == n_boot
     assert refits[0]["n_fit_after"] == n_boot + rows0 - n_doomed
-    kind, n_fit = read_generation_meta(pointer)
+    kind, n_fit = read_pointer(pointer)[:2]
     assert kind == refits[0]["new"] and n_fit == refits[0]["n_fit_after"]
     # the new generation carries no tombstone table (structural clear)
-    assert not spark.catalog.tableExists(_tombstone_name(SF_DIR, kind))
+    assert not spark.catalog.tableExists(generation_layout(SF_DIR, kind).tombs)
     # compaction is real: the surviving index holds the whole upper
     # half (batch 0's replay is a watermark no-op, batches 1-3 admit
     # fresh) plus the bootstrap minus the tombstoned members
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
+    mem_tbl = generation_layout(SF_DIR, kind).members
     spark.catalog.refreshTable(mem_tbl)
     mem = spark.table(mem_tbl)
     upper = emb.filter(F.col("vec_id") > F.lit(mid)).count()
@@ -1089,11 +1091,6 @@ def test_deletion_fraction_below_threshold_no_signal(
     stay excluded from the live view while remaining in the raw
     members table (takedown semantics without compaction), and the
     pointer never moves."""
-    from awsbatch_mapreduce_spark.plans.wave17 import (
-        _live_view,
-        _tombstone_name,
-        tombstone_members,
-    )
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -1119,15 +1116,15 @@ def test_deletion_fraction_below_threshold_no_signal(
         max_deleted_fraction=0.5,  # 5 tombstones can never reach 50%
     )
     assert report["refits"] == [], report["refits"]
-    kind, _ = read_generation_meta(pointer)
+    kind = read_pointer(pointer).kind
     assert kind == "svdlo0000"  # pointer never moved
-    tombs_tbl = _tombstone_name(SF_DIR, kind)
+    tombs_tbl = generation_layout(SF_DIR, kind).tombs
     assert spark.catalog.tableExists(tombs_tbl)
-    _, _, mem_tbl = _generation_names(SF_DIR, kind)
+    mem_tbl = generation_layout(SF_DIR, kind).members
     spark.catalog.refreshTable(mem_tbl)
     raw = spark.table(mem_tbl)
     live = spark.table(
-        _live_view(spark, mem_tbl, tombs_tbl, "t18", pointer_path=pointer)
+        live_view(spark, mem_tbl, tombs_tbl, "t18", pointer_path=pointer)
     )
     assert raw.count() - live.count() == n_doomed
 
@@ -1140,13 +1137,11 @@ def test_deletion_signal_fires_on_empty_first_batch(spark, tmp_path):
     rate-source load run, whose first trigger tick is empty).  Growth
     and recall structurally cannot fire there — both require admitted
     batches first."""
-    from awsbatch_mapreduce_spark.plans.wave17 import tombstone_members
     from awsbatch_mapreduce_spark.streaming.supervisor import (
         _marker_path,
         admit_probe_with_cadence,
         RefitDueSignal,
     )
-    from awsbatch_mapreduce_spark.plans.wave17 import _tombstone_name
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -1160,12 +1155,12 @@ def test_deletion_signal_fires_on_empty_first_batch(spark, tmp_path):
 
     out_dir = str(tmp_path / "never_created_out")
     fn = admit_probe_with_cadence(
-        *_generation_names(SF_DIR, "svde0000"),
+        *generation_layout(SF_DIR, "svde0000").tables[:3],
         out_dir,
         boot.count(),
         100.0,
         pointer_path=pointer,
-        tombs_tbl=_tombstone_name(SF_DIR, "svde0000"),
+        tombs_tbl=generation_layout(SF_DIR, "svde0000").tombs,
         max_deleted_fraction=0.2,
     )
     empty = boot.limit(0)

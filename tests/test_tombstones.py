@@ -30,28 +30,28 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    _table_location,
+    cutover_generation,
+    fresh_layout,
+    generation_layout,
+    live_view,
+    read_pointer,
+    tombstone_members,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _quantize
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _index_tables,
     _mod_centroid_init,
     _persist_two_level,
     _probe_batch,
 )
 from awsbatch_mapreduce_spark.plans.wave13 import (
-    _generation_names,
-    cutover_generation,
     probe_current_generation,
-    read_generation_meta,
     refit_and_cutover,
-    vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave17 import (
-    _TOMB_MOD,
-    _tombstone_name,
-    tombstone_members,
-)
+from awsbatch_mapreduce_spark.plans.wave17 import _TOMB_MOD
 from awsbatch_mapreduce_spark.sources.tables import load_table
-from awsbatch_mapreduce_spark.streaming.codebook import _table_location
 from tests.conftest import SF_DIR
 
 
@@ -64,7 +64,7 @@ def _bounds(spark):
 def _build_gen(spark, kind, pointer):
     """Fit over the seen half + cutover; returns (emb, mid, tables)."""
     emb, mid = _bounds(spark)
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, kind)
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, kind)[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -74,7 +74,7 @@ def _build_gen(spark, kind, pointer):
         fine,
         mem,
     )
-    spark.sql(f"DROP TABLE IF EXISTS {_tombstone_name(SF_DIR, kind)}")
+    spark.sql(f"DROP TABLE IF EXISTS {generation_layout(SF_DIR, kind).tombs}")
     if os.path.exists(pointer):
         os.remove(pointer)
     cutover_generation(spark, SF_DIR, pointer, kind)
@@ -105,11 +105,11 @@ def test_delete_is_idempotent_and_merges(spark, tmp_path):
     a = spark.range(0, 0).selectExpr("id AS seen_id")  # empty: no-op set
     ids_a = _tomb_ids(spark, mem).limit(3)
     n1 = tombstone_members(spark, SF_DIR, pointer, ids_a)
-    set1 = _rows(spark.table(_tombstone_name(SF_DIR, "tid")))
+    set1 = _rows(spark.table(generation_layout(SF_DIR, "tid").tombs))
     assert n1 == 3 and len(set1) == 3
     # replay: byte-identical set, same count
     assert tombstone_members(spark, SF_DIR, pointer, ids_a) == 3
-    assert _rows(spark.table(_tombstone_name(SF_DIR, "tid"))) == set1
+    assert _rows(spark.table(generation_layout(SF_DIR, "tid").tombs)) == set1
     # merge: a disjoint second request unions in
     ids_b = (
         _tomb_ids(spark, mem)
@@ -123,7 +123,7 @@ def test_delete_is_idempotent_and_merges(spark, tmp_path):
 def test_delete_crash_mid_swap_completes_on_next_entry(spark, tmp_path):
     pointer = str(tmp_path / "ptr")
     _, _, (_, _, mem) = _build_gen(spark, "tcr", pointer)
-    tombs = _tombstone_name(SF_DIR, "tcr")
+    tombs = generation_layout(SF_DIR, "tcr").tombs
     tombstone_members(spark, SF_DIR, pointer, _tomb_ids(spark, mem).limit(3))
     before = _rows(spark.table(tombs))
     # second delete must go through the swap path; simulate the crash
@@ -172,9 +172,9 @@ def test_refit_excludes_clears_and_vacuums_tombstones(spark, tmp_path):
 
     prev = refit_and_cutover(spark, SF_DIR, pointer, "trfr")
     assert prev == "trf"
-    kind, n_fit = read_generation_meta(pointer)
+    kind, n_fit = read_pointer(pointer)[:2]
     assert kind == "trfr"
-    _, _, new_mem = _generation_names(SF_DIR, "trfr")
+    new_mem = generation_layout(SF_DIR, "trfr").members
     survivors = spark.table(new_mem)
     # excluded: no tombstoned id in the new generation; n_fit = survivors
     assert survivors.filter(
@@ -182,11 +182,11 @@ def test_refit_excludes_clears_and_vacuums_tombstones(spark, tmp_path):
     ).count() == 0
     assert survivors.count() == n_members - n_doomed == n_fit
     # cleared: the NEW generation has no tombstone table
-    assert not spark.catalog.tableExists(_tombstone_name(SF_DIR, "trfr"))
+    assert not spark.catalog.tableExists(generation_layout(SF_DIR, "trfr").tombs)
     # vacuum reclaims the old generation's tombstone table with it
-    assert spark.catalog.tableExists(_tombstone_name(SF_DIR, "trf"))
+    assert spark.catalog.tableExists(generation_layout(SF_DIR, "trf").tombs)
     vacuum_generation(spark, SF_DIR, pointer, "trf")
-    assert not spark.catalog.tableExists(_tombstone_name(SF_DIR, "trf"))
+    assert not spark.catalog.tableExists(generation_layout(SF_DIR, "trf").tombs)
 
 
 def test_delete_landing_mid_refit_refuses_cutover(spark, tmp_path, monkeypatch):
@@ -209,19 +209,18 @@ def test_delete_landing_mid_refit_refuses_cutover(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="tombstones moved"):
         refit_and_cutover(spark, SF_DIR, pointer, "tmfr")
     # the pointer never moved — the old generation still serves
-    assert read_generation_meta(pointer)[0] == "tmf"
+    assert read_pointer(pointer)[:2][0] == "tmf"
 
 
 def test_adc_serving_excludes_tombstoned_members(spark, tmp_path):
     from awsbatch_mapreduce_spark.plans.wave14 import (
         _persist_pq_codes,
         _pq_rerank_probe,
-        _pq_tables,
     )
 
     pointer = str(tmp_path / "ptr")
     emb, mid = _bounds(spark)
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, "tad")
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "tad")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -231,9 +230,9 @@ def test_adc_serving_excludes_tombstoned_members(spark, tmp_path):
         fine,
         mem,
     )
-    codes, pqcb = _pq_tables(spark, SF_DIR, "tad")
+    codes, pqcb = generation_layout(SF_DIR, "tad").tables[3:5]
     _persist_pq_codes(spark, mem, base, codes, pqcb)
-    spark.sql(f"DROP TABLE IF EXISTS {_tombstone_name(SF_DIR, 'tad')}")
+    spark.sql(f"DROP TABLE IF EXISTS {generation_layout(SF_DIR, 'tad').tombs}")
     if os.path.exists(pointer):
         os.remove(pointer)
     cutover_generation(spark, SF_DIR, pointer, "tad", with_pq=True)
@@ -276,7 +275,7 @@ def test_supervisor_serves_and_structurally_applies_deletions(
         spark, SF_DIR, pointer,
         emb.filter(F.col("vec_id") <= F.lit(mid)), "tsp",
     )
-    _, _, mem0 = _generation_names(SF_DIR, "tsp0000")
+    mem0 = generation_layout(SF_DIR, "tsp0000").members
     doomed = _tomb_ids(spark, mem0)
     n_doomed = doomed.count()
     assert n_doomed > 0
@@ -312,8 +311,8 @@ def test_supervisor_serves_and_structurally_applies_deletions(
     want0 = _rows(probe_current_generation(spark, SF_DIR, pointer, batch0))
     # ...and it must DIFFER from the tombstone-blind probe (the
     # deletion moved the novelty verdicts at the admission surface)
-    _, _, mem0_tbl = _generation_names(SF_DIR, "tsp0000")
-    coarse0, fine0, _ = _generation_names(SF_DIR, "tsp0000")
+    mem0_tbl = generation_layout(SF_DIR, "tsp0000").members
+    coarse0, fine0, _ = generation_layout(SF_DIR, "tsp0000").tables[:3]
     blind0 = _rows(
         _probe_batch(spark, batch0, coarse0, fine0, mem0_tbl)
     )
@@ -328,13 +327,13 @@ def test_supervisor_serves_and_structurally_applies_deletions(
 
     # (b) structural: the refit generation holds no tombstoned member
     # and its tombstone table is gone (cleared + vacuumed with the old)
-    kind, n_fit = read_generation_meta(pointer)
-    _, _, mem_now = _generation_names(SF_DIR, kind)
+    kind, n_fit = read_pointer(pointer)[:2]
+    mem_now = generation_layout(SF_DIR, kind).members
     assert spark.table(mem_now).filter(
         F.pmod(F.col("seen_id"), F.lit(_TOMB_MOD)) == 0
     ).filter(F.col("seen_id") <= F.lit(mid)).count() == 0
-    assert not spark.catalog.tableExists(_tombstone_name(SF_DIR, kind))
-    assert not spark.catalog.tableExists(_tombstone_name(SF_DIR, "tsp0000"))
+    assert not spark.catalog.tableExists(generation_layout(SF_DIR, kind).tombs)
+    assert not spark.catalog.tableExists(generation_layout(SF_DIR, "tsp0000").tombs)
 
     # (a) serving: the FIRST batch's committed probe partition is
     # byte-identical to the tombstone-honoring probe computed above —
@@ -358,11 +357,10 @@ def test_live_view_is_swap_safe_snapshot(spark, tmp_path):
     and resurrect every deleted member; (b) the view's deletion set is
     an eager SNAPSHOT: a tombstone write landing after plan build does
     not mutate an already-built view's output."""
-    from awsbatch_mapreduce_spark.plans.wave17 import _live_view
 
     pointer = str(tmp_path / "ptr")
     _, _, (coarse, fine, mem) = _build_gen(spark, "tsw", pointer)
-    tombs = _tombstone_name(SF_DIR, "tsw")
+    tombs = generation_layout(SF_DIR, "tsw").tombs
     tombstone_members(spark, SF_DIR, pointer, _tomb_ids(spark, mem).limit(3))
     tombstone_members(spark, SF_DIR, pointer, _tomb_ids(spark, mem).limit(4))
     n_full = spark.table(mem).count()
@@ -370,7 +368,7 @@ def test_live_view_is_swap_safe_snapshot(spark, tmp_path):
     # (a) simulate the mid-swap instant: root missing, __repair ready
     loc = _table_location(spark, tombs)
     os.rename(loc, f"{loc}__repair")
-    name = _live_view(spark, mem, tombs, "live", pointer_path=pointer)
+    name = live_view(spark, mem, tombs, "live", pointer_path=pointer)
     spark.catalog.refreshTable(tombs)
     assert spark.table(name).count() == n_full - 4  # completed + applied
     assert os.path.isdir(loc)  # the pending swap was finished
@@ -381,6 +379,6 @@ def test_live_view_is_swap_safe_snapshot(spark, tmp_path):
     tombstone_members(spark, SF_DIR, pointer, _tomb_ids(spark, mem))
     assert spark.table(name).count() == before
     # a FRESH view sees the grown set
-    name2 = _live_view(spark, mem, tombs, "live2", pointer_path=pointer)
+    name2 = live_view(spark, mem, tombs, "live2", pointer_path=pointer)
     n_doomed = _tomb_ids(spark, mem).count()
     assert spark.table(name2).count() == n_full - n_doomed

@@ -21,6 +21,13 @@ import re
 
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_layout,
+    generation_layout,
+    read_pointer,
+    vacuum_generation,
+)
 from awsbatch_mapreduce_spark.plans import QUERIES
 from awsbatch_mapreduce_spark.plans.iterative import _quantize
 from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
@@ -28,12 +35,12 @@ from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
     _MID_BOUNDARY,
     _PROBE_CTES,
-    _index_tables,
     _mod_centroid_init,
     _persist_two_level,
     _probe_batch,
     _probe_ctes,
 )
+from awsbatch_mapreduce_spark.scratch import _scratch_dir
 from tests.conftest import SF_BOTH, SF_DIR
 from tests.conftest import plan_of as _plan
 from tests.conftest import query_rows as _rows
@@ -155,7 +162,7 @@ def test_refit_from_members_equals_from_scratch_fit(spark):
     lifecycle = sorted(map(tuple, _rows(spark, _Q, SF_DIR)))
     mid, q3 = _bounds(spark, SF_DIR)
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    base_s, coarse_s, fine_s, mem_s = _index_tables(spark, SF_DIR, "rfs")
+    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "rfs")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(q3)),
@@ -370,13 +377,7 @@ def test_refit_and_cutover_refuses_on_concurrent_admission(
 
     import awsbatch_mapreduce_spark.plans.wave13 as w13
     from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        _generation_names,
-        cutover_generation,
-        read_generation_pointer,
-        refit_and_cutover,
-        vacuum_generation,
-    )
+    from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
     with pytest.raises(RuntimeError, match="nothing to refit from"):
@@ -384,7 +385,7 @@ def test_refit_and_cutover_refuses_on_concurrent_admission(
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     mid, q3 = _bounds(spark, SF_DIR)
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, SF_DIR, "gda")
+    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "gda")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -414,16 +415,16 @@ def test_refit_and_cutover_refuses_on_concurrent_admission(
     monkeypatch.setattr(w13, "refit_from_members", real_refit)
     # refused: pointer untouched, old generation intact with the late
     # admission, half-built gen B missing it (why the refusal matters)
-    assert read_generation_pointer(pointer) == "gda"
+    assert read_pointer(pointer).kind == "gda"
     assert spark.table(mem_a).count() == n_before + late.count()
-    _, _, mem_b = _generation_names(SF_DIR, "gdb")
+    mem_b = generation_layout(SF_DIR, "gdb").members
     assert spark.table(mem_b).count() == n_before
 
     # quiesced retry: source stable for the whole sequence -> cutover
     # lands and the new generation carries the late admission
     assert refit_and_cutover(spark, SF_DIR, pointer, "gdc") == "gda"
-    assert read_generation_pointer(pointer) == "gdc"
-    _, _, mem_c = _generation_names(SF_DIR, "gdc")
+    assert read_pointer(pointer).kind == "gdc"
+    mem_c = generation_layout(SF_DIR, "gdc").members
     assert spark.table(mem_c).count() == n_before + late.count()
     assert vacuum_generation(spark, SF_DIR, pointer, "gda") == 3
     assert vacuum_generation(spark, SF_DIR, pointer, "gdb") == 3
@@ -442,18 +443,12 @@ def test_refit_and_cutover_rolls_back_pointer_on_post_swap_growth(
 
     import awsbatch_mapreduce_spark.plans.wave13 as w13
     from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        _generation_names,
-        cutover_generation,
-        read_generation_pointer,
-        refit_and_cutover,
-        vacuum_generation,
-    )
+    from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     mid, q3 = _bounds(spark, SF_DIR)
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, SF_DIR, "tka")
+    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "tka")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -487,15 +482,15 @@ def test_refit_and_cutover_rolls_back_pointer_on_post_swap_growth(
     monkeypatch.setattr(w13, "cutover_generation", real_cutover)
     # refused AND rolled back: pointer on the old generation, which
     # holds the late admission; gen B lacks it (why the rollback matters)
-    assert read_generation_pointer(pointer) == "tka"
+    assert read_pointer(pointer).kind == "tka"
     assert spark.table(mem_a).count() == n_before + late.count()
-    _, _, mem_b = _generation_names(SF_DIR, "tkb")
+    mem_b = generation_layout(SF_DIR, "tkb").members
     assert spark.table(mem_b).count() == n_before
 
     # quiesced retry: carries the late admission into the new generation
     assert refit_and_cutover(spark, SF_DIR, pointer, "tkc") == "tka"
-    assert read_generation_pointer(pointer) == "tkc"
-    _, _, mem_c = _generation_names(SF_DIR, "tkc")
+    assert read_pointer(pointer).kind == "tkc"
+    mem_c = generation_layout(SF_DIR, "tkc").members
     assert spark.table(mem_c).count() == n_before + late.count()
     assert vacuum_generation(spark, SF_DIR, pointer, "tka") == 3
     assert vacuum_generation(spark, SF_DIR, pointer, "tkb") == 3
@@ -556,14 +551,10 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
 
     import pytest
 
-    from awsbatch_mapreduce_spark.plans.wave5 import _scratch_dir
     from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
     from awsbatch_mapreduce_spark.plans.wave13 import (
-        cutover_generation,
         probe_current_generation,
-        read_generation_pointer,
         refit_from_members,
-        vacuum_generation,
     )
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
@@ -580,9 +571,9 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
         probe_current_generation(spark, SF_DIR, pointer, today)
     with pytest.raises(RuntimeError, match="do not exist"):
         cutover_generation(spark, SF_DIR, pointer, "gcx")
-    assert read_generation_pointer(pointer) is None
+    assert read_pointer(pointer).kind is None
 
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, SF_DIR, "gca")
+    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "gca")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -609,7 +600,7 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
 
     # grow gen A, refit into gen B, cut over, reclaim A
     _admit_batch(spark, batch, coarse_a, fine_a, mem_a)
-    base_b, coarse_b, fine_b, mem_b = _index_tables(spark, SF_DIR, "gcb")
+    base_b, coarse_b, fine_b, mem_b = fresh_layout(spark, SF_DIR, "gcb")[:4]
     refit_from_members(spark, mem_a, base_b, coarse_b, fine_b, mem_b)
     assert cutover_generation(spark, SF_DIR, pointer, "gcb") == "gca"
     via_ptr_b = sorted(

@@ -79,7 +79,6 @@ def test_generalized_multiprobe_matches_registered_variant(spark):
     proven variant by a row."""
     from awsbatch_mapreduce_spark.plans.iterative import _quantize
     from awsbatch_mapreduce_spark.plans.wave13 import _multiprobe_batch
-    from awsbatch_mapreduce_spark.plans.wave11 import _index_tables
 
     want = sorted(
         map(

@@ -25,32 +25,29 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.generation import (
+    cutover_generation,
+    fresh_layout,
+    generation_layout,
+    read_pointer,
+    set_generation_nprobe,
+)
 from awsbatch_mapreduce_spark.plans.iterative import _quantize
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
-    _index_tables,
     _mod_centroid_init,
     _persist_two_level,
     _probe_batch,
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
 from awsbatch_mapreduce_spark.plans.wave13 import (
-    _generation_names,
     _multiprobe_batch,
-    _pq_generation_names,
-    cutover_generation,
     probe_current_generation,
-    read_generation_cap,
-    read_generation_flags,
-    read_generation_meta,
-    read_generation_nprobe,
     refit_and_cutover,
-    set_generation_nprobe,
 )
 from awsbatch_mapreduce_spark.plans.wave14 import (
     _persist_pq_codes,
     _pq_rerank_probe,
-    _pq_tables,
 )
 from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -75,7 +72,7 @@ def fitted_pq_gen(spark, tmp_path_factory):
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path_factory.mktemp("w16ptr") / "CURRENT_GENERATION")
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, "w16")
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "w16")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -85,13 +82,20 @@ def fitted_pq_gen(spark, tmp_path_factory):
         fine,
         mem,
     )
-    codes, pqcb = _pq_tables(spark, SF_DIR, "w16")
+    codes, pqcb = generation_layout(SF_DIR, "w16").tables[3:5]
     _persist_pq_codes(spark, mem, base, codes, pqcb)
     cutover_generation(spark, SF_DIR, pointer, "w16", with_pq=True)
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
     return pointer, (coarse, fine, mem, codes, pqcb), new
+
+
+def _tokens(pointer):
+    """The pointer file's raw capability tokens (line 3)."""
+    with open(pointer) as fh:
+        lines = fh.read().splitlines()
+    return lines[2].split() if len(lines) >= 3 else []
 
 
 def test_nprobe_token_rides_pointer_mutations(tmp_path):
@@ -101,23 +105,23 @@ def test_nprobe_token_rides_pointer_mutations(tmp_path):
     p = str(tmp_path / "ptr")
     with open(p, "w") as fh:
         fh.write("gen0001\n1234\npq cap=64")
-    assert read_generation_nprobe(p) == 1  # no token -> single-probe
+    assert read_pointer(p).serving_nprobe == 1  # no token -> single-probe
     set_generation_nprobe(p, 3)
-    assert read_generation_nprobe(p) == 3
-    assert read_generation_meta(p) == ("gen0001", 1234)
-    assert {"pq", "cap=64", "nprobe=3"} <= read_generation_flags(p)
-    assert read_generation_cap(p) == 64
+    assert read_pointer(p).serving_nprobe == 3
+    assert read_pointer(p)[:2] == ("gen0001", 1234)
+    assert {"pq", "cap=64", "nprobe=3"} <= set(_tokens(p))
+    assert read_pointer(p).cap == 64
     set_generation_nprobe(p, 2)
-    assert read_generation_nprobe(p) == 2
-    toks = [t for t in read_generation_flags(p) if t.startswith("nprobe=")]
+    assert read_pointer(p).serving_nprobe == 2
+    toks = [t for t in _tokens(p) if t.startswith("nprobe=")]
     assert toks == ["nprobe=2"]
     # legacy kind-only pointer: the token attaches without inventing
     # n_fit or other flags
     with open(p, "w") as fh:
         fh.write("legacy")
     set_generation_nprobe(p, 2)
-    assert read_generation_meta(p) == ("legacy", None)
-    assert read_generation_flags(p) == frozenset({"nprobe=2"})
+    assert read_pointer(p)[:2] == ("legacy", None)
+    assert frozenset(_tokens(p)) == frozenset({"nprobe=2"})
     with pytest.raises(RuntimeError, match="no current generation"):
         set_generation_nprobe(str(tmp_path / "missing"), 2)
     with pytest.raises(ValueError, match="nprobe must be >= 1"):
@@ -132,16 +136,16 @@ def test_cutover_records_nprobe_and_refit_inherits(spark, fitted_pq_gen):
     set_generation_nprobe(pointer, 2)
     old = refit_and_cutover(spark, SF_DIR, pointer, "w16r")
     assert old == "w16"
-    kind, _ = read_generation_meta(pointer)
+    kind = read_pointer(pointer).kind
     assert kind == "w16r"
-    assert read_generation_nprobe(pointer) == 2  # inherited
-    assert "pq" in read_generation_flags(pointer)  # inherited too
+    assert read_pointer(pointer).serving_nprobe == 2  # inherited
+    assert read_pointer(pointer).pq  # inherited too
     # point back for the serving pins (generation w16 is intact — the
     # refit never vacuums; vacuum is a separate explicit step)
     cutover_generation(
         spark, SF_DIR, pointer, "w16", with_pq=True, nprobe=2
     )
-    assert read_generation_nprobe(pointer) == 2
+    assert read_pointer(pointer).serving_nprobe == 2
 
 
 def test_serving_probe_honors_pointer_nprobe(spark, fitted_pq_gen):
@@ -210,7 +214,7 @@ def test_escalated_pq_refit_rekeys_codes(spark, tmp_path):
     q3 = (mid + hi) // 2
     pointer = str(tmp_path / "ptr")
 
-    base_a, coarse_a, fine_a, mem_a = _index_tables(spark, SF_DIR, "w16e")
+    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "w16e")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
@@ -220,7 +224,7 @@ def test_escalated_pq_refit_rekeys_codes(spark, tmp_path):
         fine_a,
         mem_a,
     )
-    codes_a, pqcb_a = _pq_tables(spark, SF_DIR, "w16e")
+    codes_a, pqcb_a = generation_layout(SF_DIR, "w16e").tables[3:5]
     _persist_pq_codes(spark, mem_a, base_a, codes_a, pqcb_a)
     cutover_generation(
         spark, SF_DIR, pointer, "w16e", with_pq=True, cap=_CAP
@@ -231,18 +235,18 @@ def test_escalated_pq_refit_rekeys_codes(spark, tmp_path):
     _admit_batch(
         spark, batch, coarse_a, fine_a, mem_a,
         codes_tbl=codes_a, pqcb_tbl=pqcb_a,
-        cap=read_generation_cap(pointer),
+        cap=read_pointer(pointer).cap,
     )
 
     old = refit_and_cutover(
         spark, SF_DIR, pointer, "w16f", cap=_ESCALATED_CAP
     )
     assert old == "w16e"
-    assert read_generation_cap(pointer) == _ESCALATED_CAP
-    assert "pq" in read_generation_flags(pointer)
+    assert read_pointer(pointer).cap == _ESCALATED_CAP
+    assert read_pointer(pointer).pq
 
-    _, _, mem_b = _generation_names(SF_DIR, "w16f")
-    codes_b, pqcb_b = _pq_generation_names(SF_DIR, "w16f")
+    mem_b = generation_layout(SF_DIR, "w16f").members
+    codes_b, pqcb_b = generation_layout(SF_DIR, "w16f").tables[3:5]
     mem = spark.table(mem_b)
     # <= cap bound at the escalated cap, and genuinely larger cells
     # than the base cap could hold (the re-chunk actually happened)
@@ -260,7 +264,7 @@ def test_escalated_pq_refit_rekeys_codes(spark, tmp_path):
     # even though every (cell, sub) key differs
     pcb_escalated = _rows(spark.table(pqcb_b))
     refit_and_cutover(spark, SF_DIR, pointer, "w16g", cap=_CAP)
-    _, pqcb_g = _pq_generation_names(SF_DIR, "w16g")
+    _, pqcb_g = generation_layout(SF_DIR, "w16g").tables[3:5]
     assert _rows(spark.table(pqcb_g)) == pcb_escalated
     cutover_generation(  # point back at the escalated generation
         spark, SF_DIR, pointer, "w16f", with_pq=True, cap=_ESCALATED_CAP
@@ -286,7 +290,7 @@ def test_admission_probe_serves_pointer_nprobe(spark, tmp_path):
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     q3 = (mid + hi) // 2
-    base, coarse, fine, mem = _index_tables(spark, SF_DIR, "w16s")
+    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "w16s")[:4]
     _persist_two_level(
         spark,
         emb.filter(F.col("vec_id") <= F.lit(mid)),
