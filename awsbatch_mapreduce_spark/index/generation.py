@@ -22,9 +22,9 @@ is stored:
   (deletion), and the crash-safe sibling swap every in-place rewrite of
   an index table goes through.
 
-The fit itself (``plans/wave11.build_generation``), refit and probes
-live with the codebook; they reach the storage only through this
-module.  Reference parity: the reference swaps its whole output prefix
+The fit itself (``plans/wave11.build_generation``) and the refit live
+with the codebook queries, the probes in ``index/probe.py``; they reach
+the storage only through this module.  Reference parity: the reference swaps its whole output prefix
 per run (`Implementation.cs:45-47` re-uploads jobData.json) rather than
 patching in place — the pointer is that swap applied to the index.
 """

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 FEATURE_SCHEMA = (
@@ -201,9 +202,7 @@ def visual_near_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
     # MapInPandas (perceptual_hash), whose size estimate Catalyst
     # cannot trust — the exact class that OOM'd the r5 sf1 rehearsal on
     # dedup_minhash_lsh.  Pin them off the broadcast path (VERDICT r6
-    # #2); same doctrine as plans/hints.py on the text-dedup ladders.
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-
+    # #2); same doctrine as operators/hints.py on the text-dedup ladders.
     a = never_broadcast(
         hashed.select(
             F.col("doc_id").alias("doc_a"),

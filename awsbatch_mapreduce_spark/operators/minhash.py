@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
+
 _N_HASHES = 8  # minhash signature length
 _N_BANDS = 4  # LSH bands (rows-per-band = 2)
 
@@ -141,10 +143,6 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     (``never_broadcast``): an AQE size misestimate must not upgrade it
     to a driver-built broadcast, the OOM the sf1 rehearsal hit
     (SCALING.md round 6)."""
-    # function-level: importing plans runs the registry, whose modules
-    # import this one
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-
     a = bands.alias("a")
     b = never_broadcast(bands.alias("b"))
     return a.join(
@@ -165,8 +163,6 @@ def shared_shingles(cand: DataFrame, sh: DataFrame) -> DataFrame:
     ``id_b``) plus ``n_common``, the number of shingles the two docs
     share — ``_VERIFY_SQL``.  Pairs sharing none drop out.  Every side
     is O(corpus) and pinned to sort-merge, like ``candidate_pairs``."""
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-
     sha = never_broadcast(sh.alias("sa"))
     shb = never_broadcast(sh.alias("sb"))
     return (

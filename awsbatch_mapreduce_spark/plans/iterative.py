@@ -23,47 +23,18 @@ in ``tests/test_oracle_parity.py``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.index.codebook import (
+    _DSCALE,
+    _VSCALE,
+    _assign_literal,
+    _quantize,
+)
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
-
-_VSCALE = 1000000.0  # embedding components quantize at 1e-6
-_DSCALE = 1000000000000.0  # squared distances quantize at 1e-12
-
-
-def _quantize(col: Column) -> Column:
-    """array<float> -> array<bigint> fixed-point at 1e-6 (exact int
-    sums downstream; |v| <= ~2 here so no overflow anywhere)."""
-    return F.transform(
-        col,
-        lambda v: F.floor(v.cast("double") * F.lit(_VSCALE) + F.lit(0.5)).cast(
-            "bigint"
-        ),
-    )
-
-
-def _sq_dist_fp(vq: Column, c: Column) -> Column:
-    """Squared distance between a quantized vector and a double
-    centroid, itself quantized to a 1e-12 int per dimension BEFORE the
-    sum — integer addition is associative, so the fold order (Spark:
-    array order; DuckDB: SUM over unnested rows) cannot matter."""
-    return F.aggregate(
-        F.zip_with(
-            vq,
-            c,
-            lambda x, y: F.floor(
-                (x / F.lit(_VSCALE) - y)
-                * (x / F.lit(_VSCALE) - y)
-                * F.lit(_DSCALE)
-                + F.lit(0.5)
-            ).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
 
 
 def _centroids_of(assigned: DataFrame) -> DataFrame:
@@ -168,12 +139,9 @@ def kmeans_fit(
       bounded exchange, so AQE contributes nothing here while charging
       one extra driver job + re-plan per stage per iteration (measured:
       54 jobs for the 10 collects of a two-fit lifecycle with AQE on,
-      10 with it off).  Set ``SPARK_GRAFT_FIT_AQE=1`` to keep AQE on
-      inside the fit; the shuffle partitioning still derives from the
-      session conf either way.
+      10 with it off).  The shuffle partitioning still derives from the
+      session conf.
     """
-    import os as _os
-
     q = (
         corpus.select("vec_id", "vq")
         if quantized
@@ -185,10 +153,8 @@ def kmeans_fit(
     cell_type = k_init.schema["cell"].dataType
     assigned_prev = None
     inertia_trace: list[float] = []
-    _fit_aqe = _os.environ.get("SPARK_GRAFT_FIT_AQE") == "1"
     _old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if not _fit_aqe:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         # the init codebook is bounded (k x dim — it was always either
         # broadcast or a driver literal), so ONE collect brings it into
@@ -246,148 +212,8 @@ def kmeans_fit(
                 ]
             assigned_prev = assigned
     finally:
-        if not _fit_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", _old_aqe)
+        spark.conf.set("spark.sql.adaptive.enabled", _old_aqe)
     return assigned_prev, inertia_trace
-
-
-def _assign_literal(
-    q: DataFrame, cells: list, cents: list, cell_type
-) -> DataFrame:
-    """One Lloyd ASSIGN step against a DRIVER-LITERAL codebook:
-    quantized corpus (vec_id, vq) -> (vec_id, vq, cell, d_fp), where
-    ``d_fp`` is the ``_sq_dist_fp`` integer squared distance to the
-    nearest centroid and ties go to the lowest cell — the
-    (d_fp, cell)-lexicographic argmin the oracle twins compute (the
-    ``d{i}``/``a{i}`` CTEs of ``_kmeans_cte`` and wave 10's ``an``).
-    Computed per row with higher-order functions over the literal
-    instead of a broadcast crossJoin + aggregate.  ``cells``/``cents``
-    MUST be sorted by cell ascending: ``array_position`` returns the
-    first minimum, which is then the lowest cell.  No exchange, no
-    broadcast build: the n x k distance work happens in the row's own
-    task and only the argmin row survives.
-
-    Precondition: ``q`` has unique ``vec_id``s.  The output is one row
-    per INPUT row; the crossJoin form's ``groupBy(vec_id)`` collapsed
-    duplicate ids, this form does not."""
-    if not cells:
-        # empty codebook (empty corpus): the crossJoin form produced an
-        # empty frame; keep that contract
-        return q.select(
-            "vec_id",
-            "vq",
-            F.lit(None).cast(cell_type).alias("cell"),
-            F.lit(None).cast("bigint").alias("d_fp"),
-        ).filter(F.lit(False))
-    ds = F.transform(
-        _codebook_literal(cents), lambda c: _sq_dist_fp(F.col("vq"), c)
-    )
-    cells_lit = F.expr(
-        "array(" + ",".join(str(int(c)) for c in cells) + ")"
-    )
-    best_d = F.array_min(ds)
-    idx = F.array_position(ds, best_d).cast("int")
-    return q.select(
-        "vec_id",
-        "vq",
-        F.element_at(cells_lit, idx).cast(cell_type).alias("cell"),
-        best_d.alias("d_fp"),
-    )
-
-
-def _codebook_literal(cents: list) -> Column:
-    """k x dim driver-side centroid lists -> ONE array<array<double>>
-    literal Column, as a JSON string literal + ``from_json``.  Form
-    matters for driver overhead, not semantics (round 19, measured):
-    ``F.lit(nested_list)`` costs one py4j round-trip per element
-    (~450 ms per iteration at k x dim = 512), and a parsed
-    ``array(array(..))`` expression is a k x dim-node tree that every
-    analyzer/optimizer pass re-walks per Dataset op (~70-140 ms per
-    select at this size; a two-fit lifecycle measured ~7 s slower on
-    that form) — while the JSON literal is a 2-node tree the optimizer
-    constant-folds once per query, and per-row access through the
-    folded array measured no slower than the parsed form once JIT-warm
-    (0.21 s vs 0.73 s per million element_at+fold rows).  Exactness:
-    ``json.dumps`` emits Python's shortest-round-trip float digits and
-    Jackson parses them with ``Double.parseDouble`` semantics, so the
-    folded codebook is bit-identical to the collected doubles."""
-    import json
-
-    return F.from_json(F.lit(json.dumps(cents)), "array<array<double>>")
-
-
-def _collect_codebook(codebook: DataFrame) -> tuple[list, list]:
-    """Bounded (cell, centroid) frame -> sorted driver-side
-    (cells, cents) lists for :func:`_assign_literal` /
-    :func:`assign_to_cells_collected`.  One tiny collect job — the
-    codebook was always broadcast-sized by contract (k0 rows)."""
-    rows = sorted(codebook.collect(), key=lambda r: r["cell"])
-    return [r["cell"] for r in rows], [list(r["centroid"]) for r in rows]
-
-
-def assign_to_cells_collected(q: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Assign a quantized batch (vec_id, vq) to a BOUNDED (cell,
-    centroid) codebook: the codebook is collected to the driver and
-    applied as a literal expression (round 19) — the
-    (vec_id, vq, cell, d_fp) integer argmin of :func:`_assign_literal`,
-    with the batch side crossing NO exchange (the pre-r19 broadcast
-    crossJoin + groupBy(vec_id) form shuffled one row per batch vector
-    just to collapse its own k candidates, plus one broadcast-build job
-    per probe).  The collect happens at plan-
-    build time (one k0-row job — the codebook was always driver/
-    executor-resident by contract; the never-broadcast pins cover the
-    data-scaled sides, not this frame).  Precondition: ``q`` has unique
-    ``vec_id``s (see :func:`_assign_literal`)."""
-    cells, cents = _collect_codebook(codebook)
-    return _assign_literal(q, cells, cents, codebook.schema["cell"].dataType)
-
-
-def assign_topk_cells_collected(
-    q: DataFrame, codebook: DataFrame, nprobe: int
-) -> DataFrame:
-    """Rank-``nprobe`` coarse assignment against a collected bounded
-    codebook: (vec_id, vq) -> (vec_id, vq, cell, rnk) with rnk =
-    1..nprobe by ascending (d_fp, cell) — exactly the iterated
-    "struct-min with ranks 1..r-1 excluded" program of
-    ``wave13._assign_fine_multi`` (each cell appears once, so the r-th
-    lexicographic (d_fp, cell) element IS the r-th exclusion-round
-    winner), computed per row via array_sort + slice instead of nprobe
-    crossJoin/aggregate rounds — removing nprobe batch-sized exchanges
-    and nprobe-1 broadcast builds per probe."""
-    cells, cents = _collect_codebook(codebook)
-    cell_type = codebook.schema["cell"].dataType
-    if not cells:
-        return q.select(
-            "vec_id",
-            "vq",
-            F.lit(None).cast(cell_type).alias("cell"),
-            F.lit(None).cast("int").alias("rnk"),
-        ).filter(F.lit(False))
-    cells_lit = F.expr(
-        "array(" + ",".join(str(int(c)) for c in cells) + ")"
-    )
-    ds = F.transform(
-        _codebook_literal(cents), lambda c: _sq_dist_fp(F.col("vq"), c)
-    )
-    top = F.slice(
-        F.array_sort(
-            F.zip_with(
-                ds,
-                cells_lit,
-                lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    return q.select(
-        "vec_id", "vq", F.posexplode(top).alias("p", "s")
-    ).select(
-        "vec_id",
-        "vq",
-        F.col("s.c").cast(cell_type).alias("cell"),
-        (F.col("p") + 1).cast("int").alias("rnk"),
-    )
 
 
 def _kmeans_cte(
@@ -563,7 +389,7 @@ def dedup_canonical_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # off the broadcast path so an AQE runtime estimate can never
     # upgrade a corpus-scaled labels frame to a driver-built broadcast
     # (VERDICT r6 #2: the same latent class as the r5 rehearsal OOM).
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 
     for _ in range(8):  # covers chains up to 2^8 hops via doubling
         one_hop = edges.join(

@@ -29,7 +29,7 @@ from awsbatch_mapreduce_spark.operators.minhash import (
     shingles,
     signatures,
 )
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 

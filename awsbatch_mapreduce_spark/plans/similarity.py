@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from awsbatch_mapreduce_spark.functions.rounding import dround
 from pyspark.sql.window import Window
 
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.index.codebook import _codebook_literal
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -300,7 +301,7 @@ def _ivf_probe_topk(
     # consumers.  The bounded codebook is instead COLLECTED once (one
     # k-row job — it was always broadcast-sized) and applied as a
     # literal expression, exactly the kmeans-family discipline
-    # (iterative.assign_to_cells_collected): the cell ASSIGNMENT
+    # (index/codebook.assign_to_cells_collected): the cell ASSIGNMENT
     # becomes a pure per-row projection — no crossJoin, no broadcast
     # build, no n x k candidate rows, NO exchange at all — and the
     # PROBE side top-2 is an array_sort + slice over the same literal
@@ -312,8 +313,6 @@ def _ivf_probe_topk(
     # (s desc, cell asc) == first array_min of struct(-s, cell), and
     # the top-2 slice of the ascending (-s, cell) sort is the window's
     # rk <= 2 pair — negation of a finite double is exact.
-    from awsbatch_mapreduce_spark.plans.iterative import _codebook_literal
-
     rows = sorted(centroids.collect(), key=lambda r: r["label"])
     label_type = centroids.schema["label"].dataType
     cents_lit = _codebook_literal([list(r["centroid"]) for r in rows])

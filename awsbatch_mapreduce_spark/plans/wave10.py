@@ -46,19 +46,26 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.index.codebook import (
+    _quantize,
+    assign_to_cells_collected,
+)
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _SEMDEDUP_EPS_BP,
+    cos_bp,
+    dot,
+    norm2,
+)
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import (
     _centroids_of,
     _kmeans_cte,
-    _quantize,
-    assign_to_cells_collected,
     kmeans_fit,
     label_centroid_init,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave9 import (
-    _NO_PEER_BP,
-    _SEMDEDUP_EPS_BP,
     _semdedup_curve_oracle,
     _semdedup_sim,
     retention_curve_frame,
@@ -257,9 +264,7 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("seen_id"),
         F.col("cell").cast("int").alias("cell"),
         F.col("vq").alias("vq_s"),
-        F.aggregate(
-            "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
-        ).alias("nn_s"),
+        norm2("vq").alias("nn_s"),
     )
     # two generations, as the band index does: initial build (first
     # quarter of vec_ids) + a bucketed APPEND of the second quarter
@@ -297,27 +302,17 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("cell").cast("int").alias("cell"),
         "vq",
-        F.aggregate(
-            "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
-        ).alias("nn_n"),
+        norm2("vq").alias("nn_n"),
     )
     members = spark.table(mem_tbl)
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vq_s"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     hits = (
         assigned_new.join(never_broadcast(members), "cell")
         .filter((F.col("nn_n") > 0) & (F.col("nn_s") > 0))
         .select(
             "vec_id",
-            F.floor(
-                dot / (F.sqrt("nn_n") * F.sqrt("nn_s")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
+            cos_bp(dot(F.col("vq"), F.col("vq_s")), "nn_n", "nn_s").alias(
+                "cos_bp"
+            ),
         )
         .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
         .groupBy("vec_id")

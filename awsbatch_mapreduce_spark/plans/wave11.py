@@ -67,19 +67,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.index.codebook import _quantize, _VSCALE
 from awsbatch_mapreduce_spark.index.generation import fresh_layout
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _SEMDEDUP_EPS_BP,
+    norm2,
+    probe,
+)
 from awsbatch_mapreduce_spark.plans.iterative import (
     _kmeans_cte,
-    _quantize,
-    _sq_dist_fp,
-    _VSCALE,
-    assign_to_cells_collected,
     kmeans_fit,
     label_centroid_init,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # Hard per-fine-cell membership cap.  Production sizes this to the
@@ -286,7 +287,7 @@ def _build_probe(spark, sf_dir, kind, init_fn) -> DataFrame:
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _probe_batch(spark, new, lay.coarse, lay.fine, lay.members)
+    return probe(spark, new, lay.coarse, lay.fine, lay.members)
 
 
 def _persist_two_level(
@@ -329,9 +330,7 @@ def _persist_two_level(
         F.col("cell").cast("int").alias("cell"),
         F.floor((F.col("rn") - 1) / F.lit(cap)).cast("int").alias("sub"),
         F.col("vq").alias("vq_s"),
-        F.aggregate(
-            "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
-        ).alias("nn_s"),
+        norm2("vq").alias("nn_s"),
     )
     # Overlap the independent build actions (guide §2.6 "overlap
     # independent jobs"): the lifecycle's wall is driver-serial job
@@ -402,101 +401,6 @@ def build_generation(
 
         _persist_pq_codes(spark, lay.members, lay.base, lay.codes, lay.pqcb)
     return lay
-
-
-def _assign_fine(spark, new, coarse_tbl, fine_tbl) -> DataFrame:
-    """The probe's ASSIGNMENT half: coarse assign (broadcast k0-row
-    codebook — bounded) then fine argmin as a struct-min AGGREGATE (the
-    argmin-as-aggregate discipline, found at this query's own 100x
-    ladder):
-    the |batch| x subs-per-cell candidate rows collapse map-side in the
-    same stage as the sort-merge join that produced them — a row_number
-    window here exchanged every candidate WITH its 64-int vq array
-    (~30 GB at 100x, straggler-stalled), twice (the probe frame has two
-    consumers).  Returns (vec_id, cell, sub, vq, nn_n).  Extracted from
-    ``_probe_batch`` in round 15 so the PQ re-rank probe (wave 14)
-    shares the identical assignment plan."""
-    coarse_new = assign_to_cells_collected(
-        new, spark.table(coarse_tbl)
-    ).select("vec_id", "vq", F.col("cell").cast("int").alias("cell"))
-    return (
-        coarse_new.join(never_broadcast(spark.table(fine_tbl)), "cell")
-        .select(
-            "vec_id",
-            "vq",
-            "cell",
-            "sub",
-            _sq_dist_fp(F.col("vq"), F.col("centroid")).alias("d_fp"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.first("vq").alias("vq"),
-            F.first("cell").alias("cell"),  # coarse cell: constant per vec
-            F.min(F.struct(F.col("d_fp"), F.col("sub"))).alias("b"),
-        )
-        .select(
-            "vec_id",
-            "cell",
-            F.col("b.sub").alias("sub"),
-            "vq",
-            F.aggregate(
-                "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
-            ).alias("nn_n"),
-        )
-    )
-
-
-def _probe_batch(spark, new, coarse_tbl, fine_tbl, mem_tbl) -> DataFrame:
-    """PROBE phase (per batch): coarse assign (broadcast k0-row
-    codebook — bounded), fine assign (sort-merge vs the GROWING fine
-    codebook), exact cosine against <= cap members of the assigned
-    fine cell only.  ``new`` is the (vec_id, vq) quantized batch."""
-    assigned_new = _assign_fine(spark, new, coarse_tbl, fine_tbl)
-    members = spark.table(mem_tbl)
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vq_s"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    hits = (
-        assigned_new.join(never_broadcast(members), ["cell", "sub"])
-        .filter((F.col("nn_n") > 0) & (F.col("nn_s") > 0))
-        .select(
-            "vec_id",
-            F.floor(
-                dot / (F.sqrt("nn_n") * F.sqrt("nn_s")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_seen_dups"),
-            F.max("cos_bp").alias("max_cos_bp"),
-        )
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        assigned_new.select("vec_id", "cell", "sub")
-        .join(never_broadcast(hits), "vec_id", "left")
-        .select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            "cell",
-            "sub",
-            F.coalesce("n_seen_dups", F.lit(0))
-            .cast("bigint")
-            .alias("n_seen_dups"),
-            F.coalesce("max_cos_bp", F.lit(_NO_PEER_BP))
-            .cast("bigint")
-            .alias("max_cos_bp"),
-            F.when(F.col("hit").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("is_novel"),
-        )
-    )
 
 
 @query("semdedup_codebook_capacity", oracle=_CODEBOOK_CAPACITY_ORACLE, wave=11)

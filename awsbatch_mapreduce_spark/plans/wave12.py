@@ -54,18 +54,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-from awsbatch_mapreduce_spark.plans.iterative import (
-    _kmeans_cte,
+from awsbatch_mapreduce_spark.index.codebook import (
     _quantize,
     assign_to_cells_collected,
 )
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _SEMDEDUP_EPS_BP,
+    norm2,
+    probe,
+)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
     _K0_SQL,
-    _probe_batch,
     _SEEN_SRC,
     _SPLIT_CTES,
     _sub_centroids,
@@ -227,7 +230,7 @@ def semdedup_codebook_adaptive_append(
        bound holds for the GROWN members table by construction
        (test-pinned).
     3. PROBE (per batch): today's batch probes the GROWN index through
-       the shared two-level ``_probe_batch`` — coarse broadcast
+       the shared two-level ``index.probe.probe`` — coarse broadcast
        assign, fine sort-merge assign, exact cosine against <= {cap}
        members of the assigned fine cell.
 
@@ -263,10 +266,10 @@ def semdedup_codebook_adaptive_append(
 
     # PROBE today's batch against the grown index — the shared wave-11
     # two-level probe, reading the appended generations transparently.
-    probe = emb.filter(F.col("vec_id") > F.lit(q3)).select(
+    today = emb.filter(F.col("vec_id") > F.lit(q3)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _probe_batch(spark, probe, coarse_tbl, fine_tbl, mem_tbl)
+    return probe(spark, today, coarse_tbl, fine_tbl, mem_tbl)
 
 
 def _admit_batch(
@@ -325,9 +328,7 @@ def _admit_batch(
             .cast("int")
             .alias("sub"),
             F.col("vq").alias("vq_s"),
-            F.aggregate(
-                "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
-            ).alias("nn_s"),
+            norm2("vq").alias("nn_s"),
         )
         # materialize BEFORE the appends: the sub offset reads the
         # members table this step is about to grow, and the frame has

@@ -30,7 +30,7 @@ Lifecycle under test, end to end over the vec_id quarters
    parquet).  The quantized Lloyd path iterates on integers identical
    to a from-scratch fit's — proof below.
 4. PROBE today's batch against the REFITTED index (shared
-   ``wave11._probe_batch``).
+   ``index.probe.probe``).
 
 Equivalence proof (a): the ORACLE is the from-scratch adaptive program
 over the grown corpus — the identical unrolled Lloyd chain
@@ -67,29 +67,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     cutover_generation,
     fresh_layout,
     generation_layout,
-    live_view,
     read_pointer,
 )
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-from awsbatch_mapreduce_spark.plans.iterative import (
-    _kmeans_cte,
-    _quantize,
-    _sq_dist_fp,
-    assign_topk_cells_collected,
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _SEMDEDUP_EPS_BP,
+    probe,
+    probe_stats,
+    score_recall,
+    truth_totals,
 )
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
     _K0_SQL,
     _MID_BOUNDARY,
     _mod_centroid_init,
     _persist_two_level,
-    _probe_batch,
     _probe_ctes,
     _SEEN_SRC,
     _SPLIT_CTES,
@@ -220,10 +220,10 @@ def semdedup_codebook_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 4. PROBE today's batch against the refitted index.
-    probe = emb.filter(F.col("vec_id") > F.lit(q3)).select(
+    today = emb.filter(F.col("vec_id") > F.lit(q3)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _probe_batch(spark, probe, gen_r.coarse, gen_r.fine, gen_r.members)
+    return probe(spark, today, gen_r.coarse, gen_r.fine, gen_r.members)
 
 
 # ---------------------------------------------------------------------------
@@ -328,148 +328,6 @@ _MULTIPROBE_ORACLE = (
 )
 
 
-def _assign_fine_multi(
-    spark: SparkSession,
-    new,
-    coarse_tbl: str,
-    fine_tbl: str,
-    nprobe: int,
-) -> DataFrame:
-    """The multiprobe ASSIGNMENT half, extracted from
-    ``_multiprobe_batch`` in round 17 so the ADC path
-    (``wave14._pq_rerank_probe``) shares the identical rank-k plan:
-    coarse-assign each (vec_id, vq) batch vector to its ``nprobe``
-    nearest coarse cells (rank r = the r-th struct-min aggregate over
-    the broadcast k0 book with ranks 1..r-1 excluded — zero extra
-    exchange, see ``_multiprobe_batch``), then fine-argmin per
-    (vec_id, rank).  Returns (vec_id, rnk, cell, sub, vq, nn_n) —
-    ``_assign_fine``'s shape keyed one level wider."""
-    # Rank-k coarse assignment as ONE literal-codebook expression
-    # (round 19, guide §2.4): the r-th "struct-min with ranks 1..r-1
-    # excluded" winner IS the r-th element of the per-row (d_fp, cell)
-    # lexicographic sort (cells are distinct), so array_sort + slice
-    # over the collected bounded book replaces nprobe crossJoin/
-    # aggregate rounds — nprobe batch-sized exchanges and nprobe-1
-    # broadcast builds gone, identical (vec_id, rnk, cell) output.
-    probes = assign_topk_cells_collected(
-        new, spark.table(coarse_tbl), nprobe
-    ).select(
-        "vec_id", "vq", F.col("cell").cast("int").alias("cell"), "rnk"
-    )
-    # fine argmin per (vec_id, rank) — the same struct-min aggregate as
-    # the single-probe plan, keyed one level wider
-    return (
-        probes.join(never_broadcast(spark.table(fine_tbl)), "cell")
-        .select(
-            "vec_id",
-            "rnk",
-            "vq",
-            "cell",
-            "sub",
-            _sq_dist_fp(F.col("vq"), F.col("centroid")).alias("d_fp"),
-        )
-        .groupBy("vec_id", "rnk")
-        .agg(
-            F.first("vq").alias("vq"),
-            F.first("cell").alias("cell"),  # constant per (vec, rank)
-            F.min(F.struct(F.col("d_fp"), F.col("sub"))).alias("b"),
-        )
-        .select(
-            "vec_id",
-            "rnk",
-            "cell",
-            F.col("b.sub").alias("sub"),
-            "vq",
-            F.aggregate(
-                "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
-            ).alias("nn_n"),
-        )
-    )
-
-
-def _multiprobe_batch(
-    spark: SparkSession,
-    new,
-    coarse_tbl: str,
-    fine_tbl: str,
-    mem_tbl: str,
-    nprobe: int = _NPROBE,
-) -> DataFrame:
-    """nprobe=k PROBE over a fitted two-level index: coarse-assign each
-    batch vector to its k nearest coarse cells, fine-argmin within
-    each, exact membership cosine against the union of the (up to) k
-    fine cells' <= cap members, report dup stats over the union with
-    the PRIMARY (rank-1) cell/sub.  Generalized from the fixed
-    nprobe=2 of round 14 (VERDICT r14 #2) — the registered
-    ``semdedup_codebook_multiprobe`` keeps ``_NPROBE`` (2); the
-    wave-14 recall/cost sweep probes 1/2/4.
-
-    Scale shape matches ``wave11._probe_batch``: rank r is the r-th
-    struct-min aggregate over a re-evaluation of the bounded k0 coarse
-    distances with the ranks-(1..r-1) cells excluded (r x the
-    broadcast-side compute, ZERO extra exchange, one row per vector
-    crossing each aggregate) — not a row_number window over the
-    |batch| x k0 candidate blow-up, the exchange the
-    argmin-as-aggregate discipline exists to avoid.  Ties match the
-    oracle's ROW_NUMBER(ORDER BY dfp, cell): each struct-min takes the
-    lexicographically smallest (d_fp, cell) of the remaining cells.
-    The growing fine book and members sides stay
-    `never_broadcast`-pinned sort-merge joins reading their bucket
-    specs.  With fewer than nprobe coarse cells the exclusion filter
-    empties and the higher ranks contribute no rows — matching the
-    oracle's rnk <= nprobe."""
-    assigned = _assign_fine_multi(spark, new, coarse_tbl, fine_tbl, nprobe)
-    members = spark.table(mem_tbl)
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vq_s"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    # membership cosines over the UNION of the probed fine cells: a
-    # seen vector lives in exactly one (cell, sub), and the two probed
-    # cells differ by construction, so no pair is counted twice
-    hits = (
-        assigned.join(never_broadcast(members), ["cell", "sub"])
-        .filter((F.col("nn_n") > 0) & (F.col("nn_s") > 0))
-        .select(
-            "vec_id",
-            F.floor(
-                dot / (F.sqrt("nn_n") * F.sqrt("nn_s")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_seen_dups"),
-            F.max("cos_bp").alias("max_cos_bp"),
-        )
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        assigned.filter(F.col("rnk") == 1)
-        .select("vec_id", "cell", "sub")
-        .join(never_broadcast(hits), "vec_id", "left")
-        .select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            "cell",
-            "sub",
-            F.coalesce("n_seen_dups", F.lit(0))
-            .cast("bigint")
-            .alias("n_seen_dups"),
-            F.coalesce("max_cos_bp", F.lit(_NO_PEER_BP))
-            .cast("bigint")
-            .alias("max_cos_bp"),
-            F.when(F.col("hit").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("is_novel"),
-        )
-    )
-
-
 @query("semdedup_codebook_multiprobe", oracle=_MULTIPROBE_ORACLE, wave=13)
 def semdedup_codebook_multiprobe(
     spark: SparkSession, sf_dir: str
@@ -507,7 +365,9 @@ def semdedup_codebook_multiprobe(
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _multiprobe_batch(spark, new, lay.coarse, lay.fine, lay.members)
+    return probe(
+        spark, new, lay.coarse, lay.fine, lay.members, nprobe=_NPROBE
+    )
 
 
 semdedup_codebook_multiprobe.__doc__ = (
@@ -644,15 +504,6 @@ _RECALL_EVAL_ORACLE = (
 )
 
 
-def _probe_stats(res: DataFrame, variant: str) -> DataFrame:
-    """(vec_id, ..., n_seen_dups, is_novel) probe rows -> one stats row
-    (variant, n_detected_vecs, n_detected_pairs)."""
-    return res.agg(
-        F.sum(F.lit(1) - F.col("is_novel")).cast("bigint").alias("dv"),
-        F.sum("n_seen_dups").cast("bigint").alias("dp"),
-    ).select(F.lit(variant).alias("variant"), "dv", "dp")
-
-
 @query("semdedup_codebook_recall_eval", oracle=_RECALL_EVAL_ORACLE, wave=13)
 def semdedup_codebook_recall_eval(
     spark: SparkSession, sf_dir: str
@@ -689,68 +540,21 @@ def semdedup_codebook_recall_eval(
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
 
     # brute-force truth: bounded panel broadcast against the seen half
-    seen_q = seen.select(
-        F.col("vec_id").alias("sid"),
-        _quantize(F.col("embedding")).alias("vqs"),
-    ).withColumn(
-        "nns",
-        F.aggregate("vqs", F.lit(0).cast("bigint"), lambda a, v: a + v * v),
+    truth = truth_totals(
+        seen.select(_quantize(F.col("embedding")).alias("vqs")), panel
     )
-    pnl = panel.withColumn(
-        "nnn",
-        F.aggregate("vq", F.lit(0).cast("bigint"), lambda a, v: a + v * v),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vqs"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda a, v: a + v,
-    )
-    truth_tot = (
-        seen_q.crossJoin(F.broadcast(pnl))
-        .filter((F.col("nnn") > 0) & (F.col("nns") > 0))
-        .select(
-            F.floor(
-                dot / (F.sqrt("nnn") * F.sqrt("nns")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
-            "vec_id",
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("tv"),
-            F.coalesce(F.sum("c"), F.lit(0)).cast("bigint").alias("tp"),
-        )
-    )
-
-    stats = _probe_stats(
-        _probe_batch(spark, panel, coarse_tbl, fine_tbl, mem_tbl), "nprobe1"
+    stats = probe_stats(
+        probe(spark, panel, coarse_tbl, fine_tbl, mem_tbl),
+        F.lit("nprobe1").alias("variant"),
     ).unionByName(
-        _probe_stats(
-            _multiprobe_batch(spark, panel, coarse_tbl, fine_tbl, mem_tbl),
-            "nprobe2",
+        probe_stats(
+            probe(
+                spark, panel, coarse_tbl, fine_tbl, mem_tbl, nprobe=_NPROBE
+            ),
+            F.lit("nprobe2").alias("variant"),
         )
     )
-    return stats.crossJoin(F.broadcast(truth_tot)).select(
-        "variant",
-        F.col("tv").alias("n_truth_vecs"),
-        F.col("tp").alias("n_truth_pairs"),
-        F.col("dv").alias("n_detected_vecs"),
-        F.col("dp").alias("n_detected_pairs"),
-        # zero-guarded on BOTH sides (ADVICE r14): a degenerate panel
-        # with no true duplicates must yield recall 0, not NULL/error
-        F.expr(
-            "CAST(CASE WHEN tv = 0 THEN 0 ELSE dv * 10000 div tv END"
-            " AS BIGINT)"
-        ).alias("vec_recall_bp"),
-        F.expr(
-            "CAST(CASE WHEN tp = 0 THEN 0 ELSE dp * 10000 div tp END"
-            " AS BIGINT)"
-        ).alias("pair_recall_bp"),
-    )
+    return score_recall(stats, truth, "variant")
 
 
 semdedup_codebook_recall_eval.__doc__ = (
@@ -934,71 +738,3 @@ def refit_and_cutover(
         )
         _refuse(n_after, n_t_after)
     return current
-
-
-def probe_current_generation(
-    spark, sf_dir: str, pointer_path: str, new, adc: bool = False
-) -> DataFrame:
-    """Probe a quantized (vec_id, vq) batch against whatever generation
-    the pointer names — the reader-side half of the cutover contract.
-    The pointer is resolved ONCE, at plan-build time, so one probe
-    never mixes generations even if a cutover lands mid-execution (the
-    old generation's tables are immutable until vacuumed).
-
-    ``adc=True`` (round 16) serves the IVFPQ two-stage path instead —
-    ADC over the generation's bucketed CODES table, exact cosine on the
-    top-rerank survivors only — and REFUSES loudly when the pointer
-    does not carry the ``pq`` flag: a generation without codes must
-    never silently fall back to the full-vector membership join an ADC
-    reader chose this path to avoid.
-
-    The SERVING probe width is the pointer's ``nprobe=N`` token (round
-    17, VERDICT r16 #1): both paths honor it — full-vector via the
-    rank-k multiprobe program, ADC via its multiprobe generalization —
-    so the recall actuator's ``set_generation_nprobe`` step changes
-    what production serves, not just what the QA snapshot measures.
-    Probe cost ~x nprobe on the broadcast-side coarse compute, zero
-    extra exchange (the wave-14 sweep's measured price)."""
-    # ONE pointer snapshot (ADVICE r16): kind, flags, and the serving
-    # nprobe must come from the same atomic file read, or a cutover
-    # landing between two opens pairs one generation's kind with
-    # another's flags
-    rec = read_pointer(pointer_path)
-    kind = rec.kind
-    if kind is None:
-        raise RuntimeError(
-            f"no current generation under {pointer_path!r}: run a fit"
-            " and cut over before probing"
-        )
-    nprobe = rec.serving_nprobe
-    lay = generation_layout(sf_dir, kind)
-    coarse_tbl, fine_tbl = lay.coarse, lay.fine
-    # DELETION reaches every serving path (round 18, VERDICT r17 #2):
-    # when the generation carries tombstones, the probes read the LIVE
-    # members (and codes) view — members minus the tombstone set, a
-    # broadcast anti-join bounded by deletion volume that preserves
-    # the big side's bucket distribution (zero new exchange)
-    mem_tbl = live_view(
-        spark, lay.members, lay.tombs, pointer_path=pointer_path
-    )
-    if not adc:
-        if nprobe == 1:
-            return _probe_batch(spark, new, coarse_tbl, fine_tbl, mem_tbl)
-        return _multiprobe_batch(
-            spark, new, coarse_tbl, fine_tbl, mem_tbl, nprobe=nprobe
-        )
-    if not rec.pq:
-        raise RuntimeError(
-            f"ADC probe refused: generation {kind!r} under"
-            f" {pointer_path!r} carries no 'pq' flag — fit or refit it"
-            " with with_pq=True before serving ADC readers"
-        )
-    from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_probe
-
-    codes_tbl = live_view(
-        spark, lay.codes, lay.tombs, pointer_path=pointer_path
-    )
-    return _pq_rerank_probe(
-        spark, new, coarse_tbl, fine_tbl, mem_tbl, codes_tbl, lay.pqcb,
-        nprobe=nprobe,
-    )

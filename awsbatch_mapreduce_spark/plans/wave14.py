@@ -9,7 +9,7 @@ gaps the judge named:
   was analytical, not measured.  ``codebook_recall_sweep_cap{16,64,512}``
   measure it: each fits ONE adaptive two-level index at its cap over
   the seen half, probes an md5-sampled panel at nprobe in {1, 2, 4}
-  (the generalized ``wave13._multiprobe_batch``), and scores every
+  (the probe operator, ``index.probe.probe``), and scores every
   variant against the exact integer-cosine truth — 3 caps x 3 nprobes
   = the 9-point recall surface an operator tunes from, each cap's
   3-row slice oracle-gated end to end (the DuckDB twin re-runs the
@@ -58,15 +58,28 @@ from awsbatch_mapreduce_spark.index.generation import (
     fresh_pointer,
     vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
+from awsbatch_mapreduce_spark.index.codebook import (
+    _PQ_K,
+    _PQ_SUB,
+    _quantize,
+    _vq4,
+)
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _PQ_RERANK,
+    _SEMDEDUP_EPS_BP,
+    probe,
+    probe_current_generation,
+    probe_stats,
+    score_recall,
+    truth_totals,
+)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _assign_fine,
     _K0_SQL,
     _k0_sql,
     _MID_BOUNDARY,
-    _probe_batch,
     _SEEN_SRC,
     _SPLIT_CTES,
     _split_ctes,
@@ -74,9 +87,7 @@ from awsbatch_mapreduce_spark.plans.wave11 import (
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
 from awsbatch_mapreduce_spark.plans.wave13 import (
-    _multiprobe_batch,
     _REFIT_ORACLE,
-    probe_current_generation,
     refit_and_cutover,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -223,56 +234,6 @@ def _md5_panel(emb: DataFrame, mid: int) -> DataFrame:
     )
 
 
-def _truth_totals(seen: DataFrame, panel: DataFrame) -> DataFrame:
-    """Brute-force truth totals (tv, tp) for a bounded quantized panel
-    against the seen half — the ``semdedup_codebook_recall_eval`` truth
-    pass, shared by the sweep variants."""
-    seen_q = seen.select(
-        F.col("vec_id").alias("sid"),
-        _quantize(F.col("embedding")).alias("vqs"),
-    ).withColumn(
-        "nns",
-        F.aggregate("vqs", F.lit(0).cast("bigint"), lambda a, v: a + v * v),
-    )
-    pnl = panel.withColumn(
-        "nnn",
-        F.aggregate("vq", F.lit(0).cast("bigint"), lambda a, v: a + v * v),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vqs"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda a, v: a + v,
-    )
-    return (
-        seen_q.crossJoin(F.broadcast(pnl))
-        .filter((F.col("nnn") > 0) & (F.col("nns") > 0))
-        .select(
-            F.floor(
-                dot / (F.sqrt("nnn") * F.sqrt("nns")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
-            "vec_id",
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("tv"),
-            F.coalesce(F.sum("c"), F.lit(0)).cast("bigint").alias("tp"),
-        )
-    )
-
-
-def _np_stats(res: DataFrame, nprobe: int) -> DataFrame:
-    """Probe rows -> one (nprobe, dv, dp) stats row."""
-    return res.agg(
-        F.sum(F.lit(1) - F.col("is_novel")).cast("bigint").alias("dv"),
-        F.sum("n_seen_dups").cast("bigint").alias("dp"),
-    ).select(F.lit(nprobe).cast("bigint").alias("nprobe"), "dv", "dp")
-
-
 def _recall_sweep(
     spark: SparkSession, sf_dir: str, cap: int, kind: str
 ) -> DataFrame:
@@ -288,30 +249,16 @@ def _recall_sweep(
     panel = _md5_panel(emb, mid)
     stats = None
     for np_ in _SWEEP_NPROBES:
-        res = (
-            _probe_batch(spark, panel, coarse_tbl, fine_tbl, mem_tbl)
-            if np_ == 1
-            else _multiprobe_batch(
-                spark, panel, coarse_tbl, fine_tbl, mem_tbl, nprobe=np_
-            )
+        row = probe_stats(
+            probe(spark, panel, coarse_tbl, fine_tbl, mem_tbl, nprobe=np_),
+            F.lit(np_).cast("bigint").alias("nprobe"),
         )
-        row = _np_stats(res, np_)
         stats = row if stats is None else stats.unionByName(row)
-    return stats.crossJoin(F.broadcast(_truth_totals(seen, panel))).select(
-        F.lit(cap).cast("bigint").alias("cap"),
-        "nprobe",
-        F.col("tv").alias("n_truth_vecs"),
-        F.col("tp").alias("n_truth_pairs"),
-        F.col("dv").alias("n_detected_vecs"),
-        F.col("dp").alias("n_detected_pairs"),
-        F.expr(
-            "CAST(CASE WHEN tv = 0 THEN 0 ELSE dv * 10000 div tv END"
-            " AS BIGINT)"
-        ).alias("vec_recall_bp"),
-        F.expr(
-            "CAST(CASE WHEN tp = 0 THEN 0 ELSE dp * 10000 div tp END"
-            " AS BIGINT)"
-        ).alias("pair_recall_bp"),
+    truth = truth_totals(
+        seen.select(_quantize(F.col("embedding")).alias("vqs")), panel
+    )
+    return score_recall(
+        stats, truth, F.lit(cap).cast("bigint").alias("cap"), "nprobe"
     )
 
 
@@ -372,10 +319,6 @@ codebook_recall_sweep_cap512 = _register_sweep(512, "sw512")
 # test-pinned against `semdedup_codebook_adaptive` (identical fit),
 # with the recall cost measured rather than asserted.
 # ---------------------------------------------------------------------------
-
-_PQ_SUB = 8  # dims per PQ subspace (64-dim fixture -> 8 subspaces)
-_PQ_K = 10  # codebook entries per subspace (seen_id % 10 residue means)
-_PQ_RERANK = 4  # ADC candidates re-ranked exactly, per probed vector
 
 # The assignment CTEs (qn/dn/an/dfine/afine) restate the single-probe
 # text of wave11._probe_ctes (same fragments the multiprobe oracle
@@ -500,14 +443,6 @@ _PQ_RERANK_ORACLE = (
 )
 
 
-def _vq4(col):
-    """1e6-quantized component -> the PQ 1e4 domain, by the shared
-    exact rule floor(vq/100 + 0.5) — derived from the index's own
-    quantized components, so the codes build never re-reads the raw
-    corpus (the refit-from-members self-containment property)."""
-    return F.floor(col / F.lit(100.0) + F.lit(0.5)).cast("bigint")
-
-
 def _encode_codes(members_like: DataFrame, pcb: DataFrame) -> DataFrame:
     """Encode (seen_id, cell, sub, vq_s) member rows against the
     bounded PQ codebook: per subspace, the argmin-distance codebook
@@ -608,150 +543,6 @@ def _persist_pq_codes(
         pqcb_f.result()
 
 
-def _pq_rerank_probe(
-    spark, new, coarse_tbl, fine_tbl, mem_tbl, codes_tbl, pqcb_tbl,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Two-stage PQ probe: the shared coarse+fine assignment, an ADC
-    pass over the assigned fine cell's CODES (<= cap * subspaces
-    one-int rows per probed vector — full vectors never enter this
-    join), then exact integer cosine against only the top-rerank ADC
-    candidates, fetched from the members table ON ITS (cell, sub)
-    BUCKET KEYS (a seen_id-keyed fetch would exchange the corpus-scale
-    members side per batch; the (cell, sub) join reads the bucket spec
-    and the equality filter selects the <= rerank survivors from the
-    <= cap joined members).  The PQ codebook is the PERSISTED bounded
-    table — the probe never recomputes it from the members.  Output
-    schema matches the probe family.
-
-    ``nprobe`` (round 17, VERDICT r16 #1): > 1 runs the ADC over the
-    UNION of the nprobe nearest coarse cells' assigned fine cells (the
-    shared ``wave13._assign_fine_multi`` rank-k assignment — the same
-    zero-extra-exchange struct-min plan as the full-vector multiprobe),
-    with the top-rerank cut and the exact verify unchanged over the
-    union and the PRIMARY (rank-1) cell/sub reported — exactly FAISS's
-    IVFPQ nprobe on this layout.  A seen member lives in exactly one
-    (cell, sub) and one vector's probed cells are distinct by
-    construction, so no candidate pair is counted twice."""
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
-    from awsbatch_mapreduce_spark.plans.wave13 import _assign_fine_multi
-
-    if nprobe == 1:
-        a1 = _assign_fine(spark, new, coarse_tbl, fine_tbl)
-        primary = a1.select("vec_id", "cell", "sub")
-        probed = primary
-        vecs = a1.select("vec_id", "vq", "nn_n")
-    else:
-        am = _assign_fine_multi(spark, new, coarse_tbl, fine_tbl, nprobe)
-        primary = am.filter(F.col("rnk") == 1).select(
-            "vec_id", "cell", "sub"
-        )
-        probed = am.select("vec_id", "cell", "sub")
-        # vq/nn_n are constant across a vector's ranks — one row each
-        vecs = am.filter(F.col("rnk") == 1).select("vec_id", "vq", "nn_n")
-    pcb = spark.table(pqcb_tbl)  # k x subspaces x dims rows: bounded
-    psub = new.select(
-        "vec_id", F.posexplode("vq").alias("pos", "v")
-    ).select(
-        "vec_id",
-        (F.col("pos") / _PQ_SUB).cast("int").alias("sm"),
-        (F.col("pos") % _PQ_SUB).alias("sj"),
-        _vq4(F.col("v")).alias("vq4"),
-    )
-    pdist = (
-        psub.join(F.broadcast(pcb), ["sm", "sj"])
-        .groupBy("vec_id", "sm", F.col("k").alias("code"))
-        .agg(
-            F.sum(
-                (F.col("vq4") - F.col("cq")) * (F.col("vq4") - F.col("cq"))
-            ).alias("d")
-        )
-    )
-    adc = (
-        probed
-        .join(never_broadcast(spark.table(codes_tbl)), ["cell", "sub"])
-        .join(pdist, ["vec_id", "sm", "code"])
-        .groupBy(
-            "vec_id", "cell", "sub", F.col("seen_id").alias("id_seen")
-        )
-        .agg(F.sum("d").alias("adc_d"))
-    )
-    from pyspark.sql.window import Window
-
-    rr = (
-        adc.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.asc("adc_d"), F.asc("id_seen")
-                )
-            ),
-        )
-        .filter(F.col("rk") <= _PQ_RERANK)
-        .select("vec_id", "cell", "sub", "id_seen")
-    )
-    # exact verify on the <= rerank survivors only: fetch full vectors
-    # through the members' OWN (cell, sub) bucket keys
-    mem = spark.table(mem_tbl)
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vq_s"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    hits = (
-        rr.join(never_broadcast(mem), ["cell", "sub"])
-        # survivor selection as a RESIDUAL predicate, deliberately in
-        # arithmetic form: a plain seen_id == id_seen gets pushed into
-        # the join condition and extracted as a THIRD equi-join key,
-        # which breaks the members side's (cell, sub) bucket match and
-        # re-exchanges the corpus-scale table per batch (observed in
-        # the round-15 plan pin); the difference form stays a post-join
-        # filter, so the members scan keeps its bucket distribution and
-        # the join fans <= cap x rerank rows per probed vector before
-        # filtering
-        .filter((F.col("seen_id") - F.col("id_seen")) == F.lit(0))
-        .join(vecs, "vec_id")
-        .filter((F.col("nn_n") > 0) & (F.col("nn_s") > 0))
-        .select(
-            "vec_id",
-            F.floor(
-                dot / (F.sqrt("nn_n") * F.sqrt("nn_s")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_seen_dups"),
-            F.max("cos_bp").alias("max_cos_bp"),
-        )
-        .withColumn("hit", F.lit(1))
-    )
-    from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP
-
-    return (
-        primary
-        .join(never_broadcast(hits), "vec_id", "left")
-        .select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            "cell",
-            "sub",
-            F.coalesce("n_seen_dups", F.lit(0))
-            .cast("bigint")
-            .alias("n_seen_dups"),
-            F.coalesce("max_cos_bp", F.lit(_NO_PEER_BP))
-            .cast("bigint")
-            .alias("max_cos_bp"),
-            F.when(F.col("hit").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("is_novel"),
-        )
-    )
-
-
 @query("codebook_pq_rerank_probe", oracle=_PQ_RERANK_ORACLE, wave=15)
 def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ-style semantic novelty on the adaptive two-level codebook
@@ -785,8 +576,9 @@ def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return _pq_rerank_probe(
-        spark, new, lay.coarse, lay.fine, lay.members, lay.codes, lay.pqcb
+    return probe(
+        spark, new, lay.coarse, lay.fine, lay.members,
+        codes=lay.codes, pqcb=lay.pqcb,
     )
 
 
@@ -842,7 +634,7 @@ def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum_generation(spark, sf_dir, pointer, old)
 
     # today's batch probes through the pointer only
-    probe = emb.filter(F.col("vec_id") > F.lit(q3)).select(
+    today = emb.filter(F.col("vec_id") > F.lit(q3)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return probe_current_generation(spark, sf_dir, pointer, probe)
+    return probe_current_generation(spark, sf_dir, pointer, today)

@@ -60,13 +60,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     cutover_generation,
     fresh_pointer,
     read_pointer,
     vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
+from awsbatch_mapreduce_spark.index.probe import probe_current_generation
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
@@ -79,7 +81,6 @@ from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
 from awsbatch_mapreduce_spark.plans.wave13 import (
     _GROWN_SRC,
     _K0_GROWN_SQL,
-    probe_current_generation,
     refit_and_cutover,
 )
 from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_ctes

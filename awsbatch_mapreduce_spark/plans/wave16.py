@@ -18,10 +18,8 @@ THE POINTER —
   (serving probes and the per-batch streaming readers alike) — no
   stream restart, no refit;
 - ``probe_current_generation`` honors the token on BOTH paths: the
-  full-vector probe runs the driver-proven rank-k multiprobe program
-  (``wave13._multiprobe_batch``), the ADC probe its multiprobe
-  generalization (``wave14._pq_rerank_probe(nprobe=)`` over the shared
-  ``wave13._assign_fine_multi`` assignment);
+  full-vector and the ADC backends of ``index.probe.probe`` run the
+  driver-proven rank-k program over one shared assignment;
 - ``refit_and_cutover`` INHERITS the token: a generation swap changes
   index structure, never the actuator-owned serving knob;
 - the supervisor's actuator applies each step to the pointer the
@@ -62,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.codebook import _PQ_K, _PQ_SUB, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     cutover_generation,
     fresh_pointer,
@@ -69,9 +68,14 @@ from awsbatch_mapreduce_spark.index.generation import (
     set_generation_nprobe,
     vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _PQ_RERANK,
+    _SEMDEDUP_EPS_BP,
+    probe_current_generation,
+)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
     _K0_SQL,
@@ -85,15 +89,9 @@ from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
 from awsbatch_mapreduce_spark.plans.wave13 import (
     _GROWN_SRC,
     _MULTIPROBE_ORACLE,
-    probe_current_generation,
     refit_and_cutover,
 )
-from awsbatch_mapreduce_spark.plans.wave14 import (
-    _pq_rerank_ctes,
-    _PQ_K,
-    _PQ_RERANK,
-    _PQ_SUB,
-)
+from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_ctes
 from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP, _k0_grown_sql
 from awsbatch_mapreduce_spark.sources.tables import load_table
 

@@ -62,13 +62,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     cutover_generation,
     fresh_pointer,
     tombstone_members,
     vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, _quantize
+from awsbatch_mapreduce_spark.index.probe import (
+    _PQ_RERANK,
+    probe_current_generation,
+)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
@@ -80,10 +85,7 @@ from awsbatch_mapreduce_spark.plans.wave11 import (
     _MID_BOUNDARY,
     build_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave13 import (
-    probe_current_generation,
-    refit_and_cutover,
-)
+from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 from awsbatch_mapreduce_spark.plans.wave16 import (
     _pq_multiprobe_ctes,
     _SERVE_NPROBE,
@@ -314,10 +316,8 @@ def codebook_tombstone_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_current_generation(spark, sf_dir, pointer, new, adc=True)
 
 
-from awsbatch_mapreduce_spark.plans.wave14 import _PQ_RERANK as _ADC_RERANK
-
 codebook_tombstone_adc.__doc__ = codebook_tombstone_adc.__doc__.format(
-    mod=_TOMB_MOD, nprobe=_SERVE_NPROBE, rerank=_ADC_RERANK
+    mod=_TOMB_MOD, nprobe=_SERVE_NPROBE, rerank=_PQ_RERANK
 )
 
 
@@ -484,7 +484,7 @@ def _gate_one_batch(
     probe reads — the _admit_batch offset-snapshot discipline), append
     the admitted docs' bands.  Shared by the plain gate and the
     takedown variant."""
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
     from awsbatch_mapreduce_spark.streaming.lsh import probe_band_index
 
     batch_docs = docs.filter(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.functions.rounding import dround, dround_sql
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 

@@ -50,7 +50,7 @@ from awsbatch_mapreduce_spark.operators.minhash import (
     shingles,
     signatures,
 )
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -112,7 +112,7 @@ def duplicated_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dup = F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0))
     # span-frequency frame is digest-scaled (O(corpus)): keep the join
-    # on the shuffle path (broadcast hygiene — plans/hints.py)
+    # on the shuffle path (broadcast hygiene — operators/hints.py)
     return (
         spans.join(never_broadcast(doc_freq), "sh")
         .groupBy("doc_id")
@@ -275,7 +275,7 @@ def content_defined_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("nd"))
     )
     # chunk-frequency frame is digest-scaled (O(corpus)): keep the join
-    # on the shuffle path (broadcast hygiene — plans/hints.py)
+    # on the shuffle path (broadcast hygiene — operators/hints.py)
     return (
         cd.join(never_broadcast(doc_freq), "dg")
         .groupBy("doc_id")
@@ -298,7 +298,7 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one boilerplate shingle in k docs makes k^2 truth pairs).  The
     anti-join against the heavy set stays on the shuffle path (the
     heavy set grows with the corpus under a fixed cap — broadcast
-    hygiene, plans/hints.py).  Named so the df-cap plan pin
+    hygiene, operators/hints.py).  Named so the df-cap plan pin
     (tests/test_scale_plans.py::test_lsh_eval_truth_join_is_df_capped)
     can inspect THIS frame's plan: the query itself checkpoints it, so
     the LeftAnti executes at build time and is invisible in the
@@ -391,7 +391,7 @@ def minhash_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _capped_shingles(spark, sf_dir).localCheckpoint()
     sig = signatures(sh)
     # bands/shingles/sizes are O(corpus): pin all candidate/truth/size
-    # joins to sort-merge (broadcast hygiene — see plans/hints.py); the
+    # joins to sort-merge (broadcast hygiene — see operators/hints.py); the
     # taus and n_cand crossJoins below stay broadcast, they are bounded
     # (4-row literal / 1-row aggregate) by construction.
     cand = (
@@ -903,7 +903,7 @@ def range_join_banded_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # big-big by design: both event streams scale with data, so the
-    # banded equi-join must never be broadcast (plans/hints.py)
+    # banded equi-join must never be broadcast (operators/hints.py)
     matched = (
         clicks.join(never_broadcast(purch), "cb")
         .filter(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.operators.compact import compact_parquet
-from awsbatch_mapreduce_spark.plans.hints import (
+from awsbatch_mapreduce_spark.operators.hints import (
     never_broadcast,
     never_broadcast_hash,
 )
@@ -491,7 +491,7 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5("text").alias("fp")
     )
     # the seen-set is O(corpus): digest equi-join stays on the shuffle
-    # path (broadcast hygiene — plans/hints.py)
+    # path (broadcast hygiene — operators/hints.py)
     return new.join(
         never_broadcast(seen.withColumn("hit", F.lit(1))), "fp", "left"
     ).select(
@@ -945,7 +945,7 @@ def _prefix_filter_plan(
     wdoc = Window.partitionBy("doc_id").orderBy("df", "h")
     # df (vocabulary-scaled) and sized (doc-scaled) both grow with the
     # corpus, as do the prefix/token frames below: pin every join to
-    # sort-merge (broadcast hygiene — plans/hints.py).  All three
+    # sort-merge (broadcast hygiene — operators/hints.py).  All three
     # consumers read the checkpointed tok, not their own tokenize.
     ranked = (
         tok.join(never_broadcast(df), "h")

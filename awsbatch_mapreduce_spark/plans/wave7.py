@@ -49,7 +49,7 @@ from awsbatch_mapreduce_spark.operators.minhash import (
     shingles,
     signatures,
 )
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.llm_text import (
     _NGRAM_PAIRS_ORACLE,
     _QUALITY_ORACLE,

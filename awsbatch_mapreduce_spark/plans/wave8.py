@@ -211,7 +211,7 @@ def dedup_minhash_lsh_bucket_capped(
     side sort-merge); the cap's semi-join runs on the O(buckets) band
     frame and is itself pinned.
     """
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
     from awsbatch_mapreduce_spark.functions.rounding import dround
 
     sh = shingles(load_table(spark, sf_dir, "documents")).localCheckpoint()
@@ -504,7 +504,7 @@ def incremental_lsh_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     OOM class), and collision volume is bounded by the same band
     capacity argument as ``dedup_minhash_lsh_bucket_capped``.
     """
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 
     docs = load_table(spark, sf_dir, "documents")
     # eager localCheckpoint: both the seen and new band branches consume
@@ -876,7 +876,7 @@ def dup_quality_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``never_broadcast`` pin; the final rollup is bounded by |distinct
     group sizes|.
     """
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
     from awsbatch_mapreduce_spark.plans.llm_text import with_quality
 
     docs = load_table(spark, sf_dir, "documents")
@@ -954,7 +954,7 @@ def span_dedup_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DUPLICATED span positions.  Every join runs data-scaled x
     data-scaled and carries the ``never_broadcast`` pin.
     """
-    from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.split("text", " ").alias("t"))

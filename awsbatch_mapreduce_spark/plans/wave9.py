@@ -39,8 +39,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.probe import (
+    _NO_PEER_BP,
+    _SEMDEDUP_EPS_BP,
+    cos_bp,
+    dot,
+    norm2,
+)
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import (
     _kmeans_cte,
     label_init_fit,
@@ -56,14 +63,6 @@ from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # --- SemDeDup: cluster-then-exact-cosine prune ---------------------------
 
-# Moderate-cosine threshold in basis points.  The fixture's intra-label
-# cosine distribution (both SFs: median ~0.00, p90 ~0.16, p99 ~0.29,
-# max ~0.47) puts 0.30 at the ~p99 tail, so the prune is non-vacuous at
-# sf0.001 AND sf0.01 while staying far below the sign-LSH ladder's
-# high-cosine regime — exactly the band this rung exists to cover.
-_SEMDEDUP_EPS_BP = 3000
-# sentinel for "no duplicate peer": below the cosine floor (-10000 bp)
-_NO_PEER_BP = -10001
 # Bounded-cell shard cap: a cell larger than this is deterministically
 # sharded (md5 of vec_id mod ceil(n/cap)) and pairwise cosine runs
 # within shards only.  Production SemDeDup keeps cells bounded by
@@ -242,11 +241,7 @@ def _semdedup_sim(
             "vec_id",
             F.col("cell").cast("int").alias("cell"),
             "vq",
-            F.aggregate(
-                "vq",
-                F.lit(0).cast("bigint"),
-                lambda acc, v: acc + v * v,
-            ).alias("nn"),
+            norm2("vq").alias("nn"),
         )
         .join(F.broadcast(sizes.select(F.col("cell").cast("int").alias("cell"), "nsub")), "cell")
         .withColumn(
@@ -275,11 +270,6 @@ def _semdedup_sim(
         F.col("vq").alias("vq_b"),
         F.col("nn").alias("nn_b"),
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("vq_a"), F.col("vq_b"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     sim = (
         pa.join(
             never_broadcast(pb),
@@ -291,12 +281,9 @@ def _semdedup_sim(
         .select(
             "id_a",
             "id_b",
-            F.floor(
-                dot / (F.sqrt("nn_a") * F.sqrt("nn_b")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
+            cos_bp(dot(F.col("vq_a"), F.col("vq_b")), "nn_a", "nn_b").alias(
+                "cos_bp"
+            ),
         )
     )
     return m, sim

@@ -34,7 +34,7 @@ _DEFAULT_CONF: dict[str, str] = {
     # size-based selection — static or AQE — only ever sees frames that
     # are broadcast-SAFE, because every data-scaled side of the
     # dedup/ANN ladders is pinned to sort-merge at the plan level
-    # (plans/hints.py:never_broadcast, enforced by test_scale_plans.py::
+    # (operators/hints.py:never_broadcast, enforced by test_scale_plans.py::
     # test_dedup_ladder_never_broadcasts_data_scaled_sides).  Raising
     # this threshold can therefore never re-create the sf1-rehearsal
     # driver OOM; it only widens eligibility for bounded dims.

@@ -9,7 +9,7 @@ Streaming's ``foreachBatch`` hands each micro-batch to the exact batch
 operators the driver already proves:
 
 - ``foreach_batch_codebook_probe`` — PROBE-ONLY: each micro-batch is
-  quantized and pushed through ``wave11._probe_batch`` against a
+  quantized and pushed through ``index.probe.probe`` against a
   static persisted index (coarse broadcast assign, fine sort-merge
   assign, <= cap membership cosines).  Because the probe is per-row
   independent given a static index, the union of per-batch outputs is
@@ -81,14 +81,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     _complete_pending_swap,
     _swap_rewrite,
     live_view,
     read_pointer,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _quantize
-from awsbatch_mapreduce_spark.plans.wave11 import _probe_batch
+from awsbatch_mapreduce_spark.index.probe import probe, probe_current_generation
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
 
 
@@ -111,18 +111,16 @@ def foreach_batch_codebook_probe(
     micro-batch is checked against a STATIC persisted two-level index;
     per-batch results land under ``out_dir/batch_id=N``."""
 
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
+    def probe_static(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         new = batch_df.select(
             "vec_id", _quantize(F.col("embedding")).alias("vq")
         )
-        res = _probe_batch(
-            batch_df.sparkSession, new, coarse_tbl, fine_tbl, mem_tbl
-        )
+        res = probe(batch_df.sparkSession, new, coarse_tbl, fine_tbl, mem_tbl)
         _write_probe_partition(res, out_dir, batch_id)
 
-    return probe
+    return probe_static
 
 
 def foreach_batch_codebook_probe_current(
@@ -152,11 +150,7 @@ def foreach_batch_codebook_probe_current(
     surfaces as a failed batch, never a silent fallback to the
     full-vector membership join."""
 
-    def probe(batch_df: DataFrame, batch_id: int) -> None:
-        from awsbatch_mapreduce_spark.plans.wave13 import (
-            probe_current_generation,
-        )
-
+    def probe_current(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         new = batch_df.select(
@@ -167,7 +161,7 @@ def foreach_batch_codebook_probe_current(
         )
         _write_probe_partition(res, out_dir, batch_id)
 
-    return probe
+    return probe_current
 
 
 # Admission sizing rule (round 14, SCALING.md): per-micro-batch cost
@@ -487,16 +481,7 @@ def foreach_batch_codebook_admit_probe(
             probe_mem = live_view(
                 spark, mem_tbl, tombs_tbl, pointer_path=pointer_path
             )
-        if np_ == 1:
-            res = _probe_batch(spark, new, coarse_tbl, fine_tbl, probe_mem)
-        else:
-            from awsbatch_mapreduce_spark.plans.wave13 import (
-                _multiprobe_batch,
-            )
-
-            res = _multiprobe_batch(
-                spark, new, coarse_tbl, fine_tbl, probe_mem, nprobe=np_
-            )
+        res = probe(spark, new, coarse_tbl, fine_tbl, probe_mem, nprobe=np_)
         _write_probe_partition(res, out_dir, batch_id)
         _write_marker(intent_path, batch_id)  # admission window opens
         n_admitted = _admit_batch(

@@ -55,7 +55,7 @@ from awsbatch_mapreduce_spark.index.generation import (
     _swap_rewrite,
 )
 from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
-from awsbatch_mapreduce_spark.plans.hints import never_broadcast
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.streaming.codebook import (
     _read_marker,
     _write_marker,

@@ -68,6 +68,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     _complete_pending_swap,
     cutover_generation,
@@ -77,6 +78,12 @@ from awsbatch_mapreduce_spark.index.generation import (
     recover_generations,
     set_generation_nprobe,
     vacuum_generation,
+)
+from awsbatch_mapreduce_spark.index.probe import (
+    probe,
+    probe_stats,
+    score_recall,
+    truth_totals,
 )
 from awsbatch_mapreduce_spark.streaming.codebook import (
     _read_marker,
@@ -107,70 +114,22 @@ def _recall_snapshot(
     right after each automatic refit.  Cost: one members-table scan per
     snapshot (the sample is a bounded broadcast, never data x data) —
     the sampled-schedule price every recall eval in the repo pays."""
-    from awsbatch_mapreduce_spark.plans.wave9 import _SEMDEDUP_EPS_BP
-    from awsbatch_mapreduce_spark.plans.wave11 import _probe_batch
-    from awsbatch_mapreduce_spark.plans.wave13 import _multiprobe_batch
-
     sample = (
-        new.orderBy(F.md5(F.col("vec_id").cast("string")), F.asc("vec_id"))
+        new.select("vec_id", "vq")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.asc("vec_id"))
         .limit(panel)
-        .withColumn(
-            "nnn",
-            F.aggregate(
-                "vq", F.lit(0).cast("bigint"), lambda a, v: a + v * v
-            ),
-        )
         .localCheckpoint()  # one bounded sample, probe + truth consumers
     )
-    probe_in = sample.select("vec_id", "vq")
-    res = (
-        _probe_batch(spark, probe_in, coarse_tbl, fine_tbl, mem_tbl)
-        if nprobe == 1
-        else _multiprobe_batch(
-            spark, probe_in, coarse_tbl, fine_tbl, mem_tbl, nprobe=nprobe
-        )
+    res = probe(spark, sample, coarse_tbl, fine_tbl, mem_tbl, nprobe=nprobe)
+    truth = truth_totals(
+        spark.table(mem_tbl).select(F.col("vq_s").alias("vqs")), sample
     )
-    det = res.agg(
-        F.sum(F.lit(1) - F.col("is_novel")).cast("bigint").alias("dv"),
-        F.sum("n_seen_dups").cast("bigint").alias("dp"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("vq"), F.col("vq_s"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda a, v: a + v,
-    )
-    truth = (
-        spark.table(mem_tbl)
-        .crossJoin(F.broadcast(sample))
-        .filter((F.col("nnn") > 0) & (F.col("nn_s") > 0))
-        .select(
-            "vec_id",
-            F.floor(
-                dot / (F.sqrt("nnn") * F.sqrt("nn_s")) * F.lit(10000.0)
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("cos_bp"),
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("tv"),
-            F.coalesce(F.sum("c"), F.lit(0)).cast("bigint").alias("tp"),
-        )
-    )
-    row = det.crossJoin(F.broadcast(truth)).first()
-    tv, tp, dv, dp = row["tv"], row["tp"], row["dv"] or 0, row["dp"] or 0
+    row = score_recall(probe_stats(res), truth).first()
+    # an empty sample sums no detections: NULL -> 0
     return {
         "nprobe": nprobe,
         "panel": panel,
-        "n_truth_vecs": tv,
-        "n_truth_pairs": tp,
-        "n_detected_vecs": dv,
-        "n_detected_pairs": dp,
-        "vec_recall_bp": 0 if tv == 0 else dv * 10000 // tv,
-        "pair_recall_bp": 0 if tp == 0 else dp * 10000 // tp,
+        **{k: v or 0 for k, v in row.asDict().items()},
     }
 
 
@@ -269,8 +228,6 @@ def admit_probe_with_cadence(
     while the knob is armed and the table exists; deletions land
     out-of-band from the stream, so no incremental counter can track
     them the way admitted rows track ``n_now``."""
-    from awsbatch_mapreduce_spark.plans.iterative import _quantize
-
     inner = foreach_batch_codebook_admit_probe(
         coarse_tbl, fine_tbl, mem_tbl, out_dir,
         codes_tbl=codes_tbl, pqcb_tbl=pqcb_tbl, cap=cap,

@@ -9,10 +9,12 @@ apart from partition counts).
 Each file holds the query's plan, preceded by the plan of every frame
 its builder ``localCheckpoint``s: those run eagerly at build time and
 show up in the query plan only as ``Scan ExistingRDD``.  Expression
-ids (``#123``), ``[plan_id=N]`` tags and RDD ids change from run to
-run and are stripped, and the fixture and temp directories are
-replaced by ``<sf_dir>`` and ``<tmp>``, so two captures of the same
-plans diff empty:
+ids (``#123``), ``[plan_id=N]`` tags, RDD ids, the counters in
+lambda-variable names (``lambda x_90``) and the call sites of
+checkpointed RDDs change from run to run and are stripped, and the
+fixture and temp directories are replaced by ``<sf_dir>`` and
+``<tmp>``, so two captures of the same plans diff empty, whatever
+other queries the run captured before them:
 
     python scripts/capture_plans.py before dedup_minhash_lsh
     # ... change the code ...
@@ -41,6 +43,13 @@ _RUN_IDS = [
     (re.compile(r"(?<=[^\s(,\[])#\d+L?"), ""),  # expression ids, not literals
     (re.compile(r",? ?\[plan_id=\d+\]"), ""),  # exchange / subquery ids
     (re.compile(r"RDD\[\d+\]"), "RDD"),  # checkpointed RDD ids
+    # PySpark names lambda variables x_N / y_N / z_N from a session-wide
+    # counter, so N depends on how many lambdas were built before
+    (re.compile(r"\b(lambda [xyz])_\d+\b"), r"\1"),
+    # the JVM call site of a checkpointed RDD reads NativeMethodAccessorImpl
+    # until the JVM replaces reflective calls with generated accessors
+    # (<unknown>), which also depends on what ran before
+    (re.compile(r"(RDD at \w+ at )\S+:\d+"), r"\1<call site>"),
 ]
 
 

@@ -640,7 +640,7 @@ def main() -> None:
     #   when AQE upgraded a data-scaled frame to a driver-built
     #   broadcast; 16g gives the MEASUREMENT margin (the sandbox has
     #   128 GiB) — the plan-level fix is the merge-hint pinning in the
-    #   dedup/ANN ladders (plans/hints.py), which this run validates.
+    #   dedup/ANN ladders (operators/hints.py), which this run validates.
     # - AQE runtime broadcast upgrades off: a size-misestimated upgrade
     #   mid-measurement would change the executed plan between scales
     #   and OOM exactly like r5; static dim broadcasts are unaffected.

@@ -50,18 +50,22 @@ def test_assign_literal_callers_pass_unique_vec_ids(spark, monkeypatch):
     each frame's ids are unique."""
     import sys
 
+    from awsbatch_mapreduce_spark.index import codebook
     from awsbatch_mapreduce_spark.plans import iterative
     from tests.conftest import SF_DIR
 
     inputs: dict = {}
-    orig = iterative._assign_literal
+    orig = codebook._assign_literal
 
     def recording(q, *args, **kwargs):
         site = sys._getframe(1).f_code.co_name, sys._getframe(2).f_code.co_name
         inputs.setdefault(site, {})[id(q)] = q
         return orig(q, *args, **kwargs)
 
+    # kmeans_fit calls it through iterative's import, the collected
+    # assignments through codebook's
     monkeypatch.setattr(iterative, "_assign_literal", recording)
+    monkeypatch.setattr(codebook, "_assign_literal", recording)
     for name in (
         "kmeans_embeddings",
         "semdedup_codebook_novelty",
@@ -74,7 +78,7 @@ def test_assign_literal_callers_pass_unique_vec_ids(spark, monkeypatch):
         ("kmeans_fit", "semdedup_codebook_novelty"),
         ("kmeans_fit", "_persist_two_level"),
         ("assign_to_cells_collected", "semdedup_codebook_novelty"),
-        ("assign_to_cells_collected", "_assign_fine"),
+        ("assign_to_cells_collected", "_assign"),
         ("assign_to_cells_collected", "_admit_batch"),
     }, sorted(inputs)
     for site, frames in inputs.items():

@@ -664,7 +664,7 @@ def test_prefix_filter_shuffles_digests_not_tokens(spark):
 # Broadcast hygiene (VERDICT r5 #1): the sf1 rehearsal OOM'd when a
 # data-scaled intermediate of dedup_minhash_lsh was upgraded to a
 # driver-built broadcast.  Every data-scaled side of the dedup/ANN
-# ladders is now pinned to sort-merge via plans/hints.never_broadcast;
+# ladders is now pinned to sort-merge via operators/hints.never_broadcast;
 # the ONLY broadcasts these plans may contain are frames bounded by
 # construction, enumerated per query below.
 _LADDER_BOUNDED_BROADCASTS = {
@@ -770,7 +770,7 @@ def test_dedup_ladder_never_broadcasts_data_scaled_sides(spark, name):
 _REGISTRY_BROADCAST_BUDGET = {
     # Round-19 re-audit (all semdedup/codebook/kmeans rows): the coarse
     # assignment — in kmeans_fit's loop AND in every probe/admission
-    # path (iterative.assign_to_cells_collected / assign_topk_cells_
+    # path (index/codebook.assign_to_cells_collected / assign_topk_cells_
     # collected) — now applies the bounded codebook as a COLLECTED
     # LITERAL expression instead of a broadcast crossJoin, so those
     # BroadcastExchange sites disappear from the static plans (e.g.

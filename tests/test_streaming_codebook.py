@@ -31,11 +31,11 @@ from awsbatch_mapreduce_spark.index.generation import (
     generation_layout,
 )
 from awsbatch_mapreduce_spark.plans import QUERIES
-from awsbatch_mapreduce_spark.plans.iterative import _quantize
+import awsbatch_mapreduce_spark.index.probe as index_probe
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _mod_centroid_init,
     _persist_two_level,
-    _probe_batch,
 )
 from awsbatch_mapreduce_spark.scratch import _scratch_dir
 from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -134,7 +134,7 @@ def test_stream_probe_equals_batch_probe(spark, emb_chunks, tmp_path):
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    want = _probe_batch(spark, new, coarse, fine, mem)
+    want = index_probe.probe(spark, new, coarse, fine, mem)
     assert _rows(got) == _rows(want)
 
 
@@ -373,7 +373,7 @@ def test_repair_swap_sweeps_stale_dirs_and_preserves_layout(
     batch0, batch1 = _two_batches(emb, mid, q3)
     q0 = batch0.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
     # orphan some fine rows for real: append the fine half only
-    from awsbatch_mapreduce_spark.plans.iterative import (
+    from awsbatch_mapreduce_spark.index.codebook import (
         assign_to_cells_collected,
     )
     from pyspark.sql.window import Window as W
@@ -411,7 +411,7 @@ def test_repair_swap_sweeps_stale_dirs_and_preserves_layout(
     assert not os.path.exists(f"{loc}__old")
     assert spark.table(fine).count() == n_fine_clean
     # the repaired table still serves probes (bucketed read path intact)
-    res = _probe_batch(spark, q0, coarse, fine, mem)
+    res = index_probe.probe(spark, q0, coarse, fine, mem)
     assert res.count() == q0.count()
 
 
@@ -697,8 +697,8 @@ def test_streaming_admissions_then_refit_cutover(spark, tmp_path):
     probe = emb.filter(F.col("vec_id") > F.lit(q7)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    got = _rows(_probe_batch(spark, probe, coarse_r, fine_r, mem_r), drop=())
-    want = _rows(_probe_batch(spark, probe, coarse_s, fine_s, mem_s), drop=())
+    got = _rows(index_probe.probe(spark, probe, coarse_r, fine_r, mem_r), drop=())
+    want = _rows(index_probe.probe(spark, probe, coarse_s, fine_s, mem_s), drop=())
     assert got == want and len(got) > 0
 
 
@@ -711,10 +711,7 @@ def test_stream_adc_probe_equals_batch_adc_probe(
     given a static PQ generation), and the reader REFUSES an unflagged
     generation at the batch boundary instead of silently falling back
     to the full-vector join."""
-    from awsbatch_mapreduce_spark.plans.wave14 import (
-        _persist_pq_codes,
-        _pq_rerank_probe,
-    )
+    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_probe_current,
     )
@@ -749,7 +746,9 @@ def test_stream_adc_probe_equals_batch_adc_probe(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
     want = _rows(
-        _pq_rerank_probe(spark, new, coarse, fine, mem, codes, pqcb)
+        index_probe.probe(
+            spark, new, coarse, fine, mem, codes=codes, pqcb=pqcb
+        )
     )
     assert got == want and len(got) > 0
 
@@ -789,7 +788,7 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
     ).select("vec_id", "embedding")
     fn(batch0, 0)
     q0 = batch0.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    want0 = _probe_batch(spark, q0, coarse_a, fine_a, mem_a)
+    want0 = index_probe.probe(spark, q0, coarse_a, fine_a, mem_a)
     got = spark.read.parquet(out)
     assert _rows(got.filter(F.col("batch_id") == 0)) == _rows(want0)
 
@@ -800,7 +799,7 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
     )
     fn(batch1, 1)
     q1 = batch1.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    want1 = _probe_batch(spark, q1, coarse_b, fine_b, mem_b)
+    want1 = index_probe.probe(spark, q1, coarse_b, fine_b, mem_b)
     got = spark.read.parquet(out)
     assert _rows(got.filter(F.col("batch_id") == 1)) == _rows(want1)
     assert want0.count() > 0 and want1.count() > 0
@@ -809,7 +808,7 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
     # against the now-current generation B
     fn(batch0, 0)
     got = spark.read.parquet(out)
-    want0_b = _probe_batch(spark, q0, coarse_b, fine_b, mem_b)
+    want0_b = index_probe.probe(spark, q0, coarse_b, fine_b, mem_b)
     assert _rows(got.filter(F.col("batch_id") == 0)) == _rows(want0_b)
 
 

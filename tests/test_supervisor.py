@@ -37,13 +37,13 @@ from awsbatch_mapreduce_spark.index.generation import (
     set_generation_nprobe,
     tombstone_members,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _quantize
+import awsbatch_mapreduce_spark.index.probe as index_probe
+from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.probe import probe_current_generation
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _mod_centroid_init,
     _persist_two_level,
-    _probe_batch,
 )
-from awsbatch_mapreduce_spark.plans.wave13 import probe_current_generation
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.supervisor import (
     _next_kind,
@@ -222,7 +222,7 @@ def test_supervised_admission_auto_refits_and_matches_clean_fit(
         spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
     )
     want = sorted(
-        map(tuple, _probe_batch(spark, probe, coarse_s, fine_s, mem_s).collect())
+        map(tuple, index_probe.probe(spark, probe, coarse_s, fine_s, mem_s).collect())
     )
     assert got == want and len(got) > 0
 
@@ -306,10 +306,7 @@ def test_supervised_admission_pq_keeps_adc_serving(
     vacuumed — and the final ADC probe through the pointer is
     frame-identical to one clean fit + encode over everything
     admitted."""
-    from awsbatch_mapreduce_spark.plans.wave14 import (
-        _persist_pq_codes,
-        _pq_rerank_probe,
-    )
+    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
@@ -365,8 +362,9 @@ def test_supervised_admission_pq_keeps_adc_serving(
     want = sorted(
         map(
             tuple,
-            _pq_rerank_probe(
-                spark, probe, coarse_s, fine_s, mem_s, codes_s, pqcb_s
+            index_probe.probe(
+                spark, probe, coarse_s, fine_s, mem_s,
+                codes=codes_s, pqcb=pqcb_s,
             ).collect(),
         )
     )
@@ -714,7 +712,7 @@ def test_supervisor_recovers_from_crash_during_refit(
         spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
     )
     want = sorted(
-        map(tuple, _probe_batch(spark, probe, coarse_s, fine_s, mem_s).collect())
+        map(tuple, index_probe.probe(spark, probe, coarse_s, fine_s, mem_s).collect())
     )
     assert got == want and len(got) > 0
 
@@ -724,10 +722,8 @@ def test_actuator_step_reaches_serving_probe(spark, four_chunks, tmp_path):
     POINTER, so the SERVING probe's output changes — after a supervised
     run whose snapshots stepped nprobe, ``probe_current_generation``
     returns the driver-proven rank-k multiprobe output at the stepped
-    width (frame-identical to ``_multiprobe_batch``), not the
+    width (frame-identical to ``probe(nprobe=)``), not the
     single-probe rows the pre-round-17 readers were stuck on."""
-    from awsbatch_mapreduce_spark.plans.wave13 import _multiprobe_batch
-
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path / "ptr")
@@ -769,13 +765,13 @@ def test_actuator_step_reaches_serving_probe(spark, four_chunks, tmp_path):
     want = sorted(
         map(
             tuple,
-            _multiprobe_batch(
+            index_probe.probe(
                 spark, probe, coarse, fine, mem, nprobe=served
             ).collect(),
         )
     )
     single = sorted(
-        map(tuple, _probe_batch(spark, probe, coarse, fine, mem).collect())
+        map(tuple, index_probe.probe(spark, probe, coarse, fine, mem).collect())
     )
     assert got == want and len(got) > 0
     assert got != single  # the step changed production output

@@ -40,16 +40,14 @@ from awsbatch_mapreduce_spark.index.generation import (
     tombstone_members,
     vacuum_generation,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _quantize
+import awsbatch_mapreduce_spark.index.probe as index_probe
+from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.probe import probe_current_generation
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _mod_centroid_init,
     _persist_two_level,
-    _probe_batch,
 )
-from awsbatch_mapreduce_spark.plans.wave13 import (
-    probe_current_generation,
-    refit_and_cutover,
-)
+from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 from awsbatch_mapreduce_spark.plans.wave17 import _TOMB_MOD
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
@@ -152,7 +150,7 @@ def test_deleted_members_stop_matching_others_still_match(spark, tmp_path):
         F.pmod(F.col("seen_id"), F.lit(_TOMB_MOD)) != 0
     )
     live.createOrReplaceTempView("tsv_manual_live")
-    want = _rows(_probe_batch(spark, probe, coarse, fine, "tsv_manual_live"))
+    want = _rows(index_probe.probe(spark, probe, coarse, fine, "tsv_manual_live"))
     assert got == want and len(got) > 0
 
     # the deletion MOVED the output (some probe vector lost duplicates)
@@ -213,10 +211,7 @@ def test_delete_landing_mid_refit_refuses_cutover(spark, tmp_path, monkeypatch):
 
 
 def test_adc_serving_excludes_tombstoned_members(spark, tmp_path):
-    from awsbatch_mapreduce_spark.plans.wave14 import (
-        _persist_pq_codes,
-        _pq_rerank_probe,
-    )
+    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 
     pointer = str(tmp_path / "ptr")
     emb, mid = _bounds(spark)
@@ -248,9 +243,9 @@ def test_adc_serving_excludes_tombstoned_members(spark, tmp_path):
     spark.table(mem).filter(pred).createOrReplaceTempView("tad_mem_live")
     spark.table(codes).filter(pred).createOrReplaceTempView("tad_codes_live")
     want = _rows(
-        _pq_rerank_probe(
-            spark, probe, coarse, fine, "tad_mem_live", "tad_codes_live",
-            pqcb,
+        index_probe.probe(
+            spark, probe, coarse, fine, "tad_mem_live",
+            codes="tad_codes_live", pqcb=pqcb,
         )
     )
     assert got == want and len(got) > 0
@@ -314,7 +309,7 @@ def test_supervisor_serves_and_structurally_applies_deletions(
     mem0_tbl = generation_layout(SF_DIR, "tsp0000").members
     coarse0, fine0, _ = generation_layout(SF_DIR, "tsp0000").tables[:3]
     blind0 = _rows(
-        _probe_batch(spark, batch0, coarse0, fine0, mem0_tbl)
+        index_probe.probe(spark, batch0, coarse0, fine0, mem0_tbl)
     )
     assert want0 != blind0
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 import re
 
 from awsbatch_mapreduce_spark.plans import QUERIES
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
+from awsbatch_mapreduce_spark.index.probe import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from tests.conftest import SF_BOTH, SF_DIR
 
 

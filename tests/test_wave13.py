@@ -29,15 +29,15 @@ from awsbatch_mapreduce_spark.index.generation import (
     vacuum_generation,
 )
 from awsbatch_mapreduce_spark.plans import QUERIES
-from awsbatch_mapreduce_spark.plans.iterative import _quantize
-from awsbatch_mapreduce_spark.plans.wave9 import _NO_PEER_BP, _SEMDEDUP_EPS_BP
+import awsbatch_mapreduce_spark.index.probe as index_probe
+from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.probe import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
     _MID_BOUNDARY,
     _PROBE_CTES,
     _mod_centroid_init,
     _persist_two_level,
-    _probe_batch,
     _probe_ctes,
 )
 from awsbatch_mapreduce_spark.scratch import _scratch_dir
@@ -176,7 +176,7 @@ def test_refit_from_members_equals_from_scratch_fit(spark):
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
     scratch = sorted(
-        map(tuple, _probe_batch(spark, probe, coarse_s, fine_s, mem_s).collect())
+        map(tuple, index_probe.probe(spark, probe, coarse_s, fine_s, mem_s).collect())
     )
     assert scratch == lifecycle and len(lifecycle) > 0
 
@@ -552,10 +552,8 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
     import pytest
 
     from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-    from awsbatch_mapreduce_spark.plans.wave13 import (
-        probe_current_generation,
-        refit_from_members,
-    )
+    from awsbatch_mapreduce_spark.index.probe import probe_current_generation
+    from awsbatch_mapreduce_spark.plans.wave13 import refit_from_members
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -593,7 +591,7 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
     direct = sorted(
         map(
             tuple,
-            _probe_batch(spark, batch, coarse_a, fine_a, mem_a).collect(),
+            index_probe.probe(spark, batch, coarse_a, fine_a, mem_a).collect(),
         )
     )
     assert via_ptr == direct and len(direct) > 0
@@ -612,7 +610,7 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
     direct_b = sorted(
         map(
             tuple,
-            _probe_batch(spark, today, coarse_b, fine_b, mem_b).collect(),
+            index_probe.probe(spark, today, coarse_b, fine_b, mem_b).collect(),
         )
     )
     assert via_ptr_b == direct_b and len(direct_b) > 0

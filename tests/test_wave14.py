@@ -72,13 +72,13 @@ def test_sweep_widened_nprobe_is_non_vacuous(spark):
 
 
 def test_generalized_multiprobe_matches_registered_variant(spark):
-    """wave13._multiprobe_batch(nprobe=2) on the registered query's own
+    """The probe operator at nprobe=2 on the registered query's own
     fit must reproduce the driver-proven `semdedup_codebook_multiprobe`
     rows exactly — the round-15 rank-k generalization (array-exclusion
     argmin chain instead of the fixed second-argmin) may not move the
     proven variant by a row."""
-    from awsbatch_mapreduce_spark.plans.iterative import _quantize
-    from awsbatch_mapreduce_spark.plans.wave13 import _multiprobe_batch
+    from awsbatch_mapreduce_spark.index.codebook import _quantize
+    from awsbatch_mapreduce_spark.index.probe import probe
 
     want = sorted(
         map(
@@ -106,7 +106,7 @@ def test_generalized_multiprobe_matches_registered_variant(spark):
     got = sorted(
         map(
             tuple,
-            _multiprobe_batch(
+            probe(
                 spark, new, tbls["coarse"], tbls["fine"], tbls["members"],
                 nprobe=2,
             ).collect(),
@@ -126,7 +126,7 @@ def test_pq_rerank_is_subset_of_full_probe_with_measured_recall(spark):
     seen -> novel.  And the recall cost is a measured number, not a
     hope: most of the full probe's dup verdicts must survive on the
     fixture."""
-    from awsbatch_mapreduce_spark.plans.wave14 import _PQ_RERANK
+    from awsbatch_mapreduce_spark.index.probe import _PQ_RERANK
 
     full = {
         r["vec_id"]: r

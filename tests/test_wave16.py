@@ -9,7 +9,7 @@ registry queries lives in test_oracle_parity like every other query):
   refit inherit, rollback);
 - ``probe_current_generation`` serves the REAL rank-k program after a
   ``set_generation_nprobe`` step — frame-identical to the driver-proven
-  ``_multiprobe_batch`` (full-vector) / ``_pq_rerank_probe(nprobe=)``
+  ``probe(nprobe=)`` (full-vector) / ``probe(nprobe=, codes=, pqcb=)``
   (ADC), and genuinely different from the single-probe output on the
   fixture (the step CHANGES what production returns);
 - the escalated PQ refit re-keys the codes table to the new cell
@@ -32,23 +32,17 @@ from awsbatch_mapreduce_spark.index.generation import (
     read_pointer,
     set_generation_nprobe,
 )
-from awsbatch_mapreduce_spark.plans.iterative import _quantize
+import awsbatch_mapreduce_spark.index.probe as index_probe
+from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.probe import probe_current_generation
 from awsbatch_mapreduce_spark.plans.wave11 import (
     _CAP,
     _mod_centroid_init,
     _persist_two_level,
-    _probe_batch,
 )
 from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-from awsbatch_mapreduce_spark.plans.wave13 import (
-    _multiprobe_batch,
-    probe_current_generation,
-    refit_and_cutover,
-)
-from awsbatch_mapreduce_spark.plans.wave14 import (
-    _persist_pq_codes,
-    _pq_rerank_probe,
-)
+from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
+from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
@@ -158,12 +152,12 @@ def test_serving_probe_honors_pointer_nprobe(spark, fitted_pq_gen):
     pointer, (coarse, fine, mem, codes, pqcb), new = fitted_pq_gen
     set_generation_nprobe(pointer, 1)
     got1 = _rows(probe_current_generation(spark, SF_DIR, pointer, new))
-    want1 = _rows(_probe_batch(spark, new, coarse, fine, mem))
+    want1 = _rows(index_probe.probe(spark, new, coarse, fine, mem))
     assert got1 == want1 and len(got1) > 0
 
     set_generation_nprobe(pointer, 2)
     got2 = _rows(probe_current_generation(spark, SF_DIR, pointer, new))
-    want2 = _rows(_multiprobe_batch(spark, new, coarse, fine, mem, nprobe=2))
+    want2 = _rows(index_probe.probe(spark, new, coarse, fine, mem, nprobe=2))
     assert got2 == want2
     assert got2 != got1  # the step reached what the reader serves
     # multiprobe superset property: every rank-1 dup survives
@@ -175,7 +169,7 @@ def test_serving_probe_honors_pointer_nprobe(spark, fitted_pq_gen):
 def test_adc_serving_probe_honors_pointer_nprobe(spark, fitted_pq_gen):
     """Same claim, ADC path: the pointer-resolved IVFPQ probe runs the
     rank-2 union program after the step — frame-identical to the
-    direct ``_pq_rerank_probe(nprobe=2)`` and different from the
+    direct ADC ``probe(nprobe=2)`` and different from the
     single-probe ADC output."""
     pointer, (coarse, fine, mem, codes, pqcb), new = fitted_pq_gen
     set_generation_nprobe(pointer, 1)
@@ -183,7 +177,9 @@ def test_adc_serving_probe_honors_pointer_nprobe(spark, fitted_pq_gen):
         probe_current_generation(spark, SF_DIR, pointer, new, adc=True)
     )
     want1 = _rows(
-        _pq_rerank_probe(spark, new, coarse, fine, mem, codes, pqcb)
+        index_probe.probe(
+            spark, new, coarse, fine, mem, codes=codes, pqcb=pqcb
+        )
     )
     assert got1 == want1 and len(got1) > 0
 
@@ -192,8 +188,8 @@ def test_adc_serving_probe_honors_pointer_nprobe(spark, fitted_pq_gen):
         probe_current_generation(spark, SF_DIR, pointer, new, adc=True)
     )
     want2 = _rows(
-        _pq_rerank_probe(
-            spark, new, coarse, fine, mem, codes, pqcb, nprobe=2
+        index_probe.probe(
+            spark, new, coarse, fine, mem, nprobe=2, codes=codes, pqcb=pqcb
         )
     )
     assert got2 == want2
@@ -314,7 +310,7 @@ def test_admission_probe_serves_pointer_nprobe(spark, tmp_path):
         q = batch.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
         # the twin runs the rank-2 program against the PRE-admission
         # index — collect BEFORE fn mutates the tables
-        want = _rows(_multiprobe_batch(spark, q, coarse, fine, mem, nprobe=2))
+        want = _rows(index_probe.probe(spark, q, coarse, fine, mem, nprobe=2))
         fn(batch.select("vec_id", "embedding"), batch_id)
         got = sorted(
             map(
