@@ -15,31 +15,54 @@ is stored:
   (``pq``, ``cap=N``, ``nprobe=N``).  ``read_pointer`` is the one
   snapshot read, ``_write_pointer`` the one writer, both serialized
   against other writers by ``_pointer_write_lock``.
+- **Write spec** (``_write_part``): the one bucket/sort spec of the
+  bucketed tables (fine on cell; members and codes on (cell, sub)),
+  used by every build and every admission append.
+- **Table-writing verbs**: ``build_generation`` (the one fit, from raw
+  embeddings or from a members table's own rows, optionally with PQ
+  codes), ``admit_batch`` (append a batch without a refit, in the
+  order fine -> codes -> members) with ``repair_admission`` (undo an
+  admission that crashed before its members commit), and
+  ``refit_and_cutover`` (the guarded refit).
 - **Lifecycle verbs**: ``cutover_generation`` (atomic repoint),
   ``set_generation_nprobe`` (serving knob), ``vacuum_generation``
   (reclaim a superseded generation), ``recover_generations`` (startup
   sweep of crash remnants), ``tombstone_members`` / ``live_view``
   (deletion), and the crash-safe sibling swap every in-place rewrite of
-  an index table goes through.
+  an index table goes through (``_swap_rewrite``, which keeps the
+  table's own bucket spec).
 
-The fit itself (``plans/wave11.build_generation``) and the refit live
-with the codebook queries, the probes in ``index/probe.py``; they reach
-the storage only through this module.  Reference parity: the reference swaps its whole output prefix
-per run (`Implementation.cs:45-47` re-uploads jobData.json) rather than
+The arithmetic these verbs persist (fit, exact means, PQ) is
+``index/codebook.py``; the probes are ``index/probe.py``.  Reference
+parity: the reference swaps its whole output prefix per run
+(`Implementation.cs:45-47` re-uploads jobData.json) rather than
 patching in place — the pointer is that swap applied to the index.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import re
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.index.codebook import (
+    _CAP,
+    _encode_codes,
+    _exact_means,
+    _mod_centroid_init,
+    _train_pq,
+    assign_to_cells_collected,
+    kmeans_fit,
+    norm2,
+)
 from awsbatch_mapreduce_spark.scratch import (
     _scratch_dir,
     _scratch_path,
@@ -121,6 +144,37 @@ def _kinds_present(spark, sf_dir: str) -> set[str]:
     }
 
 
+# The generation tables' one write spec: the fine book bucketed on cell,
+# members and codes on (cell, sub), all sorted by (cell, sub) into
+# ``_N_BUCKETS`` buckets.  The probes' fine/members/codes joins read
+# them exchange-free on it, and an admission's append must repeat it
+# exactly.  coarse and pqcb are bounded and unbucketed.
+_N_BUCKETS = 8
+_BUCKET_COLS = {
+    "fine": ("cell",),
+    "members": ("cell", "sub"),
+    "codes": ("cell", "sub"),
+}
+
+
+def _write_part(
+    frame: DataFrame, lay: GenerationLayout, part: str, mode: str = "overwrite"
+) -> None:
+    """Write ``frame`` as generation table ``part`` under the write
+    spec: a build (``overwrite``) places the data under ``lay.base``, an
+    admission (``append``) adds files to the existing table.  One Spark
+    job, so one FileOutputCommitter job commit."""
+    tbl = getattr(lay, part)
+    writer = frame.write
+    if part in _BUCKET_COLS:
+        writer = writer.bucketBy(_N_BUCKETS, *_BUCKET_COLS[part]).sortBy(
+            "cell", "sub"
+        )
+    if mode == "overwrite":
+        writer = writer.option("path", os.path.join(lay.base, tbl))
+    writer.mode(mode).saveAsTable(tbl)
+
+
 # ---------------------------------------------------------------------------
 # Pointer file
 # ---------------------------------------------------------------------------
@@ -150,6 +204,13 @@ class PointerRecord(NamedTuple):
         """The probe width every pointer-resolving reader serves:
         single-probe until the actuator writes a token."""
         return self.nprobe or 1
+
+    @property
+    def fitted_cap(self) -> int:
+        """The fine-cell capacity the generation was fitted with — what
+        admissions rank-chunk at and a refit inherits: the token, else
+        the default every fit without one uses."""
+        return self.cap if self.cap is not None else _CAP
 
 
 def read_pointer(pointer_path: str) -> PointerRecord:
@@ -245,6 +306,115 @@ def fresh_pointer(sf_dir: str, scratch: str) -> str:
     if os.path.exists(pointer):
         os.remove(pointer)
     return pointer
+
+
+# ---------------------------------------------------------------------------
+# The fit: one verb for a first build and for a refit
+# ---------------------------------------------------------------------------
+
+
+def _fine_book(members: DataFrame) -> DataFrame:
+    """A member frame's fine-book rows: the exact-mean centroid of each
+    (cell, sub) chunk."""
+    return _exact_means(
+        members.select("cell", "sub", F.col("vq_s").alias("vq")), "cell", "sub"
+    )
+
+
+def members_corpus(spark, lay: GenerationLayout) -> DataFrame:
+    """Generation ``lay``'s live members as a fit corpus (vec_id, vq):
+    what a refit fits.  The members table alone — no raw-corpus re-read,
+    its ``vq`` rows are ``_quantize(embedding)`` by construction — minus
+    the tombstoned members, so k0 and every centroid of the new fit are
+    computed as if they never existed (the anti-join broadcasts the
+    bounded tombstone set; the members scan keeps its distribution)."""
+    rows = spark.table(lay.members)
+    if spark.catalog.tableExists(lay.tombs):
+        rows = rows.join(
+            F.broadcast(spark.table(lay.tombs)), "seen_id", "left_anti"
+        )
+    return rows.select(
+        F.col("seen_id").alias("vec_id"), F.col("vq_s").alias("vq")
+    )
+
+
+def build_generation(
+    spark, sf_dir, kind, seen, init_fn=None, cap: int = _CAP,
+    with_pq: bool = False,
+) -> GenerationLayout:
+    """Fit and persist generation ``kind`` over ``seen``: a fresh layout
+    (``fresh_layout`` drops the kind's previous tables), a 5-iteration
+    Lloyd fit from ``init_fn``'s coarse init (default the adaptive
+    mod-hash init at ``cap``), the rank-chunk capacity split, and the
+    three tables — the k0-row coarse codebook, the fine codebook and
+    the quantized members (write spec above).  With ``with_pq`` the
+    members are also encoded into the codes + PQ-codebook tables.
+    Returns the layout; making the generation current is the caller's
+    explicit ``cutover_generation``.
+
+    ``seen`` is raw (vec_id, embedding) rows, or quantized (vec_id, vq)
+    rows — a refit's ``members_corpus``, which iterates on the identical
+    integers (``kmeans_fit``).  ``cap`` is the fine-cell membership
+    bound."""
+    if init_fn is None:
+        init_fn = functools.partial(_mod_centroid_init, cap=cap)
+    lay = fresh_layout(spark, sf_dir, kind)
+    vec = "vq" if "vq" in seen.columns else "embedding"
+    assigned, _ = kmeans_fit(seen.select("vec_id", vec), init_fn(seen), n_iter=5)
+    # The chunk rank is over the final Lloyd assignment's own
+    # (d_fp, vec_id) — integer fixed-point, so the split is
+    # deterministic cross-engine.
+    w_chunk = Window.partitionBy("cell").orderBy(F.asc("d_fp"), F.asc("vec_id"))
+    members_plan = assigned.withColumn(
+        "rn", F.row_number().over(w_chunk)
+    ).select(
+        F.col("vec_id").alias("seen_id"),
+        F.col("cell").cast("int").alias("cell"),
+        F.floor((F.col("rn") - 1) / F.lit(cap)).cast("int").alias("sub"),
+        F.col("vq").alias("vq_s"),
+        norm2("vq").alias("nn_s"),
+    )
+    # Overlap the independent build actions: the lifecycle's wall is
+    # driver-serial job choreography, and all four actions read the
+    # already-materialized fit (the last Lloyd collect populated
+    # `assigned`'s cache).  Wave A: coarse write || the split checkpoint
+    # (one split, two consumers — fine book, members write).  Wave B:
+    # fine-book write || members write (both read the checkpoint;
+    # different tables, so the catalog commits are independent).  Job
+    # ordering never mattered here: the generation only becomes
+    # readable at cutover, which verifies all tables exist.
+    # Executor-loss caveat: the checkpoint lives in executor block
+    # storage with no lineage back to the fit, so the fine-book and
+    # members writes below cannot recompute a partition lost with its
+    # executor — the build fails and must be re-run (the generation is
+    # not current until cutover, so nothing reads the partial tables).
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        coarse_f = pool.submit(
+            _write_part, _exact_means(assigned, "cell"), lay, "coarse"
+        )
+        members_frame = members_plan.localCheckpoint()
+        coarse_f.result()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fine_f = pool.submit(_write_part, _fine_book(members_frame), lay, "fine")
+        _write_part(members_frame, lay, "members")
+        fine_f.result()
+    assigned.unpersist()
+    if with_pq:
+        # the PQ codebook is trained from the members table just written
+        # (so a refit's codes come from its own members too); one
+        # codebook materialization feeds both the bounded pqcb write and
+        # the corpus-scale encode, overlapped
+        mem = spark.table(lay.members)
+        pcb_ck = _train_pq(mem).localCheckpoint()
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            pqcb_f = pool.submit(_write_part, pcb_ck, lay, "pqcb")
+            _write_part(
+                _encode_codes(mem.select("seen_id", "cell", "sub", "vq_s"), pcb_ck),
+                lay,
+                "codes",
+            )
+            pqcb_f.result()
+    return lay
 
 
 # ---------------------------------------------------------------------------
@@ -386,17 +556,192 @@ def recover_generations(
 
 
 # ---------------------------------------------------------------------------
+# The guarded refit: a new generation from the current one's members,
+# cut over only if the source did not move while it ran
+# ---------------------------------------------------------------------------
+
+
+def refit_and_cutover(
+    spark,
+    sf_dir: str,
+    pointer_path: str,
+    new_kind: str,
+    with_pq: bool | None = None,
+    cap: int | None = None,
+    nprobe: int | None = None,
+) -> str:
+    """The guarded refit->cutover sequence: refit a fresh generation
+    ``new_kind`` from the CURRENT generation's members table, then cut
+    the pointer over — REFUSING the cutover if the source generation's
+    members changed while the refit ran.
+
+    Why the guard exists: the refit reads the members table once (its
+    snapshot); an admission committed into the OLD generation after
+    that snapshot exists ONLY in the old generation, so cutting over
+    and vacuuming would silently drop it — the one data-loss window
+    the pointer protocol otherwise closes.  The contract is therefore
+    "quiesce admissions into the current generation for the duration"
+    (for the streaming operator: stop the admit stream, run this,
+    restart it bound to the new generation — exactly what the
+    ``streaming.supervisor`` auto-refit loop does); this function turns
+    a violated contract into a loud error instead of lost vectors.  The
+    guard is checked TWICE: once after the refit (cheap refusal before
+    any pointer motion) and once again AFTER the pointer swap — an
+    admission landing between the first recount and the swap (the
+    TOCTOU gap, ADVICE r14) is caught by the second check, which rolls
+    the pointer back to the still-complete old generation and raises.
+    Residual window: a hard crash exactly between the swap and the
+    second recount leaves the pointer on the new generation while the
+    old one holds unrefitted admissions — quiescing is still the
+    contract; the guard is a best-effort backstop, not a license to
+    admit concurrently.  On refusal the new generation is left on disk
+    for inspection — re-run after quiescing; ``fresh_layout`` sweeps
+    it on the retry.  Returns the previous generation's kind tag (the
+    argument to a subsequent ``vacuum_generation``).
+
+    ``with_pq`` (round 16, VERDICT r15 #1): True rebuilds the codes +
+    PQ-codebook tables beside the new generation's coarse/fine/members
+    BEFORE the cutover, so an ADC reader resolving the pointer never
+    sees a generation without its codes; None (the default) INHERITS
+    the current generation's ``pq`` flag — the supervisor's automatic
+    refits keep whatever capability surface the generation had.
+
+    ``cap``: the new generation's fine-cell capacity — None inherits
+    the current generation's (``PointerRecord.fitted_cap``); the
+    quality-triggered refit passes an ESCALATED cap, the growth-
+    triggered one inherits.  The cap rides the pointer as a ``cap=N``
+    token so admissions into the new generation rank-chunk at the cap
+    it was fitted with.
+
+    ``nprobe`` (round 17): the new generation's SERVING probe width —
+    None inherits the current pointer's ``nprobe=N`` token (a routine
+    refit must never silently reset production recall); the
+    supervisor's quality-escalated refit passes its configured BASE,
+    because the cap escalation structurally fixes what the nprobe
+    steps were papering over (body comment)."""
+    # one pointer snapshot: kind/n_fit/flags must be mutually consistent
+    # (the same single-read discipline as probe_current_generation)
+    cur = read_pointer(pointer_path)
+    current = cur.kind
+    if current is None:
+        raise RuntimeError(
+            f"no current generation under {pointer_path!r}: nothing to"
+            " refit from — fit and cut over a first generation directly"
+        )
+    cur_cap = cur.fitted_cap
+    # the serving nprobe is INHERITED by default (round 17): a routine
+    # refit changes index structure, not the actuator-owned serving
+    # knob — a generation swap must never silently reset production
+    # recall.  An EXPLICIT ``nprobe`` overrides: the supervisor's
+    # quality-escalated refit passes the configured base, because the
+    # cap escalation is the STRUCTURAL fix for the recall the nprobe
+    # steps were papering over — serving the escalated generation at
+    # the stopgap width would pay max-nprobe x probe cost forever on
+    # an index that no longer needs it (the next snapshot re-converges
+    # the knob from base if the new geometry still falls short).
+    old_nprobe = cur.nprobe or None
+    new_nprobe = nprobe if nprobe is not None else old_nprobe
+    if with_pq is None:
+        with_pq = cur.pq
+    if cap is None:
+        cap = cur_cap
+    src = generation_layout(sf_dir, current)
+    src_mem = src.members
+    # refresh BEFORE the snapshot: streamed admissions commit through
+    # the micro-batch's cloned session, so this session's cached file
+    # listing can predate them — an unrefreshed refit would silently
+    # fit the stale listing (the double-recount guard below caught
+    # exactly this in the round-15 supervisor tests)
+    spark.catalog.refreshTable(src_mem)
+    n_snapshot = spark.table(src_mem).count()
+    # DELETION propagates at refit (round 18, VERDICT r17 #2): the
+    # current generation's tombstones (if any) are excluded from the
+    # new fit, and the new generation starts with NO tombstone table —
+    # the clear is structural.  The tombstone count joins the quiesce
+    # guard below: a delete landing mid-refit would be cleared WITHOUT
+    # being excluded (silent resurrection), so it refuses the cutover
+    # exactly like a concurrent admission.
+    tombs_tbl = src.tombs
+    has_tombs = spark.catalog.tableExists(tombs_tbl)
+    n_tombs_snapshot = (
+        spark.table(tombs_tbl).count() if has_tombs else 0
+    )
+    # Codes + PQ codebook are per-generation artifacts, rebuilt from
+    # the NEW generation's members before any pointer motion.
+    new = build_generation(
+        spark, sf_dir, new_kind, members_corpus(spark, src), cap=cap,
+        with_pq=with_pq,
+    )
+    # the NEW generation's fit-time size is the SURVIVOR count (what
+    # it actually fitted) — the refit_due denominator must price the
+    # fitted set, not the pre-deletion source
+    n_fit_new = (
+        spark.table(new.members).count() if has_tombs else n_snapshot
+    )
+
+    def _recount() -> tuple[int, int]:
+        spark.catalog.refreshTable(src_mem)
+        n_t = 0
+        if spark.catalog.tableExists(tombs_tbl):
+            spark.catalog.refreshTable(tombs_tbl)
+            n_t = spark.table(tombs_tbl).count()
+        return spark.table(src_mem).count(), n_t
+
+    def _refuse(n_now: int, n_t_now: int) -> None:
+        what = (
+            f"grew from {n_snapshot} to {n_now} members"
+            if n_now != n_snapshot
+            else f"tombstones moved {n_tombs_snapshot} -> {n_t_now}"
+        )
+        raise RuntimeError(
+            f"cutover to {new_kind!r} refused: generation {current!r}"
+            f" {what} while the refit ran — those mutations exist only"
+            " in the old generation and would be lost (or silently"
+            " resurrected) at vacuum. Quiesce admissions and deletions"
+            " into the current generation and re-run."
+        )
+
+    n_now, n_t_now = _recount()
+    if n_now != n_snapshot or n_t_now != n_tombs_snapshot:
+        _refuse(n_now, n_t_now)
+    # the new generation's fit-time size IS what it fitted — record
+    # it in the pointer's atomic write (the refit_due denominator)
+    cutover_generation(
+        spark, sf_dir, pointer_path, new_kind, n_fit=n_fit_new,
+        with_pq=with_pq, cap=cap, nprobe=new_nprobe,
+    )
+    n_after, n_t_after = _recount()
+    if n_after != n_snapshot or n_t_after != n_tombs_snapshot:
+        # an admission slipped into the old generation between the
+        # first recount and the swap: roll the pointer back (the old
+        # generation is intact — nothing vacuumed yet) and refuse.
+        # The rollback restores the OLD generation's own nprobe, not
+        # the override meant for the generation that never went live.
+        cutover_generation(
+            spark, sf_dir, pointer_path, current, n_fit=cur.n_fit,
+            with_pq=cur.pq, cap=cur_cap, nprobe=old_nprobe,
+        )
+        _refuse(n_after, n_t_after)
+    return current
+
+
+# ---------------------------------------------------------------------------
 # Crash-safe sibling swap: the in-place rewrite of an index table
 # ---------------------------------------------------------------------------
 
 
+def _table_desc(spark, tbl: str) -> dict[str, str]:
+    """``DESC EXTENDED``'s rows as col_name -> data_type: the table's
+    location and bucket spec, read from the catalog without a Spark
+    job."""
+    return {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESC EXTENDED {tbl}").collect()
+    }
+
+
 def _table_location(spark, tbl: str) -> str:
-    loc = (
-        spark.sql(f"DESC EXTENDED {tbl}")
-        .filter(F.col("col_name") == "Location")
-        .first()["data_type"]
-    )
-    return loc.removeprefix("file:")
+    return _table_desc(spark, tbl)["Location"].removeprefix("file:")
 
 
 def _complete_pending_swap(spark, tbl: str) -> None:
@@ -429,42 +774,40 @@ def _complete_pending_swap(spark, tbl: str) -> None:
     spark.catalog.refreshTable(tbl)
 
 
-def _swap_rewrite(
-    spark,
-    tbl: str,
-    kept: DataFrame,
-    bucket_cols: list[str] | None,
-    sort_cols: tuple[str, ...] = ("cell", "sub"),
-    n_buckets: int = 8,
-) -> None:
-    """Crash-safe rewrite of a bucketed external table with the kept
-    rows: write them to a SIBLING directory, then swap directories with
-    two renames (a bare ``mode('overwrite')`` deletes the live files
-    before the rewrite commits, so a crash mid-overwrite loses the whole
-    table and the next replay silently proceeds against the truncated
-    remainder).  Crash positions here: before the first rename the live
-    table is untouched (the replay simply redoes the repair); between
-    the two renames the table's location is MISSING — and because Spark
-    reads a missing location as an EMPTY table rather than an error,
-    every repair entry point first runs ``_complete_pending_swap``,
-    which re-issues the second rename from the fully-written
-    ``__repair`` sibling; after the second rename the repair is complete
-    and the stale ``__old`` dir is swept on the next entry."""
+def _swap_rewrite(spark, tbl: str, kept: DataFrame) -> None:
+    """Crash-safe rewrite of an external table with the kept rows,
+    under the table's OWN bucket spec (read from ``DESC EXTENDED``, so
+    a caller cannot re-bucket a table by mistake): write them to a
+    SIBLING directory, then swap directories with two renames (a bare
+    ``mode('overwrite')`` deletes the live files before the rewrite
+    commits, so a crash mid-overwrite loses the whole table and the
+    next replay silently proceeds against the truncated remainder).
+    Crash positions here: before the first rename the live table is
+    untouched (the replay simply redoes the repair); between the two
+    renames the table's location is MISSING — and because Spark reads a
+    missing location as an EMPTY table rather than an error, every
+    repair entry point first runs ``_complete_pending_swap``, which
+    re-issues the second rename from the fully-written ``__repair``
+    sibling; after the second rename the repair is complete and the
+    stale ``__old`` dir is swept on the next entry."""
     _complete_pending_swap(spark, tbl)
-    location = _table_location(spark, tbl)
+    desc = _table_desc(spark, tbl)
+    location = desc["Location"].removeprefix("file:")
     repair_loc, old_loc = f"{location}__repair", f"{location}__old"
     # sweep leftovers of a previously crashed/completed repair
     shutil.rmtree(repair_loc, ignore_errors=True)
     shutil.rmtree(old_loc, ignore_errors=True)
     tmp_tbl = f"{tbl}__rp"
     spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-    # ``bucket_cols=None`` rewrites an UNBUCKETED table (round 18: the
-    # tombstone set and the LSH band index reuse this protocol);
-    # ``sort_cols`` parameterizes the bucketed layout's sort key (the
-    # codebook tables sort on (cell, sub), the band index on bk)
     writer = kept.write
-    if bucket_cols:
-        writer = writer.bucketBy(n_buckets, *bucket_cols).sortBy(*sort_cols)
+    if "Num Buckets" in desc:
+        bucket_cols, sort_cols = (
+            re.findall(r"`([^`]+)`", desc.get(row, ""))
+            for row in ("Bucket Columns", "Sort Columns")
+        )
+        writer = writer.bucketBy(int(desc["Num Buckets"]), *bucket_cols)
+        if sort_cols:
+            writer = writer.sortBy(*sort_cols)
     (
         writer.option("path", repair_loc)
         .mode("overwrite")
@@ -475,6 +818,140 @@ def _swap_rewrite(
     os.rename(repair_loc, location)  # same bucket spec, same file layout
     shutil.rmtree(old_loc, ignore_errors=True)
     spark.catalog.refreshTable(tbl)
+
+
+# ---------------------------------------------------------------------------
+# Admission: append a batch to a generation without a refit, and undo an
+# admission that crashed before its commit point
+# ---------------------------------------------------------------------------
+
+
+def admit_batch(
+    spark, batch: DataFrame, lay: GenerationLayout, cap: int = _CAP,
+    with_pq: bool = False,
+) -> int:
+    """Admit one quantized batch (vec_id, vq) into generation ``lay``
+    WITHOUT a refit: coarse-assign against the collected coarse
+    codebook (d_fp is the chunk-rank key, exactly as the build ranked),
+    rank-chunk within each coarse cell into NEW sub-cells of <= ``cap``
+    offset past the cell's existing max sub, and bucket-APPEND the new
+    chunks' exact-mean centroids to the fine book and the member rows
+    to the members table.  Existing rows are untouched; the <= cap
+    bound holds for the grown table by construction.  ``cap`` must be
+    the generation's own (``PointerRecord.fitted_cap``).  Returns the
+    admitted row count.
+
+    The rank window is over the BATCH only (one row per admitted
+    vector); the sub-offset frame is one row per coarse cell (k0-bounded,
+    like the coarse book) -> broadcast.
+
+    ``with_pq``: a PQ-carrying generation additionally encodes the
+    admitted members against its PERSISTED codebook (broadcast, bounded
+    — never retrained per batch) and appends their codes, so the ADC
+    candidate set stays complete between refits.  Append order is
+    fine -> codes -> members: the members append is the protocol's
+    COMMIT POINT (if the batch's member rows are all visible, the codes
+    landed before them), and ``repair_admission`` undoes anything short
+    of it."""
+    assigned_batch = assign_to_cells_collected(batch, spark.table(lay.coarse))
+    w_chunk = Window.partitionBy("cell").orderBy(F.asc("d_fp"), F.asc("vec_id"))
+    sub_offset = (
+        spark.table(lay.members)
+        .groupBy("cell")
+        .agg((F.max("sub") + F.lit(1)).alias("base"))
+    )
+    app_members = (
+        assigned_batch.withColumn("rn", F.row_number().over(w_chunk))
+        .join(F.broadcast(sub_offset), "cell", "left")
+        .select(
+            F.col("vec_id").alias("seen_id"),
+            F.col("cell").cast("int").alias("cell"),
+            (
+                F.coalesce(F.col("base"), F.lit(0))
+                + F.floor((F.col("rn") - 1) / F.lit(cap))
+            )
+            .cast("int")
+            .alias("sub"),
+            F.col("vq").alias("vq_s"),
+            norm2("vq").alias("nn_s"),
+        )
+        # materialize BEFORE the appends: the sub offset reads the
+        # members table this step is about to grow, and the frame has
+        # several append consumers — a lazy plan would recompute it
+        # against the already-grown table (wrong offsets, doubled work)
+        .localCheckpoint()
+    )
+    _write_part(_fine_book(app_members), lay, "fine", "append")
+    if with_pq:
+        _write_part(
+            _encode_codes(
+                app_members.select("seen_id", "cell", "sub", "vq_s"),
+                spark.table(lay.pqcb),
+            ),
+            lay,
+            "codes",
+            "append",
+        )
+    _write_part(app_members, lay, "members", "append")
+    # the admitted row count, from the already-materialized checkpoint
+    # (one cached-partition pass, no source re-scan)
+    return app_members.count()
+
+
+def _drop_orphan_fine(spark, lay: GenerationLayout) -> None:
+    """Drop fine rows whose (cell, sub) has no member rows.  Build and
+    admission keep fine<->members 1:1 per (cell, sub) by construction,
+    so an orphaned fine cell can only be the fine half of an
+    uncommitted admission.  Rewrites the fine book only when an orphan
+    actually exists — the zero-orphan probe is one semi-join over the
+    k0-bounded book."""
+    fine = spark.table(lay.fine)
+    keys = spark.table(lay.members).select("cell", "sub").distinct()
+    kept = fine.join(keys, ["cell", "sub"], "semi").localCheckpoint()
+    if kept.count() == fine.count():
+        return
+    _swap_rewrite(spark, lay.fine, kept)
+
+
+def repair_admission(
+    spark, batch: DataFrame, lay: GenerationLayout, with_pq: bool = False
+) -> bool:
+    """Undo an ``admit_batch`` of ``batch`` (vec_id rows) that may have
+    crashed part-way, ALL-OR-REPAIR; returns True when the admission had
+    fully committed (nothing to undo).
+
+    A members append is one FileOutputCommitter job commit, but that
+    commit is itself a SEQUENCE of renames — a crash mid-commitJob
+    leaves a PARTIALLY visible append — so only a complete id set in the
+    members table proves commit.  Otherwise: a partial members append
+    is purged (anti-join on the batch's bounded id set), the batch's
+    codes rows are purged (they precede the members commit point, so
+    none, some or all may have landed), and orphaned fine rows are
+    dropped, restoring the pre-admission state.  Every rewrite is a
+    crash-safe ``_swap_rewrite``, and a swap the previous repair crashed
+    inside is completed FIRST (a missing table root reads as EMPTY,
+    which would turn "partly landed" into a silent index truncation).
+    The members and codes rewrites are corpus-sized, acceptable because
+    they run only on the crash-replay path."""
+    _complete_pending_swap(spark, lay.members)
+    _complete_pending_swap(spark, lay.fine)
+    if with_pq:
+        _complete_pending_swap(spark, lay.codes)
+    ids = batch.select(F.col("vec_id").alias("seen_id"))
+    members = spark.table(lay.members)
+    n_in = members.join(F.broadcast(ids), "seen_id", "semi").count()
+    if n_in == batch.count():
+        return True
+    if n_in > 0:
+        kept = members.join(F.broadcast(ids), "seen_id", "anti")
+        _swap_rewrite(spark, lay.members, kept.localCheckpoint())
+    if with_pq:
+        codes = spark.table(lay.codes)
+        if codes.join(F.broadcast(ids), "seen_id", "semi").count() > 0:
+            kept = codes.join(F.broadcast(ids), "seen_id", "anti")
+            _swap_rewrite(spark, lay.codes, kept.localCheckpoint())
+    _drop_orphan_fine(spark, lay)
+    return False
 
 
 # ---------------------------------------------------------------------------
@@ -542,7 +1019,7 @@ def tombstone_members(
                 .distinct()
                 .localCheckpoint()
             )
-            _swap_rewrite(spark, lay.tombs, merged, None)
+            _swap_rewrite(spark, lay.tombs, merged)
         return spark.table(lay.tombs).count()
 
 

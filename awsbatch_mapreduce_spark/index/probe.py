@@ -47,6 +47,7 @@ from awsbatch_mapreduce_spark.index.codebook import (
     _vq4,
     assign_to_cells_collected,
     assign_topk_cells_collected,
+    norm2,
 )
 from awsbatch_mapreduce_spark.index.generation import (
     generation_layout,
@@ -64,11 +65,6 @@ _SEMDEDUP_EPS_BP = 3000
 # sentinel for "no duplicate peer": below the cosine floor (-10000 bp)
 _NO_PEER_BP = -10001
 _PQ_RERANK = 4  # ADC candidates re-ranked exactly, per probed vector
-
-
-def norm2(col) -> Column:
-    """Squared norm of a quantized vector, as an exact bigint."""
-    return F.aggregate(col, F.lit(0).cast("bigint"), lambda acc, v: acc + v * v)
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -10,11 +10,10 @@ inertia.  Each remaining float op (one division for a centroid
 component, one subtract/multiply pair per dimension) is a single IEEE
 primitive over identical operands in both engines.
 
-Each Spark iteration is pure DataFrame algebra — assign =
-broadcast-codebook argmin, update = posexplode + grouped exact-int
-avg — so the per-iteration cost model is identical to the IVF build
-in ``plans.similarity`` and scales the same way: the corpus is
-scanned once per iteration, centroids stay tiny and broadcast.
+The fit itself (``kmeans_fit``) and its label init live with the
+index's codebook arithmetic in ``index/codebook.py``; this module holds
+the registered query and the unrolled oracle CTE (``_kmeans_cte``) that
+every codebook oracle shares.
 
 Convergence (monotone non-increasing inertia) is asserted in
 ``tests/test_iterative.py``; exact equality with the unrolled oracle
@@ -29,191 +28,11 @@ from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.index.codebook import (
     _DSCALE,
-    _VSCALE,
-    _assign_literal,
-    _quantize,
+    kmeans_fit,
+    label_centroid_init,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
-
-
-def _centroids_of(assigned: DataFrame) -> DataFrame:
-    """cell assignment -> per-cell mean vector: posexplode the
-    quantized components, exact int64 sum, ONE double division per
-    component (identical operands in both engines -> identical IEEE
-    result), ordered re-assembly."""
-    flat = (
-        assigned.select("cell", F.posexplode("vq").alias("pos", "v"))
-        .groupBy("cell", "pos")
-        .agg(
-            (
-                F.sum("v").cast("double")
-                / (F.lit(_VSCALE) * F.count(F.lit(1)))
-            ).alias("cv")
-        )
-    )
-    return flat.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda s: s["cv"]
-        ).alias("centroid")
-    )
-
-
-def label_centroid_init(emb: DataFrame) -> DataFrame:
-    """Deterministic k-means init: one centroid per ``label`` (the mean
-    of the label's quantized vectors — same exact-int-sum + single-
-    division arithmetic as ``_centroids_of``).  Shared by
-    ``kmeans_embeddings`` and the wave-9 SemDeDup pipeline so both run
-    the IDENTICAL cluster step (and the identical unrolled oracle,
-    ``_kmeans_cte``)."""
-    return (
-        emb.select(
-            F.col("label").cast("int").alias("cell"),
-            F.posexplode(_quantize(F.col("embedding"))).alias("pos", "v"),
-        )
-        .groupBy("cell", "pos")
-        .agg(
-            (
-                F.sum("v").cast("double") / (F.lit(_VSCALE) * F.count(F.lit(1)))
-            ).alias("cv")
-        )
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda s: s["cv"],
-            ).alias("centroid")
-        )
-    )
-
-
-def kmeans_fit(
-    corpus: DataFrame,
-    k_init: DataFrame,
-    n_iter: int = 5,
-    quantized: bool = False,
-) -> tuple[DataFrame, list[float]]:
-    """Run ``n_iter`` Lloyd iterations; return (final assignment,
-    per-iteration inertia trace).  ``corpus`` needs (vec_id,
-    embedding); ``k_init`` needs (cell, centroid: array<double>).
-    With ``quantized=True`` the corpus is already (vec_id, vq) in the
-    1e-6 fixed-point domain and the quantization step is skipped —
-    the wave-13 refit path, which re-fits FROM the persisted members
-    table (whose ``vq`` rows are ``_quantize(embedding)`` by
-    construction, so both paths iterate on identical integers).
-
-    EAGER: calling this function runs one Spark job per iteration (a
-    bounded k x dim stats collect — the codebook, which was always
-    driver-broadcast; the corpus never leaves the cluster) plus one
-    up-front materialization of the quantized working set, and the
-    next iteration's codebook is rebuilt as a driver-side literal from
-    the collected exact int64 sums (round 18; ADVICE r18 asked the
-    docstring to say so).  Each iteration persists its assignment and
-    unpersists the previous one so lineage does not grow with the
-    iteration count.  The returned assignment carries ``d_fp`` (1e-12
-    fixed-point squared distance) so downstream inertia sums are exact
-    integers.
-
-    Round-19 interior discipline (guide §2.4 / §7.3 — the lifecycle
-    queries' wall is driver choreography, not data):
-
-    - the quantized working set is ``localCheckpoint``-ed ONCE, so the
-      five assign passes read materialized blocks instead of repeating
-      the parquet scan + quantize per iteration (eager, in-region —
-      every caller re-pays it per run, no cross-run reuse);
-    - the per-iteration argmin is a LITERAL-codebook expression (the
-      codebook already lives on the driver as the previous collect's
-      exact sums): ``transform`` over an array<array<double>> literal +
-      ``array_min``/``array_position``, exactly the (d_fp, cell)
-      lexicographic argmin of the old broadcast crossJoin + struct-min
-      aggregate — same ``_sq_dist_fp`` integers, ties resolved to the
-      lowest cell because the literal is sorted by cell ascending and
-      ``array_position`` returns the FIRST minimum.  This removes BOTH
-      the per-iteration broadcast-build job and the n-row vec_id
-      exchange that the crossJoin+groupBy form needed to collapse its
-      n x k candidates (guide §2.4 "remove shuffles outright"): each
-      iteration is now scan -> per-row argmin -> bounded (cell, pos)
-      rollup -> k x dim collect, ONE exchange of a bounded frame;
-    - AQE is disabled around the iteration loop (restored after): the
-      iteration query has a FIXED shape with no join to re-plan and a
-      bounded exchange, so AQE contributes nothing here while charging
-      one extra driver job + re-plan per stage per iteration (measured:
-      54 jobs for the 10 collects of a two-fit lifecycle with AQE on,
-      10 with it off).  The shuffle partitioning still derives from the
-      session conf.
-    """
-    q = (
-        corpus.select("vec_id", "vq")
-        if quantized
-        else corpus.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    )
-    spark = corpus.sparkSession
-    q = q.localCheckpoint()
-
-    cell_type = k_init.schema["cell"].dataType
-    assigned_prev = None
-    inertia_trace: list[float] = []
-    _old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # the init codebook is bounded (k x dim — it was always either
-        # broadcast or a driver literal), so ONE collect brings it into
-        # the same driver-side (cells, cents) form every later
-        # iteration's stats rebuild produces
-        init_rows = sorted(k_init.collect(), key=lambda r: r["cell"])
-        cells = [r["cell"] for r in init_rows]
-        cents = [list(r["centroid"]) for r in init_rows]
-        for i in range(n_iter):
-            assigned = _assign_literal(q, cells, cents, cell_type)
-            if i == n_iter - 1:
-                # only the FINAL assignment has downstream consumers
-                # (coarse write + capacity split); intermediates feed
-                # exactly one stats collect each, so caching them was
-                # pure block-manager overhead
-                assigned = assigned.persist()
-            # ONE action per iteration (round-18 optimization, guide §1.2 /
-            # §2.4): the per-(cell, pos) stats rollup carries the exact
-            # int64 component sums, member counts AND the per-cell d_fp
-            # sums, so inertia and the next codebook come out of a single
-            # collect.  The collected frame is bounded (k x dim rows — the
-            # codebook, which was ALWAYS driver-broadcast), never
-            # corpus-scaled.  Arithmetic is operand-identical: the driver
-            # divides the same exact int64 sum by the same (scale x count)
-            # in IEEE double, exactly as _centroids_of / the oracle's
-            # c{i} CTEs do.
-            stats = (
-                assigned.select(
-                    "cell", "d_fp", F.posexplode("vq").alias("pos", "v")
-                )
-                .groupBy("cell", "pos")
-                .agg(
-                    F.sum("v").alias("sv"),
-                    F.count(F.lit(1)).alias("c"),
-                    F.sum("d_fp").alias("sd"),
-                )
-                .collect()
-            )
-            if stats:
-                inertia_trace.append(
-                    sum(r["sd"] for r in stats if r["pos"] == 0) / _DSCALE
-                )
-            else:
-                inertia_trace.append(None)
-            if i < n_iter - 1:
-                by_cell: dict = {}
-                for r in stats:
-                    by_cell.setdefault(r["cell"], {})[r["pos"]] = r["sv"] / (
-                        _VSCALE * r["c"]
-                    )
-                cells = sorted(by_cell)
-                cents = [
-                    [by_cell[cell][p] for p in sorted(by_cell[cell])]
-                    for cell in cells
-                ]
-            assigned_prev = assigned
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", _old_aqe)
-    return assigned_prev, inertia_trace
 
 
 def _kmeans_cte(

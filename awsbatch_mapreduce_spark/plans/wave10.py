@@ -47,8 +47,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.index.codebook import (
+    _exact_means,
     _quantize,
     assign_to_cells_collected,
+    kmeans_fit,
+    label_centroid_init,
 )
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
@@ -58,12 +61,7 @@ from awsbatch_mapreduce_spark.index.probe import (
     norm2,
 )
 from awsbatch_mapreduce_spark.operators.hints import never_broadcast
-from awsbatch_mapreduce_spark.plans.iterative import (
-    _centroids_of,
-    _kmeans_cte,
-    kmeans_fit,
-    label_centroid_init,
-)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave9 import (
     _semdedup_curve_oracle,
@@ -255,7 +253,7 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the BUILD (amortized, once per corpus generation): final Lloyd
     # codebook + per-cell quantized members with precomputed norms
     (
-        _centroids_of(assigned)
+        _exact_means(assigned, "cell")
         .write.option("path", os.path.join(base, cb_tbl))
         .mode("overwrite")
         .saveAsTable(cb_tbl)

@@ -60,36 +60,24 @@ the LLM-pipeline operator family the build brief makes first-class.
 
 from __future__ import annotations
 
-import functools
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from awsbatch_mapreduce_spark.index.codebook import _quantize, _VSCALE
-from awsbatch_mapreduce_spark.index.generation import fresh_layout
+from awsbatch_mapreduce_spark.index.codebook import (
+    _CAP,
+    _mod_centroid_init,
+    _quantize,
+    label_centroid_init,
+)
+from awsbatch_mapreduce_spark.index.generation import build_generation
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
     _SEMDEDUP_EPS_BP,
-    norm2,
     probe,
 )
-from awsbatch_mapreduce_spark.plans.iterative import (
-    _kmeans_cte,
-    kmeans_fit,
-    label_centroid_init,
-)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
-
-# Hard per-fine-cell membership cap.  Production sizes this to the
-# executor-memory / probe-latency budget (the shared 512 of the prune's
-# shard cap is the ceiling the VERDICT names); 16 keeps the fixture's
-# 18-40-member coarse cells genuinely multi-sub (2-3 subs per cell,
-# ~17 fine cells over 250 seen vectors) so the split is exercised, not
-# vacuous.
-_CAP = 16
 
 # The seen/new halves, split at (MIN+MAX)//2 of vec_id — identical to
 # the fixed-k probe so the two variants answer the same question on the
@@ -249,27 +237,6 @@ _CODEBOOK_ADAPTIVE_ORACLE = (
 )
 
 
-def _sub_centroids(members: DataFrame) -> DataFrame:
-    """(cell, sub, vq) member rows -> per-(cell, sub) mean vectors: the
-    ``iterative._centroids_of`` arithmetic (posexplode, exact int64
-    sum, ONE double division per component) keyed by the fine cell."""
-    flat = (
-        members.select("cell", "sub", F.posexplode("vq").alias("pos", "v"))
-        .groupBy("cell", "sub", "pos")
-        .agg(
-            (
-                F.sum("v").cast("double")
-                / (F.lit(_VSCALE) * F.count(F.lit(1)))
-            ).alias("cv")
-        )
-    )
-    return flat.groupBy("cell", "sub").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cv"))), lambda s: s["cv"]
-        ).alias("centroid")
-    )
-
-
 def _build_probe(spark, sf_dir, kind, init_fn) -> DataFrame:
     """Shared build+probe of a capacity-split two-level codebook:
     ``kind`` prefixes the three persisted tables (``cap``/``ada``),
@@ -288,119 +255,6 @@ def _build_probe(spark, sf_dir, kind, init_fn) -> DataFrame:
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
     return probe(spark, new, lay.coarse, lay.fine, lay.members)
-
-
-def _persist_two_level(
-    spark, seen, init_fn, base, coarse_tbl, fine_tbl, mem_tbl,
-    quantized: bool = False, cap: int = _CAP,
-) -> None:
-    """BUILD phase (amortized, once per corpus generation): Lloyd fit
-    of ``seen`` with ``init_fn``'s coarse init, rank-chunk capacity
-    split, and the three persisted tables — k0-row coarse codebook,
-    fine codebook bucketed on cell, quantized members bucketed on
-    (cell, sub).  ``quantized=True``: ``seen`` is (vec_id, vq) already
-    in the fixed-point domain (wave-13 refit from the members table)
-    and ``init_fn`` must accept that shape.  ``cap`` is the fine-cell
-    membership bound (default the registered fixture cap; the wave-14
-    recall/cost sweep fits one index per candidate cap)."""
-    cols = ("vec_id", "vq") if quantized else ("vec_id", "embedding")
-    assigned, _ = kmeans_fit(
-        seen.select(*cols), init_fn(seen), n_iter=5, quantized=quantized
-    )
-    # BUILD: coarse codebook (k0 rows) + the capacity split.  The chunk
-    # rank is over the final Lloyd assignment's own (d_fp, vec_id) —
-    # integer fixed-point, so the split is deterministic cross-engine.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from awsbatch_mapreduce_spark.plans.iterative import _centroids_of
-
-    def _write_coarse() -> None:
-        (
-            _centroids_of(assigned)
-            .write.option("path", os.path.join(base, coarse_tbl))
-            .mode("overwrite")
-            .saveAsTable(coarse_tbl)
-        )
-
-    w_chunk = Window.partitionBy("cell").orderBy(F.asc("d_fp"), F.asc("vec_id"))
-    members_plan = assigned.withColumn(
-        "rn", F.row_number().over(w_chunk)
-    ).select(
-        F.col("vec_id").alias("seen_id"),
-        F.col("cell").cast("int").alias("cell"),
-        F.floor((F.col("rn") - 1) / F.lit(cap)).cast("int").alias("sub"),
-        F.col("vq").alias("vq_s"),
-        norm2("vq").alias("nn_s"),
-    )
-    # Overlap the independent build actions (guide §2.6 "overlap
-    # independent jobs"): the lifecycle's wall is driver-serial job
-    # choreography, and all four BUILD actions read the already-
-    # materialized fit (the last Lloyd collect populated `assigned`'s
-    # cache).  Wave A: coarse write || the split checkpoint (one split,
-    # three consumers — fine book, members write, recall test).  Wave
-    # B: fine-book write || members write (both read the checkpoint;
-    # different tables, so the catalog commits are independent).  Job
-    # ordering never mattered here: the generation only becomes
-    # readable at cutover, which verifies all tables exist.
-    # Executor-loss caveat: the checkpoint lives in executor block
-    # storage with no lineage back to the fit, so the fine-book and
-    # members writes below cannot recompute a partition lost with its
-    # executor — the build fails and must be re-run (the generation is
-    # not current until cutover, so nothing reads the partial tables).
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        coarse_f = pool.submit(_write_coarse)
-        members_frame = members_plan.localCheckpoint()
-        coarse_f.result()
-
-    def _write_fine() -> None:
-        (
-            _sub_centroids(
-                members_frame.select("cell", "sub", F.col("vq_s").alias("vq"))
-            )
-            .write.bucketBy(8, "cell")
-            .sortBy("cell", "sub")
-            .option("path", os.path.join(base, fine_tbl))
-            .mode("overwrite")
-            .saveAsTable(fine_tbl)
-        )
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fine_f = pool.submit(_write_fine)
-        (
-            members_frame.write.bucketBy(8, "cell", "sub")
-            .sortBy("cell", "sub")
-            .option("path", os.path.join(base, mem_tbl))
-            .mode("overwrite")
-            .saveAsTable(mem_tbl)
-        )
-        fine_f.result()
-    assigned.unpersist()
-
-
-def build_generation(
-    spark, sf_dir, kind, seen, init_fn=None, cap: int = _CAP,
-    with_pq: bool = False,
-):
-    """Fit and persist generation ``kind`` over ``seen`` (raw (vec_id,
-    embedding) rows): a fresh layout (``index.generation.fresh_layout``
-    drops the kind's previous tables), the two-level BUILD
-    (``_persist_two_level``), and with ``with_pq`` the codes + PQ
-    codebook (``wave14._persist_pq_codes``).  ``init_fn`` defaults to
-    the adaptive mod-hash init at ``cap``.  Returns the layout; making
-    the generation current is the caller's explicit
-    ``cutover_generation``."""
-    if init_fn is None:
-        init_fn = functools.partial(_mod_centroid_init, cap=cap)
-    lay = fresh_layout(spark, sf_dir, kind)
-    _persist_two_level(
-        spark, seen, init_fn, lay.base, lay.coarse, lay.fine, lay.members,
-        cap=cap,
-    )
-    if with_pq:
-        from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
-
-        _persist_pq_codes(spark, lay.members, lay.base, lay.codes, lay.pqcb)
-    return lay
 
 
 @query("semdedup_codebook_capacity", oracle=_CODEBOOK_CAPACITY_ORACLE, wave=11)
@@ -441,43 +295,6 @@ def semdedup_codebook_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
 semdedup_codebook_capacity.__doc__ = semdedup_codebook_capacity.__doc__.format(
     cap=_CAP, eps=_SEMDEDUP_EPS_BP
 )
-
-
-def _mod_centroid_init(
-    seen: DataFrame, quantized: bool = False, cap: int = _CAP
-) -> DataFrame:
-    """Adaptive coarse init: k0 = ceil(sqrt(ceil(n/cap))) residue-class
-    means over vec_id % k0 — the deterministic, oracle-twinned init that
-    lets the COARSE width grow with the corpus at fit time.  Same
-    exact-int-sum + single-division arithmetic as
-    ``label_centroid_init``; k0 is a driver-side scalar (like the
-    kmeans loop counter), computed from one count.  ``quantized=True``
-    takes a (vec_id, vq) corpus already in the fixed-point domain (the
-    wave-13 refit, which re-fits from the persisted members table)."""
-    import math
-
-    n = seen.count()
-    k0 = math.ceil(math.sqrt(math.ceil(n / cap)))
-    vq = F.col("vq") if quantized else _quantize(F.col("embedding"))
-    return (
-        seen.select(
-            (F.col("vec_id") % F.lit(k0)).cast("int").alias("cell"),
-            F.posexplode(vq).alias("pos", "v"),
-        )
-        .groupBy("cell", "pos")
-        .agg(
-            (
-                F.sum("v").cast("double") / (F.lit(_VSCALE) * F.count(F.lit(1)))
-            ).alias("cv")
-        )
-        .groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cv"))),
-                lambda s: s["cv"],
-            ).alias("centroid")
-        )
-    )
 
 
 @query("semdedup_codebook_adaptive", oracle=_CODEBOOK_ADAPTIVE_ORACLE, wave=11)

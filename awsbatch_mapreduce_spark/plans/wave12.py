@@ -52,27 +52,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from awsbatch_mapreduce_spark.index.codebook import (
-    _quantize,
-    assign_to_cells_collected,
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
+from awsbatch_mapreduce_spark.index.generation import (
+    admit_batch,
+    build_generation,
 )
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
     _SEMDEDUP_EPS_BP,
-    norm2,
     probe,
 )
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
     _K0_SQL,
     _SEEN_SRC,
     _SPLIT_CTES,
-    _sub_centroids,
-    build_generation,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -217,7 +213,7 @@ def semdedup_codebook_adaptive_append(
 
     1. BUILD (amortized): the wave-11 adaptive fit over the seen third
        — coarse k0 = ceil(sqrt(ceil(n/cap))), rank-chunk capacity
-       split, three persisted tables (shared ``_persist_two_level``).
+       split, three persisted tables (``index.generation.build_generation``).
     2. APPEND (per batch, no refit): yesterday's batch is
        coarse-assigned via the BROADCAST coarse book, ranked within
        each coarse cell by (assign distance, vec_id) and chunked into
@@ -255,145 +251,20 @@ def semdedup_codebook_adaptive_append(
     lay = build_generation(
         spark, sf_dir, "app", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
-    coarse_tbl, fine_tbl, mem_tbl = lay.coarse, lay.fine, lay.members
 
     # APPEND: the shared admission step (also the per-micro-batch body
     # of the streaming admission operator, streaming/codebook.py).
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(spark, batch, coarse_tbl, fine_tbl, mem_tbl)
+    admit_batch(spark, batch, lay)
 
     # PROBE today's batch against the grown index — the shared wave-11
     # two-level probe, reading the appended generations transparently.
     today = emb.filter(F.col("vec_id") > F.lit(q3)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
-    return probe(spark, today, coarse_tbl, fine_tbl, mem_tbl)
-
-
-def _admit_batch(
-    spark, batch, coarse_tbl, fine_tbl, mem_tbl,
-    codes_tbl: str | None = None, pqcb_tbl: str | None = None,
-    cap: int = _CAP,
-) -> int:
-    """Admit one quantized batch (vec_id, vq) into the persisted
-    two-level index WITHOUT a refit: coarse-assign via the broadcast
-    codebook (d_fp is the chunk-rank key, exactly as the build
-    ranked), rank-chunk within each coarse cell into NEW sub-cells of
-    <= cap offset past the cell's existing max sub, and bucket-APPEND
-    the new chunks' exact-mean centroids to the fine book and the
-    member rows to the members table.  Existing rows untouched; the
-    <= cap bound holds for the grown table by construction.
-
-    The rank window is over the BATCH only (one row per admitted
-    vector — no candidate blow-up crosses it; the corpus-sized build
-    rank is the amortized fit cost, not this path's).  The sub-offset
-    frame is one row per coarse cell (k0-bounded, like the coarse
-    book) -> broadcast.
-
-    ``codes_tbl``/``pqcb_tbl`` (round 16, VERDICT r15 #1): a
-    PQ-carrying generation additionally encodes the admitted members
-    against the generation's PERSISTED codebook (broadcast, bounded —
-    never retrained per batch) and bucket-appends their codes, so the
-    ADC candidate set stays complete between refits.  Append order is
-    fine -> codes -> members: the members append remains the protocol's
-    COMMIT POINT (if the batch's member rows are all visible, the codes
-    landed before them), and the replay-repair path purges batch codes
-    alongside orphan fine rows (`streaming/codebook.py`).
-
-    ``cap`` (round 16): the GENERATION'S fine-cell capacity — the
-    quality-triggered refit escalates it, so admission must rank-chunk
-    at the cap the index was fitted with to preserve the <= cap bound
-    (callers read it back from the generation pointer's ``cap=N``
-    token, `index.generation.read_pointer`).
-    """
-    assigned_batch = assign_to_cells_collected(batch, spark.table(coarse_tbl))
-    w_chunk = Window.partitionBy("cell").orderBy(F.asc("d_fp"), F.asc("vec_id"))
-    sub_offset = (
-        spark.table(mem_tbl)
-        .groupBy("cell")
-        .agg((F.max("sub") + F.lit(1)).alias("base"))
-    )
-    app_members = (
-        assigned_batch.withColumn("rn", F.row_number().over(w_chunk))
-        .join(F.broadcast(sub_offset), "cell", "left")
-        .select(
-            F.col("vec_id").alias("seen_id"),
-            F.col("cell").cast("int").alias("cell"),
-            (
-                F.coalesce(F.col("base"), F.lit(0))
-                + F.floor((F.col("rn") - 1) / F.lit(cap))
-            )
-            .cast("int")
-            .alias("sub"),
-            F.col("vq").alias("vq_s"),
-            norm2("vq").alias("nn_s"),
-        )
-        # materialize BEFORE the appends: the sub offset reads the
-        # members table this step is about to grow, and the frame has
-        # two append consumers — a lazy plan would recompute it against
-        # the already-grown table (wrong offsets, doubled work)
-        .localCheckpoint()
-    )
-    _append_fine(app_members, fine_tbl)
-    if codes_tbl is not None:
-        _append_codes(spark, app_members, codes_tbl, pqcb_tbl)
-    _append_members(app_members, mem_tbl)
-    # the admitted row count, from the already-materialized checkpoint
-    # (one cached-partition pass, no source re-scan) — the supervisor's
-    # running cadence counter consumes it (VERDICT r16 hygiene #3)
-    return app_members.count()
-
-
-def _append_fine(app_members: DataFrame, fine_tbl: str) -> None:
-    """Fine-book half of an admission: the new chunks' exact-mean
-    centroids, bucket-appended.  Split out from ``_admit_batch`` so the
-    streaming crash-window tests can inject a failure BETWEEN the two
-    appends (the window the round-14 intent/repair protocol covers)."""
-    (
-        _sub_centroids(
-            app_members.select("cell", "sub", F.col("vq_s").alias("vq"))
-        )
-        .write.bucketBy(8, "cell")
-        .sortBy("cell", "sub")
-        .mode("append")
-        .saveAsTable(fine_tbl)
-    )
-
-
-def _append_codes(
-    spark, app_members: DataFrame, codes_tbl: str, pqcb_tbl: str
-) -> None:
-    """PQ-codes half of an admission (round 16): encode the admitted
-    members against the generation's persisted PQ codebook (broadcast —
-    k x subspaces x dims rows, bounded) and bucket-append.  Split out
-    like ``_append_fine`` so the streaming crash-window tests can
-    inject failures around it; one Spark job -> one job commit."""
-    from awsbatch_mapreduce_spark.plans.wave14 import _encode_codes
-
-    (
-        _encode_codes(
-            app_members.select("seen_id", "cell", "sub", "vq_s"),
-            spark.table(pqcb_tbl),
-        )
-        .write.bucketBy(8, "cell", "sub")
-        .sortBy("cell", "sub")
-        .mode("append")
-        .saveAsTable(codes_tbl)
-    )
-
-
-def _append_members(app_members: DataFrame, mem_tbl: str) -> None:
-    """Members half of an admission (one Spark job -> one atomic commit
-    at the FileOutputCommitter level: a batch's member rows are either
-    all visible or none, which the repair protocol relies on)."""
-    (
-        app_members.write.bucketBy(8, "cell", "sub")
-        .sortBy("cell", "sub")
-        .mode("append")
-        .saveAsTable(mem_tbl)
-    )
+    return probe(spark, today, lay.coarse, lay.fine, lay.members)
 
 
 semdedup_codebook_adaptive_append.__doc__ = (

@@ -15,15 +15,16 @@ refit recomputes it.  Until this wave that refit existed only as prose
 Lifecycle under test, end to end over the vec_id quarters
 [build half | three append terciles | probe quarter]:
 
-1. BUILD the adaptive two-level index over the seen half (shared
-   ``wave11._persist_two_level``, mod-hash init, k0 =
+1. BUILD the adaptive two-level index over the seen half
+   (``index.generation.build_generation``, mod-hash init, k0 =
    ceil(sqrt(ceil(n/cap)))).
-2. APPEND three batches through ``wave12._admit_batch`` — each adds a
+2. APPEND three batches through ``index.generation.admit_batch`` — each adds a
    GENERATION of new fine sub-cells (>= 1 per touched coarse cell even
    for tiny batches: the ceil overhead the refit exists to collapse).
 3. REFIT: recompute k0 over the GROWN corpus and rebuild the three
    tables as a fresh index generation — sourced from the members table
-   ALONE (``refit_from_members``).  The index is self-contained: its
+   ALONE (``build_generation`` over ``members_corpus``).
+   The index is self-contained: its
    ``vq`` rows are ``_quantize(embedding)`` by construction, so the
    refit never re-reads the raw corpus (at 100 TB the raw corpus may
    be cold storage; the members table is the index's own bucketed
@@ -67,12 +68,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
-    cutover_generation,
-    fresh_layout,
-    generation_layout,
-    read_pointer,
+    admit_batch,
+    build_generation,
+    members_corpus,
 )
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
@@ -85,30 +85,20 @@ from awsbatch_mapreduce_spark.index.probe import (
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
     _K0_SQL,
+    _k0_sql,
     _MID_BOUNDARY,
-    _mod_centroid_init,
-    _persist_two_level,
     _probe_ctes,
     _SEEN_SRC,
     _SPLIT_CTES,
-    build_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
+from awsbatch_mapreduce_spark.plans.wave12 import _Q3_SQL
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # The grown corpus: everything at or below the 3/4 point — the build
 # half plus the three appended terciles.  Matches the Spark scalars
 # (integer floor-division on positive ids) exactly.
 _GROWN_SRC = f"(SELECT * FROM embeddings WHERE vec_id <= {_Q3_SQL})"
-
-# k0 recomputed over the GROWN corpus — the same adaptive sizing rule
-# as wave 11's fit, evaluated at refit time.
-_K0_GROWN_SQL = (
-    f"(SELECT CAST(CEIL(SQRT(CEIL(COUNT(*) / {_CAP}.0))) AS BIGINT)"
-    f" FROM {_GROWN_SRC} s0)"
-)
 
 # From-scratch adaptive program over the grown corpus: THIS being the
 # oracle is equivalence proof (a) — the driver hash-compares the
@@ -117,60 +107,11 @@ _REFIT_ORACLE = (
     _kmeans_cte(
         5,
         source=_GROWN_SRC,
-        cell_expr=f"CAST(vec_id % {_K0_GROWN_SQL} AS INT)",
+        cell_expr=f"CAST(vec_id % {_k0_sql(_CAP, _GROWN_SRC)} AS INT)",
     )
     + _SPLIT_CTES
     + _probe_ctes(_Q3_SQL)
 )
-
-
-def refit_from_members(
-    spark: SparkSession,
-    src_mem_tbl: str,
-    base: str,
-    coarse_tbl: str,
-    fine_tbl: str,
-    mem_tbl: str,
-    cap: int = _CAP,
-    tombs_tbl: str | None = None,
-) -> None:
-    """Rebuild the three-table two-level index as a NEW generation from
-    an existing members table alone (no raw-corpus re-read): k0 is
-    recomputed from the grown member count, the quantized Lloyd fit
-    runs over the members' own ``vq`` rows (``kmeans_fit`` quantized
-    path — identical integers to a from-scratch fit, since ``vq`` ==
-    ``_quantize(embedding)`` by construction), and the rank-chunk
-    capacity split + bucket specs are the shared build's.  The source
-    generation is left untouched; callers cut over by table name.
-    ``cap`` (round 16): the NEW generation's fine-cell capacity — the
-    quality-triggered refit escalates it (the recall knob the wave-14
-    sweep priced: cap 16 -> 512 moved vec-recall 0.37 -> 0.996 at
-    nprobe=1), and since the fit reads only (vec_id, vq) the
-    escalation costs nothing beyond the refit already running."""
-    src = spark.table(src_mem_tbl)
-    if tombs_tbl is not None and spark.catalog.tableExists(tombs_tbl):
-        # DELETION becomes structural here (round 18): tombstoned
-        # members are excluded from the new generation's fit — k0 and
-        # every centroid are computed as if they never existed.  The
-        # anti-join broadcasts the bounded tombstone set; the members
-        # scan keeps its distribution.
-        src = src.join(
-            F.broadcast(spark.table(tombs_tbl)), "seen_id", "left_anti"
-        )
-    grown = src.select(
-        F.col("seen_id").alias("vec_id"), F.col("vq_s").alias("vq")
-    )
-    _persist_two_level(
-        spark,
-        grown,
-        lambda c: _mod_centroid_init(c, quantized=True, cap=cap),
-        base,
-        coarse_tbl,
-        fine_tbl,
-        mem_tbl,
-        quantized=True,
-        cap=cap,
-    )
 
 
 @query("semdedup_codebook_refit", oracle=_REFIT_ORACLE, wave=13)
@@ -210,14 +151,10 @@ def semdedup_codebook_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = emb.filter(
             (F.col("vec_id") > F.lit(lo_b)) & (F.col("vec_id") <= F.lit(hi_b))
         ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-        _admit_batch(spark, batch, gen_a.coarse, gen_a.fine, gen_a.members)
+        admit_batch(spark, batch, gen_a)
 
     # 3. REFIT from the grown members table into a new generation.
-    gen_r = fresh_layout(spark, sf_dir, "rft")
-    refit_from_members(
-        spark, gen_a.members, gen_r.base, gen_r.coarse, gen_r.fine,
-        gen_r.members,
-    )
+    gen_r = build_generation(spark, sf_dir, "rft", members_corpus(spark, gen_a))
 
     # 4. PROBE today's batch against the refitted index.
     today = emb.filter(F.col("vec_id") > F.lit(q3)).select(
@@ -560,181 +497,3 @@ def semdedup_codebook_recall_eval(
 semdedup_codebook_recall_eval.__doc__ = (
     semdedup_codebook_recall_eval.__doc__.format(panel=_PANEL, nprobe=_NPROBE)
 )
-
-
-# ---------------------------------------------------------------------------
-# GUARDED REFIT + POINTER PROBE: the operational tail of the refit, over
-# the generation storage and lifecycle verbs of `index/generation.py`
-# (pointer, cutover, vacuum, tombstones).
-# ---------------------------------------------------------------------------
-
-
-def refit_and_cutover(
-    spark,
-    sf_dir: str,
-    pointer_path: str,
-    new_kind: str,
-    with_pq: bool | None = None,
-    cap: int | None = None,
-    nprobe: int | None = None,
-) -> str:
-    """The guarded refit->cutover sequence: refit a fresh generation
-    ``new_kind`` from the CURRENT generation's members table, then cut
-    the pointer over — REFUSING the cutover if the source generation's
-    members changed while the refit ran.
-
-    Why the guard exists: the refit reads the members table once (its
-    snapshot); an admission committed into the OLD generation after
-    that snapshot exists ONLY in the old generation, so cutting over
-    and vacuuming would silently drop it — the one data-loss window
-    the pointer protocol otherwise closes.  The contract is therefore
-    "quiesce admissions into the current generation for the duration"
-    (for the streaming operator: stop the admit stream, run this,
-    restart it bound to the new generation — exactly what the
-    ``streaming.supervisor`` auto-refit loop does); this function turns
-    a violated contract into a loud error instead of lost vectors.  The
-    guard is checked TWICE: once after the refit (cheap refusal before
-    any pointer motion) and once again AFTER the pointer swap — an
-    admission landing between the first recount and the swap (the
-    TOCTOU gap, ADVICE r14) is caught by the second check, which rolls
-    the pointer back to the still-complete old generation and raises.
-    Residual window: a hard crash exactly between the swap and the
-    second recount leaves the pointer on the new generation while the
-    old one holds unrefitted admissions — quiescing is still the
-    contract; the guard is a best-effort backstop, not a license to
-    admit concurrently.  On refusal the new generation is left on disk
-    for inspection — re-run after quiescing; ``fresh_layout`` sweeps
-    it on the retry.  Returns the previous generation's kind tag (the
-    argument to a subsequent ``vacuum_generation``).
-
-    ``with_pq`` (round 16, VERDICT r15 #1): True rebuilds the codes +
-    PQ-codebook tables beside the new generation's coarse/fine/members
-    BEFORE the cutover, so an ADC reader resolving the pointer never
-    sees a generation without its codes; None (the default) INHERITS
-    the current generation's ``pq`` flag — the supervisor's automatic
-    refits keep whatever capability surface the generation had.
-
-    ``cap`` (round 16): the new generation's fine-cell capacity — None
-    inherits the current generation's (the pointer's ``cap``); the
-    quality-triggered refit passes an ESCALATED cap, the growth-
-    triggered one inherits.  The cap rides the pointer as a ``cap=N``
-    token so admissions into the new generation rank-chunk at the cap
-    it was fitted with.
-
-    ``nprobe`` (round 17): the new generation's SERVING probe width —
-    None inherits the current pointer's ``nprobe=N`` token (a routine
-    refit must never silently reset production recall); the
-    supervisor's quality-escalated refit passes its configured BASE,
-    because the cap escalation structurally fixes what the nprobe
-    steps were papering over (body comment)."""
-    # one pointer snapshot: kind/n_fit/flags must be mutually consistent
-    # (the same single-read discipline as probe_current_generation)
-    cur = read_pointer(pointer_path)
-    current = cur.kind
-    if current is None:
-        raise RuntimeError(
-            f"no current generation under {pointer_path!r}: nothing to"
-            " refit from — fit and cut over a first generation directly"
-        )
-    cur_cap = cur.cap if cur.cap is not None else _CAP
-    # the serving nprobe is INHERITED by default (round 17): a routine
-    # refit changes index structure, not the actuator-owned serving
-    # knob — a generation swap must never silently reset production
-    # recall.  An EXPLICIT ``nprobe`` overrides: the supervisor's
-    # quality-escalated refit passes the configured base, because the
-    # cap escalation is the STRUCTURAL fix for the recall the nprobe
-    # steps were papering over — serving the escalated generation at
-    # the stopgap width would pay max-nprobe x probe cost forever on
-    # an index that no longer needs it (the next snapshot re-converges
-    # the knob from base if the new geometry still falls short).
-    old_nprobe = cur.nprobe or None
-    new_nprobe = nprobe if nprobe is not None else old_nprobe
-    if with_pq is None:
-        with_pq = cur.pq
-    if cap is None:
-        cap = cur_cap
-    src = generation_layout(sf_dir, current)
-    src_mem = src.members
-    # refresh BEFORE the snapshot: streamed admissions commit through
-    # the micro-batch's cloned session, so this session's cached file
-    # listing can predate them — an unrefreshed refit would silently
-    # fit the stale listing (the double-recount guard below caught
-    # exactly this in the round-15 supervisor tests)
-    spark.catalog.refreshTable(src_mem)
-    n_snapshot = spark.table(src_mem).count()
-    # DELETION propagates at refit (round 18, VERDICT r17 #2): the
-    # current generation's tombstones (if any) are excluded from the
-    # new fit, and the new generation starts with NO tombstone table —
-    # the clear is structural.  The tombstone count joins the quiesce
-    # guard below: a delete landing mid-refit would be cleared WITHOUT
-    # being excluded (silent resurrection), so it refuses the cutover
-    # exactly like a concurrent admission.
-    tombs_tbl = src.tombs
-    has_tombs = spark.catalog.tableExists(tombs_tbl)
-    n_tombs_snapshot = (
-        spark.table(tombs_tbl).count() if has_tombs else 0
-    )
-    new = fresh_layout(spark, sf_dir, new_kind)
-    refit_from_members(
-        spark, src_mem, new.base, new.coarse, new.fine, new.members,
-        cap=cap, tombs_tbl=tombs_tbl if has_tombs else None,
-    )
-    # the NEW generation's fit-time size is the SURVIVOR count (what
-    # it actually fitted) — the refit_due denominator must price the
-    # fitted set, not the pre-deletion source
-    n_fit_new = (
-        spark.table(new.members).count() if has_tombs else n_snapshot
-    )
-    if with_pq:
-        # codes + PQ codebook are per-generation artifacts: rebuilt
-        # from the NEW generation's members table (the codes build is
-        # members-only by construction — the refit self-containment
-        # property extends to the PQ path), before any pointer motion
-        from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
-
-        _persist_pq_codes(spark, new.members, new.base, new.codes, new.pqcb)
-
-    def _recount() -> tuple[int, int]:
-        spark.catalog.refreshTable(src_mem)
-        n_t = 0
-        if spark.catalog.tableExists(tombs_tbl):
-            spark.catalog.refreshTable(tombs_tbl)
-            n_t = spark.table(tombs_tbl).count()
-        return spark.table(src_mem).count(), n_t
-
-    def _refuse(n_now: int, n_t_now: int) -> None:
-        what = (
-            f"grew from {n_snapshot} to {n_now} members"
-            if n_now != n_snapshot
-            else f"tombstones moved {n_tombs_snapshot} -> {n_t_now}"
-        )
-        raise RuntimeError(
-            f"cutover to {new_kind!r} refused: generation {current!r}"
-            f" {what} while the refit ran — those mutations exist only"
-            " in the old generation and would be lost (or silently"
-            " resurrected) at vacuum. Quiesce admissions and deletions"
-            " into the current generation and re-run."
-        )
-
-    n_now, n_t_now = _recount()
-    if n_now != n_snapshot or n_t_now != n_tombs_snapshot:
-        _refuse(n_now, n_t_now)
-    # the new generation's fit-time size IS what it fitted — record
-    # it in the pointer's atomic write (the refit_due denominator)
-    cutover_generation(
-        spark, sf_dir, pointer_path, new_kind, n_fit=n_fit_new,
-        with_pq=with_pq, cap=cap, nprobe=new_nprobe,
-    )
-    n_after, n_t_after = _recount()
-    if n_after != n_snapshot or n_t_after != n_tombs_snapshot:
-        # an admission slipped into the old generation between the
-        # first recount and the swap: roll the pointer back (the old
-        # generation is intact — nothing vacuumed yet) and refuse.
-        # The rollback restores the OLD generation's own nprobe, not
-        # the override meant for the generation that never went live.
-        cutover_generation(
-            spark, sf_dir, pointer_path, current, n_fit=cur.n_fit,
-            with_pq=cur.pq, cap=cur_cap, nprobe=old_nprobe,
-        )
-        _refuse(n_after, n_t_after)
-    return current

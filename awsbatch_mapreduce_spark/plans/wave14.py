@@ -48,21 +48,21 @@ persisted layout.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.index.generation import (
+    admit_batch,
+    build_generation,
     cutover_generation,
     fresh_pointer,
+    refit_and_cutover,
     vacuum_generation,
 )
 from awsbatch_mapreduce_spark.index.codebook import (
     _PQ_K,
     _PQ_SUB,
     _quantize,
-    _vq4,
 )
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
@@ -83,13 +83,8 @@ from awsbatch_mapreduce_spark.plans.wave11 import (
     _SEEN_SRC,
     _SPLIT_CTES,
     _split_ctes,
-    build_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-from awsbatch_mapreduce_spark.plans.wave13 import (
-    _REFIT_ORACLE,
-    refit_and_cutover,
-)
+from awsbatch_mapreduce_spark.plans.wave13 import _REFIT_ORACLE
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # Fixed-size unbiased panel: the top-N of the new half in md5(vec_id)
@@ -443,106 +438,6 @@ _PQ_RERANK_ORACLE = (
 )
 
 
-def _encode_codes(members_like: DataFrame, pcb: DataFrame) -> DataFrame:
-    """Encode (seen_id, cell, sub, vq_s) member rows against the
-    bounded PQ codebook: per subspace, the argmin-distance codebook
-    entry (FIRST(k ORDER BY d, k) ties, matching the oracle's mcode).
-    Returns (seen_id, cell, sub, sm, code) — the codes-table row shape.
-    Shared by the generation build (`_persist_pq_codes`) and the
-    streaming admission's codes append (round 16: admitted members get
-    codes too, so the ADC candidate set stays complete between
-    refits)."""
-    msub = members_like.select(
-        "seen_id", "cell", "sub", F.posexplode("vq_s").alias("pos", "v")
-    ).select(
-        "seen_id",
-        "cell",
-        "sub",
-        (F.col("pos") / _PQ_SUB).cast("int").alias("sm"),
-        (F.col("pos") % _PQ_SUB).alias("sj"),
-        _vq4(F.col("v")).alias("vq4"),
-    )
-    mdist = (
-        msub.join(F.broadcast(pcb), ["sm", "sj"])
-        .groupBy("seen_id", "cell", "sub", "sm", "k")
-        .agg(
-            F.sum(
-                (F.col("vq4") - F.col("cq")) * (F.col("vq4") - F.col("cq"))
-            ).alias("d")
-        )
-    )
-    return (
-        mdist.groupBy("seen_id", "cell", "sub", "sm")
-        .agg(F.min(F.struct("d", "k")).alias("b"))
-        .select("seen_id", "cell", "sub", "sm", F.col("b.k").alias("code"))
-    )
-
-
-def _persist_pq_codes(
-    spark, mem_tbl: str, base: str, codes_tbl: str, pqcb_tbl: str
-) -> None:
-    """BUILD extra (amortized, once per generation): train the per-
-    subspace PQ codebook from the members' own quantized components
-    (residue-class means over seen_id % k, exact int sum / one
-    division), encode every member as one code per subspace, and
-    persist BOTH artifacts — the codes bucketed on (cell, sub) EXACTLY
-    like the members table (the probe's ADC join then reads codes
-    exchange-free where the full-vector membership join would have
-    read 64 x 8-byte arrays) and the k x subspaces x dims codebook as
-    its own bounded table (the probe broadcasts it; recomputing it
-    from the members would be a corpus-scale pass per batch — the
-    zero-seen-recompute discipline)."""
-    mem = spark.table(mem_tbl)
-    msub = mem.select(
-        "seen_id", F.posexplode("vq_s").alias("pos", "v")
-    ).select(
-        "seen_id",
-        (F.col("pos") / _PQ_SUB).cast("int").alias("sm"),
-        (F.col("pos") % _PQ_SUB).alias("sj"),
-        _vq4(F.col("v")).alias("vq4"),
-    )
-    pcb = msub.groupBy(
-        (F.col("seen_id") % _PQ_K).cast("int").alias("k"), "sm", "sj"
-    ).agg(
-        F.floor(
-            F.sum("vq4").cast("double") / F.count(F.lit(1)) + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("cq")
-    )
-    # One codebook materialization feeds BOTH artifacts (round 19,
-    # guide §2.6): the codebook is bounded (k x subspaces x dims rows
-    # of exact bigints, so the in-memory frame is value-identical to a
-    # write-then-read-back), the table write and the corpus-scale
-    # encode are independent once it exists — overlap them instead of
-    # serializing write -> read-back -> encode.
-    pcb_ck = pcb.localCheckpoint()
-    spark.sql(f"DROP TABLE IF EXISTS {pqcb_tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {codes_tbl}")
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_pqcb() -> None:
-        (
-            pcb_ck.write.option("path", os.path.join(base, pqcb_tbl))
-            .mode("overwrite")
-            .saveAsTable(pqcb_tbl)
-        )
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        pqcb_f = pool.submit(_write_pqcb)
-        (
-            _encode_codes(
-                mem.select("seen_id", "cell", "sub", "vq_s"), pcb_ck
-            )
-            .write.bucketBy(8, "cell", "sub")
-            .sortBy("cell", "sub")
-            .option("path", os.path.join(base, codes_tbl))
-            .mode("overwrite")
-            .saveAsTable(codes_tbl)
-        )
-        pqcb_f.result()
-
-
 @query("codebook_pq_rerank_probe", oracle=_PQ_RERANK_ORACLE, wave=15)
 def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ-style semantic novelty on the adaptive two-level codebook
@@ -627,7 +522,7 @@ def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(spark, batch, gen_a.coarse, gen_a.fine, gen_a.members)
+    admit_batch(spark, batch, gen_a)
 
     # the weekly reset, via the guarded operational sequence
     old = refit_and_cutover(spark, sf_dir, pointer, "plb")

@@ -60,29 +60,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
+    admit_batch,
+    build_generation,
     cutover_generation,
     fresh_pointer,
     read_pointer,
+    refit_and_cutover,
     vacuum_generation,
 )
 from awsbatch_mapreduce_spark.index.probe import probe_current_generation
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
+    _k0_sql,
     _probe_ctes,
     _split_ctes,
     _SPLIT_CTES,
-    build_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
-from awsbatch_mapreduce_spark.plans.wave13 import (
-    _GROWN_SRC,
-    _K0_GROWN_SQL,
-    refit_and_cutover,
-)
+from awsbatch_mapreduce_spark.plans.wave12 import _Q3_SQL
+from awsbatch_mapreduce_spark.plans.wave13 import _GROWN_SRC
 from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_ctes
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -94,7 +92,7 @@ _ADC_LIFECYCLE_ORACLE = (
     _kmeans_cte(
         5,
         source=_GROWN_SRC,
-        cell_expr=f"CAST(vec_id % {_K0_GROWN_SQL} AS INT)",
+        cell_expr=f"CAST(vec_id % {_k0_sql(_CAP, _GROWN_SRC)} AS INT)",
     )
     + _SPLIT_CTES
     + _pq_rerank_ctes(_Q3_SQL)
@@ -148,10 +146,7 @@ def codebook_pointer_lifecycle_adc(
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(
-        spark, batch, gen_a.coarse, gen_a.fine, gen_a.members,
-        codes_tbl=gen_a.codes, pqcb_tbl=gen_a.pqcb,
-    )
+    admit_batch(spark, batch, gen_a, with_pq=True)
 
     # the weekly reset: the pq flag is INHERITED — generation B gets
     # fresh codes built from its own members before the pointer moves
@@ -187,15 +182,6 @@ def codebook_pointer_lifecycle_adc(
 _ESCALATED_CAP = _CAP * 4
 
 
-def _k0_grown_sql(cap: int) -> str:
-    """k0 = ceil(sqrt(ceil(n/cap))) over the grown corpus — the
-    wave-13 ``_K0_GROWN_SQL`` generalized to the escalated cap."""
-    return (
-        f"(SELECT CAST(CEIL(SQRT(CEIL(COUNT(*) / {cap}.0))) AS BIGINT)"
-        f" FROM {_GROWN_SRC} s0)"
-    )
-
-
 # From-scratch adaptive fit over the grown corpus AT THE ESCALATED CAP
 # + the shared probe program at the q3 boundary: the escalation is "one
 # clean fit at the new cap" by construction, and the driver's value
@@ -204,7 +190,7 @@ _QUALITY_REFIT_ORACLE = (
     _kmeans_cte(
         5,
         source=_GROWN_SRC,
-        cell_expr=f"CAST(vec_id % {_k0_grown_sql(_ESCALATED_CAP)} AS INT)",
+        cell_expr=f"CAST(vec_id % {_k0_sql(_ESCALATED_CAP, _GROWN_SRC)} AS INT)",
     )
     + _split_ctes(_ESCALATED_CAP)
     + _probe_ctes(_Q3_SQL)
@@ -256,10 +242,7 @@ def codebook_quality_refit_lifecycle(
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(
-        spark, batch, gen_a.coarse, gen_a.fine, gen_a.members,
-        cap=read_pointer(pointer).cap,
-    )
+    admit_batch(spark, batch, gen_a, cap=read_pointer(pointer).cap)
 
     # the quality escalation: refit at the larger cap, pointer carries
     # the new capacity through the same atomic rename

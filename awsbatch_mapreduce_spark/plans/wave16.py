@@ -60,11 +60,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _PQ_K, _PQ_SUB, _quantize
+from awsbatch_mapreduce_spark.index.codebook import (
+    _CAP,
+    _PQ_K,
+    _PQ_SUB,
+    _quantize,
+)
 from awsbatch_mapreduce_spark.index.generation import (
+    admit_batch,
+    build_generation,
     cutover_generation,
     fresh_pointer,
     read_pointer,
+    refit_and_cutover,
     set_generation_nprobe,
     vacuum_generation,
 )
@@ -77,22 +85,20 @@ from awsbatch_mapreduce_spark.index.probe import (
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
     _K0_SQL,
+    _k0_sql,
     _MID_BOUNDARY,
     _SEEN_SRC,
     _split_ctes,
     _SPLIT_CTES,
-    build_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch, _Q3_SQL
+from awsbatch_mapreduce_spark.plans.wave12 import _Q3_SQL
 from awsbatch_mapreduce_spark.plans.wave13 import (
     _GROWN_SRC,
     _MULTIPROBE_ORACLE,
-    refit_and_cutover,
 )
 from awsbatch_mapreduce_spark.plans.wave14 import _pq_rerank_ctes
-from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP, _k0_grown_sql
+from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # The serving width both pointer queries exercise — one step above the
@@ -371,7 +377,7 @@ _ADC_ESCALATED_ORACLE = (
     _kmeans_cte(
         5,
         source=_GROWN_SRC,
-        cell_expr=f"CAST(vec_id % {_k0_grown_sql(_ESCALATED_CAP)} AS INT)",
+        cell_expr=f"CAST(vec_id % {_k0_sql(_ESCALATED_CAP, _GROWN_SRC)} AS INT)",
     )
     + _split_ctes(_ESCALATED_CAP)
     + _pq_rerank_ctes(_Q3_SQL)
@@ -424,10 +430,8 @@ def codebook_adc_escalated_refit(
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(
-        spark, batch, gen_a.coarse, gen_a.fine, gen_a.members,
-        codes_tbl=gen_a.codes, pqcb_tbl=gen_a.pqcb,
-        cap=read_pointer(pointer).cap,
+    admit_batch(
+        spark, batch, gen_a, cap=read_pointer(pointer).cap, with_pq=True
     )
 
     # the quality escalation ON the pq generation: flag inherited,

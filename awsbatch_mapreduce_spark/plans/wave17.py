@@ -62,10 +62,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
+    build_generation,
     cutover_generation,
     fresh_pointer,
+    refit_and_cutover,
     tombstone_members,
     vacuum_generation,
 )
@@ -76,16 +78,13 @@ from awsbatch_mapreduce_spark.index.probe import (
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
     _k0_sql,
     _K0_SQL,
     _probe_ctes,
     _SEEN_SRC,
     _SPLIT_CTES,
     _MID_BOUNDARY,
-    build_generation,
 )
-from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 from awsbatch_mapreduce_spark.plans.wave16 import (
     _pq_multiprobe_ctes,
     _SERVE_NPROBE,
@@ -138,7 +137,7 @@ _TOMBSTONE_PROBE_ORACLE = (
 # Oracle 2 (tombstone THEN refit): one clean fit over the seen half
 # MINUS the tombstoned ids, standard probe — k0 recomputed over the
 # SURVIVING count (the adaptive sizing rule at refit time, exactly
-# ``refit_from_members``'s arithmetic on the filtered member set).
+# the refit's arithmetic on the filtered member set).
 _SURVIVOR_SRC = (
     "(SELECT * FROM embeddings WHERE vec_id <="
     " (SELECT (MIN(vec_id) + MAX(vec_id)) // 2 FROM embeddings)"
@@ -481,7 +480,7 @@ def _gate_one_batch(
 ):
     """One gate stage: probe batch k against the current index, emit
     its verdicts (MATERIALIZED before the append mutates the index the
-    probe reads — the _admit_batch offset-snapshot discipline), append
+    probe reads — the admit_batch offset-snapshot discipline), append
     the admitted docs' bands.  Shared by the plain gate and the
     takedown variant."""
     from awsbatch_mapreduce_spark.operators.hints import never_broadcast

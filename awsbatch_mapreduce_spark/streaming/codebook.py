@@ -23,10 +23,11 @@ operators the driver already proves:
   micro-batch is first probed against the index AS OF all previously
   admitted batches (a vector never matches its own batch — batch
   self-dedup is a different operator), then admitted through
-  ``wave12._admit_batch`` (rank-chunked into NEW <= cap sub-cells,
-  fine book + members bucket-APPENDED — the cap bound survives every
-  admission by construction).  Admission mutates the index across TWO
-  table-append job commits, so replay safety needs more than an
+  ``index.generation.admit_batch`` (rank-chunked into NEW <= cap
+  sub-cells, fine book + members bucket-APPENDED — the cap bound
+  survives every admission by construction).  Admission mutates the
+  index across several table-append job commits (fine, codes on a PQ
+  generation, members), so replay safety needs more than an
   idempotent sink.  The round-13 watermark file alone left a crash
   window between the appends and the watermark write (ADVICE r13): a
   replay of that window would probe an index already containing the
@@ -34,24 +35,23 @@ operators the driver already proves:
   INTENT/WATERMARK pair around the admission:
 
       probe -> write probe partition -> write INTENT(batch_id)
-            -> append fine -> append members
+            -> append fine [-> append codes] -> append members
             -> write WATERMARK(batch_id) -> clear INTENT
 
   Both markers are atomic renames.  On entry, ``batch_id <=
   watermark`` is a committed replay (no-op), and a live INTENT for the
   incoming batch id means a previous attempt crashed INSIDE the
-  admission window — the handler then repairs before proceeding,
+  admission window — the handler then runs
+  ``index.generation.repair_admission`` before proceeding,
   ALL-OR-REPAIR (a FileOutputCommitter job commit is a sequence of
   renames, not one atomic step, so a crash mid-commitJob can leave a
-  PARTIALLY visible members append — ADVICE r14): if ALL of the
-  batch's rows are in the members table the admission had fully
-  committed (the members append is the protocol's commit point), so
-  the watermark fast-forwards and the batch is skipped; if SOME are
-  (mid-commit crash) the partial member rows are purged first; then
-  the orphaned fine rows (fine cells with no member rows — build and
-  admission keep the two tables 1:1 by construction) are dropped,
+  PARTIALLY visible members append): if ALL of the batch's rows are in
+  the members table the admission had fully committed (the members
+  append is the protocol's commit point), so the watermark
+  fast-forwards and the batch is skipped; otherwise the partial member
+  rows, the batch's codes and the orphaned fine rows are dropped,
   restoring the pre-admission state before the normal probe + admit
-  re-runs.  Both repairs rewrite via a crash-safe sibling-directory
+  re-runs.  Every repair rewrites via a crash-safe sibling-directory
   swap (``_swap_rewrite``): the live table stays intact until the
   swap, and the one window between the two renames fails LOUDLY
   (missing table location) rather than silently exposing a truncated
@@ -81,15 +81,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
-    _complete_pending_swap,
-    _swap_rewrite,
+    GenerationLayout,
+    admit_batch,
     live_view,
     read_pointer,
+    repair_admission,
 )
 from awsbatch_mapreduce_spark.index.probe import probe, probe_current_generation
-from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
 
 
 def _write_probe_partition(res: DataFrame, out_dir: str, batch_id: int) -> None:
@@ -172,7 +172,7 @@ def foreach_batch_codebook_probe_current(
 # 5 s trigger can never reach steady state (floor > trigger), while the
 # rule's 30 s ceiling (20.0k vec/s predicted) measured 19.8k vec/s.
 # Marginal cost inflates with refit-starved index growth (2.5x at 46x
-# growth) — wave 13's refit_from_members is the reset.
+# growth) — a refit (``index.generation.refit_and_cutover``) is the reset.
 _BATCH_FLOOR_SEC = 6.0
 _MARGINAL_VEC_PER_SEC = 25_000
 
@@ -287,114 +287,39 @@ def _write_marker(path: str, batch_id: int) -> None:
     os.replace(tmp, path)
 
 
-def _batch_admitted_count(spark, new: DataFrame, mem_tbl: str) -> int:
-    """How many of the batch's rows the members table holds.  A members
-    append is normally one atomic FileOutputCommitter job commit, but
-    that commit is itself a SEQUENCE of renames — a crash mid-commitJob
-    leaves a PARTIALLY visible append (ADVICE r14), so the repair path
-    must distinguish all (committed), none (only the fine append can
-    have landed), and partial (mid-commit crash) instead of treating
-    any visible row as proof of commit."""
-    ids = new.select(F.col("vec_id").alias("seen_id"))
-    return (
-        spark.table(mem_tbl)
-        .join(F.broadcast(ids), "seen_id", "semi")
-        .count()
-    )
-
-
-def _drop_orphan_fine(spark, fine_tbl: str, mem_tbl: str) -> None:
-    """Repair a crash between the fine and members appends: drop fine
-    rows whose (cell, sub) has no member rows.  Build and admission
-    keep fine<->members 1:1 per (cell, sub) by construction, so an
-    orphaned fine cell can only be the fine half of an uncommitted
-    admission.  Rewrites the fine book (same bucket spec, crash-safe
-    sibling-swap — ``_swap_rewrite``) only when an orphan actually
-    exists — the zero-orphan probe is one semi-join over the k0-bounded
-    book, and the rewrite runs only on the rare crash-replay path."""
-    fine = spark.table(fine_tbl)
-    keys = spark.table(mem_tbl).select("cell", "sub").distinct()
-    kept = fine.join(keys, ["cell", "sub"], "semi").localCheckpoint()
-    if kept.count() == fine.count():
-        return
-    _swap_rewrite(spark, fine_tbl, kept, ["cell"])
-
-
-def _drop_partial_members(spark, new: DataFrame, mem_tbl: str) -> None:
-    """Repair a crash INSIDE the members append's job commit (the
-    mid-commitJob window — ADVICE r14): some but not all of the batch's
-    member rows are visible.  Drop every member row belonging to the
-    batch (anti-join on the batch's bounded id set), restoring the
-    members table to its pre-admission state via the same crash-safe
-    sibling-swap as the fine repair.  Corpus-sized rewrite — acceptable
-    because it runs only on the mid-commit-crash replay path, which a
-    table format's transactional commit removes entirely."""
-    ids = new.select(F.col("vec_id").alias("seen_id"))
-    kept = (
-        spark.table(mem_tbl)
-        .join(F.broadcast(ids), "seen_id", "anti")
-        .localCheckpoint()
-    )
-    _swap_rewrite(spark, mem_tbl, kept, ["cell", "sub"])
-
-
-def _drop_batch_codes(spark, new: DataFrame, codes_tbl: str) -> None:
-    """Repair the codes half of an uncommitted admission (round 16):
-    drop every codes row belonging to the batch (anti-join on the
-    batch's bounded id set, crash-safe sibling-swap).  The codes append
-    runs BETWEEN the fine and members appends, so on any replay where
-    the members append did not fully commit the batch's codes rows —
-    none, partial, or all of them — are uncommitted and must go before
-    the re-admission re-encodes them.  The zero-row probe is one
-    bounded semi-join; the rewrite runs only when batch codes actually
-    landed."""
-    ids = new.select(F.col("vec_id").alias("seen_id"))
-    codes = spark.table(codes_tbl)
-    n_in = codes.join(F.broadcast(ids), "seen_id", "semi").count()
-    if n_in == 0:
-        return
-    kept = codes.join(F.broadcast(ids), "seen_id", "anti").localCheckpoint()
-    _swap_rewrite(spark, codes_tbl, kept, ["cell", "sub"])
-
-
 def foreach_batch_codebook_admit_probe(
-    coarse_tbl: str,
-    fine_tbl: str,
-    mem_tbl: str,
+    lay: GenerationLayout,
     out_dir: str,
-    codes_tbl: str | None = None,
-    pqcb_tbl: str | None = None,
-    cap: int | None = None,
+    with_pq: bool = False,
+    cap: int = _CAP,
     pointer_path: str | None = None,
-    tombs_tbl: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Probe-then-admit streaming lifecycle: the micro-batch is probed
-    against the index as of all PREVIOUSLY admitted batches, then
-    admitted as new <= cap sub-cells.  The intent/watermark marker
-    pair + the repair path make the two-append index mutation
-    replay-safe for a crash at ANY point (module docstring).
+    """Probe-then-admit streaming lifecycle over generation ``lay``: the
+    micro-batch is probed against the index as of all PREVIOUSLY
+    admitted batches, then admitted as new <= cap sub-cells.  The
+    intent/watermark marker pair + the repair path make the
+    multi-append index mutation replay-safe for a crash at ANY point
+    (module docstring).
 
-    ``codes_tbl``/``pqcb_tbl`` (round 16): bind the admission to a
-    PQ-carrying generation — admitted members are additionally encoded
-    against the generation's persisted PQ codebook and their codes
-    bucket-appended (order fine -> codes -> members; the members append
-    stays the commit point), and the replay-repair path purges the
-    batch's uncommitted codes rows alongside the orphan fine rows.
-    ``cap`` binds the admission's rank-chunking to the GENERATION'S
-    fine-cell capacity (round 16: the quality-triggered refit escalates
-    it); None keeps the registered fixture default.
+    ``with_pq``: bind the admission to a PQ-carrying generation —
+    admitted members are additionally encoded against the generation's
+    persisted PQ codebook and their codes appended (order fine ->
+    codes -> members; the members append stays the commit point), and
+    the replay repair purges the batch's uncommitted codes rows
+    alongside the orphan fine rows.  ``cap`` binds the admission's
+    rank-chunking to the GENERATION'S fine-cell capacity
+    (``PointerRecord.fitted_cap``: the quality-triggered refit
+    escalates it).
 
-    ``pointer_path`` (round 17, VERDICT r16 #1): when given, each
-    batch's NOVELTY PROBE runs at the pointer's current ``nprobe=N``
-    token (re-read per batch, like the pointer-following readers) —
-    the admission-time probe was the last serving surface stuck at
-    nprobe=1 after the actuator stepped the knob.  The ADMISSION
-    arithmetic is nprobe-independent (rank-chunking reads only the
-    coarse assignment); only the reported novelty verdicts widen."""
-    from awsbatch_mapreduce_spark.plans.wave11 import _CAP
-
-    if cap is None:
-        cap = _CAP
+    The NOVELTY PROBE serves the live member set: the generation's
+    tombstoned members (if any) stop matching at the admission surface
+    the moment the deletion commits.  ``pointer_path``: when given,
+    each batch's novelty probe runs at the pointer's current
+    ``nprobe=N`` token (re-read per batch, like the pointer-following
+    readers), and the tombstone read is serialized against the
+    deletion verb.  The ADMISSION arithmetic is nprobe-independent
+    (rank-chunking reads only the coarse assignment); only the reported
+    novelty verdicts widen."""
     watermark_path = os.path.join(out_dir, "_ADMITTED_WATERMARK")
     intent_path = os.path.join(out_dir, "_ADMIT_INTENT")
 
@@ -430,64 +355,34 @@ def foreach_batch_codebook_admit_probe(
         new = batch_df.select(
             "vec_id", _quantize(F.col("embedding")).alias("vq")
         )
-        if intent == batch_id:
-            # a previous attempt crashed inside the admission window.
-            # Before ANY read-dependent repair decision, complete a
-            # swap the previous repair may itself have crashed inside
-            # (ADVICE r15: a missing table root reads as EMPTY, which
-            # would turn n_in==0 into a silent index truncation).
-            _complete_pending_swap(spark, mem_tbl)
-            _complete_pending_swap(spark, fine_tbl)
-            if codes_tbl is not None:
-                _complete_pending_swap(spark, codes_tbl)
-            # All-or-repair (ADVICE r14): the members append commits via
-            # a sequence of renames, so a mid-commitJob crash leaves a
-            # PARTIAL append — only a complete id set proves commit.
-            n_in = _batch_admitted_count(spark, new, mem_tbl)
-            if n_in == new.count():
-                # both appends fully committed (and the codes append,
-                # which precedes the members commit point); only the
-                # watermark is missing (the probe partition committed
-                # before the intent did) — fast-forward and skip
-                _write_marker(watermark_path, batch_id)
-                os.remove(intent_path)
-                return 0
-            if n_in > 0:
-                # mid-commit crash: purge the partial member rows first
-                _drop_partial_members(spark, new, mem_tbl)
-            if codes_tbl is not None:
-                # the batch's codes rows (none/partial/all may have
-                # landed before the members crash) are uncommitted
-                _drop_batch_codes(spark, new, codes_tbl)
-            # at most the fine append landed: restore pre-admission
-            # state, then fall through to the normal path
-            _drop_orphan_fine(spark, fine_tbl, mem_tbl)
+        if intent == batch_id and repair_admission(spark, new, lay, with_pq):
+            # a previous attempt crashed inside the admission window
+            # AFTER its members append committed (repaired otherwise):
+            # only the watermark is missing (the probe partition
+            # committed before the intent did) — fast-forward and skip
+            _write_marker(watermark_path, batch_id)
+            os.remove(intent_path)
+            return 0
         # probe FIRST (against previously admitted only), then admit;
         # the quantized frame has two consumers and admission must see
         # the pre-admission sub offsets -> localCheckpoint inside
-        # _admit_batch handles the offset snapshot, but `new` itself is
+        # admit_batch handles the offset snapshot, but `new` itself is
         # recomputed per consumer (cheap: one projection over the
         # micro-batch)
         np_ = 1
         if pointer_path is not None:
             np_ = read_pointer(pointer_path).serving_nprobe
-        # the NOVELTY PROBE serves the live member set (round 18):
-        # tombstoned members must stop matching at the admission
-        # surface too.  The ADMISSION below keeps the raw mem_tbl —
-        # sub-cell offsets are physical-row accounting and deleted
-        # members still occupy their slots until the next refit.
-        probe_mem = mem_tbl
-        if tombs_tbl is not None:
-            probe_mem = live_view(
-                spark, mem_tbl, tombs_tbl, pointer_path=pointer_path
-            )
-        res = probe(spark, new, coarse_tbl, fine_tbl, probe_mem, nprobe=np_)
+        # the probe reads the live member set; the ADMISSION keeps the
+        # raw members table — sub-cell offsets are physical-row
+        # accounting and deleted members still occupy their slots
+        # until the next refit
+        probe_mem = live_view(
+            spark, lay.members, lay.tombs, pointer_path=pointer_path
+        )
+        res = probe(spark, new, lay.coarse, lay.fine, probe_mem, nprobe=np_)
         _write_probe_partition(res, out_dir, batch_id)
         _write_marker(intent_path, batch_id)  # admission window opens
-        n_admitted = _admit_batch(
-            spark, new, coarse_tbl, fine_tbl, mem_tbl,
-            codes_tbl=codes_tbl, pqcb_tbl=pqcb_tbl, cap=cap,
-        )
+        n_admitted = admit_batch(spark, new, lay, cap=cap, with_pq=with_pq)
         _write_marker(watermark_path, batch_id)  # admission committed
         os.remove(intent_path)
         return n_admitted

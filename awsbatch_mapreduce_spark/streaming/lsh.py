@@ -128,10 +128,7 @@ def _purge_batch_bands(spark, batch_ids: DataFrame, band_tbl: str) -> int:
     if n_in == 0:
         return 0
     kept = tbl.join(F.broadcast(ids), "doc_id", "anti").localCheckpoint()
-    _swap_rewrite(
-        spark, band_tbl, kept, ["bk"], sort_cols=("bk",),
-        n_buckets=_N_BUCKETS,
-    )
+    _swap_rewrite(spark, band_tbl, kept)
     return n_in
 
 

@@ -3,7 +3,7 @@ supervisor that makes the index lifecycle run unattended —
 quiesce -> refit -> cutover -> vacuum -> resume, triggered by the
 measured cadence rule at micro-batch boundaries.
 
-Round 14 built every primitive (``refit_from_members``, the guarded
+Round 14 built every primitive (the refit from members, the guarded
 ``refit_and_cutover``, ``vacuum_generation``, ``refit_due``) and
 measured why the loop matters: the starvation A/B
 (``scripts/codebook_refit_reset.py``, SCALING.md round-14) showed an
@@ -68,14 +68,17 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
+    GenerationLayout,
     _complete_pending_swap,
+    build_generation,
     cutover_generation,
     generation_layout,
     live_view,
     read_pointer,
     recover_generations,
+    refit_and_cutover,
     set_generation_nprobe,
     vacuum_generation,
 )
@@ -134,9 +137,7 @@ def _recall_snapshot(
 
 
 def admit_probe_with_cadence(
-    coarse_tbl: str,
-    fine_tbl: str,
-    mem_tbl: str,
+    lay: GenerationLayout,
     out_dir: str,
     n_fit: int,
     tolerated_inflation: float = 2.0,
@@ -144,13 +145,11 @@ def admit_probe_with_cadence(
     recall_nprobe: int = 2,
     recall_floor_bp: int = 0,
     recall_max_nprobe: int = 4,
-    codes_tbl: str | None = None,
-    pqcb_tbl: str | None = None,
-    cap: int | None = None,
+    with_pq: bool = False,
+    cap: int = _CAP,
     can_escalate_cap: bool = False,
     pointer_path: str | None = None,
     recall_every: int = 0,
-    tombs_tbl: str | None = None,
     max_deleted_fraction: float = 0.0,
 ) -> Callable[[DataFrame, int], None]:
     """The supervised per-batch function: the round-14 replay-safe
@@ -178,10 +177,10 @@ def admit_probe_with_cadence(
     ``_RECALL_SNAPSHOTS.jsonl`` in the sink dir — the per-generation
     QA read of the just-cut-over index on live traffic.
 
-    ``codes_tbl``/``pqcb_tbl`` bind the admission to a PQ-carrying
-    generation (codes appended per batch — the ADC candidate set stays
-    complete between refits).  ``cap`` binds the admission's
-    rank-chunking to the generation's fitted capacity.
+    ``with_pq`` binds the admission to a PQ-carrying generation (codes
+    appended per batch — the ADC candidate set stays complete between
+    refits).  ``cap`` binds the admission's rank-chunking to the
+    generation's fitted capacity.
 
     ``can_escalate_cap`` arms the CAP side of the actuator (round 16):
     when the incarnation's recall snapshot lands below the floor AND
@@ -229,14 +228,10 @@ def admit_probe_with_cadence(
     out-of-band from the stream, so no incremental counter can track
     them the way admitted rows track ``n_now``."""
     inner = foreach_batch_codebook_admit_probe(
-        coarse_tbl, fine_tbl, mem_tbl, out_dir,
-        codes_tbl=codes_tbl, pqcb_tbl=pqcb_tbl, cap=cap,
+        lay, out_dir, with_pq=with_pq, cap=cap,
         # the admission-time novelty probe serves the pointer's nprobe
         # too (round 17) — the last probe surface the actuator reaches
         pointer_path=pointer_path,
-        # ...and the generation's tombstones (round 18): a deleted
-        # member stops matching at the admission surface immediately
-        tombs_tbl=tombs_tbl,
     )
     wm_path = os.path.join(out_dir, "_ADMITTED_WATERMARK")
     intent_path = os.path.join(out_dir, "_ADMIT_INTENT")
@@ -292,13 +287,11 @@ def admit_probe_with_cadence(
             # snapshot's probe AND its brute-force truth both read the
             # LIVE member set when tombstones exist — recall over
             # deleted members is not a number anyone serves
-            snap_mem = mem_tbl
-            if tombs_tbl is not None:
-                snap_mem = live_view(
-                    spark, mem_tbl, tombs_tbl, pointer_path=pointer_path
-                )
+            snap_mem = live_view(
+                spark, lay.members, lay.tombs, pointer_path=pointer_path
+            )
             snap = _recall_snapshot(
-                spark, new, coarse_tbl, fine_tbl, snap_mem,
+                spark, new, lay.coarse, lay.fine, snap_mem,
                 recall_panel, cur_np,
             )
             # the actuator's read (VERDICT r15 #3): a snapshot below
@@ -351,8 +344,8 @@ def admit_probe_with_cadence(
             # the one authoritative count of this incarnation: taken
             # AFTER the first batch's inner() so a replay repair (or
             # watermark fast-forward) is already folded in
-            spark.catalog.refreshTable(mem_tbl)
-            counter["n"] = spark.table(mem_tbl).count()
+            spark.catalog.refreshTable(lay.members)
+            counter["n"] = spark.table(lay.members).count()
         else:
             # a fresh batch admits every row (the novelty flag reports,
             # it does not filter); the increment is inner()'s own
@@ -393,17 +386,13 @@ def admit_probe_with_cadence(
                 f"members {n_now} > {tolerated_inflation}x fit-time"
                 f" {n_fit}",
             )
-        if (
-            max_deleted_fraction > 0
-            and tombs_tbl is not None
-            and spark.catalog.tableExists(tombs_tbl)
-        ):
+        if max_deleted_fraction > 0 and spark.catalog.tableExists(lay.tombs):
             # out-of-band takedowns: one count of the bounded tombstone
             # table (deletes cannot be folded into the running n_now
             # counter the way admitted rows are — they land between
             # batches, outside the stream)
-            spark.catalog.refreshTable(tombs_tbl)
-            n_tombs = spark.table(tombs_tbl).count()
+            spark.catalog.refreshTable(lay.tombs)
+            n_tombs = spark.table(lay.tombs).count()
             if n_tombs > max_deleted_fraction * n_now:
                 _signal(
                     "deletions",
@@ -438,7 +427,7 @@ def _next_kind(gen_prefix: str, current: str) -> str:
 
 def bootstrap_generation(
     spark, sf_dir: str, pointer_path: str, seed, gen_prefix: str,
-    with_pq: bool = False, cap: int | None = None,
+    with_pq: bool = False, cap: int = _CAP,
 ) -> str:
     """Fit generation ``{gen_prefix}0000`` over a raw (vec_id,
     embedding) seed corpus and cut the pointer over with its fit-time
@@ -448,10 +437,6 @@ def bootstrap_generation(
     inherits it).  ``cap`` sets the fine-cell capacity (default the
     registered fixture cap) and is recorded on the pointer so
     admissions and quality escalations read it back."""
-    from awsbatch_mapreduce_spark.plans.wave11 import _CAP, build_generation
-
-    if cap is None:
-        cap = _CAP
     kind = f"{gen_prefix}0000"
     lay = build_generation(
         spark, sf_dir, kind, seed, cap=cap, with_pq=with_pq
@@ -526,7 +511,7 @@ def run_supervised_admission(
     follow-on): when a generation's tombstone count exceeds that
     fraction of its raw member rows, the cadence check signals reason
     ``deletions`` and the SAME refit machinery compacts — the new fit
-    excludes the tombstoned members (``wave13.refit_and_cutover``) and
+    excludes the tombstoned members (``index.generation.refit_and_cutover``) and
     the new generation carries no tombstone table.  The refit entry
     records ``n_tombs`` and its ``n_fit_after`` is the pointer's
     post-refit read-back (the live count actually fitted), not the raw
@@ -536,9 +521,6 @@ def run_supervised_admission(
     of ``read_pointer``): kind, n_fit, pq, cap and nprobe of the
     incarnation all come from one record, and the post-refit read that
     fills the refit entry is the next cycle's record."""
-    from awsbatch_mapreduce_spark.plans.wave11 import _CAP
-    from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
-
     report: dict = {"segments": [], "refits": [], "recovered": []}
     report["recovered"] = recover_generations(
         spark, sf_dir, pointer_path, gen_prefix
@@ -564,7 +546,7 @@ def run_supervised_admission(
                 " before supervising admission"
             )
         lay = generation_layout(sf_dir, kind)
-        cur_cap = rec.cap if rec.cap is not None else _CAP
+        cur_cap = rec.fitted_cap
         if n_fit is None:
             # pre-round-15 pointer with no recorded fit-time size.  The
             # live count is NOT conservative (ADVICE r15): it resets the
@@ -599,18 +581,13 @@ def run_supervised_admission(
         # keeps serving a complete candidate set between refits; the
         # automatic refit below inherits the flag (refit_and_cutover's
         # with_pq=None default) and rebuilds codes per new generation
-        codes_tbl = pqcb_tbl = None
-        if rec.pq:
-            codes_tbl, pqcb_tbl = lay.codes, lay.pqcb
         # the pointer's serving nprobe wins over the loop's local value
         # (round 17): the actuator writes its steps onto the pointer, so
         # after a restart — or a step applied mid-incarnation — the QA
         # probe measures exactly what production serves
         cur_nprobe = rec.nprobe or cur_nprobe
         fn = admit_probe_with_cadence(
-            lay.coarse,
-            lay.fine,
-            lay.members,
+            lay,
             out_dir,
             n_fit,
             tolerated_inflation,
@@ -618,8 +595,7 @@ def run_supervised_admission(
             recall_nprobe=cur_nprobe,
             recall_floor_bp=recall_floor_bp,
             recall_max_nprobe=recall_max_nprobe,
-            codes_tbl=codes_tbl,
-            pqcb_tbl=pqcb_tbl,
+            with_pq=rec.pq,
             cap=cur_cap,
             can_escalate_cap=(
                 recall_floor_bp > 0 and cur_cap < recall_cap_max
@@ -627,12 +603,9 @@ def run_supervised_admission(
             pointer_path=pointer_path,
             recall_every=recall_every,
             # deletions against this generation reach the admission
-            # probe + QA snapshot the moment they commit (round 18);
-            # the segment-boundary refit excludes and clears them
-            # (wave13.refit_and_cutover)
-            tombs_tbl=lay.tombs,
-            # ...and when armed, enough of them TRIGGERS that refit
-            # (round 18 follow-on: the compaction trigger)
+            # probe + QA snapshot the moment they commit, the
+            # segment-boundary refit excludes and clears them, and when
+            # armed, enough of them TRIGGERS that refit
             max_deleted_fraction=max_deleted_fraction,
         )
         writer = source_df.writeStream.foreachBatch(fn).option(
@@ -732,7 +705,7 @@ def run_supervised_admission(
                     "new": new_kind,
                     "reason": reason,
                     "cap_before": cur_cap,
-                    "cap_after": rec.cap if rec.cap is not None else _CAP,
+                    "cap_after": rec.fitted_cap,
                     "nprobe_after": rec.nprobe or cur_nprobe,
                     "refit_sec": refit_sec,
                     "n_fit_before": n_fit,

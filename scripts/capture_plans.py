@@ -2,7 +2,8 @@
 
 Usage: python scripts/capture_plans.py <suffix> [query ...]
 With no query names, captures the 18 headline queries.  Writes
-plans/<suffix>/<query>.txt.  Uses a small local session (plan
+plans/<suffix>/<query>.txt (an absolute <suffix> is used as the output
+directory itself).  Uses a small local session (plan
 capture is untimed; the physical plan shape is core-count independent
 apart from partition counts).
 
@@ -20,6 +21,10 @@ other queries the run captured before them:
     # ... change the code ...
     python scripts/capture_plans.py after dedup_minhash_lsh
     diff -r plans/before plans/after
+
+``plans/golden/`` holds the committed capture of the index and dedup
+families at sf0.01; ``tests/test_plan_golden.py`` re-captures it and
+diffs.
 """
 
 from __future__ import annotations

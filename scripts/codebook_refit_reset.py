@@ -1,4 +1,4 @@
-"""Measure the refit RESET (round 14): does `refit_from_members`
+"""Measure the refit RESET (round 14): does a refit from the members table
 actually recover the streaming-admission cost that refit-starved index
 growth inflates?
 
@@ -18,7 +18,8 @@ rate/trigger so batch sizes match:
 2. CONTINUE (the no-refit arm): a fresh stream admits into the GROWN,
    starved layout — its steady per-batch ms is the cost an operator
    pays by skipping the refit.
-3. REFIT + CUTOVER: `wave13.refit_from_members` consolidates the grown
+3. REFIT + CUTOVER: `index.generation.build_generation` over the grown
+   members' own rows consolidates the grown
    members into a fresh generation (k0 recomputed for the grown n,
    fine book collapsed to ceil-grade); wall time printed — the weekly
    price.
@@ -92,10 +93,8 @@ def _synthetic(spark, rows_per_sec: int, dim: int, offset: int):
     )
 
 
-def _stream_phase(
-    spark, dim: int, tables: tuple[str, str, str], secs: int, tag: str
-) -> list[list[int]]:
-    """Run a fresh admission stream against ``tables`` for ``secs``;
+def _stream_phase(spark, dim: int, lay, secs: int, tag: str) -> list[list[int]]:
+    """Run a fresh admission stream against generation ``lay`` for ``secs``;
     return steady (rows, ms) pairs (first non-empty batch dropped as
     JIT/backlog-cold when enough signal exists).  Fresh sink (markers
     included) + checkpoint + id range per phase."""
@@ -106,7 +105,7 @@ def _stream_phase(
     tmp = os.environ.get("TMPDIR", "/tmp")
     out = os.path.join(tmp, f"codebook_reset_{tag}_{os.getpid()}")
     ckpt = os.path.join(tmp, f"codebook_reset_ckpt_{tag}_{os.getpid()}")
-    fn = foreach_batch_codebook_admit_probe(*tables, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     q = (
         _synthetic(spark, RATE, dim, _OFFSETS[tag])
         .writeStream.foreachBatch(fn)
@@ -144,9 +143,10 @@ def _index_stats(spark, coarse, fine, mem) -> dict:
 
 
 def main() -> None:
-    from awsbatch_mapreduce_spark.index.generation import fresh_layout
-    from awsbatch_mapreduce_spark.plans.wave11 import build_generation
-    from awsbatch_mapreduce_spark.plans.wave13 import refit_from_members
+    from awsbatch_mapreduce_spark.index.generation import (
+        build_generation,
+        members_corpus,
+    )
     from awsbatch_mapreduce_spark.sources.tables import load_table
 
     spark = get_spark(app_name="codebook-refit-reset")
@@ -162,9 +162,7 @@ def main() -> None:
     )
     coarse_a, fine_a, mem_a = gen_a.coarse, gen_a.fine, gen_a.members
     s0 = _index_stats(spark, coarse_a, fine_a, mem_a)
-    grow = _stream_phase(
-        spark, dim, (coarse_a, fine_a, mem_a), GROW_SECS, "grow"
-    )
+    grow = _stream_phase(spark, dim, gen_a, GROW_SECS, "grow")
     s1 = _index_stats(spark, coarse_a, fine_a, mem_a)
     print(
         json.dumps(
@@ -183,9 +181,7 @@ def main() -> None:
     )
 
     # phase 2: CONTINUE on the starved layout (the no-refit arm)
-    cont = _stream_phase(
-        spark, dim, (coarse_a, fine_a, mem_a), AB_SECS, "continue"
-    )
+    cont = _stream_phase(spark, dim, gen_a, AB_SECS, "continue")
     s2 = _index_stats(spark, coarse_a, fine_a, mem_a)
     print(
         json.dumps(
@@ -199,11 +195,12 @@ def main() -> None:
     )
 
     # phase 3: REFIT from the grown members + report the collapse
-    gen_r = fresh_layout(spark, SF_DIR, "rstr")
-    coarse_r, fine_r, mem_r = gen_r.coarse, gen_r.fine, gen_r.members
     t0 = time.perf_counter()
-    refit_from_members(spark, mem_a, gen_r.base, coarse_r, fine_r, mem_r)
+    gen_r = build_generation(
+        spark, SF_DIR, "rstr", members_corpus(spark, gen_a)
+    )
     refit_sec = round(time.perf_counter() - t0, 1)
+    coarse_r, fine_r, mem_r = gen_r.coarse, gen_r.fine, gen_r.members
     s3 = _index_stats(spark, coarse_r, fine_r, mem_r)
     print(
         json.dumps({"phase": "refit", "refit_sec": refit_sec, "index": s3}),
@@ -211,9 +208,7 @@ def main() -> None:
     )
 
     # phase 4: RESUME on the refitted generation (the refit arm)
-    resume = _stream_phase(
-        spark, dim, (coarse_r, fine_r, mem_r), AB_SECS, "resume"
-    )
+    resume = _stream_phase(spark, dim, gen_r, AB_SECS, "resume")
     print(
         json.dumps(
             {"phase": "resume_post_refit", "batches_rows_ms": resume}

@@ -74,7 +74,7 @@ def _synthetic_embeddings(spark, rows_per_sec: int, dim: int):
 
 
 def main() -> None:
-    from awsbatch_mapreduce_spark.plans.wave11 import build_generation
+    from awsbatch_mapreduce_spark.index.generation import build_generation
     from awsbatch_mapreduce_spark.sources.tables import load_table
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_admit_probe,
@@ -93,12 +93,12 @@ def main() -> None:
         lay = build_generation(
             spark, SF_DIR, "thru", emb.filter(F.col("vec_id") <= F.lit(mid))
         )
-        coarse, fine, mem = lay.coarse, lay.fine, lay.members
+        mem = lay.members
         n_seen0 = spark.table(mem).count()
         tmp = os.environ.get("TMPDIR", "/tmp")
         out = os.path.join(tmp, f"codebook_tp_out_{rate}_{os.getpid()}")
         ckpt = os.path.join(tmp, f"codebook_tp_ckpt_{rate}_{os.getpid()}")
-        fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+        fn = foreach_batch_codebook_admit_probe(lay, out)
         q = (
             _synthetic_embeddings(spark, rate, dim)
             .writeStream.foreachBatch(fn)

@@ -26,15 +26,17 @@ from pyspark.sql import functions as F
 
 import awsbatch_mapreduce_spark
 from awsbatch_mapreduce_spark.index import generation
+from awsbatch_mapreduce_spark.index.codebook import _CAP
 from awsbatch_mapreduce_spark.index.generation import (
     PointerRecord,
+    _swap_rewrite,
     _write_pointer,
+    build_generation,
     cutover_generation,
     read_pointer,
     recover_generations,
     tombstone_members,
 )
-from awsbatch_mapreduce_spark.plans.wave11 import build_generation
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -80,6 +82,71 @@ def test_only_generation_module_spells_the_storage_format():
                         rel = os.path.relpath(path, PACKAGE_DIR)
                         offenders.append(f"{rel}:{n}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_only_generation_module_spells_the_write_spec():
+    """The (cell, sub) bucket/sort spec of the generation tables is
+    declared once, next to the layout: no other package file buckets or
+    sorts a table on (cell, sub)."""
+    spec = re.compile(r"(?:bucketBy|sortBy)\([^)]*[\"']sub[\"']")
+    offenders = []
+    for dirpath, _, files in os.walk(PACKAGE_DIR):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == generation.__file__:
+                continue
+            with open(path) as fh:
+                text = fh.read()
+            offenders += [
+                f"{os.path.relpath(path, PACKAGE_DIR)}: {m.group(0)}"
+                for m in spec.finditer(text)
+            ]
+    assert not offenders, offenders
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [(8, ("cell", "sub")), (16, ("bk",)), None],
+    ids=["cell_sub_8", "bk_16", "unbucketed"],
+)
+def test_swap_rewrite_keeps_the_tables_bucket_spec(spark, tmp_path, spec):
+    """``_swap_rewrite`` reads the bucket spec from the table itself: a
+    rewrite leaves ``DESC EXTENDED``'s bucket rows exactly as they were,
+    for a (cell, sub) generation table, a 16-bucket band index and an
+    unbucketed table alike."""
+    tbl = f"swap_spec_{'x'.join(map(str, spec[1])) if spec else 'flat'}"
+    rows = spark.range(40).select(
+        (F.col("id") % 5).cast("int").alias("cell"),
+        (F.col("id") % 3).cast("int").alias("sub"),
+        F.col("id").alias("bk"),
+    )
+    writer = rows.write.option("path", str(tmp_path / tbl))
+    if spec:
+        writer = writer.bucketBy(spec[0], *spec[1]).sortBy(*spec[1])
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    writer.mode("overwrite").saveAsTable(tbl)
+
+    def bucket_rows():
+        return {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESC EXTENDED {tbl}").collect()
+            if r["col_name"] in ("Num Buckets", "Bucket Columns", "Sort Columns")
+        }
+
+    before = bucket_rows()
+    assert bool(before) == bool(spec), before
+    kept = spark.table(tbl).filter(F.col("bk") % 2 == 0).localCheckpoint()
+    _swap_rewrite(spark, tbl, kept)
+    assert bucket_rows() == before
+    assert spark.table(tbl).count() == 20
+    spark.sql(f"DROP TABLE {tbl}")
+
+
+def test_fitted_cap_defaults_to_the_fit_default():
+    """Admission and refit resolve a generation's cap in one place: the
+    pointer's token, else the default every fit without one uses."""
+    assert PointerRecord("g1").fitted_cap == _CAP
+    assert PointerRecord("g1", None, False, 64).fitted_cap == 64
 
 
 def test_pointer_record_round_trips(tmp_path):

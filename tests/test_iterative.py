@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.plans import QUERIES
-from awsbatch_mapreduce_spark.plans.iterative import kmeans_fit
+from awsbatch_mapreduce_spark.index.codebook import kmeans_fit
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR_ORACLE
 
@@ -51,7 +51,6 @@ def test_assign_literal_callers_pass_unique_vec_ids(spark, monkeypatch):
     import sys
 
     from awsbatch_mapreduce_spark.index import codebook
-    from awsbatch_mapreduce_spark.plans import iterative
     from tests.conftest import SF_DIR
 
     inputs: dict = {}
@@ -62,9 +61,7 @@ def test_assign_literal_callers_pass_unique_vec_ids(spark, monkeypatch):
         inputs.setdefault(site, {})[id(q)] = q
         return orig(q, *args, **kwargs)
 
-    # kmeans_fit calls it through iterative's import, the collected
-    # assignments through codebook's
-    monkeypatch.setattr(iterative, "_assign_literal", recording)
+    # kmeans_fit and the collected assignments both live in codebook
     monkeypatch.setattr(codebook, "_assign_literal", recording)
     for name in (
         "kmeans_embeddings",
@@ -76,10 +73,10 @@ def test_assign_literal_callers_pass_unique_vec_ids(spark, monkeypatch):
     assert set(inputs) == {
         ("kmeans_fit", "label_init_fit"),
         ("kmeans_fit", "semdedup_codebook_novelty"),
-        ("kmeans_fit", "_persist_two_level"),
+        ("kmeans_fit", "build_generation"),
         ("assign_to_cells_collected", "semdedup_codebook_novelty"),
         ("assign_to_cells_collected", "_assign"),
-        ("assign_to_cells_collected", "_admit_batch"),
+        ("assign_to_cells_collected", "admit_batch"),
     }, sorted(inputs)
     for site, frames in inputs.items():
         for q in frames.values():

@@ -1,11 +1,10 @@
-"""What the streaming runtime still takes from the query modules.
+"""The streaming runtime imports no query module.
 
-The index library is moving out of the ``plans`` modules part by part
-(``index/generation.py``, ``index/codebook.py``, ``index/probe.py``).
-What ``streaming/`` may still import from ``plans`` is exactly the
-names of the codebook part that has not moved yet: the fit, the guarded
-refit, admission and the fixture cap.  A new ``plans`` import in the
-runtime fails here instead of quietly re-coupling it to a query module.
+The index library lives in ``index/`` (generation storage and its
+table-writing verbs, codebook arithmetic, probe); ``streaming/`` reaches
+the index only through it.  A ``plans`` import in the runtime —
+function-local ones included — fails here instead of quietly
+re-coupling it to a query module.
 """
 
 from __future__ import annotations
@@ -18,8 +17,6 @@ import awsbatch_mapreduce_spark
 STREAMING_DIR = os.path.join(
     os.path.dirname(awsbatch_mapreduce_spark.__file__), "streaming"
 )
-
-PENDING = {"_admit_batch", "_CAP", "build_generation", "refit_and_cutover"}
 
 
 def _plans_imports() -> list[tuple[str, int, str, list[str]]]:
@@ -47,12 +44,5 @@ def _plans_imports() -> list[tuple[str, int, str, list[str]]]:
     return found
 
 
-def test_streaming_imports_only_pending_codebook_names_from_plans():
-    found = _plans_imports()
-    assert found  # the walk sees the imports that are still pending
-    offenders = [
-        (f, line, module, names)
-        for f, line, module, names in found
-        if not names or set(names) - PENDING
-    ]
-    assert not offenders, offenders
+def test_streaming_imports_no_plans_module():
+    assert _plans_imports() == []

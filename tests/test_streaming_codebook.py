@@ -24,20 +24,16 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import awsbatch_mapreduce_spark.index.generation as gen
 from awsbatch_mapreduce_spark.index.generation import (
     _table_location,
+    build_generation,
     cutover_generation,
-    fresh_layout,
-    generation_layout,
+    members_corpus,
 )
 from awsbatch_mapreduce_spark.plans import QUERIES
 import awsbatch_mapreduce_spark.index.probe as index_probe
-from awsbatch_mapreduce_spark.index.codebook import _quantize
-from awsbatch_mapreduce_spark.plans.wave11 import (
-    _mod_centroid_init,
-    _persist_two_level,
-)
-from awsbatch_mapreduce_spark.scratch import _scratch_dir
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.codebook import (
     _read_marker,
@@ -55,19 +51,27 @@ def _bounds(spark):
     return emb, mid, (mid + b.hi) // 2
 
 
-def _build_index(spark, kind: str):
+def _build_index(spark, kind: str, with_pq: bool = False):
     emb, mid, q3 = _bounds(spark)
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, kind)[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, kind, emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=with_pq,
     )
-    return emb, mid, q3, coarse, fine, mem
+    return emb, mid, q3, lay
+
+
+def _crash_members_append(monkeypatch, crash):
+    """Route an admission's members append (the commit point) to
+    ``crash(app_members, lay)``; returns the real table writer."""
+    real = gen._write_part
+
+    def write_part(frame, lay, part, mode="overwrite"):
+        if part == "members" and mode == "append":
+            return crash(frame, lay)
+        return real(frame, lay, part, mode)
+
+    monkeypatch.setattr(gen, "_write_part", write_part)
+    return real
 
 
 @pytest.fixture(scope="module")
@@ -120,7 +124,8 @@ def _rows(df, drop=("batch_id",)):
 def test_stream_probe_equals_batch_probe(spark, emb_chunks, tmp_path):
     """Probe-only: union of per-micro-batch probes == one batch probe
     of the whole new half against the same static index."""
-    emb, mid, _, coarse, fine, mem = _build_index(spark, "strm")
+    emb, mid, _, lay = _build_index(spark, "strm")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "probe_out")
     _drain(
         spark,
@@ -141,7 +146,8 @@ def test_stream_probe_equals_batch_probe(spark, emb_chunks, tmp_path):
 def test_stream_probe_replay_is_idempotent(spark, emb_chunks, tmp_path):
     """Re-invoking the probe on a replayed micro-batch rewrites its own
     batch_id partition instead of duplicating rows."""
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm")
+    emb, mid, q3, lay = _build_index(spark, "strm")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "probe_out")
     fn = foreach_batch_codebook_probe(coarse, fine, mem, out)
     batch1 = emb.filter(
@@ -160,12 +166,13 @@ def test_admit_probe_matches_registered_queries(spark, emb_chunks, tmp_path):
     the driver-proven append query verbatim (probe vs build + chunk-0
     admitted).  Builds are deterministic (same seen half, same mod
     init, integer arithmetic), so cross-kind comparison is exact."""
-    _, mid, q3, coarse, fine, mem = _build_index(spark, "strm2")
+    _, mid, q3, lay = _build_index(spark, "strm2")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
     _drain(
         spark,
         emb_chunks,
-        foreach_batch_codebook_admit_probe(coarse, fine, mem, out),
+        foreach_batch_codebook_admit_probe(lay, out),
         str(tmp_path / "ckpt"),
     )
     got = spark.read.parquet(out)
@@ -184,10 +191,8 @@ def test_double_admission_offsets_compose(spark, tmp_path):
     not just the build's — per coarse cell the three generations'
     sub ranges are pairwise disjoint and the <= cap bound holds on the
     twice-grown members table."""
-    from awsbatch_mapreduce_spark.plans.wave11 import _CAP
-    from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm3")
+    emb, mid, q3, lay = _build_index(spark, "strm3")
+    coarse, fine, mem = lay[1:4]
     hi = emb.agg(F.max("vec_id")).first()[0]
     q7 = (q3 + hi) // 2
     def _q(lo_ex, hi_in):
@@ -195,8 +200,8 @@ def test_double_admission_offsets_compose(spark, tmp_path):
             (F.col("vec_id") > F.lit(lo_ex)) & (F.col("vec_id") <= F.lit(hi_in))
         ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
 
-    _admit_batch(spark, _q(mid, q3), coarse, fine, mem)
-    _admit_batch(spark, _q(q3, q7), coarse, fine, mem)
+    gen.admit_batch(spark, _q(mid, q3), lay)
+    gen.admit_batch(spark, _q(q3, q7), lay)
     m = spark.table(mem)
     per_cell = m.groupBy("cell", "sub").count().agg(F.max("count")).first()[0]
     assert per_cell <= _CAP, f"cap broken after double admission: {per_cell}"
@@ -230,9 +235,10 @@ def test_double_admission_offsets_compose(spark, tmp_path):
 def test_admit_replay_skipped_by_watermark(spark, emb_chunks, tmp_path):
     """Admission mutates the index, so a replayed batch id must be a
     no-op: the members table must not grow on the second call."""
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm")
+    emb, mid, q3, lay = _build_index(spark, "strm")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     batch1 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", "embedding")
@@ -261,24 +267,21 @@ def test_admit_crash_between_appends_repairs_on_replay(
     members append did not, the intent marker is open.  The replay must
     drop the orphaned fine rows and complete — landing the index AND
     the probe output byte-identical to a never-crashed twin."""
-    import awsbatch_mapreduce_spark.plans.wave12 as w12
-
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm4")
+    emb, mid, q3, lay = _build_index(spark, "strm4")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     fine_after_0 = spark.table(fine).count()
 
-    real_append_members = w12._append_members
-
-    def boom(app_members, mem_tbl):
+    def boom(app_members, lay):
         raise RuntimeError("injected crash between the appends")
 
-    monkeypatch.setattr(w12, "_append_members", boom)
+    real_write_part = _crash_members_append(monkeypatch, boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         fn(batch1, 1)
-    monkeypatch.setattr(w12, "_append_members", real_append_members)
+    monkeypatch.setattr(gen, "_write_part", real_write_part)
     # the crashed attempt left orphaned fine rows and an open intent
     assert spark.table(fine).count() > fine_after_0
     assert _read_marker(os.path.join(out, "_ADMIT_INTENT")) == 1
@@ -288,9 +291,10 @@ def test_admit_crash_between_appends_repairs_on_replay(
     assert _read_marker(os.path.join(out, "_ADMITTED_WATERMARK")) == 1
 
     # never-crashed twin on a separate index generation
-    _, _, _, coarse_t, fine_t, mem_t = _build_index(spark, "strm5")
+    _, _, _, lay_t = _build_index(spark, "strm5")
+    coarse_t, fine_t, mem_t = lay_t[1:4]
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(coarse_t, fine_t, mem_t, out_t)
+    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -313,26 +317,23 @@ def test_admit_crash_mid_members_commit_repairs_on_replay(
     replay must purge the partial member rows, drop the orphaned fine
     rows, re-run the admission, and land the index AND probe output
     byte-identical to a never-crashed twin."""
-    import awsbatch_mapreduce_spark.plans.wave12 as w12
-
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm9")
+    emb, mid, q3, lay = _build_index(spark, "strm9")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     mem_after_0 = spark.table(mem).count()
 
-    real_append_members = w12._append_members
-
-    def partial_then_crash(app_members, mem_tbl):
+    def partial_then_crash(app_members, lay):
         n = app_members.count()
-        real_append_members(app_members.limit(n // 2), mem_tbl)
+        real_write_part(app_members.limit(n // 2), lay, "members", "append")
         raise RuntimeError("injected crash mid members commit")
 
-    monkeypatch.setattr(w12, "_append_members", partial_then_crash)
+    real_write_part = _crash_members_append(monkeypatch, partial_then_crash)
     with pytest.raises(RuntimeError, match="mid members commit"):
         fn(batch1, 1)
-    monkeypatch.setattr(w12, "_append_members", real_append_members)
+    monkeypatch.setattr(gen, "_write_part", real_write_part)
     # the crashed attempt left a PARTIAL members append + open intent
     n_partial = spark.table(mem).count()
     assert mem_after_0 < n_partial < mem_after_0 + batch1.count()
@@ -343,9 +344,10 @@ def test_admit_crash_mid_members_commit_repairs_on_replay(
     assert _read_marker(os.path.join(out, "_ADMITTED_WATERMARK")) == 1
 
     # never-crashed twin on a separate index generation
-    _, _, _, coarse_t, fine_t, mem_t = _build_index(spark, "strm10")
+    _, _, _, lay_t = _build_index(spark, "strm10")
+    coarse_t, fine_t, mem_t = lay_t[1:4]
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(coarse_t, fine_t, mem_t, out_t)
+    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -365,11 +367,8 @@ def test_repair_swap_sweeps_stale_dirs_and_preserves_layout(
     swept, the live table survives intact until the swap, and the
     repaired table keeps its bucketed layout (subsequent probes and
     admissions read it normally)."""
-    import awsbatch_mapreduce_spark.plans.wave12 as w12
-    from awsbatch_mapreduce_spark.plans.wave11 import _CAP
-    from awsbatch_mapreduce_spark.streaming.codebook import _drop_orphan_fine
-
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm11")
+    emb, mid, q3, lay = _build_index(spark, "strm11")
+    coarse, fine, mem = lay[1:4]
     batch0, batch1 = _two_batches(emb, mid, q3)
     q0 = batch0.select("vec_id", _quantize(F.col("embedding")).alias("vq"))
     # orphan some fine rows for real: append the fine half only
@@ -394,7 +393,7 @@ def test_repair_swap_sweeps_stale_dirs_and_preserves_layout(
             "vq", F.lit(0).cast("bigint"), lambda acc, v: acc + v * v
         ).alias("nn_s"),
     ).localCheckpoint()
-    w12._append_fine(app, fine)
+    gen._write_part(gen._fine_book(app), lay, "fine", "append")
     n_fine_grown = spark.table(fine).count()
     n_fine_clean = spark.table(mem).select("cell", "sub").distinct().count()
     assert n_fine_grown > n_fine_clean
@@ -406,7 +405,7 @@ def test_repair_swap_sweeps_stale_dirs_and_preserves_layout(
     with open(f"{loc}__repair/junk", "w") as fh:
         fh.write("stale")
 
-    _drop_orphan_fine(spark, fine, mem)
+    gen._drop_orphan_fine(spark, lay)
     assert not os.path.exists(f"{loc}__repair")
     assert not os.path.exists(f"{loc}__old")
     assert spark.table(fine).count() == n_fine_clean
@@ -428,28 +427,24 @@ def test_repair_crash_mid_swap_completes_on_replay(
     the swap from the fully-written ``__repair`` sibling before any
     read-dependent decision, then repair and re-admit as usual —
     landing byte-identical to a never-crashed twin."""
-    import awsbatch_mapreduce_spark.plans.wave12 as w12
-    import awsbatch_mapreduce_spark.index.generation as gen
-
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm12")
+    emb, mid, q3, lay = _build_index(spark, "strm12")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     mem_after_0 = spark.table(mem).count()
 
     # crash #1: mid members job commit — a partial append + open intent
-    real_append_members = w12._append_members
-
-    def partial_then_crash(app_members, mem_tbl):
+    def partial_then_crash(app_members, lay):
         n = app_members.count()
-        real_append_members(app_members.limit(n // 2), mem_tbl)
+        real_write_part(app_members.limit(n // 2), lay, "members", "append")
         raise RuntimeError("injected crash mid members commit")
 
-    monkeypatch.setattr(w12, "_append_members", partial_then_crash)
+    real_write_part = _crash_members_append(monkeypatch, partial_then_crash)
     with pytest.raises(RuntimeError, match="mid members commit"):
         fn(batch1, 1)
-    monkeypatch.setattr(w12, "_append_members", real_append_members)
+    monkeypatch.setattr(gen, "_write_part", real_write_part)
     assert _read_marker(os.path.join(out, "_ADMIT_INTENT")) == 1
 
     # crash #2: the replay's members repair crashes BETWEEN the swap's
@@ -480,9 +475,10 @@ def test_repair_crash_mid_swap_completes_on_replay(
     assert spark.table(mem).count() > mem_after_0
 
     # never-crashed twin on a separate index generation
-    _, _, _, coarse_t, fine_t, mem_t = _build_index(spark, "strm13")
+    _, _, _, lay_t = _build_index(spark, "strm13")
+    coarse_t, fine_t, mem_t = lay_t[1:4]
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(coarse_t, fine_t, mem_t, out_t)
+    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -519,34 +515,21 @@ def test_admit_with_codes_crash_between_codes_and_members(
     uncommitted codes rows alongside the orphan fine rows, then
     re-admit — landing members, fine, AND codes byte-identical to a
     never-crashed twin."""
-    import awsbatch_mapreduce_spark.plans.wave12 as w12
-    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
-
-    def build_pq(kind):
-        emb, mid, q3, coarse, fine, mem = _build_index(spark, kind)
-        base = _scratch_dir(f"awsbatch_semdedup_{kind}_idx", SF_DIR)
-        codes, pqcb = generation_layout(SF_DIR, kind).tables[3:5]
-        _persist_pq_codes(spark, mem, base, codes, pqcb)
-        return emb, mid, q3, coarse, fine, mem, codes, pqcb
-
-    emb, mid, q3, coarse, fine, mem, codes, pqcb = build_pq("strm14")
+    emb, mid, q3, lay = _build_index(spark, "strm14", with_pq=True)
+    fine, mem, codes = lay.fine, lay.members, lay.codes
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(
-        coarse, fine, mem, out, codes_tbl=codes, pqcb_tbl=pqcb
-    )
+    fn = foreach_batch_codebook_admit_probe(lay, out, with_pq=True)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     codes_after_0 = spark.table(codes).count()
 
-    real_append_members = w12._append_members
-
-    def boom(app_members, mem_tbl):
+    def boom(app_members, lay):
         raise RuntimeError("injected crash after the codes append")
 
-    monkeypatch.setattr(w12, "_append_members", boom)
+    real_write_part = _crash_members_append(monkeypatch, boom)
     with pytest.raises(RuntimeError, match="after the codes append"):
         fn(batch1, 1)
-    monkeypatch.setattr(w12, "_append_members", real_append_members)
+    monkeypatch.setattr(gen, "_write_part", real_write_part)
     # the crashed attempt left the batch's codes committed (they precede
     # the members commit point) and an open intent
     spark.catalog.refreshTable(codes)
@@ -558,11 +541,10 @@ def test_admit_with_codes_crash_between_codes_and_members(
     assert _read_marker(os.path.join(out, "_ADMITTED_WATERMARK")) == 1
 
     # never-crashed twin on a separate PQ-carrying generation
-    _, _, _, coarse_t, fine_t, mem_t, codes_t, pqcb_t = build_pq("strm15")
+    _, _, _, lay_t = _build_index(spark, "strm15", with_pq=True)
+    fine_t, mem_t, codes_t = lay_t.fine, lay_t.members, lay_t.codes
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(
-        coarse_t, fine_t, mem_t, out_t, codes_tbl=codes_t, pqcb_tbl=pqcb_t
-    )
+    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t, with_pq=True)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -580,9 +562,10 @@ def test_admit_crash_after_commit_fast_forwards_watermark(spark, tmp_path):
     never happened (intent still open).  The replay must recognize the
     batch as admitted (its rows are in the members table), fast-forward
     the watermark, and must NOT re-probe or re-admit."""
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm6")
+    emb, mid, q3, lay = _build_index(spark, "strm6")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     fn(batch1, 1)
@@ -609,9 +592,10 @@ def test_admit_stale_intent_cleared_and_foreign_intent_refused(
     an intent for an unwatermarked batch OTHER than the delivered one
     (checkpoint/index mismatch) must refuse loudly rather than risk a
     double admission."""
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm7")
+    emb, mid, q3, lay = _build_index(spark, "strm7")
+    coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     # stale intent: batch 0's watermark landed but its intent survived
@@ -654,19 +638,17 @@ def test_admission_sizing_rule_round_trips_and_matches_measurements():
 def test_streaming_admissions_then_refit_cutover(spark, tmp_path):
     """The complete production index loop across both surfaces:
     continuous ingestion (two streamed probe-then-admit batches grow
-    the persisted index) followed by the weekly reset (wave 13's
-    refit_from_members rebuilds a fresh generation from the grown
-    members table) — and a probe of the refitted generation is
+    the persisted index) followed by the weekly reset (a refit rebuilds
+    a fresh generation from the grown members table) — and a probe of the refitted generation is
     frame-identical to a from-scratch fit over everything admitted.
     Pins that the streaming-grown members table is a valid refit
     source exactly like the batch-grown one."""
-    from awsbatch_mapreduce_spark.plans.wave13 import refit_from_members
-
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "strm8")
+    emb, mid, q3, lay = _build_index(spark, "strm8")
+    coarse, fine, mem = lay[1:4]
     hi = emb.agg(F.max("vec_id")).first()[0]
     q7 = (q3 + hi) // 2
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_admit_probe(lay, out)
     fn(
         emb.filter(
             (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
@@ -681,19 +663,13 @@ def test_streaming_admissions_then_refit_cutover(spark, tmp_path):
     )
     # weekly reset: refit a fresh generation from the streaming-grown
     # members table alone
-    base_r, coarse_r, fine_r, mem_r = fresh_layout(spark, SF_DIR, "strm8r")[:4]
-    refit_from_members(spark, mem, base_r, coarse_r, fine_r, mem_r)
+    coarse_r, fine_r, mem_r = build_generation(
+        spark, SF_DIR, "strm8r", members_corpus(spark, lay)
+    )[1:4]
     # from-scratch twin over the same admitted corpus
-    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "strm8s")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(q7)),
-        _mod_centroid_init,
-        base_s,
-        coarse_s,
-        fine_s,
-        mem_s,
-    )
+    coarse_s, fine_s, mem_s = build_generation(
+        spark, SF_DIR, "strm8s", emb.filter(F.col("vec_id") <= F.lit(q7))
+    )[1:4]
     probe = emb.filter(F.col("vec_id") > F.lit(q7)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
@@ -711,15 +687,12 @@ def test_stream_adc_probe_equals_batch_adc_probe(
     given a static PQ generation), and the reader REFUSES an unflagged
     generation at the batch boundary instead of silently falling back
     to the full-vector join."""
-    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_probe_current,
     )
 
-    emb, mid, q3, coarse, fine, mem = _build_index(spark, "sadc")
-    base = _scratch_dir("awsbatch_semdedup_sadc_idx", SF_DIR)
-    codes, pqcb = generation_layout(SF_DIR, "sadc").tables[3:5]
-    _persist_pq_codes(spark, mem, base, codes, pqcb)
+    emb, mid, q3, lay = _build_index(spark, "sadc", with_pq=True)
+    coarse, fine, mem, codes, pqcb = lay[1:6]
     pointer = str(tmp_path / "ptr")
 
     # unflagged generation: the ADC reader must fail the batch loudly
@@ -766,18 +739,12 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
         foreach_batch_codebook_probe_current,
     )
 
-    emb, mid, q3, coarse_a, fine_a, mem_a = _build_index(spark, "pca")
+    emb, mid, q3, lay_a = _build_index(spark, "pca")
+    coarse_a, fine_a, mem_a = lay_a[1:4]
     # generation B: an independent fit over the grown corpus (<= q3)
-    base_b, coarse_b, fine_b, mem_b = fresh_layout(spark, SF_DIR, "pcb")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(q3)),
-        _mod_centroid_init,
-        base_b,
-        coarse_b,
-        fine_b,
-        mem_b,
-    )
+    coarse_b, fine_b, mem_b = build_generation(
+        spark, SF_DIR, "pcb", emb.filter(F.col("vec_id") <= F.lit(q3))
+    )[1:4]
     pointer = str(tmp_path / "CURRENT_GENERATION")
     out = str(tmp_path / "probe_out")
     fn = foreach_batch_codebook_probe_current(SF_DIR, pointer, out)

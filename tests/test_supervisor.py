@@ -28,9 +28,10 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import awsbatch_mapreduce_spark.index.generation as gen
 from awsbatch_mapreduce_spark.index.generation import (
+    build_generation,
     cutover_generation,
-    fresh_layout,
     generation_layout,
     live_view,
     read_pointer,
@@ -40,10 +41,6 @@ from awsbatch_mapreduce_spark.index.generation import (
 import awsbatch_mapreduce_spark.index.probe as index_probe
 from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.probe import probe_current_generation
-from awsbatch_mapreduce_spark.plans.wave11 import (
-    _mod_centroid_init,
-    _persist_two_level,
-)
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.supervisor import (
     _next_kind,
@@ -217,10 +214,8 @@ def test_supervised_admission_auto_refits_and_matches_clean_fit(
             probe_current_generation(spark, SF_DIR, pointer, probe).collect(),
         )
     )
-    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "svs")[:4]
-    _persist_two_level(
-        spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
-    )
+    lay_s = build_generation(spark, SF_DIR, "svs", emb)
+    base_s, coarse_s, fine_s, mem_s = lay_s[:4]
     want = sorted(
         map(tuple, index_probe.probe(spark, probe, coarse_s, fine_s, mem_s).collect())
     )
@@ -306,8 +301,6 @@ def test_supervised_admission_pq_keeps_adc_serving(
     vacuumed — and the final ADC probe through the pointer is
     frame-identical to one clean fit + encode over everything
     admitted."""
-    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
-
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path / "ptr")
@@ -353,12 +346,8 @@ def test_supervised_admission_pq_keeps_adc_serving(
             ).collect(),
         )
     )
-    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "svz")[:4]
-    _persist_two_level(
-        spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
-    )
-    codes_s, pqcb_s = generation_layout(SF_DIR, "svz").tables[3:5]
-    _persist_pq_codes(spark, mem_s, base_s, codes_s, pqcb_s)
+    lay_s = build_generation(spark, SF_DIR, "svz", emb, with_pq=True)
+    base_s, coarse_s, fine_s, mem_s, codes_s, pqcb_s = lay_s[:6]
     want = sorted(
         map(
             tuple,
@@ -406,16 +395,10 @@ def test_cadence_counter_matches_counted_twin(spark, tmp_path, monkeypatch):
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     q3 = (mid + hi) // 2
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "svcnt")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, "svcnt", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base, coarse, fine, mem = lay[:4]
     n_fit = spark.table(mem).count()
 
     seen = []
@@ -428,7 +411,7 @@ def test_cadence_counter_matches_counted_twin(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sup, "refit_due", recording)
     out = str(tmp_path / "out")
     fn = admit_probe_with_cadence(
-        coarse, fine, mem, out, n_fit, tolerated_inflation=100.0
+        lay, out, n_fit, tolerated_inflation=100.0
     )
     batch0 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
@@ -461,24 +444,16 @@ def test_legacy_pointer_baseline_rewrite_preserves_pq_flag(
     losing the flag would stop codes appends and refuse ADC readers on
     a generation that HAS codes."""
     import pyarrow.parquet as _pq
-    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path / "ptr")
     kind = "svpf0000"
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, kind)[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, kind, emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes, pqcb = generation_layout(SF_DIR, kind).tables[3:5]
-    _persist_pq_codes(spark, mem, base, codes, pqcb)
+    base, coarse, fine, mem, codes, pqcb = lay[:6]
     cutover_generation(spark, SF_DIR, pointer, kind, with_pq=True)  # no n_fit
     assert read_pointer(pointer)[:2] == (kind, None)
     # ...and a serving width set by the actuator after that manual
@@ -657,8 +632,6 @@ def test_supervisor_recovers_from_crash_during_refit(
     generation, re-signal the refit at the first batch boundary,
     complete it, and finish the stream — the crashed timeline lands
     exactly where a never-crashed one would."""
-    import awsbatch_mapreduce_spark.plans.wave13 as w13
-
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path / "ptr")
@@ -670,17 +643,21 @@ def test_supervisor_recovers_from_crash_during_refit(
         "svc",
     )
 
-    real_refit = w13.refit_from_members
+    real_refit = gen.build_generation
     crashed = []
 
-    def crash_once(spark_, src_mem, base, coarse, fine, mem, **kw):
+    def crash_once(spark_, sf_dir, kind, *args, **kw):
         if not crashed:
             crashed.append(True)
-            # leave a half-built generation behind: fine+members missing
+            # leave a half-built generation behind: its layout swept
+            # fresh, no table written
+            gen.fresh_layout(spark_, sf_dir, kind)
             raise RuntimeError("injected crash mid refit")
-        return real_refit(spark_, src_mem, base, coarse, fine, mem, **kw)
+        return real_refit(spark_, sf_dir, kind, *args, **kw)
 
-    monkeypatch.setattr(w13, "refit_from_members", crash_once)
+    # the guarded refit's fit step (the supervisor's own bootstrap
+    # imports the verb by name and is not affected)
+    monkeypatch.setattr(gen, "build_generation", crash_once)
     with pytest.raises(RuntimeError, match="injected crash mid refit"):
         _run(spark, four_chunks, tmp_path, pointer, gen_prefix="svc")
     # pointer untouched by the crash; admitted rows are in the OLD gen
@@ -707,10 +684,8 @@ def test_supervisor_recovers_from_crash_during_refit(
             probe_current_generation(spark, SF_DIR, pointer, probe).collect(),
         )
     )
-    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "svt")[:4]
-    _persist_two_level(
-        spark, emb, _mod_centroid_init, base_s, coarse_s, fine_s, mem_s
-    )
+    lay_s = build_generation(spark, SF_DIR, "svt", emb)
+    base_s, coarse_s, fine_s, mem_s = lay_s[:4]
     want = sorted(
         map(tuple, index_probe.probe(spark, probe, coarse_s, fine_s, mem_s).collect())
     )
@@ -903,16 +878,10 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
 
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "svzt")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, "svzt", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base, coarse, fine, mem = lay[:4]
     n_fit = spark.table(mem).count()
     pointer = str(tmp_path / "ptr")
     with open(pointer, "w") as fh:
@@ -932,9 +901,7 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sup, "_recall_snapshot", zero_truth)
     fn = admit_probe_with_cadence(
-        coarse,
-        fine,
-        mem,
+        lay,
         str(tmp_path / "out"),
         n_fit,
         tolerated_inflation=100.0,
@@ -1151,12 +1118,11 @@ def test_deletion_signal_fires_on_empty_first_batch(spark, tmp_path):
 
     out_dir = str(tmp_path / "never_created_out")
     fn = admit_probe_with_cadence(
-        *generation_layout(SF_DIR, "svde0000").tables[:3],
+        generation_layout(SF_DIR, "svde0000"),
         out_dir,
         boot.count(),
         100.0,
         pointer_path=pointer,
-        tombs_tbl=generation_layout(SF_DIR, "svde0000").tombs,
         max_deleted_fraction=0.2,
     )
     empty = boot.limit(0)

@@ -30,24 +30,21 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import awsbatch_mapreduce_spark.index.generation as gen
 from awsbatch_mapreduce_spark.index.generation import (
     _table_location,
+    build_generation,
     cutover_generation,
-    fresh_layout,
     generation_layout,
     live_view,
     read_pointer,
+    refit_and_cutover,
     tombstone_members,
     vacuum_generation,
 )
 import awsbatch_mapreduce_spark.index.probe as index_probe
 from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.probe import probe_current_generation
-from awsbatch_mapreduce_spark.plans.wave11 import (
-    _mod_centroid_init,
-    _persist_two_level,
-)
-from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 from awsbatch_mapreduce_spark.plans.wave17 import _TOMB_MOD
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
@@ -62,16 +59,10 @@ def _bounds(spark):
 def _build_gen(spark, kind, pointer):
     """Fit over the seen half + cutover; returns (emb, mid, tables)."""
     emb, mid = _bounds(spark)
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, kind)[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, kind, emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base, coarse, fine, mem = lay[:4]
     spark.sql(f"DROP TABLE IF EXISTS {generation_layout(SF_DIR, kind).tombs}")
     if os.path.exists(pointer):
         os.remove(pointer)
@@ -192,18 +183,17 @@ def test_delete_landing_mid_refit_refuses_cutover(spark, tmp_path, monkeypatch):
     _, _, (_, _, mem) = _build_gen(spark, "tmf", pointer)
     tombstone_members(spark, SF_DIR, pointer, _tomb_ids(spark, mem).limit(2))
 
-    import awsbatch_mapreduce_spark.plans.wave13 as w13
-
-    real = w13.refit_from_members
+    real = gen.build_generation
 
     def refit_then_delete(*a, **kw):
-        real(*a, **kw)
+        lay = real(*a, **kw)
         # a deletion request lands while the refit runs (post-snapshot)
         tombstone_members(
             spark, SF_DIR, pointer, _tomb_ids(spark, mem).limit(4)
         )
+        return lay
 
-    monkeypatch.setattr(w13, "refit_from_members", refit_then_delete)
+    monkeypatch.setattr(gen, "build_generation", refit_then_delete)
     with pytest.raises(RuntimeError, match="tombstones moved"):
         refit_and_cutover(spark, SF_DIR, pointer, "tmfr")
     # the pointer never moved — the old generation still serves
@@ -211,22 +201,13 @@ def test_delete_landing_mid_refit_refuses_cutover(spark, tmp_path, monkeypatch):
 
 
 def test_adc_serving_excludes_tombstoned_members(spark, tmp_path):
-    from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
-
     pointer = str(tmp_path / "ptr")
     emb, mid = _bounds(spark)
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "tad")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, "tad", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes, pqcb = generation_layout(SF_DIR, "tad").tables[3:5]
-    _persist_pq_codes(spark, mem, base, codes, pqcb)
+    base, coarse, fine, mem, codes, pqcb = lay[:6]
     spark.sql(f"DROP TABLE IF EXISTS {generation_layout(SF_DIR, 'tad').tombs}")
     if os.path.exists(pointer):
         os.remove(pointer)

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.plans import QUERIES
 from awsbatch_mapreduce_spark.index.probe import _NO_PEER_BP, _SEMDEDUP_EPS_BP
-from awsbatch_mapreduce_spark.plans.wave11 import _CAP
+from awsbatch_mapreduce_spark.index.codebook import _CAP
 from tests.conftest import SF_BOTH, SF_DIR
 from tests.conftest import plan_of as _plan
 from tests.conftest import query_rows as _rows

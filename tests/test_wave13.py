@@ -21,23 +21,24 @@ import re
 
 from pyspark.sql import functions as F
 
+import awsbatch_mapreduce_spark.index.generation as gen
 from awsbatch_mapreduce_spark.index.generation import (
+    admit_batch,
+    build_generation,
     cutover_generation,
-    fresh_layout,
     generation_layout,
+    members_corpus,
     read_pointer,
+    refit_and_cutover,
     vacuum_generation,
 )
 from awsbatch_mapreduce_spark.plans import QUERIES
 import awsbatch_mapreduce_spark.index.probe as index_probe
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.probe import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
     _MID_BOUNDARY,
     _PROBE_CTES,
-    _mod_centroid_init,
-    _persist_two_level,
     _probe_ctes,
 )
 from awsbatch_mapreduce_spark.scratch import _scratch_dir
@@ -162,16 +163,10 @@ def test_refit_from_members_equals_from_scratch_fit(spark):
     lifecycle = sorted(map(tuple, _rows(spark, _Q, SF_DIR)))
     mid, q3 = _bounds(spark, SF_DIR)
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    base_s, coarse_s, fine_s, mem_s = fresh_layout(spark, SF_DIR, "rfs")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(q3)),
-        _mod_centroid_init,
-        base_s,
-        coarse_s,
-        fine_s,
-        mem_s,
+    lay_s = build_generation(
+        spark, SF_DIR, "rfs", emb.filter(F.col("vec_id") <= F.lit(q3))
     )
+    base_s, coarse_s, fine_s, mem_s = lay_s[:4]
     probe = emb.filter(F.col("vec_id") > F.lit(q3)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
     )
@@ -375,9 +370,6 @@ def test_refit_and_cutover_refuses_on_concurrent_admission(
     generation — nothing lost."""
     import pytest
 
-    import awsbatch_mapreduce_spark.plans.wave13 as w13
-    from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-    from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
     with pytest.raises(RuntimeError, match="nothing to refit from"):
@@ -385,34 +377,29 @@ def test_refit_and_cutover_refuses_on_concurrent_admission(
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     mid, q3 = _bounds(spark, SF_DIR)
-    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "gda")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    lay_a = build_generation(
+        spark, SF_DIR, "gda", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base_a, coarse_a, fine_a, mem_a = lay_a[:4]
     cutover_generation(spark, SF_DIR, pointer, "gda")
     n_before = spark.table(mem_a).count()
     late = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
 
-    real_refit = w13.refit_from_members
+    real_refit = gen.build_generation
 
-    def refit_then_admit(spark_, src_mem, *args, **kwargs):
-        real_refit(spark_, src_mem, *args, **kwargs)
+    def refit_then_admit(spark_, *args, **kwargs):
+        lay = real_refit(spark_, *args, **kwargs)
         # the violated contract: an admission lands in the SOURCE
         # generation after the refit consumed its snapshot
-        _admit_batch(spark_, late, coarse_a, fine_a, mem_a)
+        admit_batch(spark_, late, lay_a)
+        return lay
 
-    monkeypatch.setattr(w13, "refit_from_members", refit_then_admit)
+    monkeypatch.setattr(gen, "build_generation", refit_then_admit)
     with pytest.raises(RuntimeError, match="grew from"):
         refit_and_cutover(spark, SF_DIR, pointer, "gdb")
-    monkeypatch.setattr(w13, "refit_from_members", real_refit)
+    monkeypatch.setattr(gen, "build_generation", real_refit)
     # refused: pointer untouched, old generation intact with the late
     # admission, half-built gen B missing it (why the refusal matters)
     assert read_pointer(pointer).kind == "gda"
@@ -441,30 +428,21 @@ def test_refit_and_cutover_rolls_back_pointer_on_post_swap_growth(
     the late admission into the new generation."""
     import pytest
 
-    import awsbatch_mapreduce_spark.plans.wave13 as w13
-    from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-    from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     mid, q3 = _bounds(spark, SF_DIR)
-    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "tka")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    lay_a = build_generation(
+        spark, SF_DIR, "tka", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base_a, coarse_a, fine_a, mem_a = lay_a[:4]
     cutover_generation(spark, SF_DIR, pointer, "tka")
     n_before = spark.table(mem_a).count()
     late = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
 
-    real_cutover = w13.cutover_generation
+    real_cutover = gen.cutover_generation
     fired = []
 
     def admit_then_cutover(spark_, sf_dir_, pointer_, kind_, **kw):
@@ -473,13 +451,13 @@ def test_refit_and_cutover_rolls_back_pointer_on_post_swap_growth(
         # later calls (the rollback) pass straight through
         if not fired:
             fired.append(True)
-            _admit_batch(spark_, late, coarse_a, fine_a, mem_a)
+            admit_batch(spark_, late, lay_a)
         return real_cutover(spark_, sf_dir_, pointer_, kind_, **kw)
 
-    monkeypatch.setattr(w13, "cutover_generation", admit_then_cutover)
+    monkeypatch.setattr(gen, "cutover_generation", admit_then_cutover)
     with pytest.raises(RuntimeError, match="grew from"):
         refit_and_cutover(spark, SF_DIR, pointer, "tkb")
-    monkeypatch.setattr(w13, "cutover_generation", real_cutover)
+    monkeypatch.setattr(gen, "cutover_generation", real_cutover)
     # refused AND rolled back: pointer on the old generation, which
     # holds the late admission; gen B lacks it (why the rollback matters)
     assert read_pointer(pointer).kind == "tka"
@@ -551,9 +529,7 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
 
     import pytest
 
-    from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
     from awsbatch_mapreduce_spark.index.probe import probe_current_generation
-    from awsbatch_mapreduce_spark.plans.wave13 import refit_from_members
 
     pointer = str(tmp_path / "CURRENT_GENERATION")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -571,16 +547,10 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
         cutover_generation(spark, SF_DIR, pointer, "gcx")
     assert read_pointer(pointer).kind is None
 
-    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "gca")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    lay_a = build_generation(
+        spark, SF_DIR, "gca", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base_a, coarse_a, fine_a, mem_a = lay_a[:4]
     assert cutover_generation(spark, SF_DIR, pointer, "gca") is None
     via_ptr = sorted(
         map(
@@ -597,9 +567,10 @@ def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
     assert via_ptr == direct and len(direct) > 0
 
     # grow gen A, refit into gen B, cut over, reclaim A
-    _admit_batch(spark, batch, coarse_a, fine_a, mem_a)
-    base_b, coarse_b, fine_b, mem_b = fresh_layout(spark, SF_DIR, "gcb")[:4]
-    refit_from_members(spark, mem_a, base_b, coarse_b, fine_b, mem_b)
+    admit_batch(spark, batch, lay_a)
+    coarse_b, fine_b, mem_b = build_generation(
+        spark, SF_DIR, "gcb", members_corpus(spark, lay_a)
+    )[1:4]
     assert cutover_generation(spark, SF_DIR, pointer, "gcb") == "gca"
     via_ptr_b = sorted(
         map(

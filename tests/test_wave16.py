@@ -26,23 +26,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.index.generation import (
+    admit_batch,
+    build_generation,
     cutover_generation,
-    fresh_layout,
     generation_layout,
     read_pointer,
+    refit_and_cutover,
     set_generation_nprobe,
 )
 import awsbatch_mapreduce_spark.index.probe as index_probe
-from awsbatch_mapreduce_spark.index.codebook import _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.probe import probe_current_generation
-from awsbatch_mapreduce_spark.plans.wave11 import (
-    _CAP,
-    _mod_centroid_init,
-    _persist_two_level,
-)
-from awsbatch_mapreduce_spark.plans.wave12 import _admit_batch
-from awsbatch_mapreduce_spark.plans.wave13 import refit_and_cutover
-from awsbatch_mapreduce_spark.plans.wave14 import _persist_pq_codes
 from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
@@ -66,18 +60,11 @@ def fitted_pq_gen(spark, tmp_path_factory):
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     pointer = str(tmp_path_factory.mktemp("w16ptr") / "CURRENT_GENERATION")
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "w16")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, "w16", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes, pqcb = generation_layout(SF_DIR, "w16").tables[3:5]
-    _persist_pq_codes(spark, mem, base, codes, pqcb)
+    base, coarse, fine, mem, codes, pqcb = lay[:6]
     cutover_generation(spark, SF_DIR, pointer, "w16", with_pq=True)
     new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", _quantize(F.col("embedding")).alias("vq")
@@ -210,28 +197,19 @@ def test_escalated_pq_refit_rekeys_codes(spark, tmp_path):
     q3 = (mid + hi) // 2
     pointer = str(tmp_path / "ptr")
 
-    base_a, coarse_a, fine_a, mem_a = fresh_layout(spark, SF_DIR, "w16e")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base_a,
-        coarse_a,
-        fine_a,
-        mem_a,
+    lay_a = build_generation(
+        spark, SF_DIR, "w16e", emb.filter(F.col("vec_id") <= F.lit(mid)),
+        with_pq=True,
     )
-    codes_a, pqcb_a = generation_layout(SF_DIR, "w16e").tables[3:5]
-    _persist_pq_codes(spark, mem_a, base_a, codes_a, pqcb_a)
+    base_a, coarse_a, fine_a, mem_a, codes_a, pqcb_a = lay_a[:6]
     cutover_generation(
         spark, SF_DIR, pointer, "w16e", with_pq=True, cap=_CAP
     )
     batch = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", _quantize(F.col("embedding")).alias("vq"))
-    _admit_batch(
-        spark, batch, coarse_a, fine_a, mem_a,
-        codes_tbl=codes_a, pqcb_tbl=pqcb_a,
-        cap=read_pointer(pointer).cap,
+    admit_batch(
+        spark, batch, lay_a, cap=read_pointer(pointer).cap, with_pq=True
     )
 
     old = refit_and_cutover(
@@ -286,22 +264,14 @@ def test_admission_probe_serves_pointer_nprobe(spark, tmp_path):
     emb, lo, hi = _bounds(spark)
     mid = (lo + hi) // 2
     q3 = (mid + hi) // 2
-    base, coarse, fine, mem = fresh_layout(spark, SF_DIR, "w16s")[:4]
-    _persist_two_level(
-        spark,
-        emb.filter(F.col("vec_id") <= F.lit(mid)),
-        _mod_centroid_init,
-        base,
-        coarse,
-        fine,
-        mem,
+    lay = build_generation(
+        spark, SF_DIR, "w16s", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
+    base, coarse, fine, mem = lay[:4]
     pointer = str(tmp_path / "ptr")
     cutover_generation(spark, SF_DIR, pointer, "w16s", nprobe=2)
     out = str(tmp_path / "out")
-    fn = foreach_batch_codebook_admit_probe(
-        coarse, fine, mem, out, pointer_path=pointer
-    )
+    fn = foreach_batch_codebook_admit_probe(lay, out, pointer_path=pointer)
     b0 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     )
