@@ -1,7 +1,7 @@
 """The committed plan gate: the index and dedup query families' plans
 equal ``plans/golden/``.
 
-Every file in ``plans/golden/`` is the normalised ``.explain("formatted")``
+Every ``.txt`` file in ``plans/golden/`` is the normalised ``.explain("formatted")``
 capture (``scripts/capture_plans.py``) of one registered query at
 sf0.01, preceded by the plans of the frames its builder
 ``localCheckpoint``s.  This test re-captures the same queries in a
@@ -14,7 +14,10 @@ plan on purpose re-captures ``golden/`` in the same commit, so the
 plan change shows in its diff:
 
     SPARK_GRAFT_SF_DIR=/path/to/sf0.01 \\
-        python scripts/capture_plans.py "$PWD/plans/golden" $(ls plans/golden | sed 's/.txt$//')
+        python scripts/capture_plans.py "$PWD/plans/golden" $(cd plans/golden && ls *.txt | sed 's/.txt$//')
+
+(``plans/golden/oracles.json`` beside them is the oracle-text gate of
+``tests/test_oracle_golden.py``, not a plan.)
 """
 
 from __future__ import annotations
@@ -32,7 +35,8 @@ CAPTURE = os.path.join(REPO, "scripts", "capture_plans.py")
 
 
 def test_plans_match_golden(tmp_path):
-    names = sorted(f[: -len(".txt")] for f in os.listdir(GOLDEN))
+    plans = sorted(f for f in os.listdir(GOLDEN) if f.endswith(".txt"))
+    names = [f[: -len(".txt")] for f in plans]
     assert names, "plans/golden/ is empty"
     out, cwd, tmp = (tmp_path / d for d in ("plans", "cwd", "tmp"))
     cwd.mkdir()
@@ -47,9 +51,9 @@ def test_plans_match_golden(tmp_path):
         timeout=1500,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    assert sorted(os.listdir(out)) == sorted(os.listdir(GOLDEN))
+    assert sorted(os.listdir(out)) == plans
     drifted = []
-    for f in sorted(os.listdir(GOLDEN)):
+    for f in plans:
         with open(os.path.join(GOLDEN, f)) as fh:
             want = fh.read().splitlines()
         with open(out / f) as fh:
