@@ -4,7 +4,7 @@
 The one home of the format every near-dup consumer shares: the dedup
 ladder and its QA probes (``plans/llm_text.py``, ``wave4``, ``wave7``,
 ``wave8``), the persisted band index (``wave9``), the sequential
-admission gate (``wave17``) and its streaming twin
+admission gate (``plans/lsh_gate.py``) and its streaming twin
 (``streaming/lsh.py``).  Each Spark operator here has a DuckDB SQL
 fragment next to it, from which the oracles are assembled, so the two
 engines cannot drift and the batch and stream writers share one band

@@ -44,12 +44,7 @@ from awsbatch_mapreduce_spark.plans import wave7  # noqa: F401
 from awsbatch_mapreduce_spark.plans import wave8  # noqa: F401
 from awsbatch_mapreduce_spark.plans import wave9  # noqa: F401
 from awsbatch_mapreduce_spark.plans import wave10  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave11  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave12  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave13  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave14  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave15  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave16  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave17  # noqa: F401
+from awsbatch_mapreduce_spark.plans import codebook_lifecycle  # noqa: F401
+from awsbatch_mapreduce_spark.plans import lsh_gate  # noqa: F401
 
 __all__ = ["QUERIES", "QuerySpec", "grading_order", "query"]

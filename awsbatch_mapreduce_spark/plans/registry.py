@@ -24,103 +24,20 @@ class QuerySpec:
     builder: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
     doc: str = ""
-    # Round in which the query was registered.  The driver's grading
-    # window is capped (~50); within the never-proven class, earlier
-    # waves sort first so that queries added in round N can never
-    # displace still-ungraded queries from earlier rounds out of the
-    # window (round 3 must convert exactly the 50 pre-r3 ungraded
-    # entries into driver rows — VERDICT r2 #2).
+    # Round in which the query was registered: the QUERIES.md column.
     wave: int = 2
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-# Queries already driver-green in CORRECTNESS_r01.json.  The driver
-# grades ``queries()`` in insertion order and capped round 1 at 50
-# entries, leaving 77 registry queries with no driver correctness row
-# (VERDICT r1, next-round #1).  ``grading_order`` floats never-graded
-# and just-fixed entries to the front so each round's graded window
-# converts "claimed" coverage into driver-proven coverage; the green
-# set stays protected by the dtype-strict local gate
-# (tests/test_oracle_parity.py).
-DRIVER_GREEN_R01: frozenset[str] = frozenset(
-    {
-        "frame_histogram2d",
-        "bbox_filter_project",
-        "bbox_summary_stats",
-        "month_manifest",
-        "monthly_frames_ordered",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_nation_revenue",
-        "q6_forecast_revenue",
-        "top_customers",
-        "window_top_orders_per_customer",
-        "window_running_revenue",
-        "rollup_region_nation",
-        "cube_status_priority",
-        "except_custkeys",
-        "intersect_custkeys",
-        "union_all_priority_counts",
-        "anti_join_customers_without_orders",
-        "semi_join_customers_with_open_orders",
-        "distinct_customers_per_status",
-        "scalar_functions_showcase",
-        "orders_with_lineitem_stats",
-        "window_analytics_order_profile",
-        "events_trailing_hour_range_frame",
-        "events_tumbling_hourly",
-        "events_json_extract",
-        "events_sessionization",
-        "events_user_activity_pivot",
-        "conversion_funnel_users",
-        "cohort_retention_daily",
-        "event_transition_matrix",
-        "event_type_cooccurrence",
-        "dedup_exact",
-        "dedup_minhash_lsh",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "text_token_stats",
-        "text_quality_score",
-        "text_language_id",
-        "text_fingerprint",
-        "vocab_top_words",
-        "tfidf_top_term_per_doc",
-        "decontaminate_train_vs_eval",
-        "text_repetition_score",
-        "dedup_cluster_size_histogram",
-        "embedding_norms",
-        "knn_bruteforce_cosine",
-        "dedup_embedding_cosine",
-    }
-)
-
-# Graded in round 1 but hash-failed (HUGEINT oracle typing, now fixed),
-# plus never-graded queries whose oracles carried the same latent bug
-# (ADVICE r1) — these must land inside round 2's graded window to prove
-# the fixes.
-PRIORITY_REGRADE: tuple[str, ...] = (
-    "text_bpe_token_count",
-    "corpus_curation_funnel",
-    "range_join_error_context",
-    "train_val_test_split",
-    "corpus_shard_plan",
-    "corpus_mixture_epochs",
-    "json_malformed_handling",
-)
-
-
-def _green_round_map(root: str | None = None) -> dict[str, int] | None:
+def _green_round_map(root: str | None = None) -> dict[str, int]:
     """Name -> LATEST driver round (parsed from the record filename)
     with a fully-green row, across every ``CORRECTNESS_r*.json`` the
-    driver has written so far (repo root).  Returns ``None`` when no
-    record file is readable (caller falls back to the round-1
-    snapshot).  Reading the record files directly makes the rotation
-    self-maintaining: each round's newly proven queries automatically
-    drop to the back of the next round's grading window without anyone
-    editing a frozen set — and since round 9,
+    driver has written so far (repo root).  Reading the record files
+    directly makes the rotation self-maintaining: each round's newly
+    proven queries automatically drop to the back of the next round's
+    grading window without anyone editing a frozen set — and
     ``tests/test_queries_md.py`` regenerates QUERIES.md from this same
     union, so the board self-heals too.
 
@@ -135,21 +52,17 @@ def _green_round_map(root: str | None = None) -> dict[str, int] | None:
     if root is None:
         root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
     last_green: dict[str, int] = {}
-    found = False
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if m is None:
+            # a glob match without a parseable round (CORRECTNESS_rX.json)
+            # must not mark its names green at round 0 (ADVICE r10)
+            continue
         try:
             with open(path) as f:
                 rows = json.load(f)
         except (OSError, ValueError):
             continue
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m is None:
-            # A glob match without a parseable round (CORRECTNESS_rX.json)
-            # must not poison the map: rnd=0 would mark its names
-            # maximally stale AND flip `found`, suppressing the
-            # DRIVER_GREEN_R01 fallback (ADVICE r10).
-            continue
-        found = True
         rnd = int(m.group(1))
         for name, row in rows.items():
             # rows_match must be affirmatively True (a malformed/empty
@@ -164,57 +77,28 @@ def _green_round_map(root: str | None = None) -> dict[str, int] | None:
                 and row.get("err") is None
             ):
                 last_green[name] = max(last_green.get(name, 0), rnd)
-    return last_green if found else None
+    return last_green
 
 
 def _driver_proven(root: str | None = None) -> frozenset[str]:
     """Names with a fully-green row in ANY ``CORRECTNESS_r*.json`` so
-    far.  Falls back to the round-1 snapshot if no record files are
-    readable (see ``_green_round_map``)."""
-    last_green = _green_round_map(root)
-    return frozenset(last_green) if last_green is not None else DRIVER_GREEN_R01
+    far (see ``_green_round_map``)."""
+    return frozenset(_green_round_map(root))
 
 
 def grading_order(
-    queries: dict[str, QuerySpec],
-    proven: frozenset[str] | None = None,
-    last_green: dict[str, int] | None = None,
+    queries: dict[str, QuerySpec], last_green: dict[str, int] | None = None
 ) -> list[str]:
     """Registry names ordered for the driver's capped grading window:
-    fix-verification first, then never-driver-proven — earlier waves
-    before later ones (new queries must not displace older ungraded
-    ones from the window), oracle-backed before rows-only within a
-    wave (the oracle hash is the strong signal) — then the
-    already-proven set, STALEST driver grade first (VERDICT r9 #1:
-    keyed on the last round each query was driver-green, so every
-    query gets re-proven every ~4-5 rounds instead of the earliest
-    registrations regrading forever).  ``proven`` / ``last_green``
-    override the record-file scan (for tests); when ``proven`` is
-    injected without ``last_green``, the proven class falls back to
-    registration order."""
-    if proven is None:
-        green = _green_round_map()
-        if green is None:
-            proven = DRIVER_GREEN_R01
-            if last_green is None:
-                last_green = {n: 1 for n in DRIVER_GREEN_R01}
-        else:
-            proven = frozenset(green)
-            if last_green is None:
-                last_green = green
+    STALEST driver grade first (VERDICT r9 #1: keyed on the last round
+    each query was driver-green, so every query gets re-proven every
+    ~4-5 rounds), never-green names (round 0) leading, registration
+    order on ties.  ``last_green`` overrides the record-file scan (for
+    tests)."""
     if last_green is None:
-        last_green = {}
-
-    def prio(name: str) -> tuple[int, ...]:
-        spec = queries[name]
-        if name in PRIORITY_REGRADE and name not in proven:
-            return (0, PRIORITY_REGRADE.index(name))
-        if name not in proven:
-            return (1, spec.wave, spec.oracle is None)
-        return (2, last_green.get(name, 0))
-
-    # sorted() is stable: within a priority class, registration order holds.
-    return sorted(queries, key=prio)
+        last_green = _green_round_map()
+    # sorted() is stable: on equal rounds, registration order holds.
+    return sorted(queries, key=lambda name: last_green.get(name, 0))
 
 
 def query(

@@ -253,8 +253,8 @@ def recommend_nprobe(
     """The recall ACTUATOR (round 16, VERDICT r15 #3): turn a live
     recall snapshot into a knob step.  The supervisor measures
     per-generation vec-recall on live traffic (`_recall_snapshot`) and
-    the offline sweep prices the surface (`wave14`: ~+19 pts vec-recall
-    per nprobe step at production caps, at a bounded ~1x-per-step probe
+    the offline sweep prices the surface (`codebook_recall_sweep_cap*`:
+    ~+19 pts vec-recall per nprobe step at production caps, at a bounded ~1x-per-step probe
     constant and ZERO extra exchange); this rule connects them: a
     snapshot below ``floor_bp`` recommends one nprobe step, capped at
     ``max_nprobe`` (the sweep's measured range — beyond it the next

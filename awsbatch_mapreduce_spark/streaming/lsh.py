@@ -31,8 +31,9 @@ partition overwrite on batch_id).
 
 Batch-equivalence contract: with batches delivered in doc_id order,
 the stream's verdicts and final index equal the driver-gated
-``lsh_admission_gate`` query (plans/wave17.py) over the same corpus
-and boundaries — pinned in tests/test_streaming_lsh.py.
+``lsh_admission_gate`` query (plans/lsh_gate.py) over the same corpus
+and boundaries — pinned in tests/test_streaming_lsh.py.  Both run one
+gate step per batch, ``gate_batch``.
 
 Scale shape at 100 TB: per batch one signature pass over the batch
 (shingles never leave the map stage), one band join whose seen side is
@@ -161,6 +162,45 @@ def remove_docs_from_band_index(
     return _purge_batch_bands(spark, ids, band_tbl)
 
 
+def gate_batch(
+    spark, band_tbl: str, batch_docs: DataFrame, bands: DataFrame, batch_k: int
+) -> DataFrame:
+    """One gate step: batch ``batch_k``'s verdicts (doc_id, n_seen_nbrs,
+    is_admitted, batch_k) against the band index, then the append of
+    its admitted docs' ``bands``.  Docs too short to shingle carry no
+    bands, hence no index footprint, but their verdict (novel,
+    admitted) is still reported: they are the ``batch_docs`` the probe
+    did not see.  The verdicts are materialized before the append
+    mutates the index the probe reads."""
+    banded = probe_band_index(spark, bands, band_tbl)
+    bandless = batch_docs.join(
+        never_broadcast(banded.select("doc_id")), "doc_id", "left_anti"
+    ).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.lit(0).cast("bigint").alias("n_seen_nbrs"),
+        F.lit(1).cast("bigint").alias("is_admitted"),
+    )
+    verdicts = (
+        banded.unionByName(bandless)
+        .withColumn("batch_k", F.lit(batch_k).cast("bigint"))
+        .localCheckpoint()
+    )
+    admitted_bands = bands.join(
+        never_broadcast(
+            verdicts.filter(F.col("is_admitted") == 1).select("doc_id")
+        ),
+        "doc_id",
+        "semi",
+    )
+    (
+        admitted_bands.write.bucketBy(_N_BUCKETS, "bk")
+        .sortBy("bk")
+        .mode("append")
+        .saveAsTable(band_tbl)
+    )
+    return verdicts
+
+
 def foreach_batch_lsh_admit(
     band_tbl: str, out_dir: str
 ) -> Callable[[DataFrame, int], int]:
@@ -208,36 +248,12 @@ def foreach_batch_lsh_admit(
         bands_new = band_index_rows(
             batch_df.select("doc_id", "text")
         ).localCheckpoint()
-        verdicts = probe_band_index(spark, bands_new, band_tbl)
-        # docs too short to shingle have no bands: they carry no index
-        # footprint but their verdict (novel, admitted) must still be
-        # reported — union them in from the batch frame itself
-        bandless = (
-            batch_df.select(F.col("doc_id").cast("bigint").alias("doc_id"))
-            .join(never_broadcast(bands_new.select("doc_id").distinct()),
-                  "doc_id", "left_anti")
-            .select(
-                "doc_id",
-                F.lit(0).cast("bigint").alias("n_seen_nbrs"),
-                F.lit(1).cast("bigint").alias("is_admitted"),
-            )
-        )
-        verdicts = verdicts.unionByName(bandless).localCheckpoint()
-        _write_probe_partition(verdicts, out_dir, batch_id)
         _write_marker(intent_path, batch_id)  # mutation window opens
-        admitted_bands = bands_new.join(
-            never_broadcast(
-                verdicts.filter(F.col("is_admitted") == 1).select("doc_id")
-            ),
-            "doc_id",
-            "semi",
+        verdicts = gate_batch(
+            spark, band_tbl, batch_df.select("doc_id"), bands_new, batch_id + 1
         )
-        (
-            admitted_bands.write.bucketBy(_N_BUCKETS, "bk")
-            .sortBy("bk")
-            .mode("append")
-            .saveAsTable(band_tbl)
-        )
+        # the stream's verdicts are keyed by their batch_id partition
+        _write_probe_partition(verdicts.drop("batch_k"), out_dir, batch_id)
         n_admitted = int(
             verdicts.filter(F.col("is_admitted") == 1).count()
         )

@@ -54,7 +54,7 @@ def main() -> None:
         "note": (
             "Frozen BEFORE the driver run; the realized window is the key"
             " set of CORRECTNESS_r{:02d}.json.  Never-proven newcomers"
-            " lead (wave order), then stalest driver grades.".format(rnd)
+            " lead (registration order), then stalest driver grades.".format(rnd)
         ),
     }
     path = os.path.join(_ROOT, f"PREDICTED_WINDOW_r{rnd:02d}.json")

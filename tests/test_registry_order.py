@@ -1,10 +1,10 @@
 """Pins the driver-grading-window ordering contract (VERDICT r1 #1, r2 #1).
 
 The round driver grades ``__spark_entry__.queries()`` in insertion
-order with a ~50-entry cap.  ``grading_order`` must front-load (a)
-regrades not yet proven, then (b) never-driver-proven queries —
-earlier registration waves before later ones, oracle-backed before
-rows-only within a wave — and push the already-proven set to the back.
+order with a ~50-entry cap.  ``grading_order`` sorts by the last round
+each query was driver-green, stalest first: never-proven queries
+(round 0) lead, the already-proven set follows, registration order on
+ties.
 
 Round 2's failure mode was hard-coding the round-1 proven snapshot,
 which went stale the moment ``CORRECTNESS_r02.json`` landed.  These
@@ -20,8 +20,9 @@ import json
 
 from awsbatch_mapreduce_spark.plans import QUERIES, grading_order
 from awsbatch_mapreduce_spark.plans.registry import (
-    PRIORITY_REGRADE,
+    QuerySpec,
     _driver_proven,
+    _green_round_map,
 )
 
 DRIVER_WINDOW = 50
@@ -32,12 +33,6 @@ PROVEN = _driver_proven()
 def test_order_is_a_permutation_of_the_registry():
     order = grading_order(QUERIES)
     assert sorted(order) == sorted(QUERIES)
-
-
-def test_pending_regrades_lead_the_window():
-    pending = [n for n in PRIORITY_REGRADE if n not in PROVEN]
-    order = grading_order(QUERIES)
-    assert order[: len(pending)] == pending
 
 
 def test_window_spends_no_slot_on_already_green_queries():
@@ -52,39 +47,6 @@ def test_window_spends_no_slot_on_already_green_queries():
     else:
         missing = set(unproven) - set(window)
         assert not missing, f"unproven queries left out of window: {missing}"
-
-
-def test_ungraded_sort_by_wave_then_oracle_strength():
-    """Within the never-proven class: earlier waves first (new queries
-    must not displace older ungraded ones from the capped window), and
-    oracle-backed before rows-only within a wave."""
-    order = grading_order(QUERIES)
-    pending_regrades = {n for n in PRIORITY_REGRADE if n not in PROVEN}
-    ungraded = [
-        n for n in order if n not in PROVEN and n not in pending_regrades
-    ]
-    keys = [(QUERIES[n].wave, QUERIES[n].oracle is None) for n in ungraded]
-    assert keys == sorted(keys), "ungraded queries out of (wave, strength) order"
-
-
-def test_round3_window_is_exactly_the_pre_r3_ungraded_set():
-    """Round 3's contract (VERDICT r2 #2): the 50-slot window converts
-    exactly the 50 pre-r3 ungraded queries into driver rows.  Wave-3+
-    additions must all sort after them.  Skips once the driver has
-    proven any pre-r3 query count other than 98 (i.e. after round 3)."""
-    pre_r3_ungraded = [
-        n for n in QUERIES if n not in PROVEN and QUERIES[n].wave <= 2
-    ]
-    if len(pre_r3_ungraded) != DRIVER_WINDOW:
-        return  # post-r3 state: covered by the generic tests above
-    window = grading_order(QUERIES)[:DRIVER_WINDOW]
-    assert sorted(window) == sorted(pre_r3_ungraded)
-
-
-def test_regrade_and_wave_names_are_valid():
-    missing_p = set(PRIORITY_REGRADE) - set(QUERIES)
-    assert not missing_p, f"regrade names not in registry: {missing_p}"
-    assert all(QUERIES[n].wave >= 2 for n in QUERIES)
 
 
 def test_proven_set_reflects_live_record_files():
@@ -125,7 +87,7 @@ def test_synthetic_future_record_rotates_window(tmp_path):
     (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(green))
     proven = _driver_proven(root=str(tmp_path))
     assert proven == frozenset(names[:60])
-    order = grading_order(QUERIES, proven=proven)
+    order = grading_order(QUERIES, last_green=_green_round_map(str(tmp_path)))
     back = order[len(names) - 60 :]
     assert set(back) == set(names[:60])
 
@@ -166,22 +128,14 @@ def test_malformed_record_rows_do_not_count_as_proven(tmp_path):
     assert proven == frozenset({"c_rows_only", "e_green"})
 
 
-def test_no_records_falls_back_to_r01_snapshot(tmp_path):
-    from awsbatch_mapreduce_spark.plans.registry import DRIVER_GREEN_R01
-
-    assert _driver_proven(root=str(tmp_path)) == DRIVER_GREEN_R01
-
-
 def test_proven_class_rotates_by_stalest_driver_grade():
     """VERDICT r9 #1: with the full live proven set, the already-proven
     class must be keyed on the LAST round each query was driver-green
     (stalest first), registration order as the tiebreak — so the capped
     window regrades the queries whose driver proof has aged the most,
     and every query gets re-proven every ~4-5 rounds."""
-    from awsbatch_mapreduce_spark.plans.registry import _green_round_map
-
     last_green = _green_round_map()
-    assert last_green is not None, "live repo must have record files"
+    assert last_green, "live repo must have record files"
     order = grading_order(QUERIES)
     proven_tail = [n for n in order if n in PROVEN]
     reg_pos = {n: i for i, n in enumerate(QUERIES)}
@@ -203,8 +157,6 @@ def test_stalest_first_rotation_with_synthetic_records(tmp_path):
     """Pin the r10 rotation semantics against synthetic record files:
     a query last proven in r01 must sort before one last proven in r05,
     regardless of registration order; ties break by registration."""
-    from awsbatch_mapreduce_spark.plans.registry import _green_round_map
-
     names = list(QUERIES)
     green = lambda ns: {  # noqa: E731
         n: {
@@ -222,51 +174,40 @@ def test_stalest_first_rotation_with_synthetic_records(tmp_path):
         json.dumps(green(names[:100]))
     )
     last_green = _green_round_map(root=str(tmp_path))
-    assert last_green is not None
     assert last_green[names[0]] == 5 and last_green[names[-1]] == 1
-    order = grading_order(
-        QUERIES, proven=frozenset(last_green), last_green=last_green
-    )
+    order = grading_order(QUERIES, last_green=last_green)
     # stalest (r01-only) class leads, in registration order; the
     # re-proven r05 class trails, also in registration order.
     assert order == names[100:] + names[:100]
 
 
 def test_injected_proven_without_rounds_keeps_registration_order():
-    """Tests that inject ``proven`` alone (no round map) must still get
-    the stable registration-order tail — the documented fallback."""
-    proven = frozenset(list(QUERIES)[::2])
-    order = grading_order(QUERIES, proven=proven)
-    tail = [n for n in order if n in proven]
-    assert tail == [n for n in QUERIES if n in proven]
+    """Names proven in one and the same round keep their registration
+    order behind the never-proven ones."""
+    last_green = {n: 1 for n in list(QUERIES)[::2]}
+    order = grading_order(QUERIES, last_green=last_green)
+    tail = [n for n in order if n in last_green]
+    assert tail == [n for n in QUERIES if n in last_green]
+    assert order[: len(QUERIES) - len(tail)] == [
+        n for n in QUERIES if n not in last_green
+    ]
 
 
-def test_wave6_addition_sorts_after_all_unproven_lower_waves():
-    """VERDICT r4 #7: a hypothetical wave-6 addition must sort after
-    every unproven lower-wave query — the property that keeps each
-    round's new queries from displacing older ungraded ones out of the
-    capped window."""
-    from awsbatch_mapreduce_spark.plans.registry import QuerySpec
-
+def test_unproven_addition_sorts_first():
+    """A new registration with no driver-green row (round 0) leads the
+    window, ahead of every proven query — whatever its position in the
+    registry."""
     hypothetical = dict(QUERIES)
-    hypothetical["zz_hypothetical_w6"] = QuerySpec(
-        name="zz_hypothetical_w6",
+    hypothetical["zz_hypothetical_new"] = QuerySpec(
+        name="zz_hypothetical_new",
         builder=lambda spark, sf_dir: None,
         oracle="SELECT 1 AS one",
-        wave=6,
     )
-    # exercise both the live proven set and a synthetic sparse one
-    for proven in (PROVEN, frozenset(list(QUERIES)[::2])):
-        order = grading_order(hypothetical, proven=proven)
-        pos = order.index("zz_hypothetical_w6")
-        unproven_lower = [
-            n
-            for n in QUERIES
-            if n not in proven and QUERIES[n].wave < 6
-        ]
-        assert all(order.index(n) < pos for n in unproven_lower)
-        # but it still precedes the entire proven class
-        assert all(order.index(n) > pos for n in order if n in proven)
+    last_green = {n: 7 for n in QUERIES}
+    assert grading_order(hypothetical, last_green=last_green) == [
+        "zz_hypothetical_new",
+        *QUERIES,
+    ]
 
 
 def test_realized_driver_window_matches_frozen_prediction():

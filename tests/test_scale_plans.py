@@ -797,7 +797,7 @@ _REGISTRY_BROADCAST_BUDGET = {
     # and read their bucket specs with no exchange
     # (tests/test_wave11.py)
     "semdedup_codebook_capacity": 0,
-    # same shared probe plan (`wave11._build_probe`) with the grown
+    # same shared probe plan (`index.probe.probe`) with the grown
     # k0 = ceil(sqrt(n/cap)) coarse book — still bounded (sqrt-grade),
     # still exactly 2 sites; fine/members sides identical pins
     "semdedup_codebook_adaptive": 0,
@@ -872,7 +872,7 @@ _REGISTRY_BROADCAST_BUDGET = {
     # shared coarse-book sites of the single-probe plan (direct
     # probe-scan subtree + k0-row coarse book) + the rank-2 exclusion
     # pass's 2 further coarse-book sites (the struct-min re-evaluation
-    # broadcasts the SAME bounded k0 book; see wave13._assign_fine_multi
+    # broadcasts the SAME bounded k0 book; see index.probe._assign
     # — r x broadcast-side compute, zero extra exchange); fine/members
     # stay pinned sort-merge
     "codebook_pointer_nprobe_serving": 0,

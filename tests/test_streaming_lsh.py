@@ -29,7 +29,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
-from awsbatch_mapreduce_spark.plans.wave17 import lsh_admission_gate
+from awsbatch_mapreduce_spark.plans.lsh_gate import lsh_admission_gate
 from awsbatch_mapreduce_spark.scratch import _scratch_dir
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from awsbatch_mapreduce_spark.streaming.lsh import (

@@ -1,5 +1,6 @@
-"""Member DELETION from the persisted index (`plans/wave17.py` +
-`wave13` wiring) — the lifecycle verb round 18 added (VERDICT r17
+"""Member DELETION from the persisted index (`index/generation.py`
+verbs, the `Tombstone` step of `plans/codebook_lifecycle.py`) — the
+lifecycle verb round 18 added (VERDICT r17
 missing #1).
 
 The claims under test:
@@ -45,7 +46,7 @@ from awsbatch_mapreduce_spark.index.generation import (
 import awsbatch_mapreduce_spark.index.probe as index_probe
 from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.probe import probe_current_generation
-from awsbatch_mapreduce_spark.plans.wave17 import _TOMB_MOD
+from awsbatch_mapreduce_spark.plans.codebook_oracle import _TOMB_MOD
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 

@@ -10,8 +10,8 @@ book collapses from the appended generations back to ceil(n/cap)-grade
 the refit-from-members quantized path lands frame-identical to a
 from-scratch fit over raw embeddings (Spark-side twin of the oracle
 proof), the lifecycle is idempotent on one session, and the shared
-probe-CTE text `wave11._probe_ctes(_MID_BOUNDARY)` is byte-identical
-to the r11 driver-proven `_PROBE_CTES` it now generates."""
+oracle fragments of `plans/codebook_oracle.py` (the probe, split and
+k0 texts) are byte-identical to the r11 driver-proven texts."""
 
 from __future__ import annotations
 
@@ -36,10 +36,11 @@ from awsbatch_mapreduce_spark.plans import QUERIES
 import awsbatch_mapreduce_spark.index.probe as index_probe
 from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.probe import _NO_PEER_BP, _SEMDEDUP_EPS_BP
-from awsbatch_mapreduce_spark.plans.wave11 import (
+from awsbatch_mapreduce_spark.plans.codebook_oracle import (
     _MID_BOUNDARY,
-    _PROBE_CTES,
+    _k0_sql,
     _probe_ctes,
+    _split_ctes,
 )
 from awsbatch_mapreduce_spark.scratch import _scratch_dir
 from tests.conftest import SF_BOTH, SF_DIR
@@ -48,8 +49,8 @@ from tests.conftest import query_rows as _rows
 
 _Q = "semdedup_codebook_refit"
 
-# sha256 of wave11._PROBE_CTES as driver-proven through round 13,
-# recorded immediately BEFORE the round-14 refactor that made it the
+# sha256 of the single-probe CTE text as driver-proven through round
+# 13, recorded immediately BEFORE the round-14 refactor that made it the
 # output of _probe_ctes(_MID_BOUNDARY): the parameterization must
 # never drift the proven oracle text by a byte.
 _PROBE_CTES_SHA = (
@@ -74,10 +75,10 @@ def _bounds(spark, sf_dir):
     return mid, (mid + b.hi) // 2
 
 
-# shas of wave11._SPLIT_CTES / _K0_SQL as driver-proven through round
+# shas of the split-CTE and k0 texts as driver-proven through round
 # 14, recorded immediately BEFORE the round-15 cap parameterization
-# (_split_ctes(cap) / _k0_sql(cap) for the wave-14 recall/cost sweep):
-# the default-cap output must never drift the proven oracle text.
+# (_split_ctes(cap) / _k0_sql(cap) for the recall/cost sweep): the
+# default-cap output must never drift the proven oracle text.
 _SPLIT_CTES_SHA = (
     "1e0eddb273693d617132e868ac750c33592e5d66fddbb1f01e634e9c33648726"
 )
@@ -87,24 +88,17 @@ _K0_SQL_SHA = (
 
 
 def test_probe_ctes_parameterization_is_byte_identical():
-    from awsbatch_mapreduce_spark.plans.wave11 import (
-        _K0_SQL,
-        _SPLIT_CTES,
-        _k0_sql,
-        _split_ctes,
-    )
+    def sha(text: str) -> str:
+        return hashlib.sha256(text.encode()).hexdigest()
 
-    assert _probe_ctes(_MID_BOUNDARY) == _PROBE_CTES
     assert (
-        hashlib.sha256(_PROBE_CTES.encode()).hexdigest() == _PROBE_CTES_SHA
+        sha(_probe_ctes(_MID_BOUNDARY)) == _PROBE_CTES_SHA
     ), "r11 driver-proven probe-CTE text drifted"
-    assert _split_ctes(_CAP) == _SPLIT_CTES
     assert (
-        hashlib.sha256(_SPLIT_CTES.encode()).hexdigest() == _SPLIT_CTES_SHA
+        sha(_split_ctes(_CAP)) == _SPLIT_CTES_SHA
     ), "r11 driver-proven split-CTE text drifted"
-    assert _k0_sql(_CAP) == _K0_SQL
     assert (
-        hashlib.sha256(_K0_SQL.encode()).hexdigest() == _K0_SQL_SHA
+        sha(_k0_sql(_CAP)) == _K0_SQL_SHA
     ), "r11 driver-proven k0 subquery text drifted"
 
 
@@ -519,7 +513,7 @@ def test_recall_eval_zero_guard_on_degenerate_corpus(spark, tmp_path):
 
 
 def test_generation_cutover_vacuum_lifecycle(spark, tmp_path):
-    """The operational tail of the refit (wave13 cutover section):
+    """The operational tail of the refit (the cutover verbs):
     fit gen A -> cutover -> probe-via-pointer == direct probe; admit a
     batch; refit-from-members into gen B -> cutover returns A; vacuum A
     reclaims exactly its three tables + data dir and is idempotent;

@@ -37,7 +37,7 @@ from awsbatch_mapreduce_spark.index.generation import (
 import awsbatch_mapreduce_spark.index.probe as index_probe
 from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.probe import probe_current_generation
-from awsbatch_mapreduce_spark.plans.wave15 import _ESCALATED_CAP
+from awsbatch_mapreduce_spark.plans.codebook_oracle import _ESCALATED_CAP
 from awsbatch_mapreduce_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
