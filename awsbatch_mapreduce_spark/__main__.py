@@ -114,7 +114,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "list":
         for name in sorted(QUERIES):
             spec = QUERIES[name]
-            doc = (spec.doc or "").strip().splitlines()
+            doc = (spec.builder.__doc__ or "").strip().splitlines()
             print(f"{name}: {doc[0] if doc else ''}")
         return 0
 

@@ -1,4 +1,5 @@
-"""The persisted vector index: its generation storage and lifecycle
-(``generation``), its fixed-point vector format and collected-codebook
-assignment (``codebook``), and the probe operator every serving path
-runs (``probe``)."""
+"""The persisted indexes: the vector index's generation storage and
+lifecycle (``generation``), its fixed-point vector format and
+collected-codebook assignment (``codebook``), the probe operator every
+serving path runs (``probe``), and the MinHash band index of the text
+near-dup gate (``bands``)."""

@@ -68,6 +68,7 @@ from awsbatch_mapreduce_spark.scratch import (
     _scratch_path,
     _scratch_tag,
     _table_names,
+    drop_tables,
 )
 
 # ---------------------------------------------------------------------------
@@ -124,10 +125,7 @@ def fresh_layout(spark, sf_dir: str, kind: str) -> GenerationLayout:
     ``SHOW TABLES``.  Also sweeps abandoned scratch bases of the kind
     (``_scratch_dir``'s age-gated sibling sweep)."""
     _scratch_dir(_base_prefix(kind), sf_dir)
-    prefixes = tuple(_table_name(kind, part, "") for part in _PARTS)
-    for t in _table_names(spark):
-        if t.startswith(prefixes):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_tables(spark, *(_table_name(kind, part, "") for part in _PARTS))
     return generation_layout(sf_dir, kind)
 
 

@@ -226,6 +226,18 @@ def probe(
         )
     else:
         pairs = _adc_candidates(spark, new, assigned, members, codes, pqcb)
+    return verdicts(
+        pairs,
+        assigned.filter(F.col("rnk") == 1).select("vec_id", "cell", "sub"),
+    )
+
+
+def verdicts(pairs: DataFrame, probed: DataFrame) -> DataFrame:
+    """The verify step: the candidate ``pairs`` (vec_id, vq, nn_n,
+    vq_s, nn_s) at integer cosine ``>= _SEMDEDUP_EPS_BP``, counted and
+    maxed per vector, reported onto the ``probed`` rows (vec_id and
+    their cell keys): ``(vec_id, *keys, n_seen_dups, max_cos_bp,
+    is_novel)``."""
     hits = (
         pairs.filter((F.col("nn_n") > 0) & (F.col("nn_s") > 0))
         .select(
@@ -243,13 +255,10 @@ def probe(
         .withColumn("hit", F.lit(1))
     )
     return (
-        assigned.filter(F.col("rnk") == 1)
-        .select("vec_id", "cell", "sub")
-        .join(never_broadcast(hits), "vec_id", "left")
+        probed.join(never_broadcast(hits), "vec_id", "left")
         .select(
             F.col("vec_id").cast("bigint").alias("vec_id"),
-            "cell",
-            "sub",
+            *(c for c in probed.columns if c != "vec_id"),
             F.coalesce("n_seen_dups", F.lit(0))
             .cast("bigint")
             .alias("n_seen_dups"),

@@ -3,7 +3,7 @@ index, and the band index's takedown verb, as registered queries.
 
 Documents arrive in four doc_id-quartile batches; each batch is probed
 against the band index of previously ADMITTED docs and only its novel
-docs' bands are appended (``streaming.lsh.gate_batch``, the same step
+docs' bands are appended (``index.bands.gate_batch``, the same step
 the streaming operator runs per micro-batch inside its exactly-once
 markers — stream == batch is pinned in tests/test_streaming_lsh.py).
 Sequential admission is deliberately NOT the connected-components
@@ -25,6 +25,11 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.bands import (
+    fresh_band_index,
+    gate_batch,
+    remove_docs_from_band_index,
+)
 from awsbatch_mapreduce_spark.operators.minhash import (
     _BANDS_SQL,
     _SH_SQL,
@@ -32,17 +37,7 @@ from awsbatch_mapreduce_spark.operators.minhash import (
     band_index_rows,
 )
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.scratch import (
-    _scratch_dir,
-    _scratch_tag,
-    _table_names,
-)
 from awsbatch_mapreduce_spark.sources.tables import load_table
-from awsbatch_mapreduce_spark.streaming.lsh import (
-    create_band_index,
-    gate_batch,
-    remove_docs_from_band_index,
-)
 
 _N_GATE_BATCHES = 4
 _TAKEDOWN_MOD = 7
@@ -135,12 +130,7 @@ def _run_gate(
         b.lo + (b.hi - b.lo) * k // 4 for k in range(1, _N_GATE_BATCHES)
     ] + [b.hi]
 
-    tag = _scratch_tag(sf_dir)
-    tbl = f"{prefix}{tag}"
-    for t in _table_names(spark):
-        if t.startswith(prefix) and not t.endswith(tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-    create_band_index(spark, _scratch_dir(scratch, sf_dir), tbl)
+    tbl = fresh_band_index(spark, sf_dir, scratch, prefix)
 
     bands = band_index_rows(docs).localCheckpoint()
     verdicts = []
@@ -205,7 +195,7 @@ def lsh_gate_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetry of ``codebook_tombstone_probe``): run the greedy gate for
     batches 1-3, then REMOVE every admitted doc with
     ``doc_id % {mod} == 0`` from the band index
-    (``streaming.lsh.remove_docs_from_band_index`` — crash-safe
+    (``index.bands.remove_docs_from_band_index`` — crash-safe
     sibling-swap anti-join, idempotent), then gate batch 4 against the
     SURVIVORS.  Removed docs stop gating immediately: a batch-4 near
     duplicate of removed content is admissible again — the documented

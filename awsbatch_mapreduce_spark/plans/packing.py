@@ -63,7 +63,7 @@ N_SHARDS = 8
 )
 def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-packing plan: each document's start offset in its
-    shard's concatenated token stream and the {SEQ_LEN}-token training
+    shard's concatenated token stream and the ``SEQ_LEN``-token training
     sequence it starts in.
 
     The window is partitioned by shard, so the cumulative sum runs in

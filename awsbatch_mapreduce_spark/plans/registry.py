@@ -23,7 +23,6 @@ class QuerySpec:
     name: str
     builder: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
-    doc: str = ""
     # Round in which the query was registered: the QUERIES.md column.
     wave: int = 2
 
@@ -110,7 +109,7 @@ def query(
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, doc=fn.__doc__ or "", wave=wave
+            name=name, builder=fn, oracle=oracle, wave=wave
         )
         return fn
 

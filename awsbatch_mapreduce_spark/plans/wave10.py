@@ -56,9 +56,8 @@ from awsbatch_mapreduce_spark.index.codebook import (
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
     _SEMDEDUP_EPS_BP,
-    cos_bp,
-    dot,
     norm2,
+    verdicts,
 )
 from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
@@ -71,7 +70,7 @@ from awsbatch_mapreduce_spark.plans.wave9 import (
 from awsbatch_mapreduce_spark.scratch import (
     _scratch_dir,
     _scratch_tag,
-    _table_names,
+    drop_tables,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -237,14 +236,7 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch_dir("awsbatch_semdedup_idx", sf_dir)
     mem_tbl = f"semdedup_members_{tag}"
     cb_tbl = f"semdedup_codebook_{tag}"
-    for t in _table_names(spark):
-        if (
-            t.startswith(("semdedup_members_", "semdedup_codebook_"))
-            and not t.endswith(tag)
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {mem_tbl}")
-    spark.sql(f"DROP TABLE IF EXISTS {cb_tbl}")
+    drop_tables(spark, "semdedup_members_", "semdedup_codebook_")
 
     seen = emb.filter(F.col("vec_id") <= F.lit(mid))
     assigned, _ = kmeans_fit(
@@ -302,42 +294,8 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vq",
         norm2("vq").alias("nn_n"),
     )
-    members = spark.table(mem_tbl)
-    hits = (
-        assigned_new.join(never_broadcast(members), "cell")
-        .filter((F.col("nn_n") > 0) & (F.col("nn_s") > 0))
-        .select(
-            "vec_id",
-            cos_bp(dot(F.col("vq"), F.col("vq_s")), "nn_n", "nn_s").alias(
-                "cos_bp"
-            ),
-        )
-        .filter(F.col("cos_bp") >= F.lit(_SEMDEDUP_EPS_BP))
-        .groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_seen_dups"),
-            F.max("cos_bp").alias("max_cos_bp"),
-        )
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        assigned_new.select("vec_id", "cell")
-        .join(never_broadcast(hits), "vec_id", "left")
-        .select(
-            F.col("vec_id").cast("bigint").alias("vec_id"),
-            "cell",
-            F.coalesce("n_seen_dups", F.lit(0))
-            .cast("bigint")
-            .alias("n_seen_dups"),
-            F.coalesce("max_cos_bp", F.lit(_NO_PEER_BP))
-            .cast("bigint")
-            .alias("max_cos_bp"),
-            F.when(F.col("hit").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("is_novel"),
-        )
-    )
+    pairs = assigned_new.join(never_broadcast(spark.table(mem_tbl)), "cell")
+    return verdicts(pairs, assigned_new.select("vec_id", "cell"))
 
 
 semdedup_codebook_novelty.__doc__ = semdedup_codebook_novelty.__doc__.format(

@@ -30,19 +30,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.functions.rounding import dround, dround_sql
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
-
-
-def _quantize_arr(col):
-    """array<float> -> array<bigint> fixed-point at 1e-6."""
-    return F.transform(
-        col,
-        lambda v: F.floor(v.cast("double") * F.lit(1000000.0) + F.lit(0.5)).cast(
-            "bigint"
-        ),
-    )
 
 
 @query(
@@ -703,7 +694,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select(
         "vec_id",
-        F.posexplode(_quantize_arr(F.col("embedding"))).alias("pos0", "vq"),
+        F.posexplode(_quantize(F.col("embedding"))).alias("pos0", "vq"),
     ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "vq")
     nn = emb.agg(F.count(F.lit(1)).alias("n"))
     m = (

@@ -25,7 +25,7 @@ from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.scratch import (
     _scratch_dir,
     _scratch_tag,
-    _table_names,
+    drop_tables,
 )
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -138,13 +138,8 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_orderkey",
         ),
     }
-    for t in _table_names(spark):
-        if t.startswith(
-            ("bkt_orders_", "bkt_lineitem_")
-        ) and not t.endswith(tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    drop_tables(spark, "bkt_orders_", "bkt_lineitem_")
     for name, (df, key) in specs.items():
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             df.write.bucketBy(8, key)
             .sortBy(key)
@@ -390,7 +385,7 @@ _DICE_ORACLE = f"""
 
 @query("bigram_dice_topk", oracle=_DICE_ORACLE, wave=5)
 def bigram_dice_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining: the {_DICE_TOPK} most-associated token
+    """Collocation mining: the ``_DICE_TOPK`` most-associated token
     bigrams by Dice coefficient (2*c12 / (c1+c2), integer ppm) with a
     min-support cut — the standard first pass for multi-word
     expressions and tokenizer-merge candidates over a corpus.  Dice
@@ -1200,7 +1195,7 @@ _TOP_SESSIONS_ORACLE = f"""
 def events_top_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-level rollup + top-k: sessionize per user (30-min gap
     rule, same as ``events_sessionization``), aggregate each session
-    to (start, duration, event count), and keep the {_TOP_SESSIONS}
+    to (start, duration, event count), and keep the ``_TOP_SESSIONS``
     longest sessions — the power-user/abuse view a product team reads
     daily, and the session-LEVEL twin of the existing event-level
     sessionization.

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.index.bands import probe_bands
 from awsbatch_mapreduce_spark.operators.minhash import (
     _BANDS_SQL,
     _SH_SQL,
@@ -499,13 +500,13 @@ def incremental_lsh_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: in production the seen side is a PERSISTED band-key
     index appended per batch, so each increment shuffles only the new
     batch's bands plus the band-bucket collisions; nothing rescans
-    seen documents' text.  Both join sides here are data-scaled, so
-    they carry the dedup ladder's ``never_broadcast`` pin (the r5
-    OOM class), and collision volume is bounded by the same band
-    capacity argument as ``dedup_minhash_lsh_bucket_capped``.
+    seen documents' text (``lsh_band_index_lifecycle``).  Both run one
+    probe, ``index.bands.probe_bands``, here over the in-memory seen
+    half: both join sides are data-scaled, so they carry the dedup
+    ladder's ``never_broadcast`` pin (the r5 OOM class), and collision
+    volume is bounded by the same band capacity argument as
+    ``dedup_minhash_lsh_bucket_capped``.
     """
-    from awsbatch_mapreduce_spark.operators.hints import never_broadcast
-
     docs = load_table(spark, sf_dir, "documents")
     # eager localCheckpoint: both the seen and new band branches consume
     # this frame; without it the shingle->signature pipeline (scan +
@@ -518,35 +519,13 @@ def incremental_lsh_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mid")
     )
     bands_m = bands.crossJoin(F.broadcast(mid))
-    new_bands = bands_m.filter(F.col("doc_id") > F.col("mid")).select(
-        "doc_id", "bk"
-    )
-    seen_bands = bands_m.filter(F.col("doc_id") <= F.col("mid")).select(
-        F.col("doc_id").alias("seen_id"), "bk"
-    )
-    hits = (
-        new_bands.join(never_broadcast(seen_bands), "bk")
-        .select("doc_id", "seen_id")
-        .distinct()
-    )
-    nn = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_seen_nbrs"))
-    new_docs = (
+    return probe_bands(
+        spark,
+        bands_m.filter(F.col("doc_id") > F.col("mid")).select("doc_id", "bk"),
+        bands_m.filter(F.col("doc_id") <= F.col("mid")),
         docs.crossJoin(F.broadcast(mid))
         .filter(F.col("doc_id") > F.col("mid"))
-        .select("doc_id")
-    )
-    # nn is O(new batch): keep the membership join on the shuffle path
-    return new_docs.join(
-        never_broadcast(nn.withColumn("hit", F.lit(1))), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.coalesce(F.col("n_seen_nbrs"), F.lit(0))
-        .cast("bigint")
-        .alias("n_seen_nbrs"),
-        F.when(F.col("hit").isNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("is_novel"),
+        .select("doc_id"),
     )
 
 

@@ -34,11 +34,14 @@ operator family the build brief makes first-class.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.bands import (
+    append_bands,
+    fresh_band_index,
+    probe_bands,
+)
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
     _SEMDEDUP_EPS_BP,
@@ -54,11 +57,6 @@ from awsbatch_mapreduce_spark.plans.iterative import (
 )
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.plans.wave8 import _INCR_LSH_ORACLE
-from awsbatch_mapreduce_spark.scratch import (
-    _scratch_dir,
-    _scratch_tag,
-    _table_names,
-)
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # --- SemDeDup: cluster-then-exact-cosine prune ---------------------------
@@ -430,7 +428,8 @@ def lsh_band_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: index build cost is one shingle->signature pass over
     the seen half (paid once, amortized over every future batch);
     append cost is one pass over the day's batch; probe shuffles only
-    the new bands plus band-bucket collisions.  The band probe and nn
+    the new bands plus band-bucket collisions.  The table, its writes
+    and the probe are ``index.bands``'s: the band probe and nn
     membership joins are data-scaled on both sides -> pinned sort-merge
     (``never_broadcast``); collision volume is bounded by the same band
     capacity argument as ``dedup_minhash_lsh_bucket_capped``.
@@ -440,54 +439,22 @@ def lsh_band_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
     q1 = (b.lo + mid) // 2  # initial-build/append boundary (plan-internal)
 
-    tag = _scratch_tag(sf_dir)
-    base = _scratch_dir("awsbatch_lsh_index", sf_dir)
-    tbl = f"lsh_band_idx_{tag}"
-    for t in _table_names(spark):
-        if t.startswith("lsh_band_idx_") and not t.endswith(tag):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
     bands = band_index_rows(docs).localCheckpoint()
-    writer_opts = dict(n_buckets=16)
-    (
-        bands.filter(F.col("doc_id") <= F.lit(q1))
-        .write.bucketBy(writer_opts["n_buckets"], "bk")
-        .sortBy("bk")
-        .option("path", os.path.join(base, tbl))
-        .mode("overwrite")
-        .saveAsTable(tbl)
+    tbl = fresh_band_index(
+        spark, sf_dir, "awsbatch_lsh_index", "lsh_band_idx_",
+        rows=bands.filter(F.col("doc_id") <= F.lit(q1)),
     )
     # the day's batch: append the second quarter WITHOUT touching the
-    # initial generation (bucket spec must match the table's)
-    (
+    # initial generation
+    append_bands(
         bands.filter(
             (F.col("doc_id") > F.lit(q1)) & (F.col("doc_id") <= F.lit(mid))
-        )
-        .write.bucketBy(writer_opts["n_buckets"], "bk")
-        .sortBy("bk")
-        .mode("append")
-        .saveAsTable(tbl)
+        ),
+        tbl,
     )
-
-    seen = spark.table(tbl).select(F.col("doc_id").alias("seen_id"), "bk")
-    new_bands = bands.filter(F.col("doc_id") > F.lit(mid))
-    hits = (
-        new_bands.join(never_broadcast(seen), "bk")
-        .select("doc_id", "seen_id")
-        .distinct()
-    )
-    nn = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_seen_nbrs"))
-    new_docs = docs.filter(F.col("doc_id") > F.lit(mid)).select("doc_id")
-    return new_docs.join(
-        never_broadcast(nn.withColumn("hit", F.lit(1))), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.coalesce(F.col("n_seen_nbrs"), F.lit(0))
-        .cast("bigint")
-        .alias("n_seen_nbrs"),
-        F.when(F.col("hit").isNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("is_novel"),
+    return probe_bands(
+        spark,
+        bands.filter(F.col("doc_id") > F.lit(mid)),
+        tbl,
+        docs.filter(F.col("doc_id") > F.lit(mid)).select("doc_id"),
     )

@@ -38,6 +38,15 @@ def _table_names(spark) -> list[str]:
     return [r.tableName for r in spark.sql("SHOW TABLES").collect()]
 
 
+def drop_tables(spark, *prefixes: str) -> None:
+    """Drop every current-database table whose name starts with one of
+    ``prefixes``, under every fixture's tag (the writers keep one
+    mutable table per prefix), via one ``SHOW TABLES``."""
+    for t in _table_names(spark):
+        if t.startswith(prefixes):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 _SCRATCH_SWEEP_AGE_SEC = 3600
 
 

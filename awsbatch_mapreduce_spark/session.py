@@ -13,6 +13,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+def driver_memory(ram_bytes: int) -> str:
+    """The default driver heap for a host with ``ram_bytes`` of
+    physical RAM: the smaller of 24g and half of it, in whole GiB (at
+    least 1g)."""
+    return f"{max(1, min(24, ram_bytes // 2**31))}g"
+
+
 # Defaults tuned for the local[32] test harness; on a real cluster these
 # are overridden by spark-submit conf.  AQE handles runtime re-planning
 # (coalescing small shuffle partitions, skew-join splitting) so the same
@@ -84,13 +91,19 @@ _DEFAULT_CONF: dict[str, str] = {
     # 24g (guide §5 "heavy spill is slow"): the prefix-filter verify's
     # 450M-row join+aggregate spilled 7.5 GB of execution memory per
     # run at 8g; measured warm walls 8g 49.8 s / 16g 45.9 s / 24g
-    # 30.6 s.  24g is <19% of the 128 GiB sandbox and is a max-usage
-    # bound, not a reservation; under spark-submit on a real cluster
-    # the submitted --driver-memory/--executor-memory win.  Sized to
-    # THIS sandbox: on smaller hosts set $SPARK_GRAFT_DRIVER_MEM
-    # (ADVICE r18 — a 24g heap under local[32] can push a small
-    # machine into swap instead of letting Spark spill).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # 30.6 s.  24g is a max-usage bound, not a reservation, but on a
+    # host with less than 48 GiB it is more than half the machine (a
+    # 24g heap under local[32] can push a small machine into swap
+    # instead of letting Spark spill): there the default is half of
+    # physical RAM (``driver_memory``).  $SPARK_GRAFT_DRIVER_MEM
+    # overrides it; under spark-submit on a real cluster the submitted
+    # --driver-memory/--executor-memory win.
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM",
+        driver_memory(
+            os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        ),
+    ),
 }
 
 

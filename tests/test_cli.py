@@ -121,3 +121,20 @@ def test_cli_curate_end_to_end(tmp_path, capsys):
     man2 = json.loads((out2 / "manifest.json").read_text())
     assert man2["stages"] == man["stages"]
     assert man2["shard_counts"] == man["shard_counts"]
+
+
+def test_cli_list_descriptions_are_formatted(capsys):
+    """Every query's description is its builder's docstring as it reads
+    after the module formatted it: none empty, none with a raw
+    ``{name}`` placeholder."""
+    import re
+
+    assert main(["list"]) == 0
+    rows = capsys.readouterr().out.splitlines()
+    assert rows
+    bad = [
+        r for r in rows
+        if not r.partition(": ")[2].strip()
+        or re.search(r"\{[A-Za-z_]\w*\}", r)
+    ]
+    assert not bad, bad

@@ -17,6 +17,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.index.bands import _N_BUCKETS
 from awsbatch_mapreduce_spark.plans import QUERIES
 from awsbatch_mapreduce_spark.index.probe import _NO_PEER_BP, _SEMDEDUP_EPS_BP
 from tests.conftest import SF_BOTH, SF_DIR
@@ -175,8 +176,9 @@ def test_lifecycle_idempotent_on_one_session(spark):
 
 
 def test_lifecycle_index_table_is_bucketed(spark):
-    """The payoff claim: the index table carries a 16-bucket spec on
-    bk, so the probe join never exchanges the (growing) seen side."""
+    """The payoff claim: the index table carries the band index's
+    bucket spec on bk, so the probe join never exchanges the (growing)
+    seen side."""
     QUERIES["lsh_band_index_lifecycle"].builder(spark, SF_DIR).collect()
     tbls = [
         t.name
@@ -186,4 +188,4 @@ def test_lifecycle_index_table_is_bucketed(spark):
     assert tbls
     ddl = spark.sql(f"DESCRIBE TABLE EXTENDED {tbls[0]}").collect()
     txt = "\n".join(f"{r.col_name} {r.data_type}" for r in ddl)
-    assert "Num Buckets 16" in txt and "[`bk`]" in txt, txt
+    assert f"Num Buckets {_N_BUCKETS}" in txt and "[`bk`]" in txt, txt
