@@ -136,7 +136,8 @@ def _assign_literal(
     ``d_fp`` is the ``_sq_dist_fp`` integer squared distance to the
     nearest centroid and ties go to the lowest cell — the
     (d_fp, cell)-lexicographic argmin the oracle twins compute (the
-    ``d{i}``/``a{i}`` CTEs of ``_kmeans_cte`` and wave 10's ``an``).
+    ``d{i}``/``a{i}`` CTEs of ``_kmeans_cte`` and the ``an`` CTE of
+    ``semdedup_codebook_novelty``).
     Computed per row with higher-order functions over the literal
     instead of a broadcast crossJoin + aggregate.  ``cells``/``cents``
     MUST be sorted by cell ascending: ``array_position`` returns the

@@ -375,8 +375,8 @@ def build_generation(
     # Overlap the independent build actions: the lifecycle's wall is
     # driver-serial job choreography, and all four actions read the
     # already-materialized fit (the last Lloyd collect populated
-    # `assigned`'s cache).  Wave A: coarse write || the split checkpoint
-    # (one split, two consumers — fine book, members write).  Wave B:
+    # `assigned`'s cache).  Step A: coarse write || the split checkpoint
+    # (one split, two consumers — fine book, members write).  Step B:
     # fine-book write || members write (both read the checkpoint;
     # different tables, so the catalog commits are independent).  Job
     # ordering never mattered here: the generation only becomes
@@ -490,7 +490,7 @@ def set_generation_nprobe(pointer_path: str, nprobe: int) -> None:
     QA snapshot — no stream restart, no refit.  The knob is serving
     metadata, not index structure, which is why stepping it is the
     CHEAP recall lever (probe cost ~x nprobe, zero extra exchange,
-    measured by the wave-14 sweep) and why it must never require the
+    measured by the recall sweep) and why it must never require the
     refit machinery."""
     if nprobe < 1:
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")

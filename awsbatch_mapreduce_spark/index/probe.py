@@ -294,7 +294,7 @@ def probe_current_generation(
     actuator's ``set_generation_nprobe`` step changes what production
     serves, not just what the QA snapshot measures.  Probe cost ~x
     nprobe on the broadcast-side coarse compute, zero extra exchange
-    (the wave-14 sweep's measured price)."""
+    (the recall sweep's measured price)."""
     # ONE pointer snapshot (ADVICE r16): kind, flags, and the serving
     # nprobe must come from the same atomic file read, or a cutover
     # landing between two opens pairs one generation's kind with

@@ -2,13 +2,12 @@
 -> candidate pair -> shared-shingle verify.
 
 The one home of the format every near-dup consumer shares: the dedup
-ladder and its QA probes (``plans/llm_text.py``, ``wave4``, ``wave7``,
-``wave8``), the persisted band index (``wave9``), the sequential
-admission gate (``plans/lsh_gate.py``) and its streaming twin
-(``streaming/lsh.py``).  Each Spark operator here has a DuckDB SQL
-fragment next to it, from which the oracles are assembled, so the two
-engines cannot drift and the batch and stream writers share one band
-space.
+ladder and its QA probes (``plans/dedup.py``), the persisted band
+index and the sequential admission gate (``plans/lsh_gate.py``) and
+its streaming twin (``streaming/lsh.py``).  Each Spark operator here
+has a DuckDB SQL fragment next to it, from which the oracles are
+assembled, so the two engines cannot drift and the batch and stream
+writers share one band space.
 
 Cross-engine determinism trick: MinHash normally needs integer hash
 functions, but ``md5`` hex strings compare lexicographically exactly as

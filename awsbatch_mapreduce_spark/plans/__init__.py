@@ -17,7 +17,9 @@ from awsbatch_mapreduce_spark.plans import reference_parity  # noqa: F401
 from awsbatch_mapreduce_spark.plans import relational  # noqa: F401
 from awsbatch_mapreduce_spark.plans import events  # noqa: F401
 from awsbatch_mapreduce_spark.plans import llm_text  # noqa: F401
+from awsbatch_mapreduce_spark.plans import dedup  # noqa: F401
 from awsbatch_mapreduce_spark.plans import similarity  # noqa: F401
+from awsbatch_mapreduce_spark.plans import semdedup  # noqa: F401
 from awsbatch_mapreduce_spark.plans import multimodal_q  # noqa: F401
 from awsbatch_mapreduce_spark.plans import temporal  # noqa: F401
 from awsbatch_mapreduce_spark.plans import tpch_extra  # noqa: F401
@@ -37,13 +39,6 @@ from awsbatch_mapreduce_spark.plans import detectors  # noqa: F401
 from awsbatch_mapreduce_spark.plans import web_entity  # noqa: F401
 from awsbatch_mapreduce_spark.plans import catalog_ops  # noqa: F401
 from awsbatch_mapreduce_spark.plans import pyramid_features  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave3  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave4  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave5  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave7  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave8  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave9  # noqa: F401
-from awsbatch_mapreduce_spark.plans import wave10  # noqa: F401
 from awsbatch_mapreduce_spark.plans import codebook_lifecycle  # noqa: F401
 from awsbatch_mapreduce_spark.plans import lsh_gate  # noqa: F401
 

@@ -1,5 +1,7 @@
 """Catalog / lifecycle operators: snapshot diffing, inverted-index
-build, language-ID evaluation, and column-statistics profiling.
+build, language-ID evaluation, column-statistics profiling, and the
+two physical-layout queries (a z-order clustered copy answering a
+pruned box scan, and a bucketed join with no shuffle).
 
 These are the "run the data platform" capabilities around the core
 query surface: detect what changed between corpus versions, build the
@@ -16,10 +18,18 @@ output keys.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.operators.compact import compact_parquet
 from awsbatch_mapreduce_spark.plans.registry import query
+from awsbatch_mapreduce_spark.scratch import (
+    _scratch_dir,
+    _scratch_tag,
+    drop_tables,
+)
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 # Snapshot B, derived deterministically from snapshot A (= documents):
@@ -237,3 +247,136 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AS (col_name, n_nulls, ndv, min_value, max_value)",
         "n_rows",
     ).select("col_name", "n_rows", "n_nulls", "ndv", "min_value", "max_value")
+
+
+_ZORDER_ORACLE = """
+    WITH b AS (
+      SELECT MIN(l_orderkey) + (MAX(l_orderkey) - MIN(l_orderkey)) // 10
+               AS ok_hi,
+             MIN(l_partkey) + (MAX(l_partkey) - MIN(l_partkey)) // 10
+               AS pk_hi
+      FROM lineitem)
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
+           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+    FROM lineitem, b
+    WHERE l_orderkey <= b.ok_hi AND l_partkey <= b.pk_hi
+"""
+
+
+def zorder_scratch_dir(sf_dir: str) -> str:
+    """Scratch path for the z-ordered lineitem copy."""
+    return _scratch_dir("awsbatch_zorder", sf_dir)
+
+
+@query("zorder_pruned_scan", oracle=_ZORDER_ORACLE)
+def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write a z-ordered (Morton-clustered) copy of lineitem, then
+    answer a both-dimensions box predicate (bottom decile of
+    l_orderkey AND of l_partkey) from the clustered copy — the
+    query-level proof that ``compact_parquet(zorder_by=...)`` yields a
+    table where parquet min/max stats prune files for predicates on
+    EITHER clustered column.  The oracle computes the same aggregate
+    from the raw table: clustering is a layout change, so the answers
+    must hash-match exactly.
+
+    The box bounds are planted as literals via one driver-side min/max
+    collect (one row, the same bounded-scalar discipline as the
+    k-means centroids) — literals are what reach the parquet reader as
+    ``PushedFilters``; at 100 TB they come from table stats for free.
+    ``sum_qty`` casts per-row to BIGINT first (quantities are integral)
+    so both engines sum exact integers.  File-skipping itself is
+    pinned in ``tests/test_compact.py::test_zorder_query_prunes_files``.
+    """
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_quantity"
+    )
+    path = zorder_scratch_dir(sf_dir)
+    li.write.mode("overwrite").parquet(path)
+    z = compact_parquet(
+        spark, path, zorder_by=["l_orderkey", "l_partkey"], n_files=8
+    )
+    b = li.agg(
+        F.min("l_orderkey").alias("ok_lo"),
+        F.max("l_orderkey").alias("ok_mx"),
+        F.min("l_partkey").alias("pk_lo"),
+        F.max("l_partkey").alias("pk_mx"),
+    ).first()
+    ok_hi = b.ok_lo + (b.ok_mx - b.ok_lo) // 10
+    pk_hi = b.pk_lo + (b.pk_mx - b.pk_lo) // 10
+    return z.filter(
+        (F.col("l_orderkey") <= F.lit(ok_hi))
+        & (F.col("l_partkey") <= F.lit(pk_hi))
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.count_distinct("l_orderkey").cast("bigint").alias("n_orders"),
+        F.sum(F.col("l_quantity").cast("bigint"))
+        .cast("bigint")
+        .alias("sum_qty"),
+    )
+
+
+_BUCKETED_JOIN_ORACLE = """
+    SELECT o.o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_lines,
+           CAST(COUNT(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders,
+           CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_orderpriority
+"""
+
+
+@query("bucketed_join_no_shuffle", oracle=_BUCKETED_JOIN_ORACLE)
+def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shuffle-free fact-fact join via bucketing: write orders and
+    lineitem as 8-bucket tables hashed+sorted on the order key, then
+    join them — both sides are already co-partitioned AND co-sorted on
+    the join key, so the sort-merge join needs NO exchange and NO sort
+    (``tests/test_scale_plans.py::test_bucketed_join_has_no_join_exchange``
+    pins it).  This is THE mechanism for repeated big-big joins at
+    100 TB: pay the layout once at write time, join for free forever
+    after — the write-side twin of what z-ordering does for scans.
+
+    The bucket tables are registered in the session catalog with data
+    under the scratch dir (external path), rewritten idempotently per
+    call.  The oracle joins the raw tables: bucketing is pure layout,
+    the answer must hash-match exactly.
+    """
+    tag = _scratch_tag(sf_dir)
+    base = _scratch_dir("awsbatch_bucketed", sf_dir)
+    specs = {
+        f"bkt_orders_{tag}": (
+            load_table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderpriority"
+            ),
+            "o_orderkey",
+        ),
+        f"bkt_lineitem_{tag}": (
+            load_table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_quantity"
+            ),
+            "l_orderkey",
+        ),
+    }
+    drop_tables(spark, "bkt_orders_", "bkt_lineitem_")
+    for name, (df, key) in specs.items():
+        (
+            df.write.bucketBy(8, key)
+            .sortBy(key)
+            .option("path", os.path.join(base, name))
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
+    o = spark.table(f"bkt_orders_{tag}")
+    li = spark.table(f"bkt_lineitem_{tag}")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
+            F.count_distinct("o_orderkey").cast("bigint").alias("n_orders"),
+            F.sum(F.col("l_quantity").cast("bigint"))
+            .cast("bigint")
+            .alias("sum_qty"),
+        )
+    )

@@ -302,7 +302,6 @@ def _recall(spark, emb, lay, mid, cap, panel) -> DataFrame:
 @query(
     "semdedup_codebook_capacity",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY, label_init=True),
-    wave=11,
 )
 def semdedup_codebook_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental semantic novelty against a CAPACITY-BOUNDED persisted
@@ -331,9 +330,9 @@ def semdedup_codebook_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: the chunk rank orders by (integer fixed-point
     distance, vec_id) — both exact — and every centroid/cosine step is
-    the wave-9/10 integer-quantized arithmetic, so the persisted path
-    is oracle-exact against the unrolled seen-half Lloyd CTE plus the
-    fine-split CTEs.
+    the integer-quantized arithmetic of ``plans/semdedup.py``, so the
+    persisted path is oracle-exact against the unrolled seen-half
+    Lloyd CTE plus the fine-split CTEs.
     """
     return run_lifecycle(spark, sf_dir, Fit("cap", label_centroid_init), Probe())
 
@@ -341,7 +340,6 @@ def semdedup_codebook_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "semdedup_codebook_adaptive",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY),
-    wave=11,
 )
 def semdedup_codebook_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The refit policy the capacity variant documents, IMPLEMENTED:
@@ -381,7 +379,6 @@ def semdedup_codebook_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "semdedup_codebook_adaptive_append",
     oracle=append_oracle(),
-    wave=12,
 )
 def semdedup_codebook_adaptive_append(
     spark: SparkSession, sf_dir: str
@@ -427,7 +424,6 @@ def semdedup_codebook_adaptive_append(
 @query(
     "semdedup_codebook_refit",
     oracle=two_level(_GROWN_SRC, _Q3_SQL),
-    wave=13,
 )
 def semdedup_codebook_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full index lifecycle ending in a REFIT (module docstring):
@@ -472,7 +468,6 @@ def semdedup_codebook_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "semdedup_codebook_multiprobe",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY, nprobe=_NPROBE),
-    wave=13,
 )
 def semdedup_codebook_multiprobe(
     spark: SparkSession, sf_dir: str
@@ -489,9 +484,10 @@ def semdedup_codebook_multiprobe(
 
     Output schema matches the single-probe variants: (vec_id, PRIMARY
     cell, PRIMARY sub, n_seen_dups at cosine >= {eps} bp over the
-    probed union, max_cos_bp, is_novel).  Superset property (pinned in
-    tests/test_wave13.py): every rank-1 hit survives, so n_seen_dups
-    >= the single-probe count and is_novel <= its flag, row for row.
+    probed union, max_cos_bp, is_novel).  Superset property (pinned by
+    ``test_multiprobe_is_superset_of_single_probe``): every rank-1 hit
+    survives, so n_seen_dups >= the single-probe count and is_novel <=
+    its flag, row for row.
 
     Reference parity: the reference repo (161-line pandas/datashader
     pipeline, `local.py` / `Reduce.ps1`) has no dedup surface; this
@@ -504,7 +500,6 @@ def semdedup_codebook_multiprobe(
 @query(
     "semdedup_codebook_recall_eval",
     oracle=recall_eval_oracle(),
-    wave=13,
 )
 def semdedup_codebook_recall_eval(
     spark: SparkSession, sf_dir: str
@@ -549,7 +544,6 @@ def _register_sweep(cap: int, kind: str):
     @query(
         f"codebook_recall_sweep_cap{cap}",
         oracle=sweep_oracle(cap),
-        wave=15,
     )
     def sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_lifecycle(
@@ -571,7 +565,6 @@ codebook_recall_sweep_cap512 = _register_sweep(512, "sw512")
 @query(
     "codebook_pq_rerank_probe",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY, adc=True),
-    wave=15,
 )
 def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ-style semantic novelty on the adaptive two-level codebook
@@ -589,8 +582,9 @@ def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     {rerank} by construction and every flagged dup is exact (the
     verdict cosine is computed on full vectors), so the PQ stage can
     only LOSE duplicates vs the full probe, never invent them —
-    subset-of-adaptive pinned row-for-row in tests/test_wave14.py with
-    the measured recall cost next to it.
+    subset-of-adaptive pinned row-for-row by
+    ``test_pq_rerank_is_subset_of_full_probe_with_measured_recall``
+    with the measured recall cost next to it.
     """
     return run_lifecycle(spark, sf_dir, Fit("pqm", pq=True), Probe(adc=True))
 
@@ -603,7 +597,6 @@ def codebook_pq_rerank_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "codebook_pointer_lifecycle",
     oracle=two_level(_GROWN_SRC, _Q3_SQL),
-    wave=15,
 )
 def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OPERATIONAL pointer path, driver-gated (VERDICT r14 #4):
@@ -635,7 +628,6 @@ def codebook_pointer_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "codebook_pointer_lifecycle_adc",
     oracle=two_level(_GROWN_SRC, _Q3_SQL, adc=True),
-    wave=16,
 )
 def codebook_pointer_lifecycle_adc(
     spark: SparkSession, sf_dir: str
@@ -670,7 +662,6 @@ def codebook_pointer_lifecycle_adc(
 @query(
     "codebook_quality_refit_lifecycle",
     oracle=two_level(_GROWN_SRC, _Q3_SQL, cap=_ESCALATED_CAP),
-    wave=16,
 )
 def codebook_quality_refit_lifecycle(
     spark: SparkSession, sf_dir: str
@@ -704,7 +695,6 @@ def codebook_quality_refit_lifecycle(
 @query(
     "codebook_pointer_nprobe_serving",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY, nprobe=_NPROBE),
-    wave=17,
 )
 def codebook_pointer_nprobe_serving(
     spark: SparkSession, sf_dir: str
@@ -736,7 +726,6 @@ def codebook_pointer_nprobe_serving(
 @query(
     "codebook_pointer_adc_multiprobe",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY, nprobe=_NPROBE, adc=True),
-    wave=17,
 )
 def codebook_pointer_adc_multiprobe(
     spark: SparkSession, sf_dir: str
@@ -769,7 +758,6 @@ def codebook_pointer_adc_multiprobe(
 @query(
     "codebook_adc_escalated_refit",
     oracle=two_level(_GROWN_SRC, _Q3_SQL, cap=_ESCALATED_CAP, adc=True),
-    wave=17,
 )
 def codebook_adc_escalated_refit(
     spark: SparkSession, sf_dir: str
@@ -810,7 +798,6 @@ def codebook_adc_escalated_refit(
 @query(
     "codebook_tombstone_probe",
     oracle=two_level(_SEEN_SRC, _MID_BOUNDARY, tombs=True),
-    wave=18,
 )
 def codebook_tombstone_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion reaches serving WITHOUT a refit (module docstring):
@@ -841,7 +828,6 @@ def codebook_tombstone_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "codebook_tombstone_refit",
     oracle=two_level(_SURVIVOR_SRC, _MID_BOUNDARY),
-    wave=18,
 )
 def codebook_tombstone_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion becomes STRUCTURAL at the next refit (module
@@ -869,7 +855,6 @@ def codebook_tombstone_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=two_level(
         _SEEN_SRC, _MID_BOUNDARY, nprobe=_NPROBE, adc=True, tombs=True
     ),
-    wave=18,
 )
 def codebook_tombstone_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion reaches the ADC serving path: fit

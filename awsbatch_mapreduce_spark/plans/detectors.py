@@ -270,3 +270,83 @@ def variant_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("max_k"),
         )
     )
+
+
+_MAD_ORACLE = """
+    WITH v AS (
+      SELECT event_type,
+             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) * 4 AS v4
+      FROM events),
+    med AS (
+      SELECT event_type, CAST(quantile_cont(v4, 0.5) AS BIGINT) AS med4
+      FROM v GROUP BY event_type),
+    d AS (
+      SELECT v.event_type, v.v4, med.med4,
+             2 * abs(v.v4 - med.med4) AS d2
+      FROM v JOIN med USING (event_type)),
+    mad AS (
+      SELECT event_type, CAST(quantile_cont(d2, 0.5) AS BIGINT) AS mad_d2
+      FROM d GROUP BY event_type)
+    SELECT d.event_type,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(MAX(d.med4) AS BIGINT) AS med4,
+           CAST(MAX(mad.mad_d2) AS BIGINT) AS mad_d2,
+           CAST(COUNT(*) FILTER (WHERE 2 * d.d2 > 7 * mad.mad_d2)
+                AS BIGINT) AS n_outliers
+    FROM d JOIN mad USING (event_type)
+    GROUP BY d.event_type
+"""
+
+
+@query("events_mad_outliers", oracle=_MAD_ORACLE)
+def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust outlier detection per event type via median absolute
+    deviation: flag events beyond 3.5 MADs from the median — the
+    estimator that, unlike z-scores (``events_zscore_outliers``),
+    doesn't let the outliers themselves inflate the threshold.
+
+    Exactness trick: everything stays in scaled integers.  Cents
+    quantize, then x4: the interpolated median of an even-count set of
+    multiples of 4 is a whole (even) integer, |v4 - med4| doubled is
+    even, so the MAD (a median of even ints) is again integral, and
+    the 3.5x cut becomes the integer comparison ``2*d2 > 7*mad_d2`` —
+    both engines compare exact int64s, no float boundary cases.
+
+    Scale shape: two grouped exact percentiles over a 5-key domain
+    (each a single shuffle; swap for ``percentile_approx`` when the
+    per-key row count stops fitting a partition), broadcast joins of
+    the 5-row med/mad tables back onto the stream.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    v = ev.select(
+        "event_type",
+        (F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint") * 4)
+        .alias("v4"),
+    )
+    med = v.groupBy("event_type").agg(
+        F.expr("CAST(percentile(v4, 0.5) AS BIGINT)").alias("med4")
+    )
+    d = v.join(F.broadcast(med), "event_type").select(
+        "event_type",
+        "med4",
+        (F.lit(2) * F.abs(F.col("v4") - F.col("med4"))).alias("d2"),
+    )
+    mad = d.groupBy("event_type").agg(
+        F.expr("CAST(percentile(d2, 0.5) AS BIGINT)").alias("mad_d2")
+    )
+    return (
+        d.join(F.broadcast(mad), "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.max("med4").cast("bigint").alias("med4"),
+            F.max("mad_d2").cast("bigint").alias("mad_d2"),
+            F.sum(
+                F.when(
+                    F.lit(2) * F.col("d2") > F.lit(7) * F.col("mad_d2"), 1
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_outliers"),
+        )
+    )

@@ -1,4 +1,5 @@
-"""Iterative algorithms on the engine: Lloyd k-means over embeddings.
+"""Iterative algorithms on the engine: Lloyd k-means over embeddings,
+PageRank over the event-transition graph and power-iteration PCA.
 
 Genuinely iterative computation — but, unlike round 1/2, no longer
 outside the oracle gate: the iteration count is fixed (5), so the
@@ -28,6 +29,7 @@ from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.index.codebook import (
     _DSCALE,
+    _quantize,
     kmeans_fit,
     label_centroid_init,
 )
@@ -42,13 +44,13 @@ def _kmeans_cte(
     (...), c0 AS (...), d1/a1/c1, ..., a{n_iter}`` — ``a{n_iter}`` is
     the final (vec_id, cell, dfp) assignment and ``q`` the quantized
     (vec_id, pos, vq) components.  Shared by the kmeans oracle and the
-    wave-9/10/11 SemDeDup oracles so the cluster step can never drift
+    SemDeDup and codebook oracles so the cluster step can never drift
     between them.  ``source`` is the corpus relation — a table name or
-    a parenthesized subquery (wave 10+ cluster the seen HALF for the
-    persisted-codebook probes).  ``cell_expr`` is the init-cell
+    a parenthesized subquery (the persisted-codebook probes cluster
+    the seen HALF).  ``cell_expr`` is the init-cell
     expression over ``q``'s columns — ``label`` (default, one centroid
     per label) or a mod-hash like ``CAST(vec_id % (<k-subquery>) AS
-    INT)`` (wave 11's adaptive codebook, where k is computed FROM the
+    INT)`` (the adaptive codebook, where k is computed FROM the
     corpus at fit time — 'the Lloyd CTE already parameterizes k')."""
     steps = [
         f"""WITH q AS MATERIALIZED (
@@ -244,4 +246,239 @@ def dedup_canonical_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labels.filter(F.col("node") != F.col("label")).select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("label").cast("bigint").alias("canonical_id"),
+    )
+
+
+def _pagerank_oracle(n_iter: int = 3) -> str:
+    """Unrolled power iteration in 1e-9 fixed-point integers (same
+    discipline as the kmeans oracle): transition probabilities are 1e-6
+    integer ratios, every contribution and damping step is integer
+    arithmetic, so both engines produce bit-identical ranks."""
+    steps = [
+        """WITH seq AS (
+      SELECT user_id, event_type,
+             LEAD(event_type) OVER (
+               PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+               AS next_type
+      FROM events),
+    edges AS (
+      SELECT event_type AS src, next_type AS dst, COUNT(*) AS n_ab
+      FROM seq WHERE next_type IS NOT NULL
+      GROUP BY 1, 2),
+    outdeg AS (SELECT src, SUM(n_ab) AS n_a FROM edges GROUP BY src),
+    w AS (
+      SELECT e.src, e.dst,
+             CAST(e.n_ab * 1000000 // o.n_a AS BIGINT) AS w_fp
+      FROM edges e JOIN outdeg o USING (src)),
+    nodes AS (SELECT DISTINCT event_type AS node FROM events),
+    nn AS (SELECT COUNT(*) AS n FROM nodes),
+    pr0 AS (
+      SELECT node, CAST(1000000000 // nn.n AS BIGINT) AS pr_fp
+      FROM nodes, nn)"""
+    ]
+    for i in range(1, n_iter + 1):
+        steps.append(
+            f"""pr{i} AS (
+      SELECT n.node,
+             CAST((1000000000 - 850000000) // nn.n AS BIGINT)
+             + CAST(COALESCE(SUM(p.pr_fp * w.w_fp * 85), 0)
+                    // 100000000 AS BIGINT) AS pr_fp
+      FROM nodes n CROSS JOIN nn
+      LEFT JOIN w ON w.dst = n.node
+      LEFT JOIN pr{i - 1} p ON p.node = w.src
+      GROUP BY n.node, nn.n)"""
+        )
+    return (
+        ",\n    ".join(steps)
+        + f"""
+    SELECT node AS event_type, pr_fp AS pagerank_fp
+    FROM pr{n_iter}"""
+    )
+
+
+@query("pagerank_event_graph", oracle=_pagerank_oracle(3))
+def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank (damping 0.85, 3 power iterations) over the event-type
+    transition graph — which states dominate user journeys.  The second
+    iterative algorithm on the engine (after k-means), same recipe:
+    fixed iteration count, integer-quantized arithmetic, oracle
+    unrolled as chained CTEs.
+
+    Scale shape: the edge list aggregates out of the fact table in one
+    shuffle (LEAD is per-user partitioned); after that every iteration
+    runs on the node/edge tables, whose cardinality is the *event-type
+    domain* (bounded), not the event count — iterations are
+    broadcast-sized no matter the fact volume.  Mass from dangling
+    nodes leaks (standard simplification) identically in both engines.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    wseq = Window.partitionBy("user_id").orderBy(
+        F.unix_micros("ts"), F.col("event_id")
+    )
+    seq = ev.select(
+        "event_type",
+        F.lead("event_type").over(wseq).alias("next_type"),
+    )
+    edges = (
+        seq.filter(F.col("next_type").isNotNull())
+        .groupBy(F.col("event_type").alias("src"), F.col("next_type").alias("dst"))
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+    )
+    outdeg = edges.groupBy("src").agg(F.sum("n_ab").alias("n_a"))
+    w = edges.join(outdeg, "src").select(
+        "src", "dst", F.expr("CAST(n_ab * 1000000 div n_a AS BIGINT)").alias("w_fp")
+    )
+    nodes = ev.select(F.col("event_type").alias("node")).distinct()
+    nn = nodes.agg(F.count(F.lit(1)).alias("n"))
+    pr = nodes.crossJoin(F.broadcast(nn)).select(
+        "node", F.expr("CAST(1000000000 div n AS BIGINT)").alias("pr_fp")
+    )
+    for _ in range(3):
+        contrib = w.join(pr, w.src == pr.node).select(
+            F.col("dst"), (F.col("pr_fp") * F.col("w_fp") * F.lit(85)).alias("t")
+        )
+        pr = (
+            nodes.join(contrib, nodes.node == contrib.dst, "left")
+            .groupBy("node")
+            .agg(
+                F.coalesce(F.sum("t"), F.lit(0)).alias("mass")
+            )
+            .crossJoin(F.broadcast(nn))
+            .select(
+                "node",
+                (
+                    F.expr("CAST((1000000000 - 850000000) div n AS BIGINT)")
+                    + F.expr("CAST(mass div 100000000 AS BIGINT)")
+                ).alias("pr_fp"),
+            )
+        )
+    return pr.select(
+        F.col("node").alias("event_type"), F.col("pr_fp").alias("pagerank_fp")
+    )
+
+
+def _pca_oracle(n_iter: int = 5) -> str:
+    """Unrolled power iteration for the top principal component, in
+    pure integer arithmetic end-to-end: quantized components (1e-6),
+    integer mean, integer covariance (1e-12, normalized by n), and
+    L-infinity-normalized iteration vectors (1e-6) — no float op ever
+    executes, so cross-engine equality is exact by construction.
+    Both engines truncate integer division toward zero (verified)."""
+    steps = [
+        """WITH q AS MATERIALIZED (
+      SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+             CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
+                  AS BIGINT) AS vq
+      FROM embeddings),
+    nn AS (SELECT COUNT(*) AS n FROM embeddings),
+    m AS MATERIALIZED (
+      SELECT pos, CAST(CAST(SUM(vq) AS BIGINT) // nn.n AS BIGINT) AS m_fp
+      FROM q, nn GROUP BY pos, nn.n),
+    c AS MATERIALIZED (
+      SELECT q.vec_id, q.pos, q.vq - m.m_fp AS x
+      FROM q JOIN m USING (pos)),
+    cov AS MATERIALIZED (
+      SELECT a.pos AS j, b.pos AS k,
+             CAST(CAST(SUM(a.x * b.x) AS BIGINT) // nn.n // 1000000
+                  AS BIGINT) AS c6
+      FROM c a JOIN c b ON b.vec_id = a.vec_id, nn
+      GROUP BY a.pos, b.pos, nn.n),
+    v0 AS (SELECT pos, CAST(1000000 AS BIGINT) AS v_fp FROM m)"""
+    ]
+    for i in range(1, n_iter + 1):
+        steps.append(
+            f"""w{i} AS MATERIALIZED (
+      SELECT cov.j AS pos,
+             CAST(CAST(SUM(cov.c6 * v.v_fp) AS BIGINT) AS BIGINT) AS w
+      FROM cov JOIN v{i - 1} v ON v.pos = cov.k
+      GROUP BY cov.j),
+    v{i} AS MATERIALIZED (
+      SELECT pos,
+             CAST(w // GREATEST(mx // 1000000, 1) AS BIGINT) AS v_fp
+      FROM w{i}, (SELECT MAX(ABS(w)) AS mx FROM w{i}))"""
+        )
+    return (
+        ",\n    ".join(steps)
+        + f"""
+    SELECT CAST(pos AS BIGINT) AS pos, v_fp AS eigvec_fp FROM v{n_iter}"""
+    )
+
+
+@query("pca_top_component", oracle=_pca_oracle(5))
+def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top principal component of the embedding table by 5 rounds of
+    power iteration on the integer covariance matrix — the embedding-
+    analysis primitive behind drift detection, whitening, and "is one
+    direction eating my embedding space" diagnostics.
+
+    Scale shape: the covariance build is the only fact-sized stage —
+    a self-join on vec_id (d^2 rows per vector, partial-aggregated
+    before the (j, k) shuffle, d = 64 here); every iteration after
+    runs on d-row / d^2-row tables, all broadcast.  Arithmetic is
+    integer end-to-end (quantized components, integer mean and
+    covariance, L-infinity normalization), so no float accumulation
+    order exists anywhere — the oracle (same steps, unrolled CTEs)
+    matches bit-exactly.  At 100 TB you'd sketch the covariance with
+    the same partial aggregate; the iteration cost is unchanged.
+    """
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.select(
+        "vec_id",
+        F.posexplode(_quantize(F.col("embedding"))).alias("pos0", "vq"),
+    ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "vq")
+    nn = emb.agg(F.count(F.lit(1)).alias("n"))
+    m = (
+        q.groupBy("pos")
+        .agg(F.sum("vq").alias("s"))
+        .crossJoin(F.broadcast(nn))
+        .select("pos", F.expr("CAST(s div n AS BIGINT)").alias("m_fp"))
+    )
+    c = q.join(F.broadcast(m), "pos").select(
+        "vec_id", "pos", (F.col("vq") - F.col("m_fp")).alias("x")
+    )
+    a = c.select("vec_id", F.col("pos").alias("j"), F.col("x").alias("xj"))
+    b = c.select("vec_id", F.col("pos").alias("k"), F.col("x").alias("xk"))
+    # d^2-row covariance and d-row init vector are localCheckpoint-ed:
+    # without it the unrolled 5-iteration lineage re-plans (and
+    # re-executes) the fact-sized self-join per iteration — 653
+    # static-plan exchanges, 9.0 s at sf0.01; with it, single-digit
+    # exchanges, 2.5 s, row-identical (round 9; the same lineage-
+    # truncation discipline as dedup_canonical_assignment).
+    cov = (
+        a.join(b, "vec_id")
+        .groupBy("j", "k")
+        .agg(F.sum(F.col("xj") * F.col("xk")).alias("s"))
+        .crossJoin(F.broadcast(nn))
+        .select(
+            "j", "k", F.expr("CAST(s div n div 1000000 AS BIGINT)").alias("c6")
+        )
+        .localCheckpoint()
+    )
+    v = m.select(
+        "pos", F.lit(1000000).cast("bigint").alias("v_fp")
+    ).localCheckpoint()
+    for _ in range(5):
+        w = (
+            cov.join(F.broadcast(v), cov.k == v.pos)
+            .groupBy("j")
+            .agg(F.sum(F.col("c6") * F.col("v_fp")).alias("w"))
+        )
+        mx = w.agg(F.max(F.abs(F.col("w"))).alias("mx"))
+        # per-iteration checkpoint of the d-row vector: v_i references
+        # w_i twice (the join and the mx scalar), so an unchecked chain
+        # doubles per iteration (93 plan exchanges); checkpointed, the
+        # whole query plans in single digits
+        v = (
+            w.crossJoin(F.broadcast(mx))
+            .select(
+                F.col("j").alias("pos"),
+                F.expr(
+                    "CAST(w div greatest(mx div 1000000, 1) AS BIGINT)"
+                ).alias("v_fp"),
+            )
+            .localCheckpoint()
+        )
+    return v.select(
+        F.col("pos").cast("bigint").alias("pos"),
+        F.col("v_fp").alias("eigvec_fp"),
     )

@@ -16,6 +16,11 @@ Both queries run one gate loop over a script of steps: ``batch`` gates
 the next quartile, ``takedown`` removes every admitted doc with
 doc_id % ``_TAKEDOWN_MOD`` == 0 from the band index before the next
 batch.
+
+The module also holds the one-shot novelty probe of a new batch (the
+upper doc_id half) against the seen half: ``incremental_lsh_novelty``
+probes an in-memory seen side and ``lsh_band_index_lifecycle`` the
+persisted band index; both share one oracle.
 """
 
 from __future__ import annotations
@@ -26,8 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.index.bands import (
+    append_bands,
     fresh_band_index,
     gate_batch,
+    probe_bands,
     remove_docs_from_band_index,
 )
 from awsbatch_mapreduce_spark.operators.minhash import (
@@ -160,7 +167,7 @@ def _run_gate(
     )
 
 
-@query("lsh_admission_gate", oracle=_LSH_GATE_ORACLE, wave=18)
+@query("lsh_admission_gate", oracle=_LSH_GATE_ORACLE)
 def lsh_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential near-dup ADMISSION GATE over the persisted LSH band
     index (module docstring): documents arrive in {k} doc_id-quartile
@@ -189,7 +196,7 @@ def lsh_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("lsh_gate_takedown", oracle=_LSH_TAKEDOWN_ORACLE, wave=18)
+@query("lsh_gate_takedown", oracle=_LSH_TAKEDOWN_ORACLE)
 def lsh_gate_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TEXT index's takedown verb, driver-gated (the deletion
     symmetry of ``codebook_tombstone_probe``): run the greedy gate for
@@ -224,3 +231,134 @@ lsh_admission_gate.__doc__ = lsh_admission_gate.__doc__.format(
 lsh_gate_takedown.__doc__ = lsh_gate_takedown.__doc__.format(
     mod=_TAKEDOWN_MOD
 )
+
+
+# --- incremental LSH novelty probe ---------------------------------------
+
+
+_INCR_LSH_ORACLE = f"""
+    WITH {_SH_SQL},
+    b AS (SELECT (MIN(doc_id) + MAX(doc_id)) // 2 AS mid FROM documents),
+    {_sig_sql()},
+    {_BANDS_SQL},
+    hits AS (
+      SELECT DISTINCT n.doc_id, s.doc_id AS seen_id
+      FROM bands n JOIN bands s ON n.bk = s.bk CROSS JOIN b
+      WHERE n.doc_id > b.mid AND s.doc_id <= b.mid),
+    nn AS (SELECT doc_id, COUNT(*) AS n_seen_nbrs FROM hits GROUP BY 1)
+    SELECT d.doc_id,
+           CAST(COALESCE(nn.n_seen_nbrs, 0) AS BIGINT) AS n_seen_nbrs,
+           CAST(CASE WHEN nn.doc_id IS NULL THEN 1 ELSE 0 END AS BIGINT)
+             AS is_novel
+    FROM documents d CROSS JOIN b
+    LEFT JOIN nn ON nn.doc_id = d.doc_id
+    WHERE d.doc_id > b.mid
+"""
+
+
+@query("incremental_lsh_novelty", oracle=_INCR_LSH_ORACLE)
+def incremental_lsh_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental NEAR-dup screening: each document of the new batch
+    (upper doc_id half) probes the already-ingested corpus's LSH band
+    index (lower half) and reports how many distinct seen docs share
+    at least one band — the near-dup twin of
+    ``incremental_dedup_new_docs``'s exact-digest membership test, and
+    the daily-crawl operation that avoids re-running full-corpus
+    ``dedup_minhash_lsh`` (quadratic over time) on every append.
+
+    Docs too short to shingle (< 3 tokens) have no signature and are
+    reported novel — identically in both engines.
+
+    Scale shape: in production the seen side is a PERSISTED band-key
+    index appended per batch, so each increment shuffles only the new
+    batch's bands plus the band-bucket collisions; nothing rescans
+    seen documents' text (``lsh_band_index_lifecycle``).  Both run one
+    probe, ``index.bands.probe_bands``, here over the in-memory seen
+    half: both join sides are data-scaled, so they carry the dedup
+    ladder's ``never_broadcast`` pin (the r5 OOM class), and collision
+    volume is bounded by the same band capacity argument as
+    ``dedup_minhash_lsh_bucket_capped``.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    # eager localCheckpoint: both the seen and new band branches consume
+    # this frame; without it the shingle->signature pipeline (scan +
+    # explode + distinct + groupBy) plans TWICE — the static plan showed
+    # 0 ReusedExchange across the branches (alias-divergent subtrees)
+    bands = band_index_rows(docs).localCheckpoint()
+    mid = docs.agg(
+        ((F.min("doc_id") + F.max("doc_id")) / F.lit(2))
+        .cast("bigint")
+        .alias("mid")
+    )
+    bands_m = bands.crossJoin(F.broadcast(mid))
+    return probe_bands(
+        spark,
+        bands_m.filter(F.col("doc_id") > F.col("mid")).select("doc_id", "bk"),
+        bands_m.filter(F.col("doc_id") <= F.col("mid")),
+        docs.crossJoin(F.broadcast(mid))
+        .filter(F.col("doc_id") > F.col("mid"))
+        .select("doc_id"),
+    )
+
+
+# --- persisted LSH band-index lifecycle ----------------------------------
+
+
+@query("lsh_band_index_lifecycle", oracle=_INCR_LSH_ORACLE)
+def lsh_band_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted band-index lifecycle: WRITE the seen half's LSH band
+    index as a bucketed table (bucketed+sorted on the band key), in two
+    generations — an initial build (first quarter of doc_ids) plus an
+    APPEND (second quarter, "the day's batch") — then PROBE it with the
+    new batch (upper half).  Same output and SAME ORACLE as
+    ``incremental_lsh_novelty``, so the driver itself proves the
+    persisted path row-identical to the recompute path; what changes is
+    the physical story:
+
+    - the probe plan contains ZERO seen-side shingle/signature
+      recompute — the seen side is a parquet scan of the index table
+      (pinned by ``test_lifecycle_probe_has_no_seen_side_shingle_recompute``);
+    - the table is bucketed on ``bk``, so the probe's band join reads
+      the large, ever-growing index side with NO exchange; only the
+      new batch's bands shuffle (into the table's bucket count).  At
+      100 TB this is the difference between reshuffling the whole
+      history every day and shuffling one day's crawl.
+
+    Idempotent on a vanilla session called twice: catalog tables are
+    dropped and rebuilt per call, data under a per-fixture scratch dir
+    (never the fixture itself), stale generations age-swept — the
+    ``bucketed_join_no_shuffle`` discipline.
+
+    Scale shape: index build cost is one shingle->signature pass over
+    the seen half (paid once, amortized over every future batch);
+    append cost is one pass over the day's batch; probe shuffles only
+    the new bands plus band-bucket collisions.  The table, its writes
+    and the probe are ``index.bands``'s: the band probe and nn
+    membership joins are data-scaled on both sides -> pinned sort-merge
+    (``never_broadcast``); collision volume is bounded by the same band
+    capacity argument as ``dedup_minhash_lsh_bucket_capped``.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    b = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
+    mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
+    q1 = (b.lo + mid) // 2  # initial-build/append boundary (plan-internal)
+
+    bands = band_index_rows(docs).localCheckpoint()
+    tbl = fresh_band_index(
+        spark, sf_dir, "awsbatch_lsh_index", "lsh_band_idx_",
+        rows=bands.filter(F.col("doc_id") <= F.lit(q1)),
+    )
+    # the day's batch: append the second quarter WITHOUT touching the
+    # initial generation
+    append_bands(
+        bands.filter(
+            (F.col("doc_id") > F.lit(q1)) & (F.col("doc_id") <= F.lit(mid))
+        ),
+        tbl,
+    )
+    return probe_bands(
+        spark,
+        bands.filter(F.col("doc_id") > F.lit(mid)),
+        tbl,
+        docs.filter(F.col("doc_id") > F.lit(mid)).select("doc_id"),
+    )

@@ -159,3 +159,59 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(n_bytes = 0 OR (ratio > 0.0 AND ratio < 2.0) AS BIGINT)"
         ).alias("ratio_ok"),
     )
+
+
+_PAD_BUCKET = 32
+
+
+_PAD_WASTE_ORACLE = f"""
+    WITH d AS (
+      SELECT len(string_split(text, ' ')) AS n_tok FROM documents),
+    b AS (
+      SELECT ((n_tok + {_PAD_BUCKET} - 1) // {_PAD_BUCKET})
+               * {_PAD_BUCKET} AS cap,
+             n_tok
+      FROM d WHERE n_tok > 0)
+    SELECT CAST(cap AS BIGINT) AS bucket_cap,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
+           CAST(SUM(cap - n_tok) AS BIGINT) AS pad_tokens,
+           CAST(SUM(cap - n_tok) * 1000000 // (COUNT(*) * cap)
+                AS BIGINT) AS waste_ppm
+    FROM b GROUP BY cap
+"""
+
+
+@query("batch_padding_waste", oracle=_PAD_WASTE_ORACLE)
+def batch_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Padding-waste audit for length-bucketed batching: bucket
+    documents into 32-token length classes (each batch padded to its
+    bucket cap) and report the padded-token overhead per bucket — the
+    number that decides between plain bucketing and full sequence
+    packing (``corpus_pack_sequences``) for a training run.
+
+    Scale shape: token counts come from one map-stage ``size(split)``
+    (no explode — lengths, not tokens, aggregate); the rollup key
+    domain is bounded by max_len / 32.  Exact integer ratios.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    b = docs.select(
+        F.size(F.split("text", " ")).cast("bigint").alias("n_tok")
+    ).filter(F.col("n_tok") > 0).select(
+        "n_tok",
+        (
+            F.expr(f"CAST((n_tok + {_PAD_BUCKET} - 1) div {_PAD_BUCKET}"
+                   f" AS BIGINT)") * _PAD_BUCKET
+        ).alias("bucket_cap"),
+    )
+    return b.groupBy("bucket_cap").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tok").cast("bigint").alias("sum_tokens"),
+        F.sum(F.col("bucket_cap") - F.col("n_tok"))
+        .cast("bigint")
+        .alias("pad_tokens"),
+        F.expr(
+            "CAST(sum(bucket_cap - n_tok) * 1000000"
+            " div (count(1) * bucket_cap) AS BIGINT)"
+        ).alias("waste_ppm"),
+    )

@@ -23,8 +23,6 @@ class QuerySpec:
     name: str
     builder: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
-    # Round in which the query was registered: the QUERIES.md column.
-    wave: int = 2
 
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -101,16 +99,14 @@ def grading_order(
 
 
 def query(
-    name: str, oracle: str | None = None, wave: int = 2
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
 
     def wrap(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, wave=wave
-        )
+        QUERIES[name] = QuerySpec(name=name, builder=fn, oracle=oracle)
         return fn
 
     return wrap

@@ -33,6 +33,7 @@ from awsbatch_mapreduce_spark.functions.rounding import (
 )
 from pyspark.sql.window import Window
 
+from awsbatch_mapreduce_spark.operators.skew import two_phase_topk
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -248,7 +249,7 @@ def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared with wave8's two-phase salted top-k: both implementations must
+# Shared with the two-phase salted top-k: both implementations must
 # match this one oracle exactly — the equivalence proof that the
 # skew-safe plan keeps per-key ranking semantics.
 WINDOW_TOPK_ORACLE = """
@@ -680,4 +681,33 @@ def events_trailing_hour_range_frame(spark: SparkSession, sf_dir: str) -> DataFr
         "ts_us",
         F.count(F.lit(1)).over(wr).cast("bigint").alias("n_1h"),
         dround(F.sum("cents").over(wr) / 100.0, 2).alias("sum_value_1h"),
+    )
+
+
+@query("salted_topk_orders_per_customer", oracle=WINDOW_TOPK_ORACLE)
+def salted_topk_orders_per_customer(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Top-3 orders per customer via the two-phase salted ranking
+    operator (``operators/skew.py:two_phase_topk``) — the skew-safe
+    twin of ``window_top_orders_per_customer``, sharing its oracle so
+    the driver proves the two plans return identical rows.
+
+    Scale shape: phase 1 shuffles on (o_custkey, salt) — a customer
+    holding 30% of all orders spreads over 16 buckets instead of one
+    task's sort — and keeps <= k rows per bucket; phase 2's per-key
+    partitions are bounded at 16*k = 48 rows by construction.  The
+    skew rehearsal (SCALING.md round 7) measures both twins on the
+    hot-customer tiling.
+    """
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
+    )
+    return two_phase_topk(
+        orders,
+        key="o_custkey",
+        order_cols=[F.desc("o_totalprice"), F.asc("o_orderkey")],
+        k=3,
+        salt_from="o_orderkey",
+        n_salts=16,
     )

@@ -332,3 +332,216 @@ def token_budget_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(2 * F.col("cum_tokens") <= F.col("total_tokens"))
         .select("doc_id", "score", "n_tokens", "cum_tokens")
     )
+
+
+_BOOT_REPS = 32
+
+
+_BOOT_ORACLE = f"""
+    WITH reps AS (SELECT unnest(range(0, {_BOOT_REPS})) AS rep),
+    w AS (
+      SELECT o_orderpriority AS prio, rep,
+             CASE (('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)
+                    || '#' || CAST(rep AS VARCHAR)), 1, 8))::UBIGINT % 4)
+               WHEN 0 THEN 0 WHEN 3 THEN 2 ELSE 1 END AS w,
+             CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
+      FROM orders CROSS JOIN reps),
+    rm AS (
+      SELECT prio, rep,
+             FLOOR((SUM(w * cents) * 1.0 / (100.0 * SUM(w)))
+                   * 10000.0 + 0.5) / 10000.0 AS m
+      FROM w GROUP BY 1, 2),
+    ci AS (SELECT prio, list_sort(list(m)) AS ms FROM rm GROUP BY 1),
+    mean AS (
+      SELECT o_orderpriority AS prio,
+             FLOOR((SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+                    * 1.0 / (100.0 * COUNT(*))) * 10000.0 + 0.5)
+               / 10000.0 AS mean_rev,
+             COUNT(*) AS n_orders
+      FROM orders GROUP BY 1)
+    SELECT mean.prio AS o_orderpriority,
+           CAST(mean.n_orders AS BIGINT) AS n_orders,
+           mean.mean_rev,
+           ci.ms[2] AS ci_lo,
+           ci.ms[{_BOOT_REPS - 1}] AS ci_hi
+    FROM mean JOIN ci ON ci.prio = mean.prio
+"""
+
+
+@query("bootstrap_ci_order_value", oracle=_BOOT_ORACLE)
+def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """~90% bootstrap confidence interval for mean order value per
+    priority, via the deterministic multiplier bootstrap: each of 32
+    replicates reweights every order by hash(orderkey, rep) -> weight
+    in {0, 1, 1, 2} (mean 1), and the CI is the 2nd/31st of the 32
+    sorted replicate means.  This is THE scalable bootstrap — no
+    resampled copies of the data, just 32 weighted aggregates in one
+    shuffle — and the hash-derived weights make it reproducible and
+    oracle-checkable, where rng-based resampling would not be.
+
+    Scale shape: the replicate cross join is rows x 32 in the map
+    stage feeding ONE shuffle bounded by (priority x rep) = 160 keys;
+    replicate means use exact integer-cent sums with a single rounded
+    division, and the quantile picks elements of a 32-value sorted
+    array per group (bounded, engine-independent).
+    """
+    from awsbatch_mapreduce_spark.functions.rounding import dround
+
+    orders = load_table(spark, sf_dir, "orders")
+    reps = spark.range(_BOOT_REPS).select(F.col("id").cast("int").alias("rep"))
+    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("bigint")
+    wcol = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.col("o_orderkey").cast("string"),
+                        F.lit("#"),
+                        F.col("rep").cast("string"),
+                    )
+                ),
+                1,
+                8,
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % 4
+    )
+    w = (
+        orders.select(
+            F.col("o_orderpriority").alias("prio"), F.col("o_orderkey"),
+            cents.alias("cents"),
+        )
+        .crossJoin(F.broadcast(reps))
+        .select(
+            "prio",
+            "rep",
+            "cents",
+            F.when(wcol == 0, 0).when(wcol == 3, 2).otherwise(1).alias("w"),
+        )
+    )
+    rm = w.groupBy("prio", "rep").agg(
+        dround(
+            F.sum(F.col("w") * F.col("cents"))
+            * 1.0
+            / (100.0 * F.sum("w")),
+            4,
+        ).alias("m")
+    )
+    ci = rm.groupBy("prio").agg(
+        F.array_sort(F.collect_list("m")).alias("ms")
+    )
+    mean = orders.groupBy(
+        F.col("o_orderpriority").alias("prio")
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+        dround(
+            F.sum(cents) * 1.0 / (100.0 * F.count(F.lit(1))), 4
+        ).alias("mean_rev"),
+    )
+    return mean.join(ci, "prio").select(
+        F.col("prio").alias("o_orderpriority"),
+        "n_orders",
+        "mean_rev",
+        F.element_at("ms", 2).alias("ci_lo"),
+        F.element_at("ms", _BOOT_REPS - 1).alias("ci_hi"),
+    )
+
+
+_WSAMPLE_ORACLE = """
+    WITH p AS (
+      SELECT doc_id, n_chars,
+             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+                  ::UBIGINT // greatest(n_chars, 1) AS BIGINT) AS priority
+      FROM documents WHERE n_chars IS NOT NULL),
+    top AS (SELECT * FROM p ORDER BY priority, doc_id LIMIT 50)
+    SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars, priority,
+           CAST(ROW_NUMBER() OVER (ORDER BY priority, doc_id) AS BIGINT)
+             AS rk
+    FROM top
+"""
+
+
+@query("weighted_doc_sample", oracle=_WSAMPLE_ORACLE)
+def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic weighted sample: 50 documents drawn with
+    probability increasing in document length, via integer priority
+    sampling — priority = hash(doc_id) / weight, keep the bottom-k.
+    The reproducible replacement for rand()-weighted sampling when a
+    curation run must be re-derivable (same corpus in, same sample
+    out), e.g. for human-eval slices weighted toward long documents.
+
+    Scale shape: priorities are computed in the map stage from the
+    stable id (no rng state, no seed coordination across executors);
+    the bottom-k plans as distributed TakeOrderedAndProject with the
+    rank window over the 50 survivors.  Integer division keeps the
+    priority exact in both engines.
+    """
+    # greatest(n_chars, 1) + non-NULL filter in BOTH engines: a zero or
+    # NULL weight would otherwise make a NULL priority, and NULLs sort
+    # first in Spark ASC but last in DuckDB — divergent top-50 sets.
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("n_chars").isNotNull()
+    )
+    prio = F.expr(
+        "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10)"
+        " AS BIGINT) div greatest(n_chars, 1)"
+    )
+    p = docs.select(
+        "doc_id",
+        F.col("n_chars").cast("bigint").alias("n_chars"),
+        prio.alias("priority"),
+    )
+    top = p.orderBy(F.asc("priority"), F.asc("doc_id")).limit(50)
+    wr = Window.partitionBy(F.lit(0)).orderBy(
+        F.asc("priority"), F.asc("doc_id")
+    )
+    return top.withColumn("rk", F.row_number().over(wr).cast("bigint"))
+
+
+_TEMP_MIX_ORACLE = """
+    WITH n AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1),
+    s AS (SELECT lang, n_docs,
+                 CAST(FLOOR(SQRT(CAST(n_docs AS DOUBLE)) * 10000.0 + 0.5)
+                      AS BIGINT) AS r_fp
+          FROM n),
+    t AS (SELECT SUM(r_fp) AS tot FROM s)
+    SELECT lang,
+           CAST(n_docs AS BIGINT) AS n_docs,
+           CAST(r_fp AS BIGINT) AS root_fp,
+           CAST(r_fp * 1000000 // tot AS BIGINT) AS weight_ppm,
+           CAST(r_fp * 10000 // tot AS BIGINT) AS docs_per_10k
+    FROM s, t
+"""
+
+
+@query("mixture_temperature_weights", oracle=_TEMP_MIX_ORACLE)
+def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-based corpus mixing (mT5-style, alpha = 0.5):
+    per-language sampling weight proportional to sqrt(n_docs),
+    up-weighting low-resource languages relative to proportional
+    sampling — the table a mixture-aware dataloader consumes
+    (``corpus_mixture_epochs`` handles the epoch side).
+
+    Scale shape: one bounded-key count per language, a broadcast
+    scalar total, integer ppm shares.  sqrt is the single IEEE op on
+    an exact integer, quantized before the share division, so the
+    cross-engine hash is exact.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    s = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")).select(
+        "lang",
+        "n_docs",
+        F.floor(F.sqrt(F.col("n_docs").cast("double")) * 10000.0 + 0.5)
+        .cast("bigint")
+        .alias("r_fp"),
+    )
+    t = s.agg(F.sum("r_fp").alias("tot"))
+    return s.crossJoin(F.broadcast(t)).select(
+        "lang",
+        F.col("n_docs").cast("bigint").alias("n_docs"),
+        F.col("r_fp").alias("root_fp"),
+        F.expr("CAST(r_fp * 1000000 div tot AS BIGINT)").alias("weight_ppm"),
+        F.expr("CAST(r_fp * 10000 div tot AS BIGINT)").alias("docs_per_10k"),
+    )

@@ -1,46 +1,64 @@
-"""Wave 9 (round 8): semantic dedup + persisted-index lifecycle.
-
-Two capability rungs VERDICT r7 asked for:
+"""Semantic dedup (SemDeDup) over the ``embeddings`` fixture.
 
 1. ``semdedup_cluster_prune`` — SemDeDup-style cluster-then-dedup
    (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
-   through semantic deduplication", arXiv:2303.09540): the dedup ladder
-   already covers lexical duplicates (shingles/spans/prefix tokens) and
-   HIGH-cosine duplicates (sign-LSH bands, whose collision probability
-   1 - theta/pi per bit makes moderate-cosine pairs invisible); the
-   missing rung is *semantic* near-dup at moderate cosine.  The public
-   recipe is k-means cluster, then exact pairwise cosine WITHIN each
-   cluster only — candidate generation is bucketed by cell, never
-   all-pairs, which is what makes it tractable at web scale.
+   through semantic deduplication", arXiv:2303.09540): the lexical
+   ladder (``plans/dedup.py``) covers shingle/span/prefix-token
+   duplicates and sign-LSH bands cover HIGH-cosine duplicates (their
+   collision probability 1 - theta/pi per bit makes moderate-cosine
+   pairs invisible); this rung finds *semantic* near-dups at moderate
+   cosine.  The public recipe is k-means cluster, then exact pairwise
+   cosine WITHIN each cluster only — candidate generation is bucketed
+   by cell, never all-pairs, which is what makes it tractable at web
+   scale.  ``semdedup_eps_retention_curve`` prices the eps threshold.
 
-2. ``lsh_band_index_lifecycle`` — the production form of
-   ``incremental_lsh_novelty``: the seen-side LSH band index is a
-   PERSISTED bucketed table (write once, append per batch); a new
-   batch's probe plan reads the index from disk and recomputes NO
-   seen-side shingles/signatures, and — because the table is bucketed
-   on the band key — the probe join reads the (large, growing) index
-   side with no exchange: only the day's batch shuffles.
+2. ``semdedup_eps_curve_sampled`` — at 100 TB you price the SemDeDup
+   eps threshold on a sample, not the full corpus.  The naive design
+   (md5-bucket sample of DOCUMENTS, as the lexical ladder samples) is
+   statistically wrong for a PAIR statistic: a duplicate survives the
+   sample only if its peer does too, so pair density thins by rate^2
+   while the denominator thins by rate, and the curve overstates
+   retention — measured on the fixture: +31-33 retention points at a
+   40% doc sample.  The unbiased estimator samples whole k-means CELLS
+   (drop decisions are cell-local by construction — no pair ever
+   crosses a cell — so sampled cells carry their EXACT pair
+   structure): measured deviation <=1.6 retention points at a 50% cell
+   sample on both fixture SFs (tolerance pinned by
+   ``test_sampled_curve_tracks_full_curve_within_tolerance``).  The
+   linear cluster step still sees the full corpus (it is needed for
+   the eventual prune anyway); only the quadratic-ish intra-cell pair
+   pass is priced on the sample.
 
-Both are oracle-gated: the SemDeDup oracle reuses the unrolled Lloyd
-CTE chain (``plans.iterative._kmeans_cte``) so the cluster step cannot
-drift from ``kmeans_embeddings``, and the lifecycle query shares
-``incremental_lsh_novelty``'s oracle verbatim — the driver itself
-proves the persisted-index path row-identical to the recompute path.
+3. ``semdedup_codebook_novelty`` — the semantic twin of the lexical
+   ladder's persisted-index probe (``lsh_band_index_lifecycle``).
+   The seen half's k-means codebook (final Lloyd centroids) and
+   per-cell quantized members are PERSISTED once (members bucketed on
+   cell); a new batch is assigned to cells via the broadcast codebook
+   and checked by exact intra-cell cosine against persisted members
+   only — zero seen-side recompute (pinned by plan test), only the
+   day's batch shuffles.
 
-Reference parity note: the reference repo (161-line pandas/datashader
-pipeline) has no dedup surface at all; these extend the LLM-pipeline
-operator family the build brief makes first-class.
+All are oracle-gated: the oracles reuse the unrolled Lloyd CTE chain
+(``plans.iterative._kmeans_cte``, over the seen half for the novelty
+probe) so the cluster step cannot drift from ``kmeans_embeddings``,
+the sampled curve reuses the shared sim CTE with the cell filter
+(``_semdedup_sim_cte(cell_rate)``), and the novelty oracle reuses the
+exact-int cosine recipe.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.bands import (
-    append_bands,
-    fresh_band_index,
-    probe_bands,
+from awsbatch_mapreduce_spark.index.codebook import (
+    _exact_means,
+    _quantize,
+    assign_to_cells_collected,
+    kmeans_fit,
+    label_centroid_init,
 )
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
@@ -48,16 +66,14 @@ from awsbatch_mapreduce_spark.index.probe import (
     cos_bp,
     dot,
     norm2,
+    verdicts,
 )
 from awsbatch_mapreduce_spark.operators.hints import never_broadcast
-from awsbatch_mapreduce_spark.operators.minhash import band_index_rows
-from awsbatch_mapreduce_spark.plans.iterative import (
-    _kmeans_cte,
-    label_init_fit,
-)
+from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte, label_init_fit
 from awsbatch_mapreduce_spark.plans.registry import query
-from awsbatch_mapreduce_spark.plans.wave8 import _INCR_LSH_ORACLE
+from awsbatch_mapreduce_spark.scratch import _scratch_dir, _scratch_tag, drop_tables
 from awsbatch_mapreduce_spark.sources.tables import load_table
+
 
 # --- SemDeDup: cluster-then-exact-cosine prune ---------------------------
 
@@ -73,14 +89,15 @@ from awsbatch_mapreduce_spark.sources.tables import load_table
 # the same documented trade as ``dedup_minhash_lsh_bucket_capped``.
 _CELL_CAP = 512
 
+
 # CTE chain through ``sim`` (id_a, id_b, cos_bp over intra-shard
 # pairs) — shared by the prune query, the eps-retention curve, and the
-# wave-10 cell-sampled curve so the pair set can never drift between
+# cell-sampled curve so the pair set can never drift between
 # them.
 
 
 def _semdedup_sim_cte(cell_rate: int | None = None) -> str:
-    """``cell_rate`` (wave 10) restricts the pair pipeline to the
+    """``cell_rate`` restricts the pair pipeline to the
     k-means CELLS whose md5 bucket falls under the rate — whole-cell
     sampling, the unbiased estimator for the retention curve (drop
     decisions are cell-local by construction, so sampled cells carry
@@ -131,6 +148,7 @@ def _semdedup_sim_cte(cell_rate: int | None = None) -> str:
 
 _SEMDEDUP_SIM_CTE = _semdedup_sim_cte()
 
+
 _SEMDEDUP_ORACLE = (
     _SEMDEDUP_SIM_CTE
     + f""",
@@ -148,7 +166,7 @@ _SEMDEDUP_ORACLE = (
 )
 
 
-@query("semdedup_cluster_prune", oracle=_SEMDEDUP_ORACLE, wave=9)
+@query("semdedup_cluster_prune", oracle=_SEMDEDUP_ORACLE)
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means cluster the embedding
     corpus (the exact 5-iteration Lloyd pipeline of
@@ -220,7 +238,7 @@ def _semdedup_sim(
     ``sim`` the intra-(cell, shard) lower-id pair frame (id_a, id_b,
     cos_bp).  Mirrors ``_semdedup_sim_cte`` exactly; consumed by the
     prune query, the eps-retention curve, and (with ``cell_rate``) the
-    wave-10 cell-sampled curve — when set, only vectors in md5-sampled
+    cell-sampled curve — when set, only vectors in md5-sampled
     CELLS enter the pair pipeline, so the quadratic-ish pair pass is
     priced on the sample while the (linear, already-measured) cluster
     step still sees the full corpus."""
@@ -296,6 +314,7 @@ semdedup_cluster_prune.__doc__ = semdedup_cluster_prune.__doc__.format(
 
 _SEMDEDUP_EPS_GRID = [2000, 2500, 3000, 3500, 4000]
 
+
 def _semdedup_curve_oracle(cell_rate: int | None = None) -> str:
     """Full (``cell_rate=None``) or cell-sampled curve oracle: the
     shared sim CTE plus the curve tail; the retention denominator is
@@ -325,7 +344,7 @@ def _semdedup_curve_oracle(cell_rate: int | None = None) -> str:
 _SEMDEDUP_CURVE_ORACLE = _semdedup_curve_oracle()
 
 
-@query("semdedup_eps_retention_curve", oracle=_SEMDEDUP_CURVE_ORACLE, wave=9)
+@query("semdedup_eps_retention_curve", oracle=_SEMDEDUP_CURVE_ORACLE)
 def semdedup_eps_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-calibration curve for the SemDeDup rung: corpus
     retention at eps in {grid} bp, computed from ONE pass over the
@@ -357,8 +376,8 @@ def semdedup_eps_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def retention_curve_frame(
     spark: SparkSession, sim: DataFrame, t: DataFrame
 ) -> DataFrame:
-    """The curve tail shared by the full (wave 9) and cell-sampled
-    (wave 10) eps-retention curves: per-vector max-cosine rollup over
+    """The curve tail shared by the full and cell-sampled
+    eps-retention curves: per-vector max-cosine rollup over
     ``sim``, crossed with the literal eps grid and the 1-row total
     frame ``t`` — identical output schema, so the two curves cannot
     drift structurally."""
@@ -397,64 +416,230 @@ semdedup_eps_retention_curve.__doc__ = semdedup_eps_retention_curve.__doc__.form
 )
 
 
-# --- persisted LSH band-index lifecycle ----------------------------------
+# --- cell-sampled eps-retention curve ------------------------------------
+
+# md5 bucket rate (percent) for CELL sampling.  50 keeps 6 of the
+# fixture's 10 cells (~290-310 vectors); measured curve deviation vs
+# the full corpus: <=14,693 ppm (sf0.001) / <=15,463 ppm (sf0.01) —
+# under 1.6 retention points, vs 190,000-326,000 ppm for doc-sampling
+# at comparable rates.
+_SEMDEDUP_CELL_RATE = 50
 
 
-@query("lsh_band_index_lifecycle", oracle=_INCR_LSH_ORACLE, wave=9)
-def lsh_band_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted band-index lifecycle: WRITE the seen half's LSH band
-    index as a bucketed table (bucketed+sorted on the band key), in two
-    generations — an initial build (first quarter of doc_ids) plus an
-    APPEND (second quarter, "the day's batch") — then PROBE it with the
-    new batch (upper half).  Same output and SAME ORACLE as
-    ``incremental_lsh_novelty``, so the driver itself proves the
-    persisted path row-identical to the recompute path; what changes is
-    the physical story:
+@query(
+    "semdedup_eps_curve_sampled",
+    oracle=_semdedup_curve_oracle(_SEMDEDUP_CELL_RATE),
+)
+def semdedup_eps_curve_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup eps calibration on a deterministic 50% CELL sample:
+    cluster the full corpus (linear — the step a prune needs anyway),
+    keep only cells whose md5 bucket < {rate}, run the exact intra-cell
+    pair pipeline on those cells alone, and report the same
+    (eps_bp, n_dropped, n_total, retention_ppm) curve as
+    ``semdedup_eps_retention_curve`` with the SAMPLE as denominator.
 
-    - the probe plan contains ZERO seen-side shingle/signature
-      recompute — the seen side is a parquet scan of the index table
-      (pinned by ``tests/test_wave9.py``);
-    - the table is bucketed on ``bk``, so the probe's band join reads
-      the large, ever-growing index side with NO exchange; only the
-      new batch's bands shuffle (into the table's bucket count).  At
-      100 TB this is the difference between reshuffling the whole
-      history every day and shuffling one day's crawl.
+    Why cells, not documents: retention is a PAIR statistic.  A
+    md5-sampled document set thins pairs by rate^2 against a
+    denominator thinned by rate, overstating retention (measured
+    +31-33 points at 40% doc-sampling on the fixture).  Cell sampling
+    is cluster sampling: no pair crosses a cell, so each sampled cell
+    contributes its exact pair structure and the estimator is unbiased
+    over the cell draw — measured <=1.6 points deviation at both
+    fixture SFs (tolerance test-pinned vs the full curve).
 
-    Idempotent on a vanilla session called twice: catalog tables are
-    dropped and rebuilt per call, data under a per-fixture scratch dir
-    (never the fixture itself), stale generations age-swept — the
-    ``bucketed_join_no_shuffle`` discipline.
-
-    Scale shape: index build cost is one shingle->signature pass over
-    the seen half (paid once, amortized over every future batch);
-    append cost is one pass over the day's batch; probe shuffles only
-    the new bands plus band-bucket collisions.  The table, its writes
-    and the probe are ``index.bands``'s: the band probe and nn
-    membership joins are data-scaled on both sides -> pinned sort-merge
-    (``never_broadcast``); collision volume is bounded by the same band
-    capacity argument as ``dedup_minhash_lsh_bucket_capped``.
+    Scale shape: identical to the full curve's (shared
+    ``_semdedup_sim`` pipeline — shard-capped, ``never_broadcast``
+    pair join, in-array dot products) except the pair pass runs over
+    ~rate% of cells: at 100 TB the calibration costs ~rate% of the
+    prune's candidate volume while the cluster step is the linear
+    pass already measured in SCALING.md round 8.  The sample is
+    deterministic (md5 of the cell id), so the curve is reproducible
+    and DuckDB-oracle-checkable end to end.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    b = docs.agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).first()
-    mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
-    q1 = (b.lo + mid) // 2  # initial-build/append boundary (plan-internal)
+    m, sim = _semdedup_sim(spark, sf_dir, cell_rate=_SEMDEDUP_CELL_RATE)
+    t = m.agg(F.count(F.lit(1)).alias("n_total"))
+    return retention_curve_frame(spark, sim, t)
 
-    bands = band_index_rows(docs).localCheckpoint()
-    tbl = fresh_band_index(
-        spark, sf_dir, "awsbatch_lsh_index", "lsh_band_idx_",
-        rows=bands.filter(F.col("doc_id") <= F.lit(q1)),
-    )
-    # the day's batch: append the second quarter WITHOUT touching the
-    # initial generation
-    append_bands(
-        bands.filter(
-            (F.col("doc_id") > F.lit(q1)) & (F.col("doc_id") <= F.lit(mid))
+
+semdedup_eps_curve_sampled.__doc__ = semdedup_eps_curve_sampled.__doc__.format(
+    rate=_SEMDEDUP_CELL_RATE
+)
+
+
+# --- persisted semantic codebook: incremental novelty probe ---------------
+
+_CODEBOOK_NOVELTY_ORACLE = (
+    _kmeans_cte(
+        5,
+        source=(
+            "(SELECT * FROM embeddings WHERE vec_id <="
+            " (SELECT (MIN(vec_id) + MAX(vec_id)) // 2 FROM embeddings))"
         ),
-        tbl,
     )
-    return probe_bands(
-        spark,
-        bands.filter(F.col("doc_id") > F.lit(mid)),
-        tbl,
-        docs.filter(F.col("doc_id") > F.lit(mid)).select("doc_id"),
+    + f""",
+    c5 AS MATERIALIZED (
+      SELECT a.cell, q.pos,
+             CAST(SUM(q.vq) AS DOUBLE) / (1000000.0 * COUNT(*)) AS c
+      FROM a5 a JOIN q ON q.vec_id = a.vec_id
+      GROUP BY 1, 2),
+    qn AS MATERIALIZED (
+      SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+             CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 1000000.0 + 0.5)
+                  AS BIGINT) AS vq
+      FROM embeddings
+      WHERE vec_id > (SELECT (MIN(vec_id) + MAX(vec_id)) // 2
+                      FROM embeddings)),
+    dn AS MATERIALIZED (
+      SELECT qn.vec_id, c.cell,
+             SUM(CAST(FLOOR((qn.vq / 1000000.0 - c.c) * (qn.vq / 1000000.0 - c.c)
+                            * 1000000000000.0 + 0.5) AS BIGINT)) AS dfp
+      FROM qn JOIN c5 c ON c.pos = qn.pos
+      GROUP BY 1, 2),
+    an AS MATERIALIZED (
+      SELECT vec_id, FIRST(cell ORDER BY dfp, cell) AS cell
+      FROM dn GROUP BY vec_id),
+    nrm_s AS (SELECT vec_id, SUM(vq * vq) AS nn FROM q GROUP BY 1),
+    nrm_n AS (SELECT vec_id, SUM(vq * vq) AS nn FROM qn GROUP BY 1),
+    pr AS MATERIALIZED (
+      SELECT n.vec_id AS id_new, s.vec_id AS id_seen,
+             SUM(qn.vq * qs.vq) AS dot
+      FROM an n JOIN a5 s ON s.cell = n.cell
+      JOIN qn ON qn.vec_id = n.vec_id
+      JOIN q qs ON qs.vec_id = s.vec_id AND qs.pos = qn.pos
+      GROUP BY 1, 2),
+    sim AS MATERIALIZED (
+      SELECT id_new,
+             CAST(FLOOR(dot / (sqrt(na.nn) * sqrt(nb.nn)) * 10000.0 + 0.5)
+                  AS BIGINT) AS cos_bp
+      FROM pr
+      JOIN nrm_n na ON na.vec_id = id_new
+      JOIN nrm_s nb ON nb.vec_id = id_seen
+      WHERE na.nn > 0 AND nb.nn > 0),
+    agg AS MATERIALIZED (
+      SELECT id_new AS vec_id, COUNT(*) AS n_seen_dups,
+             MAX(cos_bp) AS max_cos_bp
+      FROM sim WHERE cos_bp >= {_SEMDEDUP_EPS_BP} GROUP BY 1)
+    SELECT CAST(n.vec_id AS BIGINT) AS vec_id,
+           CAST(n.cell AS INT) AS cell,
+           CAST(COALESCE(a.n_seen_dups, 0) AS BIGINT) AS n_seen_dups,
+           CAST(COALESCE(a.max_cos_bp, {_NO_PEER_BP}) AS BIGINT) AS max_cos_bp,
+           CAST(CASE WHEN a.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT)
+             AS is_novel
+    FROM an n LEFT JOIN agg a ON a.vec_id = n.vec_id
+"""
+)
+
+
+@query("semdedup_codebook_novelty", oracle=_CODEBOOK_NOVELTY_ORACLE)
+def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental semantic novelty against a PERSISTED codebook: the
+    seen half (vec_id <= mid) is k-means-clustered once (the exact
+    ``semdedup_cluster_prune`` Lloyd pipeline, k from the label init) and persisted as two
+    tables — the final codebook (k rows) and the per-cell quantized
+    members (bucketed on cell, written in two generations: initial
+    build + a bucketed APPEND of the second quarter, the per-batch
+    admission path between codebook refits); the new batch (vec_id >
+    mid) is then
+    assigned to cells via the broadcast codebook and checked by EXACT
+    intra-cell cosine against persisted members only.  Output: one row
+    per new vector — (cell, count of seen duplicates at cosine >=
+    {eps} bp, max duplicate cosine, is_novel flag) — the semantic twin
+    of ``lsh_band_index_lifecycle``'s lexical probe, completing the
+    batch/incremental symmetry for the semantic dedup ladder.
+
+    Zero seen-side recompute (test-pinned): the probe plan's seen side
+    is parquet scans of the two persisted tables — no Lloyd iteration,
+    no posexplode, no centroid arithmetic.  At 100 TB this converts
+    "re-cluster history every day" into one amortized build plus a
+    per-batch probe, exactly as the band index did for MinHash.
+
+    Determinism: same integer-quantized arithmetic as
+    ``semdedup_cluster_prune``
+    (components at 1e-6, squared distances at 1e-12, cosine rounded
+    once to bp; the only floats are single IEEE ops over identical
+    operands in both engines), so the persisted path is oracle-exact
+    against the unrolled seen-half Lloyd CTE.
+
+    Scale shape: probe cost is |batch| x k for assignment (codebook
+    broadcast — k rows, bounded) plus |batch| x avg-cell-size for the
+    membership check — the IVF-probe cost model (``ann_ivf_topk``),
+    with the members join bucketed on cell so the (large, growing)
+    seen side never exchanges; only the day's batch shuffles.  The
+    members join is data-scaled on the seen side -> pinned sort-merge
+    (``never_broadcast``).  Production bounds cell size by growing k
+    with the corpus; k is fixed here by the shared-oracle contract
+    (same documented trade as ``semdedup_cluster_prune``'s shard cap).
+    """
+    emb = load_table(spark, sf_dir, "embeddings")
+    b = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
+    mid = (b.lo + b.hi) // 2  # oracle: (MIN + MAX) // 2, ids positive
+
+    tag = _scratch_tag(sf_dir)
+    base = _scratch_dir("awsbatch_semdedup_idx", sf_dir)
+    mem_tbl = f"semdedup_members_{tag}"
+    cb_tbl = f"semdedup_codebook_{tag}"
+    drop_tables(spark, "semdedup_members_", "semdedup_codebook_")
+
+    seen = emb.filter(F.col("vec_id") <= F.lit(mid))
+    assigned, _ = kmeans_fit(
+        seen.select("vec_id", "embedding"), label_centroid_init(seen), n_iter=5
     )
+    # the BUILD (amortized, once per corpus generation): final Lloyd
+    # codebook + per-cell quantized members with precomputed norms
+    (
+        _exact_means(assigned, "cell")
+        .write.option("path", os.path.join(base, cb_tbl))
+        .mode("overwrite")
+        .saveAsTable(cb_tbl)
+    )
+    members_frame = assigned.select(
+        F.col("vec_id").alias("seen_id"),
+        F.col("cell").cast("int").alias("cell"),
+        F.col("vq").alias("vq_s"),
+        norm2("vq").alias("nn_s"),
+    )
+    # two generations, as the band index does: initial build (first
+    # quarter of vec_ids) + a bucketed APPEND of the second quarter
+    # ("yesterday's admitted batch") — the per-batch admission path a
+    # production pipeline runs between codebook refits; the bucket
+    # spec must match the table's, so the probe keeps reading the
+    # grown index exchange-free
+    q1 = (b.lo + mid) // 2  # plan-internal build/append boundary
+    (
+        members_frame.filter(F.col("seen_id") <= F.lit(q1))
+        .write.bucketBy(8, "cell")
+        .sortBy("cell")
+        .option("path", os.path.join(base, mem_tbl))
+        .mode("overwrite")
+        .saveAsTable(mem_tbl)
+    )
+    (
+        members_frame.filter(F.col("seen_id") > F.lit(q1))
+        .write.bucketBy(8, "cell")
+        .sortBy("cell")
+        .mode("append")
+        .saveAsTable(mem_tbl)
+    )
+    # the build is on disk; the probe reads only the tables, so the
+    # fit's cached assignment frame would otherwise stay pinned for
+    # the session (one dead copy per builder call under bench's reps)
+    assigned.unpersist()
+
+    # the PROBE (per batch): assign via broadcast codebook, exact
+    # cosine against persisted members of the assigned cell only
+    new = emb.filter(F.col("vec_id") > F.lit(mid)).select(
+        "vec_id", _quantize(F.col("embedding")).alias("vq")
+    )
+    assigned_new = assign_to_cells_collected(new, spark.table(cb_tbl)).select(
+        "vec_id",
+        F.col("cell").cast("int").alias("cell"),
+        "vq",
+        norm2("vq").alias("nn_n"),
+    )
+    pairs = assigned_new.join(never_broadcast(spark.table(mem_tbl)), "cell")
+    return verdicts(pairs, assigned_new.select("vec_id", "cell"))
+
+
+semdedup_codebook_novelty.__doc__ = semdedup_codebook_novelty.__doc__.format(
+    eps=_SEMDEDUP_EPS_BP
+)

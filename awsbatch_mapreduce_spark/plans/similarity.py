@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.index.codebook import _codebook_literal
 from awsbatch_mapreduce_spark.operators.hints import never_broadcast
-from awsbatch_mapreduce_spark.plans.registry import query
+from awsbatch_mapreduce_spark.plans.registry import QUERIES, query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 
@@ -132,7 +132,7 @@ def _sign_band_key(band: int, lo: int, hi: int) -> Column:
 
 
 # Sign-band key CTEs (bits -> keys), shared between the embedding dedup
-# oracle and wave7's band-load histogram so the banding can't drift.
+# oracle and the band-load histogram so the banding can't drift.
 _EMB_KEYS_SQL = """
     bits AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
                     CAST(unnest(embedding) AS DOUBLE) AS v
@@ -431,7 +431,7 @@ _IVF_FILTERED_ORACLE = """
 """
 
 
-@query("ann_ivf_topk_filtered", oracle=_IVF_FILTERED_ORACLE, wave=18)
+@query("ann_ivf_topk_filtered", oracle=_IVF_FILTERED_ORACLE)
 def ann_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search (round 18): IVF top-5 cosine restricted
     to neighbors whose document metadata matches a predicate
@@ -736,7 +736,7 @@ _PQ_ORACLE = f"""
 """
 
 
-@query("ann_pq_adc_topk", oracle=_PQ_ORACLE, wave=4)
+@query("ann_pq_adc_topk", oracle=_PQ_ORACLE)
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance (ADC): encode
     every corpus vector as 8 one-byte codes (argmin per 8-dim subspace
@@ -816,3 +816,355 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rk") <= 5)
     )
+
+
+_HARDNEG_ORACLE = """
+    WITH q AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
+                      unnest(embedding) AS v
+               FROM embeddings WHERE vec_id < 8),
+    d AS (SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
+                 unnest(embedding) AS v
+          FROM embeddings),
+    dots AS (
+      SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
+             MAX(CASE WHEN q.label = d.label THEN 1 ELSE 0 END) AS same,
+             SUM(CAST(q.v AS DOUBLE) * CAST(d.v AS DOUBLE)) AS dot,
+             SUM(CAST(q.v AS DOUBLE) * CAST(q.v AS DOUBLE)) AS qq,
+             SUM(CAST(d.v AS DOUBLE) * CAST(d.v AS DOUBLE)) AS dd
+      FROM q JOIN d ON q.i = d.i AND q.vec_id <> d.vec_id
+      GROUP BY 1, 2),
+    scored AS (
+      SELECT query_id, neighbor_id, same,
+             FLOOR((dot / (SQRT(qq) * SQRT(dd))) * 10000.0 + 0.5)
+               / 10000.0 AS cosine,
+             ROW_NUMBER() OVER (
+               PARTITION BY query_id, same
+               ORDER BY FLOOR((dot / (SQRT(qq) * SQRT(dd))) * 10000.0
+                              + 0.5) / 10000.0 DESC,
+                        neighbor_id) AS rk
+      FROM dots)
+    SELECT query_id,
+           CAST(MAX(CASE WHEN same = 1 AND rk = 1 THEN neighbor_id END)
+                AS BIGINT) AS pos_id,
+           MAX(CASE WHEN same = 1 AND rk = 1 THEN cosine END)
+             AS pos_cosine,
+           CAST(MAX(CASE WHEN same = 0 AND rk = 1 THEN neighbor_id END)
+                AS BIGINT) AS neg_id,
+           MAX(CASE WHEN same = 0 AND rk = 1 THEN cosine END)
+             AS neg_cosine
+    FROM scored GROUP BY query_id
+"""
+
+
+@query("hard_negative_mining", oracle=_HARDNEG_ORACLE)
+def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contrastive-pair mining for embedding training: for each query
+    vector, the closest SAME-label neighbor (positive) and the closest
+    DIFFERENT-label neighbor (hard negative) by cosine — the pair
+    selection step of triplet/InfoNCE dataset construction, where the
+    hard negative (not a random one) is what makes the loss
+    informative.
+
+    Scale shape: identical to ``knn_bruteforce_cosine`` — broadcast
+    query batch, one corpus scan, per-(query, class) window over
+    rounded cosines with id tie-breaks — then a 2-row-per-query pivot.
+    At 100 TB the query batch stays broadcast and the corpus streams;
+    swap the scan for the PQ/IVF candidate set when exactness isn't
+    required.
+    """
+    from awsbatch_mapreduce_spark.functions.rounding import dround
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("qlabel"),
+        F.col("embedding").alias("qv"),
+    )
+    d = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("nlabel"),
+        F.col("embedding").alias("dv"),
+    )
+    cosine = dround(
+        _dot(F.col("qv"), F.col("dv"))
+        / (_l2_norm(F.col("qv")) * _l2_norm(F.col("dv"))),
+        4,
+    )
+    scored = (
+        d.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.when(F.col("qlabel") == F.col("nlabel"), 1)
+            .otherwise(0)
+            .alias("same"),
+            cosine.alias("cosine"),
+        )
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("query_id", "same").orderBy(
+                    F.desc("cosine"), F.asc("neighbor_id")
+                )
+            ),
+        )
+    )
+    top = F.col("rk") == 1
+    pos, neg = F.col("same") == 1, F.col("same") == 0
+    return scored.groupBy("query_id").agg(
+        F.max(F.when(pos & top, F.col("neighbor_id")))
+        .cast("bigint")
+        .alias("pos_id"),
+        F.max(F.when(pos & top, F.col("cosine"))).alias("pos_cosine"),
+        F.max(F.when(neg & top, F.col("neighbor_id")))
+        .cast("bigint")
+        .alias("neg_id"),
+        F.max(F.when(neg & top, F.col("cosine"))).alias("neg_cosine"),
+    )
+
+
+def _recall_oracle(approx_sql: str) -> str:
+    """Recall@5 oracle against brute-force truth for any ANN oracle that
+    yields (query_id, neighbor_id) rows — shared by the IVF and PQ
+    evals so the scoring arithmetic can't drift between them."""
+    return f"""
+    WITH truth AS (SELECT query_id, neighbor_id FROM ({_KNN_ORACLE})),
+    approx AS (SELECT query_id, neighbor_id FROM ({approx_sql}))
+    SELECT t.query_id,
+           COUNT(*) AS n_truth,
+           CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 END), 0)
+                AS BIGINT) AS n_hits,
+           CAST(COALESCE(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 END), 0)
+                * 10000 // COUNT(*) AS BIGINT) AS recall_bp
+    FROM truth t
+    LEFT JOIN approx a
+      ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
+    GROUP BY t.query_id
+"""
+
+
+def _recall_frame(spark: SparkSession, sf_dir: str, approx_name: str) -> DataFrame:
+    """Spark twin of :func:`_recall_oracle`: join the named approximate
+    ladder's top-5 against brute-force truth and score per query."""
+    truth = QUERIES["knn_bruteforce_cosine"].builder(spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    )
+    approx = (
+        QUERIES[approx_name].builder(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .withColumn("hit", F.lit(1))
+    )
+    joined = truth.join(approx, ["query_id", "neighbor_id"], "left")
+    return joined.groupBy("query_id").agg(
+        F.count(F.lit(1)).alias("n_truth"),
+        F.coalesce(F.sum("hit"), F.lit(0)).cast("bigint").alias("n_hits"),
+    ).select(
+        "query_id",
+        "n_truth",
+        "n_hits",
+        F.expr("CAST(n_hits * 10000 div n_truth AS BIGINT)").alias("recall_bp"),
+    )
+
+
+@query("ann_recall_eval", oracle=_recall_oracle(_IVF_ORACLE))
+def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 of the IVF ANN ladder against brute-force ground truth,
+    per query vector — the ANN-side twin of ``minhash_lsh_eval``: the
+    QA harness that says whether the *approximate* scale path is still
+    returning the neighbors the exact path would, so an operator can
+    re-tune nprobe/ncells from measurements instead of faith.  Scoring
+    is the shared :func:`_recall_frame` harness (ADVICE r6: one scoring
+    body for the IVF and PQ evals so the arithmetic can't drift).
+
+    Scale shape: both inputs are the already-pinned ladder plans
+    (broadcast query batch, sort-merge corpus joins); this query adds
+    only a join between two k×|queries| frames — bounded by
+    construction (queries are an explicit ``vec_id < 8`` batch), so
+    whatever strategy the planner picks for it is safe.  At 100 TB the
+    eval costs one brute-force pass over the corpus for the fixed query
+    panel — the thing you run on a sample, on a schedule, not per
+    pipeline run.
+    """
+    return _recall_frame(spark, sf_dir, "ann_ivf_topk")
+
+
+@query("ann_pq_recall_eval", oracle=_recall_oracle(_PQ_ORACLE))
+def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@5 of the PQ-ADC ladder against brute-force ground truth —
+    same harness as :func:`ann_recall_eval`, pointed at the *quantized*
+    scale path.  PQ trades accuracy for a corpus scan over 8-byte codes
+    instead of 256-byte vectors; this is the query that prices that
+    trade in recall terms so codebook size / segment count can be tuned
+    from measurements.  Plan shape is the two pinned ladder plans plus
+    a bounded recall join (k x |queries| rows each side).
+    """
+    return _recall_frame(spark, sf_dir, "ann_pq_adc_topk")
+
+
+_EMB_BAND_HIST_ORACLE = f"""
+    WITH {_EMB_KEYS_SQL},
+    loads AS (SELECT bk, COUNT(*) AS s FROM keys GROUP BY bk)
+    SELECT CAST(s AS BIGINT) AS bucket_size,
+           CAST(COUNT(*) AS BIGINT) AS n_buckets,
+           CAST(COUNT(*) * (s * (s - 1) // 2) AS BIGINT) AS candidate_pairs
+    FROM loads GROUP BY s
+"""
+
+
+@query("emb_band_load_histogram", oracle=_EMB_BAND_HIST_ORACLE)
+def emb_band_load_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sign-LSH band-bucket load histogram for the embedding dedup
+    index — the vector-space twin of :func:`lsh_band_load_histogram`:
+    for each bucket size ``s``, the number of sign-band buckets
+    holding ``s`` vectors and the candidate pairs they imply.  A
+    fattening tail means the 8-bit axis-aligned bands no longer
+    discriminate (e.g. embeddings collapsed toward an orthant) and
+    ``dedup_embedding_cosine``'s candidate join is about to grow —
+    caught here for the price of two aggregates, no joins.
+    """
+    emb = load_table(spark, sf_dir, "embeddings")
+    keys = emb.select(
+        "vec_id",
+        F.explode(
+            F.array(_sign_band_key(0, 0, 8), _sign_band_key(1, 8, 16))
+        ).alias("bk"),
+    )
+    loads = keys.groupBy("bk").agg(F.count(F.lit(1)).alias("s"))
+    return loads.groupBy("s").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_buckets")
+    ).select(
+        F.col("s").cast("bigint").alias("bucket_size"),
+        "n_buckets",
+        F.expr("CAST(n_buckets * (s * (s - 1) div 2) AS BIGINT)").alias(
+            "candidate_pairs"
+        ),
+    )
+
+
+# --- embedding label-outlier screen --------------------------------------
+
+_EMB_OUTLIER_K = 20
+
+
+_EMB_OUTLIER_ORACLE = f"""
+    WITH e AS (
+      SELECT vec_id, label, generate_subscripts(embedding, 1) AS i,
+             CAST(FLOOR(CAST(unnest(embedding) AS DOUBLE) * 10000.0 + 0.5)
+                  AS BIGINT) AS vfp
+      FROM embeddings),
+    c AS (
+      SELECT label, i,
+             CAST((num - (((num % den) + den) % den)) / den AS BIGINT)
+               AS cfp
+      FROM (SELECT label, i,
+                   2 * SUM(vfp) + COUNT(*) AS num,
+                   2 * COUNT(*) AS den
+            FROM e GROUP BY label, i)),
+    d AS (
+      SELECT e.vec_id, e.label,
+             SUM(e.vfp * c.cfp) AS dot,
+             SUM(e.vfp * e.vfp) AS na,
+             SUM(c.cfp * c.cfp) AS nc
+      FROM e JOIN c ON c.label = e.label AND c.i = e.i
+      GROUP BY 1, 2)
+    SELECT CAST(vec_id AS BIGINT) AS vec_id,
+           CAST(label AS INT) AS label,
+           CAST(FLOOR(dot / (sqrt(na) * sqrt(nc)) * 10000.0 + 0.5)
+                AS BIGINT) AS cosine_bp
+    FROM d
+    WHERE na > 0 AND nc > 0
+    ORDER BY cosine_bp ASC, vec_id ASC
+    LIMIT {_EMB_OUTLIER_K}
+"""
+
+
+@query("embedding_label_outliers", oracle=_EMB_OUTLIER_ORACLE)
+def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-noise screen: the {k} vectors LEAST aligned with their own
+    label's centroid (cosine in basis points, ascending) — the cheap
+    mislabeled/contaminated-sample detector run before training on a
+    labeled embedding corpus, and the per-vector drill-down behind
+    ``embedding_centroid_drift``'s label-level health read.
+
+    Determinism recipe: vector components quantize to 4 decimals (the
+    IVF-codebook discipline) and the centroid component is
+    round-half-up(sum/n) computed entirely in int64
+    (floor((2S+n)/(2n)) via pmod — no float accumulation anywhere), so
+    the dot product and both norms are EXACT int64 arithmetic —
+    order-independent under any partitioning; only the final cosine
+    touches floats (sqrt of exact integers), rounded once to bp.  At 64 dims
+    and |v| <= 1, the integer sums stay < 2e9 — no overflow at any
+    corpus size (per-vector sums don't grow with the corpus).
+
+    Scale shape: one posexplode + a (label, dim)-keyed centroid
+    average (map-side partials, |labels| x 64 rows, broadcast-sized by
+    construction), a per-vector integer reduce, then distributed
+    top-k (TakeOrderedAndProject) — no corpus-sized sort, no
+    data-scaled join.
+    """
+    from awsbatch_mapreduce_spark.functions.rounding import dround
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = emb.select(
+        "vec_id",
+        F.col("label").cast("int").alias("label"),
+        F.posexplode("embedding").alias("i", "v"),
+    ).select(
+        "vec_id",
+        "label",
+        "i",
+        F.floor(F.col("v").cast("double") * 10000.0 + F.lit(0.5))
+        .cast("bigint")
+        .alias("vfp"),
+    )
+    # Centroid component = round-half-up(sum/n) in EXACT int64 per the
+    # repo's fixed_point_avg doctrine (ADVICE r7: a float F.avg could
+    # flip a component landing on a .5 quantization boundary between
+    # partitionings/engines).  floor((2S+n)/(2n)) == floor(S/n + 1/2);
+    # pmod makes the division floor (not truncate) for negative sums,
+    # and (num - pmod) is exactly divisible so the final `/` is exact.
+    c = (
+        e.groupBy("label", "i")
+        .agg(
+            (F.lit(2) * F.sum("vfp") + F.count(F.lit(1))).alias("num"),
+            (F.lit(2) * F.count(F.lit(1))).alias("den"),
+        )
+        .select(
+            "label",
+            "i",
+            (
+                (F.col("num") - F.pmod("num", "den")) / F.col("den")
+            )
+            .cast("bigint")
+            .alias("cfp"),
+        )
+    )
+    d = (
+        e.join(F.broadcast(c), ["label", "i"])
+        .groupBy("vec_id", "label")
+        .agg(
+            F.sum(F.col("vfp") * F.col("cfp")).alias("dot"),
+            F.sum(F.col("vfp") * F.col("vfp")).alias("na"),
+            F.sum(F.col("cfp") * F.col("cfp")).alias("nc"),
+        )
+        .filter((F.col("na") > 0) & (F.col("nc") > 0))
+    )
+    return (
+        d.select(
+            F.col("vec_id").cast("bigint").alias("vec_id"),
+            "label",
+            F.floor(
+                F.col("dot") / (F.sqrt("na") * F.sqrt("nc")) * 10000.0
+                + F.lit(0.5)
+            )
+            .cast("bigint")
+            .alias("cosine_bp"),
+        )
+        .orderBy(F.asc("cosine_bp"), F.asc("vec_id"))
+        .limit(_EMB_OUTLIER_K)
+    )
+
+
+embedding_label_outliers.__doc__ = embedding_label_outliers.__doc__.format(
+    k=_EMB_OUTLIER_K
+)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.functions.rounding import dround, fixed_point_sum, fixed_point_sum_sql
+from awsbatch_mapreduce_spark.plans.events import SESSION_GAP_US
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -70,8 +71,6 @@ def events_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GAP_US = 30 * 60 * 1_000_000
-
 _SESSION_NATIVE_ORACLE = f"""
     WITH t AS (
       SELECT user_id, epoch_us(ts) AS ts_us, value,
@@ -79,7 +78,7 @@ _SESSION_NATIVE_ORACLE = f"""
                AS prev_us
       FROM events),
     flagged AS (
-      SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > {_GAP_US}
+      SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > {SESSION_GAP_US}
                      THEN 1 ELSE 0 END AS is_new
       FROM t),
     sessioned AS (
@@ -89,7 +88,7 @@ _SESSION_NATIVE_ORACLE = f"""
       FROM flagged)
     SELECT user_id,
            MIN(ts_us) AS session_start_us,
-           MAX(ts_us) + {_GAP_US} AS session_end_us,
+           MAX(ts_us) + {SESSION_GAP_US} AS session_end_us,
            COUNT(*) AS n_events,
            {fixed_point_sum_sql('value', 2, 2)} AS sum_value
     FROM sessioned

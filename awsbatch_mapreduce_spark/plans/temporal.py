@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.operators.asof import asof_join
+from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
@@ -158,4 +159,81 @@ def scd2_user_value_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(nxt).alias("valid_to_us"),
         F.col("value").alias("tier_value"),
         F.when(nxt.isNull(), F.lit(1)).otherwise(F.lit(0)).alias("is_current"),
+    )
+
+
+# Banded range join: 30-minute buckets; a purchase in bucket b can only
+# match clicks in buckets {b, b-1}, so replicating each purchase twice
+# turns the keyless range join into an equi-join on the bucket id.
+_BAND_US = 30 * 60 * 1_000_000
+
+
+_BANDED_RANGE_ORACLE = """
+    SELECT c.event_id,
+           CAST(COUNT(p.event_id) AS BIGINT) AS n_purchases_30m
+    FROM events c LEFT JOIN events p
+      ON p.event_type = 'purchase'
+     AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
+    WHERE c.event_type = 'click'
+    GROUP BY c.event_id
+"""
+
+
+@query("range_join_banded_global", oracle=_BANDED_RANGE_ORACLE)
+def range_join_banded_global(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Big-big range join with NO equi-key: purchases within 30 minutes
+    after each click, across ALL users.  ``range_join_error_context``
+    rides its natural user_id key; when no such key exists the naive
+    plan is a cartesian range filter — the classic rescue is banding:
+    bucket time at the window width, replicate the probe side into the
+    two buckets it can match (b, b-1), and the range join becomes an
+    equi-join on the bucket id plus an in-partition filter.
+
+    Scale shape: shuffle keys are bucket ints, volume = clicks +
+    2 x purchases (linear, factor 2 is the replication), no broadcast
+    requirement on either side — this is the plan that survives when
+    BOTH sides are fact-scale.  Worst case per bucket is bounded by
+    event rate x window, the quantity you'd size buckets by in
+    production.  Zero-match clicks are restored by a left join against
+    the aggregated matches (keys: event ids).
+    """
+    ev = load_table(spark, sf_dir, "events")
+    us = F.unix_micros(F.col("ts"))
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "event_id",
+        F.col("ts").alias("c_ts"),
+        F.floor(us / _BAND_US).cast("bigint").alias("cb"),
+    )
+    purch = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("ts").alias("p_ts"),
+            F.floor(us / _BAND_US).cast("bigint").alias("pb"),
+        )
+        .select(
+            "p_ts",
+            F.explode(
+                F.array(F.col("pb"), F.col("pb") - F.lit(1))
+            ).alias("cb"),
+        )
+    )
+    # big-big by design: both event streams scale with data, so the
+    # banded equi-join must never be broadcast (operators/hints.py)
+    matched = (
+        clicks.join(never_broadcast(purch), "cb")
+        .filter(
+            (F.col("p_ts") > F.col("c_ts"))
+            & (
+                F.col("p_ts")
+                <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")
+            )
+        )
+        .groupBy("event_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return clicks.select("event_id").join(matched, "event_id", "left").select(
+        "event_id",
+        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias(
+            "n_purchases_30m"
+        ),
     )

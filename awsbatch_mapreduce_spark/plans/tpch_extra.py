@@ -558,3 +558,357 @@ def q4_order_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return late.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("order_count")
     )
+
+
+_SALTED_ORACLE = """
+    SELECT o.o_orderpriority,
+           COUNT(*) AS n_items,
+           FLOOR((SUM(CAST(FLOOR(l.l_extendedprice * (1 - l.l_discount)
+                                 * 10000.0 + 0.5) AS BIGINT)) / 10000.0)
+                 * 100.0 + 0.5) / 100.0 AS revenue
+    FROM lineitem l
+    JOIN (SELECT o_orderkey, o_orderpriority FROM orders
+          WHERE o_orderpriority = '1-URGENT') o
+      ON o.o_orderkey = l.l_orderkey
+    GROUP BY o.o_orderpriority
+"""
+
+
+@query("salted_join_priority_revenue", oracle=_SALTED_ORACLE)
+def salted_join_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skew-salted join under the oracle gate: lineitem joined to the
+    urgent-orders dim through ``operators/skew.salted_join`` (8-way
+    salting), then the usual priority revenue rollup.  The salt is
+    placement-only, so the result is row-identical to the plain join —
+    which is exactly what the oracle asserts (it runs the UNSALTED
+    join).  This promotes the salting operator from unit-tested to
+    driver-proven: the one code path trusted to rescue a pathological
+    hot key at 100 TB now has a correctness row, not just a local test.
+    """
+    from awsbatch_mapreduce_spark.functions.rounding import fixed_point_sum
+    from awsbatch_mapreduce_spark.operators.skew import salted_join
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    urgent = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select(
+            F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+        )
+    )
+    joined = salted_join(li, urgent, on="l_orderkey", n_salts=8)
+    return joined.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_items"),
+        fixed_point_sum(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 4, 2
+        ).alias("revenue"),
+    )
+
+
+_SKEW_ORACLE = """
+    WITH c AS (
+      SELECT l_suppkey, COUNT(*) AS cnt FROM lineitem GROUP BY 1),
+    t AS (SELECT SUM(cnt) AS total FROM c),
+    top AS (
+      SELECT l_suppkey, cnt FROM c ORDER BY cnt DESC, l_suppkey LIMIT 20)
+    SELECT l_suppkey,
+           CAST(cnt AS BIGINT) AS cnt,
+           CAST(cnt * 1000000 // total AS BIGINT) AS share_ppm,
+           CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, l_suppkey)
+                AS BIGINT) AS rk
+    FROM top, t
+"""
+
+
+@query("join_key_skew_profile", oracle=_SKEW_ORACLE)
+def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heavy-hitter profile of a join key (``lineitem.l_suppkey``):
+    the 20 heaviest keys with row count and parts-per-million share of
+    the table — the diagnostic read before choosing between a plain
+    shuffle join, AQE skew splitting, and the explicit salted plan
+    (``salted_join_priority_revenue``).  A key above ~1/partitions of
+    the table is the one that will straggle.
+
+    Scale shape: one map-side-partial count per key (shuffle bounded
+    by the key domain), distributed TakeOrderedAndProject for the
+    top-20, total as a broadcast scalar, rank window over the 20
+    survivors only.  Deterministic key tie-break.
+    """
+    li = load_table(spark, sf_dir, "lineitem")
+    counts = li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt"))
+    total = counts.agg(F.sum("cnt").alias("total"))
+    top = counts.orderBy(F.desc("cnt"), F.asc("l_suppkey")).limit(20)
+    wr = Window.partitionBy(F.lit(0)).orderBy(
+        F.desc("cnt"), F.asc("l_suppkey")
+    )
+    return (
+        top.crossJoin(F.broadcast(total))
+        .select(
+            "l_suppkey",
+            F.col("cnt").cast("bigint").alias("cnt"),
+            F.expr("CAST(cnt * 1000000 div total AS BIGINT)").alias(
+                "share_ppm"
+            ),
+        )
+        .withColumn("rk", F.row_number().over(wr).cast("bigint"))
+    )
+
+
+_INC_CUTOFF = "1997-06-01"
+
+
+_INC_MERGE_ORACLE = f"""
+    SELECT o_orderpriority,
+           FLOOR((SUM(CAST(FLOOR(o_totalprice * 100.0 + 0.5) AS BIGINT))
+                  / 100.0) * 100.0 + 0.5) / 100.0 AS revenue,
+           COUNT(*) AS n_orders
+    FROM orders
+    GROUP BY o_orderpriority
+"""
+
+
+@query("incremental_agg_merge", oracle=_INC_MERGE_ORACLE)
+def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental aggregate maintenance: revenue per order priority
+    computed as partial-state aggregates over a base segment
+    (o_orderdate < 1997-06-01) and a delta segment (>=), merged by
+    state addition — the materialized-view maintenance pattern where
+    yesterday's state is stored and only the new partition is scanned.
+    The oracle computes the direct single-pass aggregate, so the
+    driver hash proves merge(partial(base), partial(delta)) == full
+    recompute.
+
+    Scale shape: each partial is a map-side-combined aggregate over a
+    bounded key domain (5 priorities); the merge re-aggregates 2x5
+    rows.  Exactness comes from integer-cent partial sums — float
+    partials would make the merge order-dependent and the proof
+    meaningless.  At 100 TB the base partial is a stored table and
+    only the delta scan runs per refresh.
+    """
+    from awsbatch_mapreduce_spark.functions.rounding import dround
+
+    orders = load_table(spark, sf_dir, "orders")
+    cents = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast("bigint")
+
+    def partial(df: DataFrame) -> DataFrame:
+        return df.groupBy("o_orderpriority").agg(
+            F.sum(cents).alias("cents_part"),
+            F.count(F.lit(1)).alias("n_part"),
+        )
+
+    cut = F.lit(_INC_CUTOFF).cast("timestamp")
+    base = partial(orders.filter(F.col("o_orderdate") < cut))
+    delta = partial(orders.filter(F.col("o_orderdate") >= cut))
+    merged = (
+        base.unionByName(delta)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.sum("cents_part").alias("cents_total"),
+            F.sum("n_part").alias("n_orders"),
+        )
+    )
+    return merged.select(
+        "o_orderpriority",
+        dround(F.col("cents_total") / 100.0, 2).alias("revenue"),
+        F.col("n_orders").cast("bigint").alias("n_orders"),
+    )
+
+
+_NATION_SHARE_ORACLE = """
+    WITH rev AS (
+      SELECT n.n_regionkey, n.n_name,
+             SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
+               AS revenue_c
+      FROM orders o
+      JOIN customer c ON c.c_custkey = o.o_custkey
+      JOIN nation n ON n.n_nationkey = c.c_nationkey
+      GROUP BY 1, 2)
+    SELECT r.r_name, rev.n_name,
+           CAST(rev.revenue_c AS BIGINT) AS revenue_c,
+           CAST(rev.revenue_c * 1000000
+                // SUM(rev.revenue_c) OVER (PARTITION BY rev.n_regionkey)
+                AS BIGINT) AS share_ppm
+    FROM rev JOIN region r ON r.r_regionkey = rev.n_regionkey
+"""
+
+
+@query("nation_revenue_share", oracle=_NATION_SHARE_ORACLE)
+def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ratio-to-report analytic: each nation's share of its region's
+    order revenue, in exact integer ppm over fixed-point cents (float
+    sums are order-dependent; cent-int sums are associative, so the
+    cross-engine hash is exact).
+
+    Scale shape: one shuffle to the 25-key nation rollup, dims
+    broadcast, then the share window partitions by region — a 5-25 row
+    domain, so the window state is trivially bounded.
+    """
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
+    rev = (
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("n_regionkey", "n_name")
+        .agg(
+            F.sum(
+                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
+                    "bigint"
+                )
+            ).alias("revenue_c")
+        )
+    )
+    return rev.join(F.broadcast(r), rev.n_regionkey == r.r_regionkey).select(
+        "r_name",
+        "n_name",
+        F.col("revenue_c").cast("bigint").alias("revenue_c"),
+        F.expr(
+            "CAST(revenue_c * 1000000 div"
+            " sum(revenue_c) OVER (PARTITION BY n_regionkey) AS BIGINT)"
+        ).alias("share_ppm"),
+    )
+
+
+_RFM_ORACLE = """
+    WITH cust AS (
+      SELECT o_custkey,
+             MAX(epoch_us(o_orderdate) // 86400000000) AS rec_d,
+             COUNT(*) AS freq,
+             SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS mon_c
+      FROM orders GROUP BY o_custkey),
+    q AS (
+      SELECT quantile_cont(rec_d, 0.25) AS r1, quantile_cont(rec_d, 0.5) AS r2,
+             quantile_cont(rec_d, 0.75) AS r3,
+             quantile_cont(freq, 0.25) AS f1, quantile_cont(freq, 0.5) AS f2,
+             quantile_cont(freq, 0.75) AS f3,
+             quantile_cont(mon_c, 0.25) AS m1, quantile_cont(mon_c, 0.5) AS m2,
+             quantile_cont(mon_c, 0.75) AS m3
+      FROM cust)
+    SELECT CAST(1 + (rec_d > r1)::INT + (rec_d > r2)::INT + (rec_d > r3)::INT
+                AS BIGINT) AS r_score,
+           CAST(1 + (freq > f1)::INT + (freq > f2)::INT + (freq > f3)::INT
+                AS BIGINT) AS f_score,
+           CAST(1 + (mon_c > m1)::INT + (mon_c > m2)::INT + (mon_c > m3)::INT
+                AS BIGINT) AS m_score,
+           CAST(COUNT(*) AS BIGINT) AS n_customers,
+           CAST(SUM(mon_c) AS BIGINT) AS revenue_c
+    FROM cust, q
+    GROUP BY 1, 2, 3
+"""
+
+
+@query("customer_rfm_segments", oracle=_RFM_ORACLE)
+def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFM segmentation: score every customer 1-4 on Recency (last
+    order day), Frequency (order count), and Monetary (lifetime cents)
+    against the exact quartiles of the customer population, then roll
+    up segment sizes and revenue — the classic marketing cube, done
+    the scale-safe way: quartile CUT-POINTS via one aggregate
+    (broadcast 9 scalars) and scores via comparisons, never a global
+    NTILE sort (the ``customer_value_deciles`` lesson, r2).
+
+    Cross-engine exactness: all three metrics are integers (epoch
+    days, counts, cents); interpolated quartiles of integers are
+    dyadic rationals computed identically by Spark ``percentile`` and
+    DuckDB ``quantile_cont``, and scores depend only on strict
+    comparisons against them.
+    """
+    o = load_table(spark, sf_dir, "orders")
+    cust = o.groupBy("o_custkey").agg(
+        F.max(
+            F.expr(
+                "unix_micros(cast(o_orderdate as timestamp))"
+                " div 86400000000"
+            )
+        ).alias("rec_d"),
+        F.count(F.lit(1)).alias("freq"),
+        F.sum(
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+        ).alias("mon_c"),
+    )
+    q = cust.agg(
+        *[
+            F.expr(f"percentile({m}, {p})").alias(f"{m}_q{i}")
+            for m in ("rec_d", "freq", "mon_c")
+            for i, p in ((1, 0.25), (2, 0.5), (3, 0.75))
+        ]
+    )
+    score = (
+        lambda m: F.lit(1)
+        + (F.col(m) > F.col(f"{m}_q1")).cast("int")
+        + (F.col(m) > F.col(f"{m}_q2")).cast("int")
+        + (F.col(m) > F.col(f"{m}_q3")).cast("int")
+    )
+    return (
+        cust.crossJoin(F.broadcast(q))
+        .select(
+            score("rec_d").cast("bigint").alias("r_score"),
+            score("freq").cast("bigint").alias("f_score"),
+            score("mon_c").cast("bigint").alias("m_score"),
+            "mon_c",
+        )
+        .groupBy("r_score", "f_score", "m_score")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
+            F.sum("mon_c").cast("bigint").alias("revenue_c"),
+        )
+    )
+
+
+_SHIP_DELAY_ORACLE = """
+    WITH d AS (
+      SELECT o.o_orderpriority,
+             (epoch_us(l.l_shipdate) - epoch_us(o.o_orderdate))
+               // 86400000000 AS delay_d
+      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey)
+    SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(MIN(delay_d) AS BIGINT) AS min_d,
+           CAST(MAX(delay_d) AS BIGINT) AS max_d,
+           CAST(quantile_cont(delay_d * 2, 0.5) AS BIGINT) AS med_d2,
+           CAST(SUM(delay_d) AS BIGINT) AS sum_d
+    FROM d GROUP BY o_orderpriority
+"""
+
+
+@query("shipping_delay_profile", oracle=_SHIP_DELAY_ORACLE)
+def shipping_delay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-to-ship delay profile per priority class: count, min/max,
+    exact median (doubled to stay integral under interpolation), and
+    total delay days — the SLA read behind ``q12``'s speed buckets,
+    computed from exact integer day arithmetic on epoch-µs (calendar
+    datediff counts boundary crossings and is engine-dependent;
+    integer floor-division is not).
+
+    Scale shape: fact-fact equi-join on the order key (the bucketed
+    layout from ``bucketed_join_no_shuffle`` makes it exchange-free
+    when materialized), then a 5-key rollup with an exact grouped
+    median — swap ``percentile_approx`` at the point the per-key row
+    count outgrows a partition.
+    """
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_shipdate"
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
+    )
+    d = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "o_orderpriority",
+        F.expr(
+            "(unix_micros(cast(l_shipdate as timestamp))"
+            " - unix_micros(cast(o_orderdate as timestamp)))"
+            " div 86400000000"
+        ).alias("delay_d"),
+    )
+    return d.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.min("delay_d").cast("bigint").alias("min_d"),
+        F.max("delay_d").cast("bigint").alias("max_d"),
+        F.expr("CAST(percentile(delay_d * 2, 0.5) AS BIGINT)").alias(
+            "med_d2"
+        ),
+        F.sum("delay_d").cast("bigint").alias("sum_d"),
+    )

@@ -21,15 +21,13 @@ def driver_memory(ram_bytes: int) -> str:
 
 
 # Defaults tuned for the local[32] test harness; on a real cluster these
-# are overridden by spark-submit conf.  AQE handles runtime re-planning
-# (coalescing small shuffle partitions, skew-join splitting) so the same
-# logical plans survive a 100x scale-up without re-tuning.
+# are overridden by spark-submit conf.  Only values that differ from
+# Spark's own defaults are set.  AQE (on by default, with partition
+# coalescing and skew-join splitting) handles runtime re-planning so the
+# same logical plans survive a 100x scale-up without re-tuning, and the
+# vectorized Parquet reader and filter pushdown are on by default too;
+# tests/test_session.py pins all five on the shared test session.
 _DEFAULT_CONF: dict[str, str] = {
-    # Adaptive execution: coalesce post-shuffle partitions, split skewed
-    # join partitions, convert to broadcast at runtime when a side is small.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for pandas_udf / toPandas — the reference's vectorized-numpy
     # stance (src/awsbatch-map/main.py:67-72) maps to Arrow batches.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -46,10 +44,6 @@ _DEFAULT_CONF: dict[str, str] = {
     # this threshold can therefore never re-create the sf1-rehearsal
     # driver OOM; it only widens eligibility for bounded dims.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Parquet: vectorized reader + pushdown are on by default; keep
-    # explicit so a conf audit shows intent.
-    "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.parquet.enableVectorizedReader": "true",
     # Shuffle writer (round-18 optimization, guide §2.2 "fewer, larger
     # blocks"): below this threshold Spark's bypass-merge writer opens
     # ONE FILE PER REDUCE PARTITION per map task (R x M tiny files +

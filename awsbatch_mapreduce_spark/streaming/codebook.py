@@ -62,7 +62,7 @@ operators the driver already proves:
   two appends with one MERGE; the protocol here is what plain-parquet
   tables can guarantee, stated exactly.
 
-Scale shape per micro-batch: probe cost is the measured wave-11 probe
+Scale shape per micro-batch: probe cost is the measured codebook probe
 (coarse k0-row broadcast, growing sides sort-merge off their bucket
 specs, REHEARSAL_r13.jsonl: slope 0.99/decade at 100x); admission cost
 is O(|batch|) (measured at ~zero against the shared probe at both
@@ -127,7 +127,7 @@ def foreach_batch_codebook_probe_current(
     sf_dir: str, pointer_path: str, out_dir: str, adc: bool = False
 ) -> Callable[[DataFrame, int], None]:
     """Probe-only streaming novelty against WHATEVER index generation
-    the pointer names — the zero-downtime reader side of the wave-13
+    the pointer names — the zero-downtime reader side of the
     refit/cutover loop.  The pointer is re-resolved at each micro-batch
     boundary, so a `cutover_generation` landing mid-stream takes effect
     on the NEXT batch with no stream restart, and each individual batch
@@ -139,7 +139,8 @@ def foreach_batch_codebook_probe_current(
     so after a cutover its rewritten partition reflects the CURRENT
     generation — the at-least-once contract is "probed against the
     admitted corpus", which both generations of one refit satisfy (the
-    refit is probe-equivalent by the wave-13 oracle proof).
+    refit is probe-equivalent by the ``semdedup_codebook_refit`` oracle
+    proof).
 
     ``adc=True`` (round 16) serves each micro-batch through the
     generation's IVFPQ path instead (``probe_current_generation(adc=

@@ -186,7 +186,7 @@ def admit_probe_with_cadence(
     when the incarnation's recall snapshot lands below the floor AND
     the nprobe actuator cannot step further (already at
     ``recall_max_nprobe``), the cheap knob is exhausted — the next
-    lever is a refit at a LARGER cap (the wave-14 sweep's other axis).
+    lever is a refit at a LARGER cap (the recall sweep's other axis).
     The closure then writes the ``_REFIT_DUE`` marker with reason
     ``recall`` and quiesces at the batch boundary exactly like the
     growth trigger; the supervisor reads the reason and refits at the
@@ -501,7 +501,7 @@ def run_supervised_admission(
     steps its own knob when a generation lands below target.  When the
     nprobe knob is EXHAUSTED (already at max) and the snapshot is still
     below the floor, the supervisor escalates the OTHER axis the
-    wave-14 sweep priced: a quality-triggered refit at ``cap *
+    recall sweep priced: a quality-triggered refit at ``cap *
     recall_cap_step`` (bounded by ``recall_cap_max``), recorded in the
     refit entry as ``reason: recall`` with the old/new caps; the new
     cap rides the generation pointer so subsequent admissions

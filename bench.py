@@ -363,7 +363,7 @@ def main() -> None:
                 if rep >= _NO_WARMUP_REPS.get(name, _REPS):
                     continue
                 if name == "dedup_prefix_filter":
-                    from awsbatch_mapreduce_spark.plans.wave5 import (
+                    from awsbatch_mapreduce_spark.plans.dedup import (
                         dedup_prefix_filter_observed,
                     )
 

@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from awsbatch_mapreduce_spark.plans.wave5 import dedup_prefix_filter_observed
+from awsbatch_mapreduce_spark.plans.dedup import dedup_prefix_filter_observed
 from awsbatch_mapreduce_spark.session import get_spark
 
 N_SHOTS = int(os.environ.get("ADJUDICATE_SHOTS", "3"))

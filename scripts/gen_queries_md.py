@@ -1,5 +1,5 @@
 """Generate QUERIES.md — the one-page index of every registered query
-(VERDICT r4 #8): name -> defining module:line -> wave -> oracle'd.
+(VERDICT r4 #8): name -> defining module:line -> oracle'd.
 
 Run ``python scripts/gen_queries_md.py`` to rewrite QUERIES.md;
 ``tests/test_queries_md.py`` pins the file against drift by
@@ -39,8 +39,8 @@ def render() -> str:
         " grading order for the next round's ~50-query window is"
         " documented in `plans/registry.py:grading_order`.",
         "",
-        "| query | defined at | wave | oracle | proven |",
-        "|---|---|---:|---|---|",
+        "| query | defined at | oracle | proven |",
+        "|---|---|---|---|",
     ]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     order = grading_order(QUERIES)
@@ -50,7 +50,7 @@ def render() -> str:
         src = os.path.relpath(inspect.getsourcefile(fn), root)
         line = inspect.getsourcelines(fn)[1]
         lines.append(
-            f"| {name} | `{src}:{line}` | {spec.wave} |"
+            f"| {name} | `{src}:{line}` |"
             f" {'sql' if spec.oracle else 'rows-only'} |"
             f" {'yes' if name in proven else f'pending (#{order.index(name) + 1})'} |"
         )

@@ -593,7 +593,7 @@ def _valve_scale_point(spark, cap: int) -> None:
     the base and tiled scales, and at sf0.1 assert the capped pairs are
     a subset of the exact operator's output (the accuracy side of the
     valve's cost/accuracy trade, checked where exact is affordable)."""
-    from awsbatch_mapreduce_spark.plans.wave5 import _prefix_filter_plan
+    from awsbatch_mapreduce_spark.plans.dedup import _prefix_filter_plan
 
     for label, sf_dir in (("sf0.1", SF01), (f"sf{REPLICAS / 10:g}", TILED)):
         t0 = time.perf_counter()

@@ -135,7 +135,7 @@ def test_zorder_query_prunes_files(spark):
     strict subset of the files' min/max ranges — i.e. the scan
     actually skips files, which is the point of z-ordering."""
     from awsbatch_mapreduce_spark.plans import QUERIES
-    from awsbatch_mapreduce_spark.plans.wave5 import zorder_scratch_dir
+    from awsbatch_mapreduce_spark.plans.catalog_ops import zorder_scratch_dir
 
     df = QUERIES["zorder_pruned_scan"].builder(spark, SF_DIR)
     assert df.count() == 1  # materialize (also writes the z-ordered copy)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import ast
 import importlib
 import os
+import re
 
 import pytest
 
@@ -83,3 +84,15 @@ def test_package_imports_resolve(path):
         if not _resolves(module, name)
     ]
     assert not missing, "\n".join(missing)
+
+
+def test_no_module_is_named_after_a_round():
+    """Package modules are named for their domain, never for the round
+    that added them (``wave3``, ``wave10``, ...)."""
+    rounds = [
+        os.path.relpath(os.path.join(dirpath, name), ROOT)
+        for dirpath, dirs, files in os.walk(os.path.join(ROOT, PACKAGE))
+        for name in dirs + [f for f in files if f.endswith(".py")]
+        if re.search(r"wave\d+", name)
+    ]
+    assert not rounds, rounds

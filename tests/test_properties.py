@@ -189,7 +189,7 @@ def test_ewma_constant_stream_identity(spark, cents, n_events):
     import tempfile
 
     from awsbatch_mapreduce_spark.plans import QUERIES
-    from awsbatch_mapreduce_spark.plans.wave5 import _EWMA_LAGS
+    from awsbatch_mapreduce_spark.plans.events import _EWMA_LAGS
 
     t0 = datetime.datetime(2024, 1, 1)
     with tempfile.TemporaryDirectory() as d:

@@ -7,7 +7,7 @@ round's own grades, and the old mtime-capped drift pin deliberately
 excused that.  The fix splits the pin in two:
 
 1. STRUCTURE (strict, fails loud): the table minus its proven column —
-   query set, source locations, waves, oracle kinds — must match the
+   query set, source locations, oracle kinds — must match the
    live registry exactly.  Adding/moving a query without regenerating
    still fails fast.
 2. PROVEN STATUS (self-healing): the proven column is a pure function
@@ -35,7 +35,7 @@ def _strip_proven(text: str) -> str:
     """Table rows minus their final (proven) cell; non-table lines as-is."""
     out = []
     for line in text.splitlines():
-        if line.startswith("| ") and line.count("|") >= 6:
+        if line.startswith("| ") and line.count("|") >= 5:
             out.append(line.rsplit("|", 2)[0])
         else:
             out.append(line)

@@ -600,8 +600,8 @@ def test_lsh_eval_truth_join_is_df_capped(spark):
     the query checkpoints the capped universe at build time (the
     LeftAnti executes eagerly and the query plan reads an ExistingRDD),
     so the pin inspects the named pre-checkpoint frame every consumer
-    shares (``wave4._capped_shingles``)."""
-    from awsbatch_mapreduce_spark.plans.wave4 import _capped_shingles
+    shares (``dedup._capped_shingles``)."""
+    from awsbatch_mapreduce_spark.plans.dedup import _capped_shingles
 
     plan = (
         _capped_shingles(spark, SF_DIR)
