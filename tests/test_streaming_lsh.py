@@ -119,7 +119,7 @@ def test_stream_gate_imports_no_query_module():
     query_modules = [
         m
         for m in imported
-        if re.match(r"awsbatch_mapreduce_spark\.plans\.(dedup|llm_text)\b", m)
+        if re.match(r"awsbatch_mapreduce_spark\.plans\b", m)
     ]
     assert not query_modules, query_modules
 
