@@ -34,12 +34,3 @@ def bpe_ish_piece_count(col: Column | str, piece_len: int = 4) -> Column:
         + F.ceil(F.length(w) / F.lit(float(piece_len))).cast("bigint"),
     )
 
-
-def bpe_ish_piece_count_sql(expr: str, piece_len: int = 4) -> str:
-    """DuckDB twin of :func:`bpe_ish_piece_count`."""
-    # list_sum over a BIGINT list yields HUGEINT in DuckDB (float64 via
-    # pandas); the outer CAST keeps the oracle dtype int64 like Spark's.
-    return (
-        f"CAST(list_sum(list_transform(string_split({expr}, ' '), "
-        f"w -> CAST(CEIL(len(w) / {float(piece_len)!r}) AS BIGINT))) AS BIGINT)"
-    )

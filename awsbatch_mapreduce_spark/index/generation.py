@@ -564,7 +564,6 @@ def refit_and_cutover(
     sf_dir: str,
     pointer_path: str,
     new_kind: str,
-    with_pq: bool | None = None,
     cap: int | None = None,
     nprobe: int | None = None,
 ) -> str:
@@ -597,12 +596,12 @@ def refit_and_cutover(
     it on the retry.  Returns the previous generation's kind tag (the
     argument to a subsequent ``vacuum_generation``).
 
-    ``with_pq`` (round 16, VERDICT r15 #1): True rebuilds the codes +
-    PQ-codebook tables beside the new generation's coarse/fine/members
-    BEFORE the cutover, so an ADC reader resolving the pointer never
-    sees a generation without its codes; None (the default) INHERITS
-    the current generation's ``pq`` flag — the supervisor's automatic
-    refits keep whatever capability surface the generation had.
+    The new generation inherits the current one's ``pq`` flag (round
+    16, VERDICT r15 #1): a PQ generation's codes + PQ-codebook tables
+    are rebuilt beside the new coarse/fine/members BEFORE the cutover,
+    so an ADC reader resolving the pointer never sees a generation
+    without its codes, and the supervisor's automatic refits keep
+    whatever capability surface the generation had.
 
     ``cap``: the new generation's fine-cell capacity — None inherits
     the current generation's (``PointerRecord.fitted_cap``); the
@@ -614,7 +613,7 @@ def refit_and_cutover(
     ``nprobe`` (round 17): the new generation's SERVING probe width —
     None inherits the current pointer's ``nprobe=N`` token (a routine
     refit must never silently reset production recall); the
-    supervisor's quality-escalated refit passes its configured BASE,
+    supervisor's quality-escalated refit passes 1 (single-probe),
     because the cap escalation structurally fixes what the nprobe
     steps were papering over (body comment)."""
     # one pointer snapshot: kind/n_fit/flags must be mutually consistent
@@ -631,16 +630,14 @@ def refit_and_cutover(
     # refit changes index structure, not the actuator-owned serving
     # knob — a generation swap must never silently reset production
     # recall.  An EXPLICIT ``nprobe`` overrides: the supervisor's
-    # quality-escalated refit passes the configured base, because the
-    # cap escalation is the STRUCTURAL fix for the recall the nprobe
-    # steps were papering over — serving the escalated generation at
-    # the stopgap width would pay max-nprobe x probe cost forever on
-    # an index that no longer needs it (the next snapshot re-converges
-    # the knob from base if the new geometry still falls short).
+    # quality-escalated refit passes 1, because the cap escalation is
+    # the STRUCTURAL fix for the recall the nprobe steps were papering
+    # over — serving the escalated generation at the stopgap width
+    # would pay max-nprobe x probe cost forever on an index that no
+    # longer needs it (the next snapshot re-converges the knob from 1
+    # if the new geometry still falls short).
     old_nprobe = cur.nprobe or None
     new_nprobe = nprobe if nprobe is not None else old_nprobe
-    if with_pq is None:
-        with_pq = cur.pq
     if cap is None:
         cap = cur_cap
     src = generation_layout(sf_dir, current)
@@ -668,7 +665,7 @@ def refit_and_cutover(
     # the NEW generation's members before any pointer motion.
     new = build_generation(
         spark, sf_dir, new_kind, members_corpus(spark, src), cap=cap,
-        with_pq=with_pq,
+        with_pq=cur.pq,
     )
     # the NEW generation's fit-time size is the SURVIVOR count (what
     # it actually fitted) — the refit_due denominator must price the
@@ -706,7 +703,7 @@ def refit_and_cutover(
     # it in the pointer's atomic write (the refit_due denominator)
     cutover_generation(
         spark, sf_dir, pointer_path, new_kind, n_fit=n_fit_new,
-        with_pq=with_pq, cap=cap, nprobe=new_nprobe,
+        with_pq=cur.pq, cap=cap, nprobe=new_nprobe,
     )
     n_after, n_t_after = _recount()
     if n_after != n_snapshot or n_t_after != n_tombs_snapshot:
@@ -1024,9 +1021,10 @@ def tombstone_members(
 def live_view(
     spark,
     tbl: str,
-    tombs_tbl: str | None,
+    tombs_tbl: str,
     suffix: str = "live",
-    pointer_path: str | None = None,
+    *,
+    pointer_path: str,
 ) -> str:
     """Register (and return the name of) a temp view of ``tbl`` (a
     generation's members or codes) minus tombstoned ``seen_id`` rows;
@@ -1046,28 +1044,20 @@ def live_view(
     swap leaves the table root MISSING for an instant, and Spark reads
     a missing root as an EMPTY scan — a probe built in that window
     would silently serve WITHOUT the deletions (the r15 trap class).
-    When ``pointer_path`` is given, the tombstone read happens under
-    the pointer write lock (serialized against the verb), completes a
+    So the tombstone read happens under the write lock of the pointer
+    at ``pointer_path`` (serialized against the verb), completes a
     crash-pending swap first, and is PINNED eagerly
-    (``localCheckpoint`` of the bounded set) — so the view's deletion
-    set is a consistent snapshot immune to swaps that land after plan
-    build.  Without a pointer the behavior degrades to the plain read
-    (single-writer callers that own their lifecycle)."""
-    if tombs_tbl is None or not spark.catalog.tableExists(tombs_tbl):
+    (``localCheckpoint`` of the bounded set) — the view's deletion set
+    is a consistent snapshot immune to swaps that land after plan
+    build."""
+    if not spark.catalog.tableExists(tombs_tbl):
         return tbl
-
-    def _tomb_frame():
+    with _pointer_write_lock(pointer_path):
+        _complete_pending_swap(spark, tombs_tbl)
         spark.catalog.refreshTable(tombs_tbl)
         # eager pin of the bounded deletion set: the anti-join side is
         # block-storage-backed from here, immune to later swaps
-        return spark.table(tombs_tbl).localCheckpoint()
-
-    if pointer_path is not None:
-        with _pointer_write_lock(pointer_path):
-            _complete_pending_swap(spark, tombs_tbl)
-            tombs = _tomb_frame()
-    else:
-        tombs = _tomb_frame()
+        tombs = spark.table(tombs_tbl).localCheckpoint()
     live = spark.table(tbl).join(
         F.broadcast(tombs), "seen_id", "left_anti"
     )

@@ -31,7 +31,6 @@ def asof_join(
     right: DataFrame,
     on: str,
     ts: str,
-    direction: str = "backward",
 ) -> DataFrame:
     """Backward as-of join of ``left`` to ``right`` on key ``on``, event
     time ``ts``.
@@ -41,8 +40,6 @@ def asof_join(
     payload columns come back null where no right row precedes the left
     row.  Output = all left columns + right payload columns.
     """
-    if direction != "backward":
-        raise NotImplementedError("only backward as-of is implemented")
     left_cols = [c for c in left.columns]
     right_payload = [c for c in right.columns if c not in (on, ts)]
 

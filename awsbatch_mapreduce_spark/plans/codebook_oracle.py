@@ -38,8 +38,8 @@ from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 
 # Every rank-2 program (multiprobe, recall eval, pointer serving).
 _NPROBE = 2
-# The fixture cap times the supervisor's default recall_cap_step: the
-# cap a quality-escalated refit fits at.
+# The fixture cap times the supervisor's cap step (_RECALL_CAP_STEP):
+# the cap a quality-escalated refit fits at.
 _ESCALATED_CAP = _CAP * 4
 # Every _TOMB_MOD-th member id is tombstoned: ~20% of the seen half,
 # dense enough to flip verdicts while every fine cell keeps survivors.

@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.functions.rounding import (
-    dround,
     fixed_point_avg,
     fixed_point_avg_sql,
 )

@@ -9,20 +9,21 @@ Streaming's ``foreachBatch`` hands each micro-batch to the exact batch
 operators the driver already proves:
 
 - ``foreach_batch_codebook_probe`` — PROBE-ONLY: each micro-batch is
-  quantized and pushed through ``index.probe.probe`` against a
-  static persisted index (coarse broadcast assign, fine sort-merge
-  assign, <= cap membership cosines).  Because the probe is per-row
-  independent given a static index, the union of per-batch outputs is
-  row-identical to the one-shot batch probe — the stream==batch pin.
-  Results land partitioned by ``batch_id`` with dynamic partition
-  overwrite, so an at-least-once replay of a batch rewrites its own
-  partition instead of duplicating rows (idempotent sink, the
-  ``foreach_batch_upsert`` discipline).
+  quantized and pushed through ``index.probe.probe_current_generation``
+  against the generation the pointer names at that batch (coarse
+  broadcast assign, fine sort-merge assign, <= cap membership cosines).
+  Because the probe is per-row independent given a fixed generation,
+  the union of per-batch outputs is row-identical to the one-shot
+  batch probe — the stream==batch pin.  Results land partitioned by
+  ``batch_id`` with dynamic partition overwrite, so an at-least-once
+  replay of a batch rewrites its own partition instead of duplicating
+  rows (idempotent sink, the ``foreach_batch_upsert`` discipline).
 
-- ``foreach_batch_codebook_admit_probe`` — PROBE-THEN-ADMIT: the
-  micro-batch is first probed against the index AS OF all previously
-  admitted batches (a vector never matches its own batch — batch
-  self-dedup is a different operator), then admitted through
+- ``foreach_batch_codebook_admit_probe`` — PROBE-THEN-ADMIT into the
+  generation a pointer record names: the micro-batch is first probed
+  against the index AS OF all previously admitted batches (a vector
+  never matches its own batch — batch self-dedup is a different
+  operator), then admitted through
   ``index.generation.admit_batch`` (rank-chunked into NEW <= cap
   sub-cells, fine book + members bucket-APPENDED — the cap bound
   survives every admission by construction).  Admission mutates the
@@ -81,10 +82,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
+from awsbatch_mapreduce_spark.index.codebook import _quantize
 from awsbatch_mapreduce_spark.index.generation import (
-    GenerationLayout,
+    PointerRecord,
     admit_batch,
+    generation_layout,
     live_view,
     read_pointer,
     repair_admission,
@@ -105,42 +107,23 @@ def _write_probe_partition(res: DataFrame, out_dir: str, batch_id: int) -> None:
 
 
 def foreach_batch_codebook_probe(
-    coarse_tbl: str, fine_tbl: str, mem_tbl: str, out_dir: str
-) -> Callable[[DataFrame, int], None]:
-    """Probe-only streaming novelty: each (vec_id, embedding)
-    micro-batch is checked against a STATIC persisted two-level index;
-    per-batch results land under ``out_dir/batch_id=N``."""
-
-    def probe_static(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        new = batch_df.select(
-            "vec_id", _quantize(F.col("embedding")).alias("vq")
-        )
-        res = probe(batch_df.sparkSession, new, coarse_tbl, fine_tbl, mem_tbl)
-        _write_probe_partition(res, out_dir, batch_id)
-
-    return probe_static
-
-
-def foreach_batch_codebook_probe_current(
     sf_dir: str, pointer_path: str, out_dir: str, adc: bool = False
 ) -> Callable[[DataFrame, int], None]:
     """Probe-only streaming novelty against WHATEVER index generation
     the pointer names — the zero-downtime reader side of the
-    refit/cutover loop.  The pointer is re-resolved at each micro-batch
-    boundary, so a `cutover_generation` landing mid-stream takes effect
-    on the NEXT batch with no stream restart, and each individual batch
-    probes exactly one generation (`probe_current_generation` resolves
-    once at plan-build time; the superseded generation stays immutable
-    until vacuumed, so a batch in flight during the cutover still reads
-    a complete index).  Same idempotent batch-id-partitioned sink as
-    the static-index probe; a replayed batch re-resolves the pointer,
-    so after a cutover its rewritten partition reflects the CURRENT
-    generation — the at-least-once contract is "probed against the
-    admitted corpus", which both generations of one refit satisfy (the
-    refit is probe-equivalent by the ``semdedup_codebook_refit`` oracle
-    proof).
+    refit/cutover loop; per-batch results land under
+    ``out_dir/batch_id=N``.  The pointer is re-resolved at each
+    micro-batch boundary, so a `cutover_generation` landing mid-stream
+    takes effect on the NEXT batch with no stream restart, and each
+    individual batch probes exactly one generation
+    (`probe_current_generation` resolves once at plan-build time; the
+    superseded generation stays immutable until vacuumed, so a batch in
+    flight during the cutover still reads a complete index).  A
+    replayed batch re-resolves the pointer, so after a cutover its
+    rewritten partition reflects the CURRENT generation — the
+    at-least-once contract is "probed against the admitted corpus",
+    which both generations of one refit satisfy (the refit is
+    probe-equivalent by the ``semdedup_codebook_refit`` oracle proof).
 
     ``adc=True`` (round 16) serves each micro-batch through the
     generation's IVFPQ path instead (``probe_current_generation(adc=
@@ -322,38 +305,33 @@ def _replay_check(
 
 
 def foreach_batch_codebook_admit_probe(
-    lay: GenerationLayout,
-    out_dir: str,
-    with_pq: bool = False,
-    cap: int = _CAP,
-    pointer_path: str | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """Probe-then-admit streaming lifecycle over generation ``lay``: the
+    sf_dir: str, pointer_path: str, rec: PointerRecord, out_dir: str
+) -> Callable[[DataFrame, int], int]:
+    """Probe-then-admit streaming lifecycle over the generation ``rec``
+    names (the pointer record read when the stream started): the
     micro-batch is probed against the index as of all PREVIOUSLY
     admitted batches, then admitted as new <= cap sub-cells.  The
     intent/watermark marker pair + the repair path make the
     multi-append index mutation replay-safe for a crash at ANY point
     (module docstring).
 
-    ``with_pq``: bind the admission to a PQ-carrying generation —
-    admitted members are additionally encoded against the generation's
-    persisted PQ codebook and their codes appended (order fine ->
-    codes -> members; the members append stays the commit point), and
-    the replay repair purges the batch's uncommitted codes rows
-    alongside the orphan fine rows.  ``cap`` binds the admission's
-    rank-chunking to the GENERATION'S fine-cell capacity
-    (``PointerRecord.fitted_cap``: the quality-triggered refit
-    escalates it).
+    The record binds the admission: its kind names the tables, a
+    ``pq`` generation additionally gets the admitted members encoded
+    against its persisted PQ codebook and their codes appended (order
+    fine -> codes -> members; the members append stays the commit
+    point, and the replay repair purges the batch's uncommitted codes
+    rows alongside the orphan fine rows), and the rank-chunking runs at
+    the generation's own capacity (``rec.fitted_cap``: the
+    quality-triggered refit escalates it).
 
-    The NOVELTY PROBE serves the live member set: the generation's
-    tombstoned members (if any) stop matching at the admission surface
-    the moment the deletion commits.  ``pointer_path``: when given,
-    each batch's novelty probe runs at the pointer's current
-    ``nprobe=N`` token (re-read per batch, like the pointer-following
-    readers), and the tombstone read is serialized against the
-    deletion verb.  The ADMISSION arithmetic is nprobe-independent
-    (rank-chunking reads only the coarse assignment); only the reported
-    novelty verdicts widen."""
+    The NOVELTY PROBE serves the live member set at the pointer's
+    CURRENT serving width (``serving_nprobe``, re-read per batch like
+    the pointer-following readers): the generation's tombstoned members
+    stop matching the moment the deletion commits, and the tombstone
+    read is serialized against the deletion verb.  The ADMISSION
+    arithmetic is nprobe-independent (rank-chunking reads only the
+    coarse assignment); only the reported novelty verdicts widen."""
+    lay = generation_layout(sf_dir, rec.kind)
     watermark_path = os.path.join(out_dir, "_ADMITTED_WATERMARK")
     intent_path = os.path.join(out_dir, "_ADMIT_INTENT")
 
@@ -371,7 +349,7 @@ def foreach_batch_codebook_admit_probe(
         new = batch_df.select(
             "vec_id", _quantize(F.col("embedding")).alias("vq")
         )
-        if crashed and repair_admission(spark, new, lay, with_pq):
+        if crashed and repair_admission(spark, new, lay, rec.pq):
             # a previous attempt crashed inside the admission window
             # AFTER its members append committed (repaired otherwise):
             # only the watermark is missing (the probe partition
@@ -385,9 +363,7 @@ def foreach_batch_codebook_admit_probe(
         # admit_batch handles the offset snapshot, but `new` itself is
         # recomputed per consumer (cheap: one projection over the
         # micro-batch)
-        np_ = 1
-        if pointer_path is not None:
-            np_ = read_pointer(pointer_path).serving_nprobe
+        #
         # the probe reads the live member set; the ADMISSION keeps the
         # raw members table — sub-cell offsets are physical-row
         # accounting and deleted members still occupy their slots
@@ -395,10 +371,15 @@ def foreach_batch_codebook_admit_probe(
         probe_mem = live_view(
             spark, lay.members, lay.tombs, pointer_path=pointer_path
         )
-        res = probe(spark, new, lay.coarse, lay.fine, probe_mem, nprobe=np_)
+        res = probe(
+            spark, new, lay.coarse, lay.fine, probe_mem,
+            nprobe=read_pointer(pointer_path).serving_nprobe,
+        )
         _write_probe_partition(res, out_dir, batch_id)
         _write_marker(intent_path, batch_id)  # admission window opens
-        n_admitted = admit_batch(spark, new, lay, cap=cap, with_pq=with_pq)
+        n_admitted = admit_batch(
+            spark, new, lay, cap=rec.fitted_cap, with_pq=rec.pq
+        )
         _write_marker(watermark_path, batch_id)  # admission committed
         os.remove(intent_path)
         return n_admitted

@@ -16,10 +16,12 @@ loop itself.
 Design — quiesce by construction, not by interruption:
 
 1. The per-batch function is the round-14 intent/watermark admission
-   (``foreach_batch_codebook_admit_probe``) bound to the CURRENT
-   generation's tables, plus a cadence check AFTER the batch fully
-   commits: ``refit_due(n_now, n_fit)`` with ``n_fit`` read from the
-   generation pointer (it rides the pointer's atomic rename —
+   (``foreach_batch_codebook_admit_probe``) bound to the pointer —
+   the record the cycle read fixes kind, ``n_fit``, ``pq`` and
+   ``cap``, and the serving width is re-read from the pointer per
+   batch — plus a cadence check AFTER the batch fully commits:
+   ``refit_due(n_now, n_fit)`` with ``n_fit`` from that record (it
+   rides the pointer's atomic rename —
    ``index.generation.read_pointer``).  When due, the function writes a
    ``_REFIT_DUE`` marker and raises — terminating the stream at a
    batch boundary with everything committed.  Nothing can admit while
@@ -70,7 +72,7 @@ from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
-    GenerationLayout,
+    PointerRecord,
     _complete_pending_swap,
     build_generation,
     cutover_generation,
@@ -94,6 +96,12 @@ from awsbatch_mapreduce_spark.streaming.codebook import (
     recommend_nprobe,
     refit_due,
 )
+
+# The most refit cycles one supervised run drives, and the factor a
+# quality refit multiplies the fitted cap by (bounded by the run's
+# ``recall_cap_max``) — the recall sweep's measured cap step.
+_MAX_REFITS = 32
+_RECALL_CAP_STEP = 4
 
 
 class RefitDueSignal(RuntimeError):
@@ -137,23 +145,21 @@ def _recall_snapshot(
 
 
 def admit_probe_with_cadence(
-    lay: GenerationLayout,
+    sf_dir: str,
+    pointer_path: str,
+    rec: PointerRecord,
     out_dir: str,
-    n_fit: int,
     tolerated_inflation: float = 2.0,
     recall_panel: int = 0,
-    recall_nprobe: int = 2,
     recall_floor_bp: int = 0,
     recall_max_nprobe: int = 4,
-    with_pq: bool = False,
-    cap: int = _CAP,
     can_escalate_cap: bool = False,
-    pointer_path: str | None = None,
     recall_every: int = 0,
     max_deleted_fraction: float = 0.0,
 ) -> Callable[[DataFrame, int], None]:
     """The supervised per-batch function: the round-14 replay-safe
-    admission, then the cadence check.  The ``RefitDueSignal`` raise
+    admission into the generation ``rec`` names, then the cadence
+    check against ``rec.n_fit``.  The ``RefitDueSignal`` raise
     happens strictly AFTER the admission's watermark write, so the
     engine-side replay of this batch (its offset never committed) hits
     the watermark no-op on restart.
@@ -177,10 +183,9 @@ def admit_probe_with_cadence(
     ``_RECALL_SNAPSHOTS.jsonl`` in the sink dir — the per-generation
     QA read of the just-cut-over index on live traffic.
 
-    ``with_pq`` binds the admission to a PQ-carrying generation (codes
-    appended per batch — the ADC candidate set stays complete between
-    refits).  ``cap`` binds the admission's rank-chunking to the
-    generation's fitted capacity.
+    The record also binds the admission's codes appends (``rec.pq`` —
+    the ADC candidate set stays complete between refits) and its
+    rank-chunking capacity (``rec.fitted_cap``).
 
     ``can_escalate_cap`` arms the CAP side of the actuator (round 16):
     when the incarnation's recall snapshot lands below the floor AND
@@ -194,15 +199,14 @@ def admit_probe_with_cadence(
     stepwise and re-measured per generation, never a jump to the
     maximum.
 
-    ``pointer_path`` (round 17, VERDICT r16 #1) closes the actuator's
-    serving gap: each snapshot probes at the POINTER'S ``nprobe=N``
-    token (falling back to ``recall_nprobe`` when the pointer carries
-    none) — the exact configuration production probes serve — and a
-    step recommendation is APPLIED to the pointer immediately
+    The pointer closes the actuator's serving gap (round 17, VERDICT
+    r16 #1): each snapshot probes at the pointer's serving width
+    (``PointerRecord.serving_nprobe``, re-read per snapshot) — the
+    exact configuration production probes serve — and a step
+    recommendation is APPLIED to the pointer immediately
     (``set_generation_nprobe``, atomic rename, no stream restart, no
     refit), so every pointer-resolving reader serves the stepped width
-    from its next resolution.  Without a pointer the closure degrades
-    to the round-16 QA-only behavior.
+    from its next resolution.
 
     ``recall_every > 0`` (round 17, VERDICT r16 #3) re-arms the
     snapshot every N further FRESH batches after the first — the
@@ -227,33 +231,19 @@ def admit_probe_with_cadence(
     while the knob is armed and the table exists; deletions land
     out-of-band from the stream, so no incremental counter can track
     them the way admitted rows track ``n_now``."""
+    # the admission-time novelty probe serves the pointer's nprobe too
+    # (round 17) — the last probe surface the actuator reaches
     inner = foreach_batch_codebook_admit_probe(
-        lay, out_dir, with_pq=with_pq, cap=cap,
-        # the admission-time novelty probe serves the pointer's nprobe
-        # too (round 17) — the last probe surface the actuator reaches
-        pointer_path=pointer_path,
+        sf_dir, pointer_path, rec, out_dir
     )
+    lay = generation_layout(sf_dir, rec.kind)
+    n_fit = rec.n_fit
     wm_path = os.path.join(out_dir, "_ADMITTED_WATERMARK")
     intent_path = os.path.join(out_dir, "_ADMIT_INTENT")
     snap_path = os.path.join(out_dir, "_RECALL_SNAPSHOTS.jsonl")
     measured: list[int] = []
     counter: dict[str, int | None] = {"n": None, "fresh_since_snap": 0}
     quality_breach: list[tuple[int, int]] = []  # (batch_id, nprobe@breach)
-
-    def _serving_nprobe() -> int:
-        """The nprobe the snapshot must measure: the pointer's token
-        when a pointer is bound (what production serves), else the
-        closure's ``recall_nprobe`` (the QA-only round-16 behavior).
-        A bound pointer with NO token serves single-probe — every
-        serving path (``PointerRecord.serving_nprobe``, the pointer
-        probes, the admission probe) defaults to 1 there, so the QA snapshot
-        must measure 1 too (ADVICE r17: falling back to a configured
-        ``recall_nprobe`` > 1 would measure a width production does
-        not serve, clear the floor on it, and never write the token —
-        re-opening the QA-vs-serving gap)."""
-        if pointer_path is not None:
-            return read_pointer(pointer_path).serving_nprobe
-        return recall_nprobe
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -279,7 +269,9 @@ def admit_probe_with_cadence(
         ):
             measured.append(batch_id)
             counter["fresh_since_snap"] = 0
-            cur_np = _serving_nprobe()
+            # what production serves: a pointer with no token serves
+            # single-probe, so the snapshot measures 1 there too
+            cur_np = read_pointer(pointer_path).serving_nprobe
             new = batch_df.select(
                 "vec_id", _quantize(F.col("embedding")).alias("vq")
             )
@@ -296,13 +288,12 @@ def admit_probe_with_cadence(
             )
             # the actuator's read (VERDICT r15 #3): a snapshot below
             # the floor recommends one nprobe step, logged next to the
-            # measurement; the supervisor applies it to the NEXT
-            # incarnation's QA probe.  A ZERO-TRUTH snapshot is
-            # NO-SIGNAL, not a breach (ADVICE r16): _recall_snapshot
-            # reports vec_recall_bp=0 when the sampled panel has no
-            # true duplicates, and duplicate-free traffic must hold
-            # the current knobs, never step nprobe or escalate cap on
-            # a recall number that measured nothing.
+            # measurement and applied to the pointer below.  A
+            # ZERO-TRUTH snapshot is NO-SIGNAL, not a breach (ADVICE
+            # r16): _recall_snapshot reports vec_recall_bp=0 when the
+            # sampled panel has no true duplicates, and duplicate-free
+            # traffic must hold the current knobs, never step nprobe or
+            # escalate cap on a recall number that measured nothing.
             if snap["n_truth_vecs"] == 0:
                 snap["recommended_nprobe"] = cur_np
                 snap["no_signal"] = True
@@ -311,10 +302,7 @@ def admit_probe_with_cadence(
                     snap["vec_recall_bp"], cur_np, recall_floor_bp,
                     recall_max_nprobe,
                 )
-            if (
-                pointer_path is not None
-                and snap["recommended_nprobe"] != cur_np
-            ):
+            if snap["recommended_nprobe"] != cur_np:
                 # the actuator's step lands on the POINTER (round 17):
                 # every serving probe resolves it from the next batch /
                 # call on — the loop's output reaches production, not
@@ -403,8 +391,7 @@ def admit_probe_with_cadence(
         if quality_breach:
             # report the width the snapshot ACTUALLY exhausted (ADVICE
             # r17: after pointer-applied steps the serving width is the
-            # snapshot's cur_np, bounded by recall_max_nprobe — not the
-            # closure's base recall_nprobe)
+            # snapshot's cur_np, bounded by recall_max_nprobe)
             _, breach_np = quality_breach[-1]
             _signal(
                 "recall",
@@ -427,24 +414,23 @@ def _next_kind(gen_prefix: str, current: str) -> str:
 
 def bootstrap_generation(
     spark, sf_dir: str, pointer_path: str, seed, gen_prefix: str,
-    with_pq: bool = False, cap: int = _CAP,
+    with_pq: bool = False,
 ) -> str:
     """Fit generation ``{gen_prefix}0000`` over a raw (vec_id,
     embedding) seed corpus and cut the pointer over with its fit-time
     size — the supervisor's day-zero step.  ``with_pq`` additionally
     builds the generation's codes + PQ-codebook tables and records the
     ``pq`` flag, arming the ADC path (and every automatic refit
-    inherits it).  ``cap`` sets the fine-cell capacity (default the
-    registered fixture cap) and is recorded on the pointer so
-    admissions and quality escalations read it back."""
+    inherits it).  The fit runs at the registered fixture cap, recorded
+    on the pointer so admissions and quality escalations read it back;
+    no ``nprobe`` token is written, so the generation serves
+    single-probe."""
     kind = f"{gen_prefix}0000"
-    lay = build_generation(
-        spark, sf_dir, kind, seed, cap=cap, with_pq=with_pq
-    )
+    lay = build_generation(spark, sf_dir, kind, seed, with_pq=with_pq)
     n_fit = spark.table(lay.members).count()
     cutover_generation(
         spark, sf_dir, pointer_path, kind, n_fit=n_fit, with_pq=with_pq,
-        cap=cap,
+        cap=_CAP,
     )
     return kind
 
@@ -461,21 +447,18 @@ def run_supervised_admission(
     available_now: bool = False,
     tolerated_inflation: float = 2.0,
     gen_prefix: str = "sup",
-    max_refits: int = 32,
     run_secs: float | None = None,
     await_secs: float = 600.0,
     recall_panel: int = 0,
-    recall_nprobe: int = 2,
     recall_floor_bp: int = 0,
     recall_max_nprobe: int = 4,
-    recall_cap_step: int = 4,
     recall_cap_max: int = 512,
     recall_every: int = 0,
     max_deleted_fraction: float = 0.0,
 ) -> dict:
     """Drive streaming admission with AUTOMATIC refits until the
     source drains (``available_now=True``), the wall budget
-    ``run_secs`` expires, or ``max_refits`` cycles have run.
+    ``run_secs`` expires, or ``_MAX_REFITS`` cycles have run.
 
     Per cycle: resolve the current generation + n_fit from the
     pointer, stream with the cadence-checking admission, and when the
@@ -495,17 +478,20 @@ def run_supervised_admission(
     ``recall_floor_bp > 0`` ARMS the actuator (round 16, VERDICT r15
     #3): each snapshot below the floor recommends one nprobe step
     (``recommend_nprobe``, capped at ``recall_max_nprobe``), logged in
-    the snapshot line as ``recommended_nprobe`` and APPLIED to the next
-    stream incarnation's QA probe — the loop that measured its own
-    quality recovery (r15: 0.66 -> 0.84 -> 0.91 across refits) now
-    steps its own knob when a generation lands below target.  When the
-    nprobe knob is EXHAUSTED (already at max) and the snapshot is still
-    below the floor, the supervisor escalates the OTHER axis the
-    recall sweep priced: a quality-triggered refit at ``cap *
-    recall_cap_step`` (bounded by ``recall_cap_max``), recorded in the
-    refit entry as ``reason: recall`` with the old/new caps; the new
-    cap rides the generation pointer so subsequent admissions
-    rank-chunk at the capacity the index was fitted with.
+    the snapshot line as ``recommended_nprobe`` and APPLIED to the
+    pointer's serving width — the loop that measured its own quality
+    recovery (r15: 0.66 -> 0.84 -> 0.91 across refits) now steps its
+    own knob when a generation lands below target.  When the nprobe
+    knob is EXHAUSTED (already at max) and the snapshot is still below
+    the floor, the supervisor escalates the OTHER axis the recall sweep
+    priced: a quality-triggered refit at ``cap * _RECALL_CAP_STEP``
+    (bounded by ``recall_cap_max``), recorded in the refit entry as
+    ``reason: recall`` with the old/new caps; the new cap rides the
+    generation pointer so subsequent admissions rank-chunk at the
+    capacity the index was fitted with, and the serving width resets
+    to 1 (single-probe, what ``bootstrap_generation`` serves).  Every
+    refit entry's ``nprobe_after`` is the post-refit pointer's
+    ``serving_nprobe``.
 
     ``max_deleted_fraction > 0`` arms the deletions trigger (round 18
     follow-on): when a generation's tombstone count exceeds that
@@ -518,9 +504,11 @@ def run_supervised_admission(
     counter.
 
     The pointer is read ONCE per cycle (the single-snapshot discipline
-    of ``read_pointer``): kind, n_fit, pq, cap and nprobe of the
-    incarnation all come from one record, and the post-refit read that
-    fills the refit entry is the next cycle's record."""
+    of ``read_pointer``): kind, n_fit, pq and cap of the incarnation
+    all come from one record that binds the cycle's admission, and the
+    post-refit read that fills the refit entry is the next cycle's
+    record.  Only the serving width is re-read within a cycle, because
+    the actuator steps it mid-incarnation."""
     report: dict = {"segments": [], "refits": [], "recovered": []}
     report["recovered"] = recover_generations(
         spark, sf_dir, pointer_path, gen_prefix
@@ -534,7 +522,6 @@ def run_supervised_admission(
         os.remove(marker)
     start_all = time.time()
     refits = 0
-    cur_nprobe = recall_nprobe
     snap_path = os.path.join(out_dir, "_RECALL_SNAPSHOTS.jsonl")
     rec = read_pointer(pointer_path)
     while True:
@@ -577,30 +564,23 @@ def run_supervised_admission(
                 cap=cur_cap,
                 nprobe=rec.nprobe or None,
             )
+            rec = rec._replace(n_fit=n_fit)  # what was just written
         # a PQ-carrying generation admits WITH codes, so the ADC path
         # keeps serving a complete candidate set between refits; the
-        # automatic refit below inherits the flag (refit_and_cutover's
-        # with_pq=None default) and rebuilds codes per new generation
-        # the pointer's serving nprobe wins over the loop's local value
-        # (round 17): the actuator writes its steps onto the pointer, so
-        # after a restart — or a step applied mid-incarnation — the QA
-        # probe measures exactly what production serves
-        cur_nprobe = rec.nprobe or cur_nprobe
+        # automatic refit below inherits the flag and rebuilds codes
+        # per new generation
         fn = admit_probe_with_cadence(
-            lay,
+            sf_dir,
+            pointer_path,
+            rec,
             out_dir,
-            n_fit,
             tolerated_inflation,
             recall_panel=recall_panel,
-            recall_nprobe=cur_nprobe,
             recall_floor_bp=recall_floor_bp,
             recall_max_nprobe=recall_max_nprobe,
-            with_pq=rec.pq,
-            cap=cur_cap,
             can_escalate_cap=(
                 recall_floor_bp > 0 and cur_cap < recall_cap_max
             ),
-            pointer_path=pointer_path,
             recall_every=recall_every,
             # deletions against this generation reach the admission
             # probe + QA snapshot the moment they commit, the
@@ -652,53 +632,36 @@ def run_supervised_admission(
                 ],
             }
         )
-        if recall_floor_bp > 0 and os.path.exists(snap_path):
-            # seed the next incarnation's fallback from the latest
-            # recommendation.  The AUTHORITATIVE write is on the
-            # pointer (round 17: the closure applies steps via
-            # set_generation_nprobe, and incarnation start reads the
-            # token back) — this local update only covers the
-            # no-token-yet window
-            with open(snap_path) as fh:
-                lines = [ln for ln in fh if ln.strip()]
-            if lines:
-                cur_nprobe = json.loads(lines[-1]).get(
-                    "recommended_nprobe", cur_nprobe
-                )
         due = os.path.exists(marker)
         if due:
             with open(marker) as fh:
                 due_info = json.loads(fh.read())
             os.remove(marker)
-            if refits < max_refits and not budget_stop:
+            if refits < _MAX_REFITS and not budget_stop:
                 new_kind = _next_kind(gen_prefix, kind)
                 reason = due_info.get("reason", "growth")
                 # quality refits escalate the cap (the sweep's other
-                # recall axis) AND reset the nprobe arm to the
-                # configured base (round 17): the escalation is the
+                # recall axis) AND reset the serving width to
+                # single-probe (round 17): the escalation is the
                 # STRUCTURAL fix for the recall the nprobe steps were
                 # papering over — serving the escalated generation at
                 # the stopgap width would pay max-nprobe x probe cost
                 # forever; the next incarnation's snapshot re-converges
-                # the knob from base if the new geometry still falls
-                # short.  Growth refits inherit both knobs.
-                new_cap = (
-                    min(cur_cap * recall_cap_step, recall_cap_max)
-                    if reason == "recall"
-                    else None
-                )
-                reset_nprobe = (
-                    recall_nprobe if reason == "recall" else None
-                )
+                # the knob from 1 if the new geometry still falls
+                # short.  Growth and deletion refits inherit both knobs.
+                quality = reason == "recall"
                 t0 = time.perf_counter()
                 old = refit_and_cutover(
-                    spark, sf_dir, pointer_path, new_kind, cap=new_cap,
-                    nprobe=reset_nprobe,
+                    spark, sf_dir, pointer_path, new_kind,
+                    cap=(
+                        min(cur_cap * _RECALL_CAP_STEP, recall_cap_max)
+                        if quality
+                        else None
+                    ),
+                    nprobe=1 if quality else None,
                 )
                 refit_sec = round(time.perf_counter() - t0, 2)
                 vacuum_generation(spark, sf_dir, pointer_path, old)
-                if reset_nprobe is not None:
-                    cur_nprobe = reset_nprobe
                 rec = read_pointer(pointer_path)  # the next cycle's read
                 entry = {
                     "old": old,
@@ -706,7 +669,7 @@ def run_supervised_admission(
                     "reason": reason,
                     "cap_before": cur_cap,
                     "cap_after": rec.fitted_cap,
-                    "nprobe_after": rec.nprobe or cur_nprobe,
+                    "nprobe_after": rec.serving_nprobe,
                     "refit_sec": refit_sec,
                     "n_fit_before": n_fit,
                     "n_fit_after": due_info["n_now"],
@@ -734,8 +697,8 @@ def run_supervised_admission(
             with open(snap_path) as fh:
                 for line in fh:
                     if line.strip():
-                        rec = json.loads(line)
-                        by_batch[rec["batch_id"]] = rec
+                        snap = json.loads(line)
+                        by_batch[snap["batch_id"]] = snap
             report["recall"] = [
                 by_batch[k] for k in sorted(by_batch)
             ]

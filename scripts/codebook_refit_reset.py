@@ -93,11 +93,17 @@ def _synthetic(spark, rows_per_sec: int, dim: int, offset: int):
     )
 
 
-def _stream_phase(spark, dim: int, lay, secs: int, tag: str) -> list[list[int]]:
-    """Run a fresh admission stream against generation ``lay`` for ``secs``;
-    return steady (rows, ms) pairs (first non-empty batch dropped as
-    JIT/backlog-cold when enough signal exists).  Fresh sink (markers
-    included) + checkpoint + id range per phase."""
+def _pointer_path() -> str:
+    tmp = os.environ.get("TMPDIR", "/tmp")
+    return os.path.join(tmp, f"codebook_reset_ptr_{os.getpid()}")
+
+
+def _stream_phase(spark, dim: int, secs: int, tag: str) -> list[list[int]]:
+    """Run a fresh admission stream for ``secs`` against the generation
+    the pointer names; return steady (rows, ms) pairs (first non-empty
+    batch dropped as JIT/backlog-cold when enough signal exists).
+    Fresh sink (markers included) + checkpoint + id range per phase."""
+    from awsbatch_mapreduce_spark.index.generation import read_pointer
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_admit_probe,
     )
@@ -105,7 +111,10 @@ def _stream_phase(spark, dim: int, lay, secs: int, tag: str) -> list[list[int]]:
     tmp = os.environ.get("TMPDIR", "/tmp")
     out = os.path.join(tmp, f"codebook_reset_{tag}_{os.getpid()}")
     ckpt = os.path.join(tmp, f"codebook_reset_ckpt_{tag}_{os.getpid()}")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    pointer = _pointer_path()
+    fn = foreach_batch_codebook_admit_probe(
+        SF_DIR, pointer, read_pointer(pointer), out
+    )
     q = (
         _synthetic(spark, RATE, dim, _OFFSETS[tag])
         .writeStream.foreachBatch(fn)
@@ -145,6 +154,7 @@ def _index_stats(spark, coarse, fine, mem) -> dict:
 def main() -> None:
     from awsbatch_mapreduce_spark.index.generation import (
         build_generation,
+        cutover_generation,
         members_corpus,
     )
     from awsbatch_mapreduce_spark.sources.tables import load_table
@@ -161,8 +171,9 @@ def main() -> None:
         spark, SF_DIR, "rsta", emb.filter(F.col("vec_id") <= F.lit(mid))
     )
     coarse_a, fine_a, mem_a = gen_a.coarse, gen_a.fine, gen_a.members
+    cutover_generation(spark, SF_DIR, _pointer_path(), "rsta")
     s0 = _index_stats(spark, coarse_a, fine_a, mem_a)
-    grow = _stream_phase(spark, dim, gen_a, GROW_SECS, "grow")
+    grow = _stream_phase(spark, dim, GROW_SECS, "grow")
     s1 = _index_stats(spark, coarse_a, fine_a, mem_a)
     print(
         json.dumps(
@@ -181,7 +192,7 @@ def main() -> None:
     )
 
     # phase 2: CONTINUE on the starved layout (the no-refit arm)
-    cont = _stream_phase(spark, dim, gen_a, AB_SECS, "continue")
+    cont = _stream_phase(spark, dim, AB_SECS, "continue")
     s2 = _index_stats(spark, coarse_a, fine_a, mem_a)
     print(
         json.dumps(
@@ -208,7 +219,8 @@ def main() -> None:
     )
 
     # phase 4: RESUME on the refitted generation (the refit arm)
-    resume = _stream_phase(spark, dim, gen_r, AB_SECS, "resume")
+    cutover_generation(spark, SF_DIR, _pointer_path(), "rstr")
+    resume = _stream_phase(spark, dim, AB_SECS, "resume")
     print(
         json.dumps(
             {"phase": "resume_post_refit", "batches_rows_ms": resume}

@@ -74,7 +74,11 @@ def _synthetic_embeddings(spark, rows_per_sec: int, dim: int):
 
 
 def main() -> None:
-    from awsbatch_mapreduce_spark.index.generation import build_generation
+    from awsbatch_mapreduce_spark.index.generation import (
+        build_generation,
+        cutover_generation,
+        read_pointer,
+    )
     from awsbatch_mapreduce_spark.sources.tables import load_table
     from awsbatch_mapreduce_spark.streaming.codebook import (
         foreach_batch_codebook_admit_probe,
@@ -98,7 +102,11 @@ def main() -> None:
         tmp = os.environ.get("TMPDIR", "/tmp")
         out = os.path.join(tmp, f"codebook_tp_out_{rate}_{os.getpid()}")
         ckpt = os.path.join(tmp, f"codebook_tp_ckpt_{rate}_{os.getpid()}")
-        fn = foreach_batch_codebook_admit_probe(lay, out)
+        pointer = os.path.join(tmp, f"codebook_tp_ptr_{os.getpid()}")
+        cutover_generation(spark, SF_DIR, pointer, "thru")
+        fn = foreach_batch_codebook_admit_probe(
+            SF_DIR, pointer, read_pointer(pointer), out
+        )
         q = (
             _synthetic_embeddings(spark, rate, dim)
             .writeStream.foreachBatch(fn)

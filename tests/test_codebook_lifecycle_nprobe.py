@@ -1,13 +1,15 @@
-"""Wave 16 (round 17): the serving probes honor the pointer's nprobe,
-and the PQ x cap-escalation composition — pinned Spark-side.
+"""The codebook lifecycle's serving width: the serving probes honor the
+pointer's nprobe, and the PQ x cap-escalation composition — pinned
+Spark-side.
 
-The claims under test (the DuckDB oracle parity of the three new
-registry queries lives in test_oracle_parity like every other query):
+The claims under test (the DuckDB oracle parity of the lifecycle
+queries lives in test_oracle_parity like every other query):
 
 - the ``nprobe=N`` token rides the pointer's atomic rename next to
   ``pq``/``cap=N`` and survives every pointer mutation (actuator write,
   refit inherit, rollback);
-- ``probe_current_generation`` serves the REAL rank-k program after a
+- ``probe_current_generation`` and the admission stream's novelty
+  probe serve the REAL rank-k program after a
   ``set_generation_nprobe`` step — frame-identical to the driver-proven
   ``probe(nprobe=)`` (full-vector) / ``probe(nprobe=, codes=, pqcb=)``
   (ADC), and genuinely different from the single-probe output on the
@@ -271,7 +273,9 @@ def test_admission_probe_serves_pointer_nprobe(spark, tmp_path):
     pointer = str(tmp_path / "ptr")
     cutover_generation(spark, SF_DIR, pointer, "w16s", nprobe=2)
     out = str(tmp_path / "out")
-    fn = foreach_batch_codebook_admit_probe(lay, out, pointer_path=pointer)
+    fn = foreach_batch_codebook_admit_probe(
+        SF_DIR, pointer, read_pointer(pointer), out
+    )
     b0 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     )

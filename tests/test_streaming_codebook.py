@@ -5,7 +5,7 @@ The streaming path must be the registered batch semantics, micro-batch
 by micro-batch:
 
 - probe-only stream over N chunks == ONE batch probe of their union
-  (per-row independence given a static index);
+  (per-row independence given the generation the pointer names);
 - probe-then-admit stream == the two driver-proven registry queries,
   compositionally: batch-0 rows equal `semdedup_codebook_adaptive`'s
   output restricted to the first chunk's ids (probe against the build
@@ -30,6 +30,7 @@ from awsbatch_mapreduce_spark.index.generation import (
     build_generation,
     cutover_generation,
     members_corpus,
+    read_pointer,
 )
 from awsbatch_mapreduce_spark.plans import QUERIES
 import awsbatch_mapreduce_spark.index.probe as index_probe
@@ -58,6 +59,16 @@ def _build_index(spark, kind: str, with_pq: bool = False):
         with_pq=with_pq,
     )
     return emb, mid, q3, lay
+
+
+def _admit_probe(spark, kind: str, out: str, with_pq: bool = False):
+    """The probe-then-admit sink over generation ``kind``, bound to a
+    pointer (beside ``out``) cut over to it."""
+    pointer = f"{out}_ptr"
+    cutover_generation(spark, SF_DIR, pointer, kind, with_pq=with_pq)
+    return foreach_batch_codebook_admit_probe(
+        SF_DIR, pointer, read_pointer(pointer), out
+    )
 
 
 def _crash_members_append(monkeypatch, crash):
@@ -123,14 +134,16 @@ def _rows(df, drop=("batch_id",)):
 
 def test_stream_probe_equals_batch_probe(spark, emb_chunks, tmp_path):
     """Probe-only: union of per-micro-batch probes == one batch probe
-    of the whole new half against the same static index."""
+    of the whole new half against the same (pointer-named) index."""
     emb, mid, _, lay = _build_index(spark, "strm")
     coarse, fine, mem = lay[1:4]
+    pointer = str(tmp_path / "ptr")
+    cutover_generation(spark, SF_DIR, pointer, "strm")
     out = str(tmp_path / "probe_out")
     _drain(
         spark,
         emb_chunks,
-        foreach_batch_codebook_probe(coarse, fine, mem, out),
+        foreach_batch_codebook_probe(SF_DIR, pointer, out),
         str(tmp_path / "ckpt"),
     )
     got = spark.read.parquet(out)
@@ -147,9 +160,10 @@ def test_stream_probe_replay_is_idempotent(spark, emb_chunks, tmp_path):
     """Re-invoking the probe on a replayed micro-batch rewrites its own
     batch_id partition instead of duplicating rows."""
     emb, mid, q3, lay = _build_index(spark, "strm")
-    coarse, fine, mem = lay[1:4]
+    pointer = str(tmp_path / "ptr")
+    cutover_generation(spark, SF_DIR, pointer, "strm")
     out = str(tmp_path / "probe_out")
-    fn = foreach_batch_codebook_probe(coarse, fine, mem, out)
+    fn = foreach_batch_codebook_probe(SF_DIR, pointer, out)
     batch1 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", "embedding")
@@ -172,7 +186,7 @@ def test_admit_probe_matches_registered_queries(spark, emb_chunks, tmp_path):
     _drain(
         spark,
         emb_chunks,
-        foreach_batch_codebook_admit_probe(lay, out),
+        _admit_probe(spark, "strm2", out),
         str(tmp_path / "ckpt"),
     )
     got = spark.read.parquet(out)
@@ -238,7 +252,7 @@ def test_admit_replay_skipped_by_watermark(spark, emb_chunks, tmp_path):
     emb, mid, q3, lay = _build_index(spark, "strm")
     coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm", out)
     batch1 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
     ).select("vec_id", "embedding")
@@ -270,7 +284,7 @@ def test_admit_crash_between_appends_repairs_on_replay(
     emb, mid, q3, lay = _build_index(spark, "strm4")
     coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm4", out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     fine_after_0 = spark.table(fine).count()
@@ -294,7 +308,7 @@ def test_admit_crash_between_appends_repairs_on_replay(
     _, _, _, lay_t = _build_index(spark, "strm5")
     coarse_t, fine_t, mem_t = lay_t[1:4]
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t)
+    fn_t = _admit_probe(spark, "strm5", out_t)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -320,7 +334,7 @@ def test_admit_crash_mid_members_commit_repairs_on_replay(
     emb, mid, q3, lay = _build_index(spark, "strm9")
     coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm9", out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     mem_after_0 = spark.table(mem).count()
@@ -347,7 +361,7 @@ def test_admit_crash_mid_members_commit_repairs_on_replay(
     _, _, _, lay_t = _build_index(spark, "strm10")
     coarse_t, fine_t, mem_t = lay_t[1:4]
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t)
+    fn_t = _admit_probe(spark, "strm10", out_t)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -430,7 +444,7 @@ def test_repair_crash_mid_swap_completes_on_replay(
     emb, mid, q3, lay = _build_index(spark, "strm12")
     coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm12", out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     mem_after_0 = spark.table(mem).count()
@@ -478,7 +492,7 @@ def test_repair_crash_mid_swap_completes_on_replay(
     _, _, _, lay_t = _build_index(spark, "strm13")
     coarse_t, fine_t, mem_t = lay_t[1:4]
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t)
+    fn_t = _admit_probe(spark, "strm13", out_t)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -518,7 +532,7 @@ def test_admit_with_codes_crash_between_codes_and_members(
     emb, mid, q3, lay = _build_index(spark, "strm14", with_pq=True)
     fine, mem, codes = lay.fine, lay.members, lay.codes
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out, with_pq=True)
+    fn = _admit_probe(spark, "strm14", out, with_pq=True)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     codes_after_0 = spark.table(codes).count()
@@ -544,7 +558,7 @@ def test_admit_with_codes_crash_between_codes_and_members(
     _, _, _, lay_t = _build_index(spark, "strm15", with_pq=True)
     fine_t, mem_t, codes_t = lay_t.fine, lay_t.members, lay_t.codes
     out_t = str(tmp_path / "twin_out")
-    fn_t = foreach_batch_codebook_admit_probe(lay_t, out_t, with_pq=True)
+    fn_t = _admit_probe(spark, "strm15", out_t, with_pq=True)
     fn_t(batch0, 0)
     fn_t(batch1, 1)
 
@@ -565,7 +579,7 @@ def test_admit_crash_after_commit_fast_forwards_watermark(spark, tmp_path):
     emb, mid, q3, lay = _build_index(spark, "strm6")
     coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm6", out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     fn(batch1, 1)
@@ -595,7 +609,7 @@ def test_admit_stale_intent_cleared_and_foreign_intent_refused(
     emb, mid, q3, lay = _build_index(spark, "strm7")
     coarse, fine, mem = lay[1:4]
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm7", out)
     batch0, batch1 = _two_batches(emb, mid, q3)
     fn(batch0, 0)
     # stale intent: batch 0's watermark landed but its intent survived
@@ -648,7 +662,7 @@ def test_streaming_admissions_then_refit_cutover(spark, tmp_path):
     hi = emb.agg(F.max("vec_id")).first()[0]
     q7 = (q3 + hi) // 2
     out = str(tmp_path / "admit_out")
-    fn = foreach_batch_codebook_admit_probe(lay, out)
+    fn = _admit_probe(spark, "strm8", out)
     fn(
         emb.filter(
             (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
@@ -687,10 +701,6 @@ def test_stream_adc_probe_equals_batch_adc_probe(
     given a static PQ generation), and the reader REFUSES an unflagged
     generation at the batch boundary instead of silently falling back
     to the full-vector join."""
-    from awsbatch_mapreduce_spark.streaming.codebook import (
-        foreach_batch_codebook_probe_current,
-    )
-
     emb, mid, q3, lay = _build_index(spark, "sadc", with_pq=True)
     coarse, fine, mem, codes, pqcb = lay[1:6]
     pointer = str(tmp_path / "ptr")
@@ -698,7 +708,7 @@ def test_stream_adc_probe_equals_batch_adc_probe(
     # unflagged generation: the ADC reader must fail the batch loudly
     cutover_generation(spark, SF_DIR, pointer, "sadc")
     out_refuse = str(tmp_path / "out_refuse")
-    fn = foreach_batch_codebook_probe_current(
+    fn = foreach_batch_codebook_probe(
         SF_DIR, pointer, out_refuse, adc=True
     )
     batch0, _ = _two_batches(emb, mid, q3)
@@ -711,7 +721,7 @@ def test_stream_adc_probe_equals_batch_adc_probe(
     _drain(
         spark,
         emb_chunks,
-        foreach_batch_codebook_probe_current(SF_DIR, pointer, out, adc=True),
+        foreach_batch_codebook_probe(SF_DIR, pointer, out, adc=True),
         str(tmp_path / "ckpt"),
     )
     got = _rows(spark.read.parquet(out))
@@ -735,10 +745,6 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
     replayed batch re-resolves the pointer, so its rewritten partition
     reflects the current generation (the documented at-least-once
     contract)."""
-    from awsbatch_mapreduce_spark.streaming.codebook import (
-        foreach_batch_codebook_probe_current,
-    )
-
     emb, mid, q3, lay_a = _build_index(spark, "pca")
     coarse_a, fine_a, mem_a = lay_a[1:4]
     # generation B: an independent fit over the grown corpus (<= q3)
@@ -747,7 +753,7 @@ def test_stream_probe_pointer_cutover_mid_stream(spark, tmp_path):
     )[1:4]
     pointer = str(tmp_path / "CURRENT_GENERATION")
     out = str(tmp_path / "probe_out")
-    fn = foreach_batch_codebook_probe_current(SF_DIR, pointer, out)
+    fn = foreach_batch_codebook_probe(SF_DIR, pointer, out)
 
     cutover_generation(spark, SF_DIR, pointer, "pca")
     batch0 = emb.filter(

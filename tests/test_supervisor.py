@@ -196,6 +196,12 @@ def test_supervised_admission_auto_refits_and_matches_clean_fit(
     kind, n_fit = read_pointer(pointer)[:2]
     assert kind == report["refits"][-1]["new"]
     assert n_fit == report["refits"][-1]["n_fit_after"]
+    # each refit entry reports the width the pointer serves (growth
+    # refits inherit it; no snapshot here steps it)
+    served = read_pointer(pointer).serving_nprobe
+    assert all(r["nprobe_after"] == served for r in report["refits"]), (
+        report["refits"]
+    )
     # every superseded generation reclaimed
     for r in report["refits"]:
         old_mem = generation_layout(SF_DIR, r["old"]).members
@@ -400,6 +406,8 @@ def test_cadence_counter_matches_counted_twin(spark, tmp_path, monkeypatch):
     )
     base, coarse, fine, mem = lay[:4]
     n_fit = spark.table(mem).count()
+    pointer = str(tmp_path / "ptr")
+    cutover_generation(spark, SF_DIR, pointer, "svcnt", n_fit=n_fit)
 
     seen = []
     real_refit_due = sup.refit_due
@@ -411,7 +419,8 @@ def test_cadence_counter_matches_counted_twin(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sup, "refit_due", recording)
     out = str(tmp_path / "out")
     fn = admit_probe_with_cadence(
-        lay, out, n_fit, tolerated_inflation=100.0
+        SF_DIR, pointer, read_pointer(pointer), out,
+        tolerated_inflation=100.0,
     )
     batch0 = emb.filter(
         (F.col("vec_id") > F.lit(mid)) & (F.col("vec_id") <= F.lit(q3))
@@ -529,7 +538,6 @@ def test_recall_actuator_steps_nprobe(spark, four_chunks, tmp_path):
         pointer,
         gen_prefix="svra",
         recall_panel=16,
-        recall_nprobe=1,
         recall_floor_bp=10000,  # unreachable on the fixture: always step
     )
     snaps = report.get("recall", [])
@@ -587,7 +595,6 @@ def test_quality_breach_escalates_cap(spark, four_chunks, tmp_path):
         tolerated_inflation=100.0,  # growth can never trigger
         gen_prefix="svqc",
         recall_panel=16,
-        recall_nprobe=1,
         recall_floor_bp=10000,  # unreachable until the probe is exhaustive
         recall_max_nprobe=1,  # nprobe knob exhausted from the start
     )
@@ -717,7 +724,6 @@ def test_actuator_step_reaches_serving_probe(spark, four_chunks, tmp_path):
         pointer,
         gen_prefix="svsp",
         recall_panel=16,
-        recall_nprobe=1,
         recall_floor_bp=10000,  # unreachable: every snapshot steps
         recall_cap_max=16,  # cap side disarmed: isolate the nprobe arm
     )
@@ -783,7 +789,6 @@ def test_periodic_resnapshot_actuates_without_refit(
         tolerated_inflation=100.0,  # growth can never trigger
         gen_prefix="svpr",
         recall_panel=16,
-        recall_nprobe=1,
         recall_floor_bp=10000,  # unreachable: every snapshot steps
         recall_cap_max=16,  # cap side disarmed
         recall_every=1,
@@ -831,7 +836,6 @@ def test_quality_breach_escalates_cap_with_pq(spark, four_chunks, tmp_path):
         tolerated_inflation=100.0,  # growth can never trigger
         gen_prefix="svqp",
         recall_panel=16,
-        recall_nprobe=1,
         recall_floor_bp=10000,
         recall_max_nprobe=1,  # nprobe knob exhausted from the start
     )
@@ -884,8 +888,7 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
     base, coarse, fine, mem = lay[:4]
     n_fit = spark.table(mem).count()
     pointer = str(tmp_path / "ptr")
-    with open(pointer, "w") as fh:
-        fh.write("svzt")
+    cutover_generation(spark, SF_DIR, pointer, "svzt", n_fit=n_fit)
 
     def zero_truth(*a, **kw):
         return {
@@ -901,15 +904,14 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(sup, "_recall_snapshot", zero_truth)
     fn = admit_probe_with_cadence(
-        lay,
+        SF_DIR,
+        pointer,
+        read_pointer(pointer),
         str(tmp_path / "out"),
-        n_fit,
         tolerated_inflation=100.0,
         recall_panel=4,
-        recall_nprobe=1,
         recall_floor_bp=10000,  # armed — but zero truth is no-signal
         can_escalate_cap=True,
-        pointer_path=pointer,
     )
     batch = emb.filter(F.col("vec_id") > F.lit(mid)).select(
         "vec_id", "embedding"
@@ -927,11 +929,11 @@ def test_zero_truth_snapshot_is_no_signal(spark, tmp_path, monkeypatch):
 
 
 def test_cap_escalation_resets_nprobe_arm(spark, four_chunks, tmp_path):
-    """Round 17 follow-on: a QUALITY refit resets the nprobe arm to the
-    configured base — the cap escalation is the structural fix for the
-    recall the nprobe steps were papering over, so the escalated
-    generation must not keep paying max-nprobe probe cost forever.
-    With both knobs armed (base 1, max 2, floor unreachable,
+    """Round 17 follow-on: a QUALITY refit resets the nprobe arm to
+    single-probe (base 1) — the cap escalation is the structural fix
+    for the recall the nprobe steps were papering over, so the
+    escalated generation must not keep paying max-nprobe probe cost
+    forever.  With both knobs armed (max 2, floor unreachable,
     re-snapshot every batch) the loop alternates: step 1 -> 2, exhaust,
     escalate cap + reset to 1, re-step — every recall refit records
     nprobe_after == base and the pointer ends at the base width."""
@@ -957,7 +959,6 @@ def test_cap_escalation_resets_nprobe_arm(spark, four_chunks, tmp_path):
         tolerated_inflation=100.0,  # growth can never trigger
         gen_prefix="svnr",
         recall_panel=16,
-        recall_nprobe=1,
         recall_floor_bp=10000,  # unreachable: both arms keep firing
         recall_max_nprobe=2,
         recall_every=1,
@@ -1117,12 +1118,13 @@ def test_deletion_signal_fires_on_empty_first_batch(spark, tmp_path):
     n_doomed = tombstone_members(spark, SF_DIR, pointer, doomed)
 
     out_dir = str(tmp_path / "never_created_out")
+    assert read_pointer(pointer)[:2] == ("svde0000", boot.count())
     fn = admit_probe_with_cadence(
-        generation_layout(SF_DIR, "svde0000"),
+        SF_DIR,
+        pointer,
+        read_pointer(pointer),
         out_dir,
-        boot.count(),
         100.0,
-        pointer_path=pointer,
         max_deleted_fraction=0.2,
     )
     empty = boot.limit(0)
