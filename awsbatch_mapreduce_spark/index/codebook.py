@@ -47,6 +47,13 @@ _DSCALE = 1000000000000.0  # squared distances quantize at 1e-12
 # genuinely multi-sub (2-3 subs per cell, ~17 fine cells over 250 seen
 # vectors) so the capacity split is exercised, not vacuous.
 _CAP = 16
+# The factor a quality-triggered refit multiplies the fitted cap by: the
+# recall sweep's measured cap step (the supervisor's escalation, and the
+# escalated cap the registered escalation lifecycles fit at).
+_CAP_STEP = 4
+
+# Lloyd iterations of every codebook fit and of the unrolled oracle chain.
+_LLOYD_ITERS = 5
 
 _PQ_SUB = 8  # dims per PQ subspace (64-dim fixture -> 8 subspaces)
 _PQ_K = 10  # codebook entries per subspace (seen_id % 10 residue means)
@@ -294,7 +301,7 @@ def _mod_centroid_init(seen: DataFrame, cap: int = _CAP) -> DataFrame:
 def kmeans_fit(
     corpus: DataFrame,
     k_init: DataFrame,
-    n_iter: int = 5,
+    n_iter: int = _LLOYD_ITERS,
 ) -> tuple[DataFrame, list[float]]:
     """Run ``n_iter`` Lloyd iterations; return (final assignment,
     per-iteration inertia trace).  ``corpus`` needs ``vec_id`` and

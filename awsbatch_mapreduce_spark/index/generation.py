@@ -358,7 +358,7 @@ def build_generation(
         init_fn = functools.partial(_mod_centroid_init, cap=cap)
     lay = fresh_layout(spark, sf_dir, kind)
     vec = "vq" if "vq" in seen.columns else "embedding"
-    assigned, _ = kmeans_fit(seen.select("vec_id", vec), init_fn(seen), n_iter=5)
+    assigned, _ = kmeans_fit(seen.select("vec_id", vec), init_fn(seen))
     # The chunk rank is over the final Lloyd assignment's own
     # (d_fp, vec_id) — integer fixed-point, so the split is
     # deterministic cross-engine.

@@ -30,6 +30,16 @@ from pyspark.sql import functions as F
 from awsbatch_mapreduce_spark.operators.hints import never_broadcast
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
+# Stand-in decoder geometry: 4 sampled 16-byte video frames, an 8x8
+# perceptual-hash grid (64 bits), hamming <= 3 for a visual near-dup
+# (the 4-band pigeonhole bound), stride-2 resize, 32-byte audio frames.
+_N_FRAMES = 4
+_FRAME_BYTES = 16
+_PHASH_GRID = 8
+_MAX_HAMMING = 3
+_RESIZE_FACTOR = 2
+_AUDIO_FRAME_BYTES = 32
+
 FEATURE_SCHEMA = (
     "doc_id BIGINT, mime STRING, n_bytes BIGINT, sha16 STRING, "
     "fake_width INT, fake_height INT, brightness DOUBLE"
@@ -103,13 +113,11 @@ def decode_image_features(binary_docs: DataFrame) -> DataFrame:
     return binary_docs.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(
-    binary_docs: DataFrame, n_frames: int = 4, frame_bytes: int = 16
-) -> DataFrame:
+def frame_sample(binary_docs: DataFrame) -> DataFrame:
     """Deterministic "video frame sampling": split each payload into
-    ``n_frames`` evenly-spaced byte windows (stand-in for ffmpeg
-    keyframe extraction).  Output is exploded one row per frame — the
-    shape a caption/embedding stage consumes.
+    ``_N_FRAMES`` evenly-spaced ``_FRAME_BYTES``-byte windows (stand-in
+    for ffmpeg keyframe extraction).  Output is exploded one row per
+    frame — the shape a caption/embedding stage consumes.
     """
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -119,9 +127,9 @@ def frame_sample(
                 data = bytes(payload)
                 if not data:
                     continue
-                step = max(len(data) // n_frames, 1)
-                for i in range(min(n_frames, len(data))):
-                    chunk = data[i * step : i * step + frame_bytes]
+                step = max(len(data) // _N_FRAMES, 1)
+                for i in range(min(_N_FRAMES, len(data))):
+                    chunk = data[i * step : i * step + _FRAME_BYTES]
                     rows.append(
                         {
                             "doc_id": doc_id,
@@ -143,10 +151,11 @@ def frame_sample(
 PHASH_SCHEMA = "doc_id BIGINT, phash BIGINT, b0 INT, b1 INT, b2 INT, b3 INT"
 
 
-def perceptual_hash(binary_docs: DataFrame, grid: int = 8) -> DataFrame:
+def perceptual_hash(binary_docs: DataFrame) -> DataFrame:
     """dHash-style perceptual hash per payload: resample the bytes into
-    a ``grid x grid`` cell mean "image", emit one bit per horizontally
-    adjacent cell pair (left > right), packed into a signed int64.
+    a ``_PHASH_GRID x _PHASH_GRID`` cell mean "image", emit one bit per
+    horizontally adjacent cell pair (left > right), packed into a signed
+    int64.
 
     With a real decoder the cell means would be downsampled grayscale
     pixels (PIL ``resize((9, 8))``); the stand-in resamples raw bytes,
@@ -159,7 +168,7 @@ def perceptual_hash(binary_docs: DataFrame, grid: int = 8) -> DataFrame:
     """
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_cells = grid * grid
+        n_cells = _PHASH_GRID * _PHASH_GRID
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -174,10 +183,11 @@ def perceptual_hash(binary_docs: DataFrame, grid: int = 8) -> DataFrame:
                     window = data[lo:hi] or data[-1:]
                     cells.append(sum(window) / len(window))
                 bits = 0
-                for r in range(grid):
-                    for c in range(grid):
-                        right = cells[r * grid + (c + 1) % grid]
-                        bits = (bits << 1) | (1 if cells[r * grid + c] > right else 0)
+                for r in range(_PHASH_GRID):
+                    for c in range(_PHASH_GRID):
+                        row = r * _PHASH_GRID
+                        right = cells[row + (c + 1) % _PHASH_GRID]
+                        bits = (bits << 1) | (1 if cells[row + c] > right else 0)
                 # wrap to signed int64 (Spark BIGINT)
                 if bits >= 1 << 63:
                     bits -= 1 << 64
@@ -191,12 +201,13 @@ def perceptual_hash(binary_docs: DataFrame, grid: int = 8) -> DataFrame:
     return binary_docs.mapInPandas(hash_batches, schema=PHASH_SCHEMA)
 
 
-def visual_near_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
+def visual_near_dup_pairs(hashed: DataFrame) -> DataFrame:
     """Near-duplicate payload pairs from perceptual hashes: candidates
     via the 4-band equi-join (union of 4 bucket joins, never a cross
     join), verified with a JVM-side popcount of the XOR — ``bit_count``
     runs inside codegen, so verification costs one instruction per
-    candidate.  Output: (doc_a, doc_b, hamming), doc_a < doc_b.
+    candidate.  Output: (doc_a, doc_b, hamming), doc_a < doc_b,
+    hamming <= ``_MAX_HAMMING``.
     """
     # Both band-join sides are O(corpus) frames derived through
     # MapInPandas (perceptual_hash), whose size estimate Catalyst
@@ -229,17 +240,16 @@ def visual_near_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
     return (
         cands.distinct()
         .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= _MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
-def resize_payload(
-    binary_docs: DataFrame, factor: int = 2, chunk: int = 1
-) -> DataFrame:
-    """Deterministic "resize": keep every ``factor``-th byte (stride
-    sampling — the stand-in for a real image downsample, which would be
-    PIL ``Image.resize`` over the decoded pixels; codecs absent here).
+def resize_payload(binary_docs: DataFrame) -> DataFrame:
+    """Deterministic "resize": keep every ``_RESIZE_FACTOR``-th byte
+    (stride sampling — the stand-in for a real image downsample, which
+    would be PIL ``Image.resize`` over the decoded pixels; codecs absent
+    here).
 
     Output carries the resized payload's size, digest, and the halved
     fake dimensions, mirroring what a thumbnailing stage emits.  Payload
@@ -252,7 +262,7 @@ def resize_payload(
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 data = bytes(payload)
-                small = data[::factor]
+                small = data[::_RESIZE_FACTOR]
                 feats = _fake_decode(data)
                 rows.append(
                     {
@@ -260,8 +270,8 @@ def resize_payload(
                         "orig_bytes": len(data),
                         "resized_bytes": len(small),
                         "resized_sha16": hashlib.sha256(small).hexdigest()[:16],
-                        "new_width": feats["fake_width"] // factor,
-                        "new_height": feats["fake_height"] // factor,
+                        "new_width": feats["fake_width"] // _RESIZE_FACTOR,
+                        "new_height": feats["fake_height"] // _RESIZE_FACTOR,
                     }
                 )
             yield pd.DataFrame(
@@ -285,11 +295,12 @@ def resize_payload(
     )
 
 
-def audio_frame_energy(binary_docs: DataFrame, frame_bytes: int = 32) -> DataFrame:
+def audio_frame_energy(binary_docs: DataFrame) -> DataFrame:
     """Deterministic "audio" energy profile: treat the payload as PCM-8
-    samples, frame it into non-overlapping ``frame_bytes`` windows, and
-    report per-doc frame count, total/peak energy, and the peak frame
-    index (stand-in for librosa RMS-energy / silence detection).
+    samples, frame it into non-overlapping ``_AUDIO_FRAME_BYTES``
+    windows, and report per-doc frame count, total/peak energy, and the
+    peak frame index (stand-in for librosa RMS-energy / silence
+    detection).
 
     All-integer arithmetic (sum of squared byte values), so the SQL
     oracle reproduces it exactly; vectorized per Arrow batch with
@@ -303,13 +314,13 @@ def audio_frame_energy(binary_docs: DataFrame, frame_bytes: int = 32) -> DataFra
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 data = np.frombuffer(bytes(payload), dtype=np.uint8)
-                n_frames = len(data) // frame_bytes
+                n_frames = len(data) // _AUDIO_FRAME_BYTES
                 if n_frames == 0:
                     rows.append((int(doc_id), 0, -1, 0, 0))
                     continue
                 frames = (
-                    data[: n_frames * frame_bytes]
-                    .reshape(n_frames, frame_bytes)
+                    data[: n_frames * _AUDIO_FRAME_BYTES]
+                    .reshape(n_frames, _AUDIO_FRAME_BYTES)
                     .astype(np.int64)
                 )
                 e = (frames * frames).sum(axis=1)

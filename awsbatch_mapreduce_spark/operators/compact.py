@@ -23,6 +23,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# output file size when no explicit file count is given
+_TARGET_FILE_MB = 128
+
 
 def interleave_bits(scaled: list, bits: int = 16):
     """Morton/Z-order key: bit-interleave ``len(scaled)`` non-negative
@@ -64,12 +67,11 @@ def _dir_bytes(path: str) -> int:
 def compact_parquet(
     spark: SparkSession,
     path: str,
-    target_file_mb: int = 128,
     cluster_by: str | None = None,
     n_files: int | None = None,
     zorder_by: list[str] | None = None,
 ) -> DataFrame:
-    """Rewrite the parquet table at ``path`` into ~``target_file_mb``
+    """Rewrite the parquet table at ``path`` into ~``_TARGET_FILE_MB``
     files (or exactly ``n_files`` when given); with ``cluster_by``,
     range-partition + sort on that column so each output file covers a
     disjoint key range.  With ``zorder_by`` (2+ numeric columns),
@@ -83,7 +85,7 @@ def compact_parquet(
     Returns the compacted table (re-read from the swapped path).
     """
     if n_files is None:
-        n_files = max(1, _dir_bytes(path) // (target_file_mb << 20))
+        n_files = max(1, _dir_bytes(path) // (_TARGET_FILE_MB << 20))
     df = spark.read.parquet(path)
     if zorder_by is not None:
         if cluster_by is not None:

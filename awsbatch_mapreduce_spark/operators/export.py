@@ -23,27 +23,25 @@ from pyspark.sql import functions as F
 from awsbatch_mapreduce_spark.plans.sampling import md5_bucket
 
 
-def assign_split_and_shard(
-    docs: DataFrame, id_col: str = "doc_id", n_shards: int = 8
-) -> DataFrame:
+def assign_split_and_shard(docs: DataFrame, n_shards: int = 8) -> DataFrame:
     """Add deterministic ``split`` and ``shard`` columns.
 
-    Split buckets on md5(id); shards bucket on md5(id || '#shard') so
+    Split buckets on md5(doc_id); shards bucket on md5(doc_id || '#shard') so
     the two assignments are independent (a shard is not a subset of a
     split bucket).
     """
-    b = md5_bucket(id_col, 100)
-    shard = md5_bucket(F.concat(F.col(id_col).cast("string"), F.lit("#shard")), n_shards)
+    b = md5_bucket("doc_id", 100)
+    shard = md5_bucket(
+        F.concat(F.col("doc_id").cast("string"), F.lit("#shard")), n_shards
+    )
     return docs.withColumn(
         "split",
         F.when(b < 80, "train").when(b < 90, "val").otherwise("test"),
     ).withColumn("shard", shard)
 
 
-def export_corpus(
-    docs: DataFrame, out_dir: str, id_col: str = "doc_id", n_shards: int = 8
-) -> None:
+def export_corpus(docs: DataFrame, out_dir: str, n_shards: int = 8) -> None:
     """Write ``split=<s>/shard=<k>/`` partitioned parquet."""
-    assign_split_and_shard(docs, id_col, n_shards).write.partitionBy(
+    assign_split_and_shard(docs, n_shards).write.partitionBy(
         "split", "shard"
     ).mode("overwrite").parquet(out_dir)

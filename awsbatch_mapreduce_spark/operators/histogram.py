@@ -18,6 +18,8 @@ absent); densify at render time.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -31,12 +33,13 @@ def histogram2d(
     y_range: tuple[float, float],
     width: int,
     height: int,
-    clip: bool = True,
+    by: Sequence[str] = (),
 ) -> DataFrame:
-    """Bin points onto a ``width x height`` grid; per-pixel counts.
+    """Bin points onto a ``width x height`` grid; per-pixel counts,
+    one grid per value of the grouping columns ``by``.
 
-    Returns columns ``px`` (0..width-1), ``py`` (0..height-1), ``cnt``.
-    Points outside the ranges are dropped when ``clip`` (the reference
+    Returns columns ``*by``, ``px`` (0..width-1), ``py`` (0..height-1),
+    ``cnt``.  Points outside the ranges are dropped (the reference
     applies its bbox filter first, ``main.py:73-75``); boundary
     ``x == x_max`` lands in the last bin, matching datashader's inclusive
     right edge.
@@ -49,13 +52,12 @@ def histogram2d(
     ystep = (ymax - ymin) / height
     xc = F.col(x) if isinstance(x, str) else x
     yc = F.col(y) if isinstance(y, str) else y
-    if clip:
-        df = df.filter(
-            (xc >= F.lit(xmin))
-            & (xc <= F.lit(xmax))
-            & (yc >= F.lit(ymin))
-            & (yc <= F.lit(ymax))
-        )
+    df = df.filter(
+        (xc >= F.lit(xmin))
+        & (xc <= F.lit(xmax))
+        & (yc >= F.lit(ymin))
+        & (yc <= F.lit(ymax))
+    )
     px = F.least(
         F.floor((xc - F.lit(xmin)) / F.lit(xstep)), F.lit(width - 1)
     ).cast("bigint")
@@ -63,8 +65,8 @@ def histogram2d(
         F.floor((yc - F.lit(ymin)) / F.lit(ystep)), F.lit(height - 1)
     ).cast("bigint")
     return (
-        df.select(px.alias("px"), py.alias("py"))
-        .groupBy("px", "py")
+        df.select(*by, px.alias("px"), py.alias("py"))
+        .groupBy(*by, "px", "py")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 

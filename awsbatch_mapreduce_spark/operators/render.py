@@ -24,8 +24,6 @@ import zlib
 from collections.abc import Iterable, Sequence
 from pathlib import Path
 
-from pyspark.sql import DataFrame
-
 # 8-color 'fire'-like ramp (black -> red -> orange -> yellow -> white),
 # standing in for colorcet's cmap (public knowledge: standard heat ramp).
 _FIRE = [
@@ -42,11 +40,13 @@ _FIRE = [
 _FIRE_CHANNELS = [bytes(c[ch] for c in _FIRE).ljust(256, b"\0") for ch in range(3)]
 
 
-def eq_hist_shade(counts: Sequence[int], n_levels: int = len(_FIRE)) -> list[int]:
+def eq_hist_shade(counts: Sequence[int]) -> list[int]:
     """Histogram-equalized level per cell (datashader's default
-    ``how='eq_hist'``): rank-based mapping so every color level covers
-    roughly the same number of *nonzero* cells.  Zero stays level 0.
+    ``how='eq_hist'``): rank-based mapping so every level of the
+    ``_FIRE`` ramp covers roughly the same number of *nonzero* cells.
+    Zero stays level 0.
     """
+    n_levels = len(_FIRE)
     nz = sorted(c for c in counts if c > 0)
     if not nz:
         return [0] * len(counts)
@@ -108,30 +108,10 @@ def render_cells_png(
     write_png(path, width, height, bytes(rgb))
 
 
-def render_grid_png(
-    binned: DataFrame,
-    path: str | Path,
-    width: int,
-    height: int,
-    x_col: str = "px",
-    y_col: str = "py",
-    count_col: str = "cnt",
-) -> None:
-    """Collect a (sparse) binned grid and export a shaded PNG.  The
-    collect is bounded: ``width*height`` cells regardless of input
-    scale (1400x1000 in the reference)."""
-    render_cells_png(
-        binned.select(x_col, y_col, count_col).collect(), path, width, height
-    )
-
-
-def stitch_video(
-    frame_paths: Sequence[str | Path],
-    out_path: str | Path,
-    framerate: int = 2,
-) -> Path:
-    """Ordered frame concat -> H.264, the reference's reduce
-    (``Reduce.ps1:8``: ``ffmpeg -framerate 2 ... -c:v libx264``).
+def stitch_video(frame_paths: Sequence[str | Path], out_path: str | Path) -> Path:
+    """Ordered frame concat -> H.264 at 2 frames per second, the
+    reference's reduce (``Reduce.ps1:8``: ``ffmpeg -framerate 2 ... -c:v
+    libx264``).
 
     Frames must already be in iteration order (the caller sorts — O2's
     ordering semantics).  Writes a deterministic ``frames.txt`` manifest
@@ -152,7 +132,7 @@ def stitch_video(
     subprocess.run(
         [
             ffmpeg, "-y", "-f", "concat", "-safe", "0",
-            "-r", str(framerate), "-i", str(manifest),
+            "-r", "2", "-i", str(manifest),
             "-c:v", "libx264", "-pix_fmt", "yuv420p", str(out_path),
         ],
         check=True,

@@ -21,18 +21,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# salt fan-out of ``salted_join``: the build side is replicated this many times
+_N_SALTS = 8
+
 
 def salted_join(
     skewed: DataFrame,
     build: DataFrame,
     on: str,
-    n_salts: int = 8,
     how: str = "inner",
 ) -> DataFrame:
-    """Join ``skewed`` to ``build`` on ``on`` with ``n_salts``-way key
+    """Join ``skewed`` to ``build`` on ``on`` with ``_N_SALTS``-way key
     salting.
 
-    ``build`` rows are exploded across all salt values (size × n_salts);
+    ``build`` rows are exploded across all salt values (size × _N_SALTS);
     ``skewed`` rows get one pseudorandom salt each.  The salt is derived
     from ``rand`` — it only affects placement, never the result set, so
     nondeterminism is safe (and the only acceptable use of rand in this
@@ -41,10 +43,10 @@ def salted_join(
     if how not in ("inner", "left"):
         raise ValueError("salted_join supports inner/left (skewed side first)")
     salted_probe = skewed.withColumn(
-        "__salt", (F.rand() * n_salts).cast("int")
+        "__salt", (F.rand() * _N_SALTS).cast("int")
     )
     replicated_build = build.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(_N_SALTS)]))
     )
     out = salted_probe.join(replicated_build, [on, "__salt"], how)
     return out.drop("__salt")

@@ -9,58 +9,38 @@ call per stat).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from awsbatch_mapreduce_spark.functions.rounding import (
-    dround,
-    dround_sql,
     fixed_point_avg,
     fixed_point_avg_sql,
 )
 
+# decimal places of every reported mean
+_MEAN_DP = 4
 
-def summary_stats(
-    df: DataFrame,
-    cols: Sequence[str],
-    round_to: int = 4,
-    data_decimals: dict[str, int] | None = None,
-) -> DataFrame:
-    """One-row frame: ``n_rows`` plus ``{c}_mean/{c}_min/{c}_max`` per col.
 
-    Means are rounded (default 4 dp, deterministic cross-engine
-    ``dround``); columns listed in ``data_decimals`` use exact
-    fixed-point integer accumulation so the mean is independent of
-    aggregation order (see ``functions.rounding``).
+def summary_stats(df: DataFrame, decimals: dict[str, int]) -> DataFrame:
+    """One-row frame: ``n_rows`` plus ``{c}_mean/{c}_min/{c}_max`` per
+    column ``c`` of ``decimals``, which maps each column to its data's
+    fixed-point decimal count.  Means accumulate as exact fixed-point
+    integers, so they are independent of aggregation order (see
+    ``functions.rounding``), and round to ``_MEAN_DP`` places.
     """
-    dd = data_decimals or {}
     aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        if c in dd:
-            aggs.append(fixed_point_avg(c, dd[c], round_to).alias(f"{c}_mean"))
-        else:
-            aggs.append(dround(F.avg(c), round_to).alias(f"{c}_mean"))
+    for c, dp in decimals.items():
+        aggs.append(fixed_point_avg(c, dp, _MEAN_DP).alias(f"{c}_mean"))
         aggs.append(F.min(c).alias(f"{c}_min"))
         aggs.append(F.max(c).alias(f"{c}_max"))
     return df.agg(*aggs)
 
 
-def summary_stats_sql(
-    table_expr: str,
-    cols: Sequence[str],
-    round_to: int = 4,
-    data_decimals: dict[str, int] | None = None,
-) -> str:
+def summary_stats_sql(table_expr: str, decimals: dict[str, int]) -> str:
     """DuckDB-oracle twin of :func:`summary_stats`."""
-    dd = data_decimals or {}
     parts = ["COUNT(*) AS n_rows"]
-    for c in cols:
-        if c in dd:
-            parts.append(f"{fixed_point_avg_sql(c, dd[c], round_to)} AS {c}_mean")
-        else:
-            parts.append(f"{dround_sql(f'AVG({c})', round_to)} AS {c}_mean")
+    for c, dp in decimals.items():
+        parts.append(f"{fixed_point_avg_sql(c, dp, _MEAN_DP)} AS {c}_mean")
         parts.append(f"MIN({c}) AS {c}_min")
         parts.append(f"MAX({c}) AS {c}_max")
     return f"SELECT {', '.join(parts)} FROM {table_expr}"

@@ -10,6 +10,7 @@ main.py:49-92`); the reduce stitches PNGs into a video in index order
 
 Here the per-month fan-out, the stage barrier, and the S3 exchange all
 collapse into a single grouped aggregation keyed by (month, px, py) —
+``operators.histogram.histogram2d`` grouped by month —
 one scan, one shuffle bounded by grid_size x n_months, then a
 driver-side render loop over the (tiny) collected grids.  This is the
 cross-month histogram the reference could never compute (its months
@@ -30,6 +31,7 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.operators.histogram import histogram2d
 from awsbatch_mapreduce_spark.operators.render import render_cells_png, stitch_video
 from awsbatch_mapreduce_spark.plans.reference_parity import (
     _BBOX,
@@ -46,8 +48,6 @@ def run_reference_pipeline(
     sf_dir: str,
     out_dir: str | Path,
     max_months: int | None = None,
-    width: int = _GRID_W,
-    height: int = _GRID_H,
 ) -> dict:
     """Project -> bbox filter -> per-month 2-D bin counts -> shaded
     PNG per month (``output-iteration-%03d.png``, ``main.py:84``) ->
@@ -58,27 +58,19 @@ def run_reference_pipeline(
     """
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
-    li = load_table(spark, sf_dir, "lineitem")
-    x, y = F.expr(_X_EXPR), F.expr(_Y_EXPR)
-    xstep = (_BBOX["xmax"] - _BBOX["xmin"]) / width
-    ystep = (_BBOX["ymax"] - _BBOX["ymin"]) / height
-    binned = (
-        li.filter(
-            (x >= _BBOX["xmin"]) & (x <= _BBOX["xmax"])
-            & (y >= _BBOX["ymin"]) & (y <= _BBOX["ymax"])
-        )
-        .select(
-            F.date_format(F.date_trunc("month", "l_shipdate"), "yyyy-MM")
-            .alias("year_month"),
-            F.least(
-                F.floor((x - _BBOX["xmin"]) / xstep), F.lit(width - 1)
-            ).cast("int").alias("px"),
-            F.least(
-                F.floor((y - _BBOX["ymin"]) / ystep), F.lit(height - 1)
-            ).cast("int").alias("py"),
-        )
-        .groupBy("year_month", "px", "py")
-        .count()
+    li = load_table(spark, sf_dir, "lineitem").withColumn(
+        "year_month",
+        F.date_format(F.date_trunc("month", "l_shipdate"), "yyyy-MM"),
+    )
+    binned = histogram2d(
+        li,
+        F.expr(_X_EXPR),
+        F.expr(_Y_EXPR),
+        x_range=(_BBOX["xmin"], _BBOX["xmax"]),
+        y_range=(_BBOX["ymin"], _BBOX["ymax"]),
+        width=_GRID_W,
+        height=_GRID_H,
+        by=("year_month",),
     )
     # one action (an Arrow transfer of the grid-bounded rows), then one
     # pass buckets them by month: the reduce is linear in rows + cells
@@ -90,7 +82,7 @@ def run_reference_pipeline(
     frame_paths: list[Path] = []
     for i, mon in enumerate(months):
         frame = out / f"output-iteration-{i:03d}.png"
-        render_cells_png(by_month[mon], frame, width, height)
+        render_cells_png(by_month[mon], frame, _GRID_W, _GRID_H)
         frame_paths.append(frame)
     manifest = {
         "months": months,

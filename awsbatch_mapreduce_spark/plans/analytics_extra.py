@@ -423,15 +423,15 @@ def interval_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     join in ``streaming/join.py`` (same function, batch inputs).
 
     Timestamps compare as epoch microseconds so both engines evaluate
-    the identical integers (the fixture is nanos; Spark loads it
-    us-truncated, and DuckDB's epoch_us truncates the same way).
+    the identical integers (the fixture's ``ts`` is ``timestamp[us]``,
+    which Spark and DuckDB's ``epoch_us`` both read unchanged).
     """
     from awsbatch_mapreduce_spark.streaming.join import (
         click_purchase_interval_join,
     )
 
     ev = load_table(spark, sf_dir, "events")
-    joined = click_purchase_interval_join(ev, ev, max_delay="1 hour")
+    joined = click_purchase_interval_join(ev, ev)
     return joined.select(
         "user_id",
         "click_id",

@@ -120,7 +120,6 @@ class Fit:
 class Cutover:
     """Point the script's pointer at the fitted generation."""
 
-    cap: int | None = None
     nprobe: int | None = None
 
 
@@ -224,10 +223,9 @@ def run_lifecycle(
                     spark, sf_dir, kind, emb.filter(F.col("vec_id") <= F.lit(mid)),
                     init_fn=init, cap=cap, with_pq=pq,
                 )
-            case Cutover(cap, nprobe):
+            case Cutover(nprobe):
                 cutover_generation(
-                    spark, sf_dir, ptr, fit.kind, with_pq=fit.pq, cap=cap,
-                    nprobe=nprobe,
+                    spark, sf_dir, ptr, fit.kind, with_pq=fit.pq, nprobe=nprobe
                 )
             case SetNprobe():
                 set_generation_nprobe(ptr, _NPROBE)
@@ -686,7 +684,7 @@ def codebook_quality_refit_lifecycle(
     Idempotent per run: pointer + both generations rebuilt from
     scratch."""
     return run_lifecycle(
-        spark, sf_dir, Fit("qra"), Cutover(cap=_CAP), Admit(),
+        spark, sf_dir, Fit("qra"), Cutover(), Admit(),
         Refit("qrb", _ESCALATED_CAP), Vacuum(), Probe(),
         pointer="awsbatch_semdedup_ptrqr",
     )
@@ -784,7 +782,7 @@ def codebook_adc_escalated_refit(
     Idempotent per run: pointer + both generations rebuilt from
     scratch."""
     return run_lifecycle(
-        spark, sf_dir, Fit("era", pq=True), Cutover(cap=_CAP), Admit(),
+        spark, sf_dir, Fit("era", pq=True), Cutover(), Admit(),
         Refit("erb", _ESCALATED_CAP), Vacuum(), Probe(adc=True),
         pointer="awsbatch_semdedup_ptresc",
     )

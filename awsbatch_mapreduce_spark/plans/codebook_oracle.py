@@ -28,7 +28,7 @@ two-line midpoint subqueries, the ADC multiprobe's cell tie-break).
 
 from __future__ import annotations
 
-from awsbatch_mapreduce_spark.index.codebook import _CAP, _PQ_K, _PQ_SUB
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _CAP_STEP, _PQ_K, _PQ_SUB
 from awsbatch_mapreduce_spark.index.probe import (
     _NO_PEER_BP,
     _PQ_RERANK,
@@ -38,9 +38,8 @@ from awsbatch_mapreduce_spark.plans.iterative import _kmeans_cte
 
 # Every rank-2 program (multiprobe, recall eval, pointer serving).
 _NPROBE = 2
-# The fixture cap times the supervisor's cap step (_RECALL_CAP_STEP):
-# the cap a quality-escalated refit fits at.
-_ESCALATED_CAP = _CAP * 4
+# The cap a quality-escalated refit fits at.
+_ESCALATED_CAP = _CAP * _CAP_STEP
 # Every _TOMB_MOD-th member id is tombstoned: ~20% of the seen half,
 # dense enough to flip verdicts while every fine cell keeps survivors.
 _TOMB_MOD = 5
@@ -127,7 +126,7 @@ def _fit_ctes(src: str, cap: int = _CAP, label_init: bool = False) -> str:
     """The fitted index over ``src``: label init, or the adaptive
     mod-hash init over k0 cells."""
     cell = "label" if label_init else f"CAST(vec_id % {_k0_sql(cap, src)} AS INT)"
-    return _kmeans_cte(5, source=src, cell_expr=cell) + _split_ctes(cap)
+    return _kmeans_cte(source=src, cell_expr=cell) + _split_ctes(cap)
 
 
 # -- the probe batch and its assignment --------------------------------

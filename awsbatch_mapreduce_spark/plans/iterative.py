@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from awsbatch_mapreduce_spark.index.codebook import (
     _DSCALE,
+    _LLOYD_ITERS,
     _quantize,
     kmeans_fit,
     label_centroid_init,
@@ -37,11 +38,15 @@ from awsbatch_mapreduce_spark.plans.registry import query
 from awsbatch_mapreduce_spark.sources.tables import load_table
 
 
-def _kmeans_cte(
-    n_iter: int = 5, source: str = "embeddings", cell_expr: str = "label"
-) -> str:
+# Power-iteration rounds of ``pagerank_event_graph`` and
+# ``pca_top_component``, shared by each builder loop and its oracle.
+_PAGERANK_ITERS = 3
+_PCA_ITERS = 5
+
+
+def _kmeans_cte(source: str = "embeddings", cell_expr: str = "label") -> str:
     """The unrolled Lloyd CTE chain WITHOUT a final SELECT: ``WITH q AS
-    (...), c0 AS (...), d1/a1/c1, ..., a{n_iter}`` — ``a{n_iter}`` is
+    (...), c0 AS (...), d1/a1/c1, ..., a5`` (``_LLOYD_ITERS``) — ``a5`` is
     the final (vec_id, cell, dfp) assignment and ``q`` the quantized
     (vec_id, pos, vq) components.  Shared by the kmeans oracle and the
     SemDeDup and codebook oracles so the cluster step can never drift
@@ -64,7 +69,7 @@ def _kmeans_cte(
              CAST(SUM(vq) AS DOUBLE) / (1000000.0 * COUNT(*)) AS c
       FROM q GROUP BY 1, 2)"""
     ]
-    for i in range(1, n_iter + 1):
+    for i in range(1, _LLOYD_ITERS + 1):
         steps.append(
             f"""d{i} AS MATERIALIZED (
       SELECT q.vec_id, c.cell,
@@ -77,7 +82,7 @@ def _kmeans_cte(
              FIRST(dfp ORDER BY dfp, cell) AS dfp
       FROM d{i} GROUP BY vec_id)"""
         )
-        if i < n_iter:
+        if i < _LLOYD_ITERS:
             steps.append(
                 f"""c{i} AS MATERIALIZED (
       SELECT a.cell, q.pos,
@@ -88,18 +93,18 @@ def _kmeans_cte(
     return ",\n    ".join(steps)
 
 
-def _kmeans_oracle(n_iter: int = 5) -> str:
+def _kmeans_oracle() -> str:
     """Unrolled Lloyd iterations as chained CTEs — the same quantized
     arithmetic as the Spark path, textually parallel per step, so the
     driver's value hash is exact (the 'iterated CTE' form VERDICT r2
     #7 asked for; fixed seed = deterministic per-label init)."""
     return (
-        _kmeans_cte(n_iter)
+        _kmeans_cte()
         + f"""
     SELECT cell, COUNT(*) AS n_members,
            FLOOR(CAST(SUM(dfp) AS BIGINT) / 1000000000000.0 * 10000.0 + 0.5)
              / 10000.0 AS inertia
-    FROM a{n_iter} GROUP BY cell"""
+    FROM a{_LLOYD_ITERS} GROUP BY cell"""
     )
 
 
@@ -110,14 +115,14 @@ def label_init_fit(emb: DataFrame) -> DataFrame:
     ``localCheckpoint`` and released, so no CacheManager entry outlives
     the build for a later rep of the same plan to re-match."""
     assigned, _ = kmeans_fit(
-        emb.select("vec_id", "embedding"), label_centroid_init(emb), n_iter=5
+        emb.select("vec_id", "embedding"), label_centroid_init(emb)
     )
     final = assigned.localCheckpoint()
     assigned.unpersist()
     return final
 
 
-@query("kmeans_embeddings", oracle=_kmeans_oracle(5))
+@query("kmeans_embeddings", oracle=_kmeans_oracle())
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5 Lloyd iterations, k=10, init = per-label centroids
     (deterministic).  Output: per-cluster size and 4dp fixed-point
@@ -249,7 +254,7 @@ def dedup_canonical_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(n_iter: int = 3) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled power iteration in 1e-9 fixed-point integers (same
     discipline as the kmeans oracle): transition probabilities are 1e-6
     integer ratios, every contribution and damping step is integer
@@ -276,7 +281,7 @@ def _pagerank_oracle(n_iter: int = 3) -> str:
       SELECT node, CAST(1000000000 // nn.n AS BIGINT) AS pr_fp
       FROM nodes, nn)"""
     ]
-    for i in range(1, n_iter + 1):
+    for i in range(1, _PAGERANK_ITERS + 1):
         steps.append(
             f"""pr{i} AS (
       SELECT n.node,
@@ -292,11 +297,11 @@ def _pagerank_oracle(n_iter: int = 3) -> str:
         ",\n    ".join(steps)
         + f"""
     SELECT node AS event_type, pr_fp AS pagerank_fp
-    FROM pr{n_iter}"""
+    FROM pr{_PAGERANK_ITERS}"""
     )
 
 
-@query("pagerank_event_graph", oracle=_pagerank_oracle(3))
+@query("pagerank_event_graph", oracle=_pagerank_oracle())
 def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 3 power iterations) over the event-type
     transition graph — which states dominate user journeys.  The second
@@ -333,7 +338,7 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = nodes.crossJoin(F.broadcast(nn)).select(
         "node", F.expr("CAST(1000000000 div n AS BIGINT)").alias("pr_fp")
     )
-    for _ in range(3):
+    for _ in range(_PAGERANK_ITERS):
         contrib = w.join(pr, w.src == pr.node).select(
             F.col("dst"), (F.col("pr_fp") * F.col("w_fp") * F.lit(85)).alias("t")
         )
@@ -357,7 +362,7 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pca_oracle(n_iter: int = 5) -> str:
+def _pca_oracle() -> str:
     """Unrolled power iteration for the top principal component, in
     pure integer arithmetic end-to-end: quantized components (1e-6),
     integer mean, integer covariance (1e-12, normalized by n), and
@@ -385,7 +390,7 @@ def _pca_oracle(n_iter: int = 5) -> str:
       GROUP BY a.pos, b.pos, nn.n),
     v0 AS (SELECT pos, CAST(1000000 AS BIGINT) AS v_fp FROM m)"""
     ]
-    for i in range(1, n_iter + 1):
+    for i in range(1, _PCA_ITERS + 1):
         steps.append(
             f"""w{i} AS MATERIALIZED (
       SELECT cov.j AS pos,
@@ -400,11 +405,11 @@ def _pca_oracle(n_iter: int = 5) -> str:
     return (
         ",\n    ".join(steps)
         + f"""
-    SELECT CAST(pos AS BIGINT) AS pos, v_fp AS eigvec_fp FROM v{n_iter}"""
+    SELECT CAST(pos AS BIGINT) AS pos, v_fp AS eigvec_fp FROM v{_PCA_ITERS}"""
     )
 
 
-@query("pca_top_component", oracle=_pca_oracle(5))
+@query("pca_top_component", oracle=_pca_oracle())
 def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embedding table by 5 rounds of
     power iteration on the integer covariance matrix — the embedding-
@@ -457,7 +462,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = m.select(
         "pos", F.lit(1000000).cast("bigint").alias("v_fp")
     ).localCheckpoint()
-    for _ in range(5):
+    for _ in range(_PCA_ITERS):
         w = (
             cov.join(F.broadcast(v), cov.k == v.pos)
             .groupBy("j")

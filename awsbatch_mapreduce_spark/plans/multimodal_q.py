@@ -141,7 +141,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from awsbatch_mapreduce_spark.multimodal.binary import resize_payload
 
-    return resize_payload(synthesize_binary_docs(spark, sf_dir), factor=2)
+    return resize_payload(synthesize_binary_docs(spark, sf_dir))
 
 
 _VISUAL_NEAR_DUP_ORACLE = """
@@ -233,7 +233,7 @@ def multimodal_visual_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty doc at hamming 0 — exclude them symmetrically (ADVICE r2)
     everything = everything.filter(F.length("payload") > 0)
     hashed = perceptual_hash(everything)
-    return visual_near_dup_pairs(hashed, max_hamming=3)
+    return visual_near_dup_pairs(hashed)
 
 
 _AUDIO_ORACLE = """

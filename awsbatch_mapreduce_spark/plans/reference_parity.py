@@ -108,8 +108,7 @@ def bbox_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""(SELECT {_X_EXPR} AS x, {_Y_EXPR} AS y FROM lineitem
              WHERE {_X_EXPR} >= {_BBOX["xmin"]!r} AND {_X_EXPR} <= {_BBOX["xmax"]!r}
                AND {_Y_EXPR} >= {_BBOX["ymin"]!r} AND {_Y_EXPR} <= {_BBOX["ymax"]!r})""",
-        ["x", "y"],
-        data_decimals={"x": 4, "y": 0},
+        {"x": 4, "y": 0},
     ),
 )
 def bbox_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,7 +118,7 @@ def bbox_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation pass.
     """
     df = bbox_filter_project(spark, sf_dir).select("x", "y")
-    return summary_stats(df, ["x", "y"], data_decimals={"x": 4, "y": 0})
+    return summary_stats(df, {"x": 4, "y": 0})
 
 
 @query(

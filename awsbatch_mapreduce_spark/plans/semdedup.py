@@ -116,7 +116,7 @@ def _semdedup_sim_cte(cell_rate: int | None = None) -> str:
         else ""
     )
     return (
-        _kmeans_cte(5)
+        _kmeans_cte()
         + sampled
         + f""",
     nrm AS MATERIALIZED (SELECT vec_id, SUM(vq * vq) AS nn FROM q GROUP BY 1),
@@ -470,7 +470,6 @@ semdedup_eps_curve_sampled.__doc__ = semdedup_eps_curve_sampled.__doc__.format(
 
 _CODEBOOK_NOVELTY_ORACLE = (
     _kmeans_cte(
-        5,
         source=(
             "(SELECT * FROM embeddings WHERE vec_id <="
             " (SELECT (MIN(vec_id) + MAX(vec_id)) // 2 FROM embeddings))"
@@ -582,7 +581,7 @@ def semdedup_codebook_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seen = emb.filter(F.col("vec_id") <= F.lit(mid))
     assigned, _ = kmeans_fit(
-        seen.select("vec_id", "embedding"), label_centroid_init(seen), n_iter=5
+        seen.select("vec_id", "embedding"), label_centroid_init(seen)
     )
     # the BUILD (amortized, once per corpus generation): final Lloyd
     # codebook + per-cell quantized members with precomputed norms

@@ -598,7 +598,7 @@ def salted_join_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
         )
     )
-    joined = salted_join(li, urgent, on="l_orderkey", n_salts=8)
+    joined = salted_join(li, urgent, on="l_orderkey")
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
         fixed_point_sum(

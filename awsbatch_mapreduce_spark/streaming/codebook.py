@@ -161,39 +161,32 @@ _BATCH_FLOOR_SEC = 6.0
 _MARGINAL_VEC_PER_SEC = 25_000
 
 
-def admission_max_rate(
-    trigger_secs: float,
-    floor_sec: float = _BATCH_FLOOR_SEC,
-    marginal_vec_per_sec: float = _MARGINAL_VEC_PER_SEC,
-) -> float:
+def admission_max_rate(trigger_secs: float) -> float:
     """Max sustainable ingestion rate (vec/s) for a trigger interval
     under the measured per-batch cost model: each trigger of T seconds
     must process rate*T vectors in <= T, so
     ``rate <= (T - floor)/T * marginal``.  Returns 0.0 when the floor
-    alone exceeds the trigger (no steady state exists).  Host-specific
-    constants default to the round-14 local[32] fit; re-fit them from
+    alone exceeds the trigger (no steady state exists).  The host-specific
+    ``_BATCH_FLOOR_SEC`` / ``_MARGINAL_VEC_PER_SEC`` are the round-14
+    local[32] fit; re-fit those module constants from
     ``scripts/codebook_stream_throughput.py``'s batches_rows_ms pairs
     for a different host or index size."""
-    if trigger_secs <= floor_sec:
+    if trigger_secs <= _BATCH_FLOOR_SEC:
         return 0.0
-    return (trigger_secs - floor_sec) / trigger_secs * marginal_vec_per_sec
+    return (trigger_secs - _BATCH_FLOOR_SEC) / trigger_secs * _MARGINAL_VEC_PER_SEC
 
 
-def min_trigger_secs(
-    rate_vec_per_sec: float,
-    floor_sec: float = _BATCH_FLOOR_SEC,
-    marginal_vec_per_sec: float = _MARGINAL_VEC_PER_SEC,
-) -> float:
+def min_trigger_secs(rate_vec_per_sec: float) -> float:
     """Inverse of ``admission_max_rate``: the smallest trigger interval
     that sustains ``rate_vec_per_sec``.  Raises ValueError at or past
     the marginal-throughput asymptote (no trigger can help there —
     that regime needs a faster host, a smaller index, or a refit)."""
-    if rate_vec_per_sec >= marginal_vec_per_sec:
+    if rate_vec_per_sec >= _MARGINAL_VEC_PER_SEC:
         raise ValueError(
             f"rate {rate_vec_per_sec} >= marginal throughput"
-            f" {marginal_vec_per_sec} vec/s: unreachable at any trigger"
+            f" {_MARGINAL_VEC_PER_SEC} vec/s: unreachable at any trigger"
         )
-    return floor_sec / (1.0 - rate_vec_per_sec / marginal_vec_per_sec)
+    return _BATCH_FLOOR_SEC / (1.0 - rate_vec_per_sec / _MARGINAL_VEC_PER_SEC)
 
 
 def refit_due(

@@ -13,28 +13,28 @@ stateful engagement) with the ingestion-side dedup every production
 pipeline puts first in the chain.
 
 Scale: state is hash-partitioned on the dedup key (uniform ids -> no
-skew); memory is bounded by (arrival rate x watermark delay), tunable
-per deployment.  Tests pin stream == batch-distinct on a chunked
-fixture with injected redelivery overlap.
+skew); memory is bounded by (arrival rate x watermark delay), the delay
+being ``streaming.windows.EVENTS_WATERMARK``.  Tests pin stream ==
+batch-distinct on a chunked fixture with injected redelivery overlap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from awsbatch_mapreduce_spark.streaming.windows import EVENTS_WATERMARK
 
-def dedup_events_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """Drop redelivered events by event_id, with watermark-bounded state.
 
     ``events`` must carry the event-time column ``ts`` (the fixture
     schema from ``read_events_stream``).  Duplicates arriving within
-    ``watermark`` of the original are suppressed; later ones are
+    ``EVENTS_WATERMARK`` of the original are suppressed; later ones are
     impossible by the source's ordering contract (a file source replay
     lands immediately; a Kafka redelivery is bounded by retention of
     the consumer group's in-flight window).
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", EVENTS_WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )

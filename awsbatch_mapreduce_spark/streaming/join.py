@@ -3,9 +3,9 @@ events that follow them within a bounded delay.
 
 The canonical two-stream correlation (ad attribution, request/response
 pairing).  Both sides carry a watermark and the join condition bounds
-``purchase.ts`` to ``[click.ts, click.ts + max_delay]``, which lets
+``purchase.ts`` to ``[click.ts, click.ts + _MAX_DELAY]``, which lets
 Spark expire buffered rows: click state older than
-``watermark + max_delay`` and purchase state older than the watermark
+``watermark + _MAX_DELAY`` and purchase state older than the watermark
 are dropped, so state is O(window x rate), not unbounded.
 
 The same function works on batch DataFrames (``withWatermark`` is a
@@ -24,15 +24,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from awsbatch_mapreduce_spark.streaming.windows import EVENTS_WATERMARK
+
+# longest click -> purchase delay that still counts as attributed
+_MAX_DELAY = "1 hour"
+
 
 def click_purchase_interval_join(
-    events_a: DataFrame,
-    events_b: DataFrame,
-    max_delay: str = "1 hour",
-    watermark: str = "2 hours",
+    events_a: DataFrame, events_b: DataFrame
 ) -> DataFrame:
     """All (click, purchase) pairs per user with the purchase at most
-    ``max_delay`` after the click.
+    ``_MAX_DELAY`` after the click.
 
     ``events_a``/``events_b`` are two reads of the same feed (or two
     feeds) — filtered here so each side buffers only its own type.
@@ -44,7 +46,7 @@ def click_purchase_interval_join(
             F.col("user_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", EVENTS_WATERMARK)
     )
     purchases = (
         events_b.filter(F.col("event_type") == "purchase")
@@ -54,13 +56,13 @@ def click_purchase_interval_join(
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", EVENTS_WATERMARK)
     )
     return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"interval {max_delay}")),
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"interval {_MAX_DELAY}")),
     ).select(
         "user_id",
         "click_id",

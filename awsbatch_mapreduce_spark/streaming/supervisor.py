@@ -70,7 +70,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from awsbatch_mapreduce_spark.index.codebook import _CAP, _quantize
+from awsbatch_mapreduce_spark.index.codebook import _CAP, _CAP_STEP, _quantize
 from awsbatch_mapreduce_spark.index.generation import (
     PointerRecord,
     _complete_pending_swap,
@@ -97,11 +97,8 @@ from awsbatch_mapreduce_spark.streaming.codebook import (
     refit_due,
 )
 
-# The most refit cycles one supervised run drives, and the factor a
-# quality refit multiplies the fitted cap by (bounded by the run's
-# ``recall_cap_max``) — the recall sweep's measured cap step.
+# The most refit cycles one supervised run drives.
 _MAX_REFITS = 32
-_RECALL_CAP_STEP = 4
 
 
 class RefitDueSignal(RuntimeError):
@@ -484,7 +481,7 @@ def run_supervised_admission(
     own knob when a generation lands below target.  When the nprobe
     knob is EXHAUSTED (already at max) and the snapshot is still below
     the floor, the supervisor escalates the OTHER axis the recall sweep
-    priced: a quality-triggered refit at ``cap * _RECALL_CAP_STEP``
+    priced: a quality-triggered refit at ``cap * _CAP_STEP``
     (bounded by ``recall_cap_max``), recorded in the refit entry as
     ``reason: recall`` with the old/new caps; the new cap rides the
     generation pointer so subsequent admissions rank-chunk at the
@@ -654,7 +651,7 @@ def run_supervised_admission(
                 old = refit_and_cutover(
                     spark, sf_dir, pointer_path, new_kind,
                     cap=(
-                        min(cur_cap * _RECALL_CAP_STEP, recall_cap_max)
+                        min(cur_cap * _CAP_STEP, recall_cap_max)
                         if quality
                         else None
                     ),

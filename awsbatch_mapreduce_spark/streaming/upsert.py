@@ -21,23 +21,19 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable, Sequence
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def latest_per_key(
-    df: DataFrame,
-    key_cols: Sequence[str] = ("user_id",),
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Keep the newest row per key (ties broken by ``tiebreak_col`` so
-    the survivor is deterministic under any partitioning)."""
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(ts_col).desc(), F.col(tiebreak_col).desc()
+def latest_per_key(df: DataFrame) -> DataFrame:
+    """Keep the newest row (by ``ts``) per ``user_id`` (ties broken by
+    ``event_id`` so the survivor is deterministic under any
+    partitioning)."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
     )
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -46,12 +42,7 @@ def latest_per_key(
     )
 
 
-def foreach_batch_upsert(
-    target_dir: str,
-    key_cols: Sequence[str] = ("user_id",),
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> Callable[[DataFrame, int], None]:
+def foreach_batch_upsert(target_dir: str) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` merge function for a latest-per-key
     parquet table at ``target_dir``."""
 
@@ -61,7 +52,7 @@ def foreach_batch_upsert(
         if os.path.isdir(target_dir):
             current = spark.read.parquet(target_dir).select(*batch_df.columns)
             merged = current.unionByName(batch_df)
-        latest = latest_per_key(merged, key_cols, ts_col, tiebreak_col)
+        latest = latest_per_key(merged)
         staging = f"{target_dir}.staging-{batch_id}"
         latest.write.mode("overwrite").parquet(staging)
         if os.path.isdir(target_dir):

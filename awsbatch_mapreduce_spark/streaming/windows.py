@@ -41,6 +41,10 @@ _EVENTS_DDL_MICROS = (
     "event_type STRING, value DOUBLE, props STRING"
 )
 
+# how late an event may arrive, in event time, before its window's (or
+# its dedup / join key's) state is dropped — shared by every events stream
+EVENTS_WATERMARK = "2 hours"
+
 
 def _events_ts_is_long(source_dir: str) -> bool:
     """True if the parquet files under ``source_dir`` carry a nanos ts
@@ -65,10 +69,9 @@ def _events_ts_is_long(source_dir: str) -> bool:
     return t == "int64" or t.startswith("timestamp[ns")
 
 
-def read_events_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over parquet chunks with the events schema.
+def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """File-source stream over parquet chunks with the events schema,
+    one file per micro-batch.
 
     ``source_dir`` holds one-or-more parquet files (tests chunk the
     fixture into several to get multiple micro-batches).  At production
@@ -80,7 +83,7 @@ def read_events_stream(
     nanos = _events_ts_is_long(source_dir)
     raw = (
         spark.readStream.schema(_EVENTS_DDL_NANOS if nanos else _EVENTS_DDL_MICROS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
     if nanos:
@@ -89,7 +92,7 @@ def read_events_stream(
 
 
 def tumbling_aggregate(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
+    events: DataFrame, window: str = "1 hour", watermark: str = EVENTS_WATERMARK
 ) -> DataFrame:
     """Tumbling event-time windows per event_type.
 
@@ -114,16 +117,12 @@ def tumbling_aggregate(
     )
 
 
-def sliding_aggregate(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding (overlapping) event-time windows, global per window."""
+def sliding_aggregate(events: DataFrame) -> DataFrame:
+    """Sliding (overlapping) event-time windows, global per window:
+    1-hour windows every 30 minutes."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("win"))
+        events.withWatermark("ts", EVENTS_WATERMARK)
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # HLL, not exact distinct: streaming aggregation forbids
@@ -144,7 +143,7 @@ def sliding_aggregate(
 
 
 def session_aggregate(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
+    events: DataFrame, gap: str = "30 minutes", watermark: str = EVENTS_WATERMARK
 ) -> DataFrame:
     """Gap-based session windows per user (``session_window``).
 

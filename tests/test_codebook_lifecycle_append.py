@@ -1,4 +1,4 @@
-"""Cross-query invariants of the wave-12 append-batch novelty over the
+"""Cross-query invariants of the append-batch novelty over the
 adaptive two-level codebook (VERDICT r12 #4).
 
 Beyond the per-query DuckDB oracle (tests/test_oracle_parity.py), the

@@ -25,7 +25,7 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
     li.repartition(40).write.parquet(src)
     assert len(_data_files(src)) == 40
     before = li.count()
-    out = compact_parquet(spark, src, target_file_mb=128)
+    out = compact_parquet(spark, src)
     assert out.count() == before
     assert len(_data_files(src)) <= 4
 

@@ -33,7 +33,7 @@ def test_decode_features_match_python(spark):
 
 def test_frame_sample_shape(spark):
     b = synthesize_binary_docs(spark, SF_DIR).limit(3)
-    frames = frame_sample(b, n_frames=4, frame_bytes=16).collect()
+    frames = frame_sample(b).collect()
     by_doc: dict[int, list] = {}
     for fr in frames:
         by_doc.setdefault(fr.doc_id, []).append(fr)
@@ -62,7 +62,7 @@ def test_perceptual_hash_near_dup_pairs(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in visual_near_dup_pairs(perceptual_hash(df), max_hamming=3).collect()
+        for r in visual_near_dup_pairs(perceptual_hash(df)).collect()
     }
     assert pairs.get((1, 2)) == 0
     assert (1, 3) in pairs and (2, 3) in pairs

@@ -18,7 +18,6 @@ from awsbatch_mapreduce_spark.operators.render import (
     _FIRE,
     eq_hist_shade,
     render_cells_png,
-    render_grid_png,
     stitch_video,
     write_png,
 )
@@ -77,7 +76,7 @@ def test_render_grid_png_from_query(spark, tmp_path):
 
     binned = QUERIES["frame_histogram2d"].builder(spark, SF_DIR)
     p = tmp_path / "frame.png"
-    render_grid_png(binned, p, width=140, height=100)
+    render_cells_png(binned.select("px", "py", "cnt").collect(), p, 140, 100)
     w, h, raw = _decode_png(p)
     assert (w, h) == (140, 100)
     # shaded output must not be all-black (data exists in bbox)

@@ -789,7 +789,7 @@ _REGISTRY_BROADCAST_BUDGET = {
     # sites (assignment feeding the hits side and the retention base);
     # the members membership join and the hits retention join are
     # data-scaled and pinned — and the bucketed members scan feeds the
-    # SMJ with no exchange (tests/test_wave10.py)
+    # SMJ with no exchange (tests/test_semdedup_novelty.py)
     "semdedup_codebook_novelty": 0,
     # wave 11 (round 11): the bounded k0-row COARSE codebook at its 2
     # consumption sites (probe frame feeding hits + the output base);
@@ -804,7 +804,7 @@ _REGISTRY_BROADCAST_BUDGET = {
     # wave 12 (round 13): the returned frame is the shared wave-11
     # probe against the GROWN app tables — same 2 bounded coarse-book
     # sites (the append step's k0-row sub-offset broadcast executes
-    # eagerly inside the builder, before this plan; test_wave12 pins
+    # eagerly inside the builder, before this plan; test_codebook_lifecycle_append pins
     # the probe plan's exchange-free fine/members sides)
     "semdedup_codebook_adaptive_append": 0,
     # wave 13 (round 14): the refit lifecycle returns the same shared

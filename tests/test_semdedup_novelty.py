@@ -1,6 +1,5 @@
-"""Cross-query invariants of the wave-10 family (round 9): the
-cell-sampled SemDeDup eps curve and the persisted-codebook semantic
-novelty probe.
+"""Cross-query invariants of the cell-sampled SemDeDup eps curve and
+the persisted-codebook semantic novelty probe.
 
 Beyond the per-query DuckDB oracle (tests/test_oracle_parity.py), the
 strongest checks are against SIBLING queries: the sampled curve must

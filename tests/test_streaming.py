@@ -96,7 +96,7 @@ def test_stream_equals_batch(spark, events_chunks, agg_fn, name):
 
 def test_stream_multiple_batches(spark, events_chunks):
     """The file source really produces several micro-batches (not one)."""
-    stream_in = read_events_stream(spark, events_chunks, max_files_per_trigger=1)
+    stream_in = read_events_stream(spark, events_chunks)
     q = (
         tumbling_aggregate(stream_in)
         .writeStream.format("memory")
@@ -115,7 +115,7 @@ def test_stateful_engagement_equals_batch(spark, events_chunks):
     """applyInPandasWithState across multiple micro-batches converges to
     the batch fold: final per-user snapshot (max cumulative n_events in
     update-mode output) == one-pass batch computation."""
-    stream_in = read_events_stream(spark, events_chunks, max_files_per_trigger=1)
+    stream_in = read_events_stream(spark, events_chunks)
     q = (
         user_engagement_stateful(stream_in)
         .writeStream.format("memory")
@@ -243,7 +243,7 @@ def test_stream_dedup_drops_redelivered_rows(spark, tmp_path):
         )
         _time.sleep(1.1)
 
-    stream_in = read_events_stream(spark, str(src), max_files_per_trigger=1)
+    stream_in = read_events_stream(spark, str(src))
     q = (
         dedup_events_stream(stream_in)
         .writeStream.format("memory")
@@ -291,7 +291,7 @@ def test_file_sink_exactly_once_across_restart(spark, tmp_path):
 
     def run_once():
         q = (
-            read_events_stream(spark, str(src), max_files_per_trigger=1)
+            read_events_stream(spark, str(src))
             .writeStream.format("parquet")
             .option("path", str(out))
             .option("checkpointLocation", str(ckpt))
@@ -338,7 +338,7 @@ def test_stateful_checkpoint_recovery(spark, tmp_path):
 
     def run_once() -> None:
         stream = user_engagement_stateful(
-            read_events_stream(spark, str(src), max_files_per_trigger=1)
+            read_events_stream(spark, str(src))
         )
 
         def sink(batch_df, batch_id):
@@ -368,56 +368,4 @@ def test_stateful_checkpoint_recovery(spark, tmp_path):
     updates = spark.read.parquet(str(out)).toPandas()
     final = updates.sort_values("n_events").groupby("user_id", as_index=False).last()
     batch = user_engagement_batch(load_table(spark, SF_DIR, "events")).toPandas()
-    _assert_frames_equal(final, batch)
-
-
-def test_tws_engagement_equals_batch(spark, events_chunks):
-    """transformWithStateInPandas (the Spark 4 arbitrary-state API)
-    computes the same engagement snapshots as the v1 operator and the
-    batch fold.  Needs the RocksDB state store (set per-test, restored
-    after) and protobuf, which pyspark's TWS state-server protocol
-    imports — skip cleanly where protobuf isn't installed (same
-    environment-gate pattern as the ffmpeg branch in test_render)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's state protocol requires protobuf",
-    )
-    from awsbatch_mapreduce_spark.streaming.stateful_v2 import (
-        user_engagement_tws,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream_in = read_events_stream(
-            spark, events_chunks, max_files_per_trigger=1
-        )
-        q = (
-            user_engagement_tws(stream_in)
-            .writeStream.format("memory")
-            .queryName("tws_sink")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        updates = spark.sql("SELECT * FROM tws_sink").toPandas()
-        q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    final = (
-        updates.sort_values("n_events")
-        .groupby("user_id", as_index=False)
-        .last()
-    )
-    batch = user_engagement_batch(load_table(spark, SF_DIR, "events")).toPandas()
-    assert len(updates) > len(final), "expected multiple updates per user"
     _assert_frames_equal(final, batch)
